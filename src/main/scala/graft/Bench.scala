@@ -64,15 +64,22 @@ object Bench {
       try fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
-    // One-time side artifacts (the s8 file topic) are setup IO, not
-    // operator cost — materialize them before the clock starts. In
+    // One-time side artifacts (every registered fixture) are setup
+    // IO, not operator cost — build them before the clock starts. In
     // ISOLATION mode skip the full prepare: each selected query
     // self-materializes exactly the fixtures it needs (rep 1 absorbs
     // the build; best-rep stays clean) — at big scale factors the
-    // 13-fixture prepare costs more wall and disk than the receipt.
-    if (only.isEmpty)
-      try SparkEntry.prepare(spark, sfDir)
-      catch { case e: Throwable => System.err.println(s"[bench] prepare failed: ${e.getMessage}") }
+    // full prepare costs more wall and disk than the receipt. A failed
+    // prepare leaves fixture builds inside timed queries, so the run
+    // is flagged below.
+    val prepareError =
+      if (only.nonEmpty) None
+      else
+        try { SparkEntry.prepare(spark, sfDir); None }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] prepare failed: ${e.getMessage}")
+          Some(e.toString)
+        }
 
     val loadStart = loadavg()
     // key -> one observation per pass (sec, epoch-second start, 1-min loadavg)
@@ -130,11 +137,12 @@ object Bench {
     // was already above 3 before this JVM spun anything up, the run
     // began contended — flag the artifact at creation. Mid-run load
     // ARRIVAL stays diagnosable from the per-query load1 trace below.
-    val warn = loadAmbient.headOption.filter(_ > 3.0).map(l =>
+    val flags = loadAmbient.headOption.filter(_ > 3.0).map(l =>
       s""","load_warning":"box already contended at bench start: ambient load1 ${r3(l)} > 3.0 before session startup — treat timings as suspect""""
-    ).getOrElse("")
+    ).getOrElse("") +
+      prepareError.map(e => s""","prepare_error":${Verify.jsonString(e)}""").getOrElse("")
     val loadMeta =
-      s""""passes":$passes,"loadavg_ambient":${jarr(loadAmbient)},"loadavg_start":${jarr(loadStart)},"loadavg_end":${jarr(loadEnd)}$warn"""
+      s""""passes":$passes,"loadavg_ambient":${jarr(loadAmbient)},"loadavg_start":${jarr(loadStart)},"loadavg_end":${jarr(loadEnd)}$flags"""
     val full =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec",$loadMeta,"queries":$fullQs,"detail":$detail,"sf":"$sfDir"}"""
     // Non-canonical runs must not clobber the canonical full-run
@@ -142,12 +150,13 @@ object Bench {
     // reps×-inflated total, a filtered run is partial, and a smoke at
     // another sf would silently replace the committed sf0.1 numbers —
     // those land in a tagged sibling file instead.
-    // ...and neither must a LOAD-FLAGGED run (r19): a contended-box
-    // pass is identifiable but not canonical — it lands in
-    // BENCH_FLAGGED.json so the committed quiet-box artifact survives
+    // ...and neither must a LOAD-FLAGGED run (r19) or one whose
+    // prepare failed: such a pass is identifiable but not canonical —
+    // it lands in BENCH_FLAGGED.json so the committed quiet-box
+    // artifact survives
     val artifact =
       if (only.nonEmpty || reps > 1) "(not written: filtered/repeated run)"
-      else if (warn.nonEmpty) "BENCH_FLAGGED.json"
+      else if (flags.nonEmpty) "BENCH_FLAGGED.json"
       else if (sfDir.endsWith("sf0.1")) "BENCH_FULL.json"
       else "BENCH_FULL_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_") + ".json"
     if (only.isEmpty && reps == 1)
@@ -175,7 +184,7 @@ object Bench {
     val top = results.sortBy(-_._2).take(topN).sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","nq":${results.size},"passes":$passes,"load":${jarr(loadStart.take(1) ++ loadEnd.take(1))}$warn,"queries":$top,"batteries":$batteries,"full":"$artifact","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","nq":${results.size},"passes":$passes,"load":${jarr(loadStart.take(1) ++ loadEnd.take(1))}$flags,"queries":$top,"batteries":$batteries,"full":"$artifact","sf":"$sfDir"}""")
     spark.stop()
   }
 }

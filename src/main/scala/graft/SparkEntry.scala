@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Fixtures.dirTag
 import graft.operators.RelationalOps._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -34,68 +35,32 @@ object SparkEntry {
     coreOracle ++ textOracle ++ dedupOracle ++ simOracle ++
       multimodalOracle ++ corpusOracle ++ ioOracle ++ TpchQueries.oracleSql
 
-  /** Filesystem-safe tag for `dir`, unique per raw dir string: the
-    * readable prefix strips non-alphanumerics — under which distinct
-    * dirs like /data/x and /data_x collide — so a hashCode suffix
-    * disambiguates (r10 advice #2). Shared by every ensure* helper and
-    * tagged table/DB name below.
+  /** Every side artifact the queries read (fixture tables, layouts,
+    * indexes), one registered [[Fixtures.Fixture]] each, under this
+    * JVM's fresh fixture dir. [[prepare]] builds all of them.
     */
-  private def dirTag(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + Integer.toHexString(dir.hashCode)
+  private[graft] val fixtures = new Fixtures(Fixtures.jvmDir)
 
-  /** PER-JVM fixture base. Every /tmp fixture root below is rebuilt
-    * in place (delete + re-create) whenever its generation check
-    * fails, so a path shared ACROSS JVMs races any concurrently
-    * running test/bench/verify JVM mid-rebuild — observed as
-    * "version N out of range (head 2)" mid-query and as embedded
-    * Derby's one-JVM boot lock refusing the database. One fixture
-    * rebuild per JVM costs seconds at gate scale; correctness under
-    * concurrent JVMs is the contract. (`materializeOnce` remains the
-    * WITHIN-JVM once-guard.)
-    */
-  private lazy val jvmTmp: String = {
-    val d = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-jvm-${java.lang.ProcessHandle.current().pid()}")
-    java.nio.file.Files.createDirectories(d)
-    d.toString
+  /** Point session catalog `cat` at the [[graft.sources.GraftCatalog]]
+    * warehouse `wh`; returns `cat`. */
+  private def useCatalog(s: SparkSession, cat: String, wh: String): String = {
+    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.GraftCatalog].getName)
+    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    cat
   }
 
-  /** Once-per-JVM side-artifact memo: `computeIfAbsent` runs the write
-    * INSIDE the mapping function, so a concurrent caller for the same
-    * key blocks until the winner's write completes instead of racing
-    * ahead to read a half-written layout (r10 advice #1 — the old
-    * lock-free add() released losers immediately), and a throwing
-    * write records no mapping, so the next caller retries.
+  /** The s8 file topic for `dir` (the topic content is a deterministic
+    * function of the events table). The fixture exists for bench
+    * hygiene: the topic WRITE is transport setup, not the consumer-poll
+    * operator `s8_latest_per_key` measures — [[prepare]] lets Bench
+    * pay it before the clock starts.
     */
-  private def materializeOnce(
-      memo: java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean],
-      key: String)(write: => Unit): String = {
-    memo.computeIfAbsent(key, _ => { write; java.lang.Boolean.TRUE })
-    key
-  }
-
-  /** Topics already materialized by [[ensureFileTopic]] this JVM. */
-  private val materializedTopics =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Write the s8 file topic for `dir` exactly once per JVM (the topic
-    * content is a deterministic function of the events table, and the
-    * write is `overwrite`, so re-running is safe but wasted). Returns
-    * the topic directory. The memo exists for bench hygiene: the topic
-    * WRITE is transport setup, not the consumer-poll operator
-    * `s8_latest_per_key` measures — [[prepare]] lets Bench pay it
-    * before the clock starts.
-    */
-  private def ensureFileTopic(s: SparkSession, dir: String): String = {
-    val topicDir =
-      s"$jvmTmp/graft_topic_${dirTag(dir)}"
-    materializeOnce(materializedTopics, topicDir) {
-      Tables.events(s, dir)
-        .select(to_json(struct(col("event_id"), col("user_id"), col("event_type"),
-            col("value"))).as("value"),
-          col("event_id").as("batch_id"))
-        .write.mode("overwrite").json(topicDir)
-    }
+  private val ensureFileTopic = fixtures("topic") { (s, dir, topicDir) =>
+    Tables.events(s, dir)
+      .select(to_json(struct(col("event_id"), col("user_id"), col("event_type"),
+          col("value"))).as("value"),
+        col("event_id").as("batch_id"))
+      .write.mode("overwrite").json(topicDir)
   }
 
   /** Serializes bucketed-table materialization: concurrent callers
@@ -113,12 +78,14 @@ object SparkEntry {
     * clock).
     *
     * The "already materialized" check is `catalog.tableExists` on the
-    * caller's session — NOT a JVM-wide memo: managed tables live in a
-    * per-SparkSession in-memory catalog, so a second session in the
-    * same JVM must re-register them, and a lock (not a lock-free set)
-    * makes concurrent callers wait out the write.
+    * caller's session, run on every call as the fixture's session step
+    * — NOT the JVM-wide memo: managed tables live in a per-SparkSession
+    * in-memory catalog, so a second session in the same JVM must
+    * re-register them, and a lock (not a lock-free set) makes
+    * concurrent callers wait out the write. Its fixture root stays
+    * empty.
     */
-  private def ensureBucketedTables(s: SparkSession, dir: String): (String, String) =
+  private val ensureBucketedTables = fixtures.withSession("bucketed", (s, dir, _) =>
     bucketLock.synchronized {
       val tag = dirTag(dir)
       val (cust, ord) = (s"b_customer_$tag", s"b_orders_$tag")
@@ -129,34 +96,22 @@ object SparkEntry {
           .bucketBy(8, "o_custkey").sortBy("o_custkey").saveAsTable(ord)
       }
       (cust, ord)
-    }
+    })((_, _, _) => ())
 
-  /** Partitioned-events layouts already written this JVM. */
-  private val materializedPartitionDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Write events hive-partitioned by event_type once per JVM — the
-    * layout that turns a partition-key predicate into directory
-    * PRUNING (the scan never lists, opens, or reads non-matching
-    * partitions; at 100 TB this is the difference between reading one
-    * partition and listing a million files). Setup IO, paid by
-    * [[prepare]] outside Bench's clock.
+  /** Events hive-partitioned by event_type — the layout that turns a
+    * partition-key predicate into directory PRUNING (the scan never
+    * lists, opens, or reads non-matching partitions; at 100 TB this is
+    * the difference between reading one partition and listing a
+    * million files). Setup IO, paid by [[prepare]] outside Bench's
+    * clock.
     */
-  private def ensurePartitionedEvents(s: SparkSession, dir: String): String = {
-    val pdir =
-      s"$jvmTmp/graft_part_events_${dirTag(dir)}"
-    materializeOnce(materializedPartitionDirs, pdir) {
-      Tables.events(s, dir)
-        .withColumn("cents", round(col("value") * 100).cast("long"))
-        .write.mode("overwrite").partitionBy("event_type").parquet(pdir)
-    }
+  private val ensurePartitionedEvents = fixtures("part_events") { (s, dir, pdir) =>
+    Tables.events(s, dir)
+      .withColumn("cents", round(col("value") * 100).cast("long"))
+      .write.mode("overwrite").partitionBy("event_type").parquet(pdir)
   }
 
-  /** Schema-evolved layouts already written this JVM. */
-  private val materializedEvolvedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Write events as two parquet GENERATIONS under one root — gen=1
+  /** Events as two parquet GENERATIONS under one root — gen=1
     * without the `cents` column (the "old ingest" schema), gen=2 with
     * it — the schema-evolution layout every long-lived lakehouse table
     * accumulates. Readers opt into the union schema with
@@ -164,24 +119,16 @@ object SparkEntry {
     * nulls for the new column — no rewrite of historical data).
     * Setup IO, paid by [[prepare]].
     */
-  private def ensureEvolvedEvents(s: SparkSession, dir: String): String = {
-    val root =
-      s"$jvmTmp/graft_evolve_${dirTag(dir)}"
-    materializeOnce(materializedEvolvedDirs, root) {
-      val e = Tables.events(s, dir)
-      e.filter(col("event_id") % 2 === 0)
-        .select(col("event_id"), col("user_id"), col("event_type"))
-        .write.mode("overwrite").parquet(s"$root/gen=1")
-      e.filter(col("event_id") % 2 =!= 0)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .write.mode("overwrite").parquet(s"$root/gen=2")
-    }
+  private val ensureEvolvedEvents = fixtures("evolve") { (s, dir, root) =>
+    val e = Tables.events(s, dir)
+    e.filter(col("event_id") % 2 === 0)
+      .select(col("event_id"), col("user_id"), col("event_type"))
+      .write.mode("overwrite").parquet(s"$root/gen=1")
+    e.filter(col("event_id") % 2 =!= 0)
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        round(col("value") * 100).cast("long").as("cents"))
+      .write.mode("overwrite").parquet(s"$root/gen=2")
   }
-
-  /** Z-order file-stats manifests already written this JVM. */
-  private val materializedZorderStats =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** The orders z-order layout job (shared by io_zorder /
     * io_prune_stats / io_compact_plan): per-file bounding boxes of
@@ -197,8 +144,8 @@ object SparkEntry {
         col("o_orderkey")),
       "x", "y", "o_orderkey", rowsPerFile = 1000)
 
-  /** Materialize the orders file-stats MANIFEST once per JVM (one row
-    * per 1000-row file — manifest scale, not data scale).
+  /** The orders file-stats MANIFEST (one row per 1000-row file —
+    * manifest scale, not data scale).
     * io_prune_stats and io_compact_plan are metadata-only planning
     * steps — file stats in, scan set / merge plan out — but until r10
     * they recomputed the data-scale z-sort inside their timed bodies,
@@ -207,58 +154,20 @@ object SparkEntry {
     * loaded-box canaries (r9 verdict #3). Setup IO, paid by
     * [[prepare]] outside Bench's clock; lazy for Verify.
     */
-  private def ensureZorderStats(s: SparkSession, dir: String): String = {
-    val path =
-      s"$jvmTmp/graft_zstats_${dirTag(dir)}"
-    materializeOnce(materializedZorderStats, path) {
-      ordersZorderStats(s, dir).write.mode("overwrite").parquet(path)
-    }
+  private val ensureZorderStats = fixtures("zstats") { (s, dir, path) =>
+    ordersZorderStats(s, dir).write.mode("overwrite").parquet(path)
   }
 
-  /** Versioned transactional tables already built this JVM. */
-  private val materializedTxnTables =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Build the three-version [[graft.sources.TxnLog]] table once per
-    * JVM: v1 appends the o_orderkey%3==0 slice of orders (as exact
-    * cents), v2 appends the %3==1 slice, v3 is a copy-on-write upsert
-    * that rewrites v1's files doubling every %6==0 key's price. Every
-    * version's content is a pure predicate over `orders`, which is
-    * what lets DuckDB oracle snapshot reads, time travel, and the
-    * version diff without seeing the log. Setup IO, paid by
-    * [[prepare]] outside Bench's clock; lazy for Verify.
+  /** The three-version [[graft.sources.TxnLog]] table: v1 appends the
+    * o_orderkey%3==0 slice of orders (as exact cents), v2 appends the
+    * %3==1 slice, v3 is a copy-on-write upsert that rewrites v1's
+    * files doubling every %6==0 key's price. Every version's content
+    * is a pure predicate over `orders`, which is what lets DuckDB
+    * oracle snapshot reads, time travel, and the version diff without
+    * seeing the log. Setup IO, paid by [[prepare]] outside Bench's
+    * clock; lazy for Verify.
     */
-  /** Size+mtime fingerprint of the source `orders` parquet — keys the
-    * /tmp txn-table roots so a REGENERATED source at the same path
-    * gets a fresh table instead of silently reusing one built from
-    * the old bytes (which would diverge from the DuckDB oracle).
-    */
-  private def ordersFingerprint(dir: String): String = {
-    val p = java.nio.file.Paths.get(dir, "orders.parquet")
-    val tag =
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.size(p) ^ java.nio.file.Files.getLastModifiedTime(p).toMillis
-      else 0L
-    java.lang.Long.toHexString(tag)
-  }
-
-  private def ensureTxnTable(s: SparkSession, dir: String): String = {
-    import graft.sources.TxnLog
-    val root =
-      s"$jvmTmp/graft_txn_${dirTag(dir)}_${ordersFingerprint(dir)}"
-    materializeOnce(materializedTxnTables, root) {
-      // /tmp outlives JVMs: a COMPLETE table (head = v3) from an
-      // earlier run is reused as-is; anything partial is wiped and
-      // rebuilt (stage() refuses to overwrite, and re-committing onto
-      // a survivor would stack versions 4+ and break the oracles)
-      if (TxnLog.currentVersion(root) != 3L) {
-        graft.sources.TxnLog.deleteRecursively(java.nio.file.Paths.get(root))
-        buildTxnTable(s, dir, root)
-      }
-    }
-  }
-
-  private def buildTxnTable(s: SparkSession, dir: String, root: String): Unit = {
+  private val ensureTxnTable = fixtures("txn") { (s, dir, root) =>
     import graft.sources.TxnLog
     TxnLog.init(root)
     val base = Tables.orders(s, dir).select(col("o_orderkey"),
@@ -277,12 +186,7 @@ object SparkEntry {
     val a3 = TxnLog.stage(rewritten, root, "v3-upsert")
     TxnLog.commit(root, "upsert", a3, removed = a1, readVersion = 2L,
       txnId = "v3-upsert")
-    ()
   }
-
-  /** Catalog-surface fixture warehouses already built this JVM. */
-  private val materializedCatTables =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** Corpus row counts memoized per sf dir (r18, X-V6): the
     * occupancy-adaptive ANN rows' corpus-size input. A graft-table
@@ -311,382 +215,339 @@ object SparkEntry {
     * SQL time travel. Content stays a pure predicate over `orders`
     * for the DuckDB oracle. Returns the catalog name.
     */
-  private def ensureCatalogTable(s: SparkSession, dir: String): String = {
+  private val ensureCatalogTable = fixtures.withSession("cat",
+      (s, dir, wh) => useCatalog(s, s"gcat_${dirTag(dir)}", wh)) { (s, dir, wh) =>
     val tag = dirTag(dir)
     val cat = s"gcat_$tag"
-    val wh =
-      s"$jvmTmp/graft_cat_${tag}_${ordersFingerprint(dir)}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    materializeOnce(materializedCatTables, wh) {
-      val root = s"$wh/db/ord"
-      if (graft.sources.TxnLog.currentVersion(root) != 9L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/ctas") != 1L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/part") != 2L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/proc") != 3L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/wide") != 5L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/sw") != 2L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/swc") != 2L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/bkt") != 2L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/bkt2") != 2L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/bkt4") != 2L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/nmbs") != 2L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/swu") != 2L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/dflt") != 4L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/brt") != 2L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/nest") != 4L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/rcs") != 4L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/cln") != 2L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/cpy") != 3L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/tday") != 2L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/rw") != 3L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/pev") != 4L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/genc") != 2L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/idn") != 3L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/fd") != 4L ||
-          graft.sources.TxnLog.currentVersion(s"$wh/db/fdc") != 4L ||
-          !graft.sources.TxnLog.tagVersion(s"$wh/db/brt", "prewap").contains(1L) ||
-          graft.sources.TxnStream.appliedVersion(s"$wh/db/mv",
-            graft.sources.TxnStream.mvConsumerId(s"$wh/db/mv")) != 2L) {
-        graft.sources.TxnLog.deleteRecursively(java.nio.file.Paths.get(wh))
-        Tables.orders(s, dir)
-          .select(col("o_orderkey"),
-            round(col("o_totalprice") * 100).cast("long").as("price_cents"),
-            col("o_orderstatus"))
-          .createOrReplaceTempView(s"cat_src_$tag")
-        s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-        s.sql(s"CREATE TABLE $cat.db.ord " +                          // v1
-          "(o_orderkey BIGINT, price_cents BIGINT, o_orderstatus STRING)")
-        s.sql(s"INSERT INTO $cat.db.ord " +                           // v2
-          s"SELECT * FROM cat_src_$tag WHERE o_orderkey % 3 = 0")
-        s.sql(s"INSERT INTO $cat.db.ord " +                           // v3
-          s"SELECT * FROM cat_src_$tag WHERE o_orderkey % 3 = 1")
-        s.sql(s"DELETE FROM $cat.db.ord WHERE o_orderkey % 5 = 2")    // v4 (DV)
-        s.sql(s"UPDATE $cat.db.ord SET price_cents = price_cents + 7 " + // v5 (COW)
-          "WHERE o_orderkey % 7 = 0")
-        // v6: MERGE — %15==1 keys are always in the target (k=15m+1
-        // has k%3=1 and k%5=1, so the v4 delete never touched them)
-        // and exercise the MATCHED arm; %3==2 keys are disjoint from
-        // the target and exercise NOT MATCHED inserts
-        s.sql(s"""MERGE INTO $cat.db.ord t
-                  USING (SELECT * FROM cat_src_$tag
-                         WHERE o_orderkey % 3 = 2 OR o_orderkey % 15 = 1) s
-                  ON t.o_orderkey = s.o_orderkey
-                  WHEN MATCHED THEN UPDATE SET price_cents = 2 * s.price_cents
-                  WHEN NOT MATCHED THEN INSERT (o_orderkey, price_cents, o_orderstatus)
-                    VALUES (s.o_orderkey, 2 * s.price_cents, s.o_orderstatus)""")
-        // v7: the same UPDATE primitive MERGE-ON-READ — deletion-
-        // vector bits + appended post-images, zero files rewritten
-        val prevMode = s.conf.getOption("spark.graft.dml.mode")
-        s.conf.set("spark.graft.dml.mode", "mor")
-        try s.sql(s"UPDATE $cat.db.ord SET price_cents = price_cents + 1 " +
-          "WHERE o_orderkey % 13 = 0")
-        finally prevMode match {
-          case Some(m) => s.conf.set("spark.graft.dml.mode", m)
-          case None    => s.conf.unset("spark.graft.dml.mode")
-        }
-        // v8: schema evolution — one metadata commit; v9: an insert
-        // under the evolved schema (old rows read NULL for `flag`)
-        s.sql(s"ALTER TABLE $cat.db.ord ADD COLUMN flag STRING")
-        s.sql(s"INSERT INTO $cat.db.ord SELECT o_orderkey + 10000000, " +
-          s"price_cents, o_orderstatus, 'x' FROM cat_src_$tag " +
-          "WHERE o_orderkey % 17 = 5")
-        // a second table via ATOMIC CTAS: one commit carrying create +
-        // data + typed stats (StagingTableCatalog path)
-        s.sql(s"CREATE TABLE $cat.db.ctas AS " +
-          s"SELECT o_orderkey, price_cents FROM cat_src_$tag WHERE o_orderkey % 11 = 3")
-        // PARTITIONED BY identity (r14): inserts range-cluster by the
-        // partition column so its per-file ranges collapse; a
-        // partition predicate then prunes through ordinary typed
-        // stats (X-A38 as SQL)
-        s.sql(s"CREATE TABLE $cat.db.part " +
-          "(o_orderkey BIGINT, price_cents BIGINT, o_orderstatus STRING) " +
-          "PARTITIONED BY (o_orderstatus)")
-        s.sql(s"INSERT INTO $cat.db.part " +
-          s"SELECT * FROM cat_src_$tag WHERE o_orderkey % 4 = 1")
-        // BUCKET partition transform (r15): writers cluster by
-        // pmod(hash(k), 8), each file records its collapsed bucket id
-        // as a derived point stat, equality predicates prune to one
-        // bucket (Iceberg-style bucket(n, c) through X-A38's stats)
-        s.sql(s"CREATE TABLE $cat.db.bkt " +
-          "(o_orderkey BIGINT, price_cents BIGINT) " +
-          "PARTITIONED BY (bucket(8, o_orderkey))")
-        s.sql(s"INSERT INTO $cat.db.bkt SELECT o_orderkey, price_cents " +
-          s"FROM cat_src_$tag WHERE o_orderkey % 6 = 5")
-        // a CO-BUCKETED sibling: joining it with db.bkt is a
-        // storage-partitioned join — zero shuffles on either side
-        s.sql(s"CREATE TABLE $cat.db.bkt2 " +
-          "(o_orderkey BIGINT, pc3 BIGINT) " +
-          "PARTITIONED BY (bucket(8, o_orderkey))")
-        s.sql(s"INSERT INTO $cat.db.bkt2 SELECT o_orderkey, price_cents * 3 " +
-          s"FROM cat_src_$tag WHERE o_orderkey % 4 = 1")
-        // a COMPATIBLE-count sibling (r16): bucket(4) joins the
-        // bucket(8) fact shuffle-free through the bucket reducer
-        // (8 % 4 == 0 -> fine id % 4 == coarse id)
-        s.sql(s"CREATE TABLE $cat.db.bkt4 " +
-          "(o_orderkey BIGINT, pc5 BIGINT) " +
-          "PARTITIONED BY (bucket(4, o_orderkey))")
-        s.sql(s"INSERT INTO $cat.db.bkt4 SELECT o_orderkey, price_cents * 5 " +
-          s"FROM cat_src_$tag WHERE o_orderkey % 3 = 2")
-        // maintenance THROUGH SQL (r14, ProcedureCatalog): a DV delete
-        // folded clean by CALL compact_deletes, then CALL checkpoint
-        s.sql(s"CREATE TABLE $cat.db.proc AS SELECT o_orderkey, price_cents " +
-          s"FROM cat_src_$tag WHERE o_orderkey % 9 = 4")
-        s.sql(s"DELETE FROM $cat.db.proc WHERE o_orderkey % 2 = 0")
-        s.sql(s"CALL $cat.system.compact_deletes(table => 'db.proc', " +
-          "min_deleted_fraction => 0.1)")
-        s.sql(s"CALL $cat.system.checkpoint(table => 'db.proc')")
-        // ALTER COLUMN TYPE widening (r14): int->bigint, float->double
-        // across two file generations; f holds integral values so the
-        // float->double conversion is exact for the oracle
-        s.sql(s"CREATE TABLE $cat.db.wide (o_orderkey INT, f FLOAT)")
-        s.sql(s"INSERT INTO $cat.db.wide SELECT CAST(o_orderkey AS INT), " +
-          s"CAST(o_orderkey % 97 AS FLOAT) FROM cat_src_$tag WHERE o_orderkey % 19 = 2")
-        s.sql(s"ALTER TABLE $cat.db.wide ALTER COLUMN o_orderkey TYPE BIGINT")
-        s.sql(s"ALTER TABLE $cat.db.wide ALTER COLUMN f TYPE DOUBLE")
-        s.sql(s"INSERT INTO $cat.db.wide SELECT o_orderkey + 4000000000, " +
-          s"CAST(o_orderkey % 89 AS DOUBLE) FROM cat_src_$tag WHERE o_orderkey % 23 = 3")
-        // STREAMING WRITE (r14): db.ctas relayed into db.sw through
-        // readStream.table -> writeStream.toTable — the exactly-once
-        // epoch commit path, drained and stopped inside the fixture
-        s.sql(s"CREATE TABLE $cat.db.sw (o_orderkey BIGINT, price_cents BIGINT)")
-        val q = s.readStream.table(s"$cat.db.ctas")
-          .writeStream.option("checkpointLocation", s"$wh/_ckpt_sw")
-          .toTable(s"$cat.db.sw")
-        try q.processAllAvailable() finally q.stop()
-        // COMPLETE-MODE STREAMING WRITE (r15): a streaming aggregate
-        // over db.ctas materialized into db.swc — each epoch is ONE
-        // stream-replace transaction (the reference's own
-        // aggregate-to-sink topology, spark_stream.py:58–84)
-        s.sql(s"CREATE TABLE $cat.db.swc (grp BIGINT, n BIGINT, sum_pc BIGINT)")
-        val qc = s.readStream.table(s"$cat.db.ctas")
-          .groupBy((col("o_orderkey") % 7).as("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("price_cents")).as("sum_pc"))
-          .writeStream.outputMode("complete")
-          .option("checkpointLocation", s"$wh/_ckpt_swc")
-          .toTable(s"$cat.db.swc")
-        try qc.processAllAvailable() finally qc.stop()
-        // UPDATE-MODE STREAMING WRITE (r16): the same aggregate in
-        // update mode, materialized through the mergeKey sink — each
-        // epoch's changed keys MERGE into db.swu, so the table equals
-        // the batch aggregate (the reference's actual output mode,
-        // spark_stream.py:73,83, as a lakehouse table)
-        s.sql(s"CREATE TABLE $cat.db.swu (grp BIGINT, n BIGINT, sum_pc BIGINT)")
-        val qu = s.readStream.table(s"$cat.db.ctas")
-          .groupBy((col("o_orderkey") % 7).as("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("price_cents")).as("sum_pc"))
-          .writeStream.outputMode("update")
-          .option("mergeKey", "grp")
-          .option("checkpointLocation", s"$wh/_ckpt_swu")
-          .toTable(s"$cat.db.swu")
-        try qu.processAllAvailable() finally qu.stop()
-        // BRANCH REFS (r16): write-audit-publish — fork, branch DML
-        // (insert + DV delete) invisible to main, then ONE strictly
-        // fast-forward publish commit lands the audited state
-        s.sql(s"CREATE TABLE $cat.db.brt AS SELECT o_orderkey, price_cents " +
-          s"FROM cat_src_$tag WHERE o_orderkey % 14 = 3")
-        s.sql(s"CALL $cat.system.create_branch(table => 'db.brt', branch => 'wap')")
-        s.sql(s"INSERT INTO $cat.db.brt.branch_wap SELECT o_orderkey + 30000000, " +
-          s"price_cents FROM cat_src_$tag WHERE o_orderkey % 14 = 10")
-        s.sql(s"DELETE FROM $cat.db.brt.branch_wap WHERE o_orderkey % 2 = 0")
-        s.sql(s"CALL $cat.system.publish_branch(table => 'db.brt', branch => 'wap')")
-        s.sql(s"CALL $cat.system.create_tag(table => 'db.brt', " +
-          "tag => 'prewap', version => 1)")
-        // NOT NULL + DEFAULT contracts (r16): rows written BEFORE the
-        // ADD COLUMN read the frozen default ('bronze'), rows after
-        // carry their own value — zero rewrites, oracle-closed
-        s.sql(s"CREATE TABLE $cat.db.dflt " +
-          "(o_orderkey BIGINT NOT NULL, price_cents BIGINT)")
-        s.sql(s"INSERT INTO $cat.db.dflt SELECT o_orderkey, price_cents " +
-          s"FROM cat_src_$tag WHERE o_orderkey % 21 = 2")
-        s.sql(s"ALTER TABLE $cat.db.dflt ADD COLUMN tier STRING DEFAULT 'bronze'")
-        s.sql(s"INSERT INTO $cat.db.dflt SELECT o_orderkey + 20000000, " +
-          s"price_cents, 'gold' FROM cat_src_$tag WHERE o_orderkey % 21 = 9")
-        // MERGE WHEN NOT MATCHED BY SOURCE (r14): %26=1 is exactly
-        // half of the %13=1 target (26 = 2*13), so matched rows
-        // double and the other half deletes — fully oracle-closed
-        s.sql(s"CREATE TABLE $cat.db.nmbs AS SELECT o_orderkey, price_cents " +
-          s"FROM cat_src_$tag WHERE o_orderkey % 13 = 1")
-        s.sql(s"""MERGE INTO $cat.db.nmbs t
-                  USING (SELECT o_orderkey, price_cents FROM cat_src_$tag
-                         WHERE o_orderkey % 26 = 1) s
-                  ON t.o_orderkey = s.o_orderkey
-                  WHEN MATCHED THEN UPDATE SET price_cents = 2 * s.price_cents
-                  WHEN NOT MATCHED BY SOURCE THEN DELETE""")
-        // MATERIALIZED VIEW through SQL (r15): db.mv mirrors db.nmbs
-        // via CALL refresh_mv — offsets live in the target's own
-        // ledger, so a replayed refresh applies nothing twice
-        s.sql(s"CREATE TABLE $cat.db.mv (o_orderkey BIGINT, price_cents BIGINT)")
-        s.sql(s"CALL $cat.system.refresh_mv(source => 'db.nmbs', " +
-          "target => 'db.mv', key => 'o_orderkey')")
-        // NESTED/STRUCT columns (r17): writes stat struct LEAVES under
-        // dotted paths (meta.cents prunes like a top-level column),
-        // and one level of nesting evolves metadata-only — v3 ADDs
-        // meta.tier touching zero files (old rows read NULL), v4
-        // inserts carry it
-        s.sql(s"CREATE TABLE $cat.db.nest " +
-          "(o_orderkey BIGINT, meta STRUCT<cents: BIGINT, status: STRING>)")
-        s.sql(s"INSERT INTO $cat.db.nest SELECT o_orderkey, " +
-          "named_struct('cents', price_cents, 'status', o_orderstatus) " +
-          s"FROM cat_src_$tag WHERE o_orderkey % 8 = 6")
-        s.sql(s"ALTER TABLE $cat.db.nest ADD COLUMN meta.tier STRING")
-        s.sql(s"INSERT INTO $cat.db.nest SELECT o_orderkey + 40000000, " +
-          "named_struct('cents', price_cents, 'status', o_orderstatus, " +
-          s"'tier', 'gold') FROM cat_src_$tag WHERE o_orderkey % 8 = 2")
-        // RESTORE (r17): damage the CTAS state (a DV delete + an
-        // append), then ONE restore commit snaps files, DVs and
-        // schema back to v1 — history keeps all four versions
-        s.sql(s"CREATE TABLE $cat.db.rcs AS SELECT o_orderkey, price_cents " +
-          s"FROM cat_src_$tag WHERE o_orderkey % 17 = 4")             // v1
-        s.sql(s"DELETE FROM $cat.db.rcs WHERE o_orderkey % 2 = 0")    // v2
-        s.sql(s"INSERT INTO $cat.db.rcs SELECT o_orderkey + 50000000, " +
-          s"price_cents FROM cat_src_$tag WHERE o_orderkey % 17 = 9") // v3
-        s.sql(s"CALL $cat.system.restore(table => 'db.rcs', version => 1)") // v4
-        // SHALLOW CLONE (r17): db.cln shares db.rcs's bytes (zero
-        // copied; the fork version pinned on rcs against vacuum),
-        // then diverges with its own DV delete — rcs unchanged
-        s.sql(s"CALL $cat.system.clone(source => 'db.rcs', target => 'db.cln')")
-        s.sql(s"DELETE FROM $cat.db.cln WHERE o_orderkey % 3 = 0")
-        // COPY INTO (r17): a landing directory ingested in two waves
-        // with a full replay after each — the replay publishes NO
-        // commit (the guard pins head at v3), and a double-ingest
-        // would double the rows and fail the hash
-        val landing = java.nio.file.Paths.get(s"$wh/landing_cpy")
-        java.nio.file.Files.createDirectories(landing)
-        def landFile(name: String, m: Int): Unit = {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_cpy_src")
-          s.sql(s"SELECT o_orderkey, price_cents FROM cat_src_$tag " +
-              s"WHERE o_orderkey % 3 = $m")
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val it = java.nio.file.Files.list(tmp).iterator()
-          val part = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-            .find(_.getFileName.toString.endsWith(".parquet")).get
-          java.nio.file.Files.move(part, landing.resolve(s"$name.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        }
-        s.sql(s"CREATE TABLE $cat.db.cpy " +
-          "(o_orderkey BIGINT, price_cents BIGINT)")                  // v1
-        landFile("w0", 0); landFile("w1", 1)
-        s.sql(s"CALL $cat.system.copy_into(table => 'db.cpy', " +
-          s"source => '$landing')")                                   // v2
-        s.sql(s"CALL $cat.system.copy_into(table => 'db.cpy', " +
-          s"source => '$landing')")                                   // replay: no-op
-        landFile("w2", 2)
-        s.sql(s"CALL $cat.system.copy_into(table => 'db.cpy', " +
-          s"source => '$landing')")                                   // v3: the delta
-        s.sql(s"CALL $cat.system.copy_into(table => 'db.cpy', " +
-          s"source => '$landing')")                                   // replay: no-op
-        // TEMPORAL partition transform (r17): days(ts) range-clusters
-        // inserts by UTC epoch day, so each staged file spans few
-        // days and ts predicates prune through the existing typed
-        // micros stats (the transform needs NO new pruning domain)
-        Tables.orders(s, dir)
-          .select(col("o_orderkey"), col("o_orderdate").as("ts"),
-            round(col("o_totalprice") * 100).cast("long").as("price_cents"))
-          .where(col("o_orderkey") % 9 === 7)
-          .createOrReplaceTempView(s"cat_ts_$tag")
-        s.sql(s"CREATE TABLE $cat.db.tday " +
-          "(o_orderkey BIGINT, ts TIMESTAMP, price_cents BIGINT) " +
-          "PARTITIONED BY (days(ts))")                                // v1
-        s.sql(s"INSERT INTO $cat.db.tday SELECT * FROM cat_ts_$tag")  // v2
-        // predicate-scoped overwrite (r17): INSERT OVERWRITE one
-        // PARTITION = delete-matching + append in ONE commit; the
-        // other partitions' rows must survive byte-identically
-        s.sql(s"CREATE TABLE $cat.db.rw " +
-          "(o_orderkey BIGINT, price_cents BIGINT, o_orderstatus STRING) " +
-          "PARTITIONED BY (o_orderstatus)")                           // v1
-        s.sql(s"INSERT INTO $cat.db.rw " +
-          s"SELECT * FROM cat_src_$tag WHERE o_orderkey % 5 = 0")     // v2
-        s.sql(s"INSERT OVERWRITE $cat.db.rw PARTITION (o_orderstatus = 'F') " +
-          s"SELECT o_orderkey, price_cents * 3 FROM cat_src_$tag " +
-          "WHERE o_orderkey % 7 = 0 AND o_orderstatus = 'F'")         // v3
-        // PARTITION-SPEC EVOLUTION (r17, X-A86): one generation
-        // written under identity(o_orderstatus), one metadata commit
-        // re-declaring days(ts), one generation under the new spec —
-        // zero data movement, both generations readable and prunable
-        // through their own (sound) stats
-        Tables.orders(s, dir)
-          .select(col("o_orderkey"), col("o_orderdate").as("ts"),
-            round(col("o_totalprice") * 100).cast("long").as("price_cents"),
-            col("o_orderstatus"))
-          .where(col("o_orderkey") % 9 === 2)
-          .createOrReplaceTempView(s"cat_pev_$tag")
-        s.sql(s"CREATE TABLE $cat.db.pev " +
-          "(o_orderkey BIGINT, ts TIMESTAMP, price_cents BIGINT, " +
-          "o_orderstatus STRING) " +
-          "PARTITIONED BY (o_orderstatus)")                           // v1
-        s.sql(s"INSERT INTO $cat.db.pev " +
-          s"SELECT * FROM cat_pev_$tag WHERE o_orderkey % 2 = 0")     // v2
-        s.sql(s"CALL $cat.system.set_partitioning(table => 'db.pev', " +
-          "spec => 'days(ts)')")                                      // v3
-        s.sql(s"INSERT INTO $cat.db.pev " +
-          s"SELECT * FROM cat_pev_$tag WHERE o_orderkey % 2 = 1")     // v4
-        // GENERATED ALWAYS AS (r17, X-A89): `day` computes from ts on
-        // insert (omitted by name), enforces via the synthetic
-        // gen_day CHECK on every write path, and is an ordinary
-        // stat/partition column
-        s.sql(s"CREATE TABLE $cat.db.genc " +
-          "(o_orderkey BIGINT, ts TIMESTAMP, price_cents BIGINT, " +
-          "day DATE GENERATED ALWAYS AS (CAST(ts AS DATE))) " +
-          "PARTITIONED BY (day)")                                     // v1
-        s.sql(s"INSERT INTO $cat.db.genc (o_orderkey, ts, price_cents) " +
-          s"SELECT o_orderkey, ts, price_cents FROM cat_pev_$tag " +
-          "WHERE o_orderkey % 2 = 0")                                 // v2
-        // IDENTITY columns (r17, X-A90): two batches, ids minted in
-        // deterministic column order so even the VALUES are
-        // oracle-checkable; the second batch continues past the
-        // first's metadata-only high-water mark
-        s.sql(s"CREATE TABLE $cat.db.idn " +
-          "(id BIGINT GENERATED ALWAYS AS IDENTITY, " +
-          "o_orderkey BIGINT, price_cents BIGINT)")                   // v1
-        s.sql(s"INSERT INTO $cat.db.idn (o_orderkey, price_cents) " +
-          s"SELECT o_orderkey, price_cents FROM cat_src_$tag " +
-          "WHERE o_orderkey % 11 = 4 AND o_orderkey % 2 = 0")         // v2
-        s.sql(s"INSERT INTO $cat.db.idn (o_orderkey, price_cents) " +
-          s"SELECT o_orderkey, price_cents FROM cat_src_$tag " +
-          "WHERE o_orderkey % 11 = 4 AND o_orderkey % 2 = 1")         // v3
-        // unified CDF feed (r17, X-A91): insert + MOR update + MOR
-        // delete — the feed's _change_type classification is EXACT on
-        // deletion-vector DML
-        s.sql(s"CREATE TABLE $cat.db.fd " +
-          "(o_orderkey BIGINT, price_cents BIGINT)")                  // v1
-        s.sql(s"INSERT INTO $cat.db.fd SELECT o_orderkey, price_cents " +
-          s"FROM cat_src_$tag WHERE o_orderkey % 7 = 0")              // v2
-        val prevFd = s.conf.getOption("spark.graft.dml.mode")
-        s.conf.set("spark.graft.dml.mode", "mor")
-        try {
-          s.sql(s"UPDATE $cat.db.fd SET price_cents = price_cents + 1 " +
-            "WHERE o_orderkey % 14 = 0")                              // v3
-          s.sql(s"DELETE FROM $cat.db.fd WHERE o_orderkey % 21 = 0")  // v4
-        } finally prevFd match {
-          case Some(m) => s.conf.set("spark.graft.dml.mode", m)
-          case None    => s.conf.unset("spark.graft.dml.mode")
-        }
-        // r18 (X-A93): the COW twin — default-mode (copy-on-write)
-        // DML through the finalized delta write, whose commit carries
-        // exact kill bitmaps + row-preserving survivor files, so the
-        // feed is row-exact here too. The DELETE condition is a
-        // subquery ON PURPOSE: it fails canDeleteWhere and takes the
-        // row-level rewrite path (a translatable predicate would take
-        // the metadata DV path, which the `fd` table already covers).
-        s.sql(s"CREATE TABLE $cat.db.fdc " +
-          "(o_orderkey BIGINT, price_cents BIGINT)")                  // v1
-        s.sql(s"INSERT INTO $cat.db.fdc SELECT o_orderkey, price_cents " +
-          s"FROM cat_src_$tag WHERE o_orderkey % 5 = 0")              // v2
-        s.sql(s"UPDATE $cat.db.fdc SET price_cents = price_cents + 1 " +
-          "WHERE o_orderkey % 10 = 0")                                // v3 (COW)
-        s.sql(s"DELETE FROM $cat.db.fdc WHERE o_orderkey IN " +
-          s"(SELECT o_orderkey FROM cat_src_$tag WHERE o_orderkey % 15 = 0)") // v4 (COW)
-        ()
-      }
+    Tables.orders(s, dir)
+      .select(col("o_orderkey"),
+        round(col("o_totalprice") * 100).cast("long").as("price_cents"),
+        col("o_orderstatus"))
+      .createOrReplaceTempView(s"cat_src_$tag")
+    s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+    s.sql(s"CREATE TABLE $cat.db.ord " +                          // v1
+      "(o_orderkey BIGINT, price_cents BIGINT, o_orderstatus STRING)")
+    s.sql(s"INSERT INTO $cat.db.ord " +                           // v2
+      s"SELECT * FROM cat_src_$tag WHERE o_orderkey % 3 = 0")
+    s.sql(s"INSERT INTO $cat.db.ord " +                           // v3
+      s"SELECT * FROM cat_src_$tag WHERE o_orderkey % 3 = 1")
+    s.sql(s"DELETE FROM $cat.db.ord WHERE o_orderkey % 5 = 2")    // v4 (DV)
+    s.sql(s"UPDATE $cat.db.ord SET price_cents = price_cents + 7 " + // v5 (COW)
+      "WHERE o_orderkey % 7 = 0")
+    // v6: MERGE — %15==1 keys are always in the target (k=15m+1
+    // has k%3=1 and k%5=1, so the v4 delete never touched them)
+    // and exercise the MATCHED arm; %3==2 keys are disjoint from
+    // the target and exercise NOT MATCHED inserts
+    s.sql(s"""MERGE INTO $cat.db.ord t
+              USING (SELECT * FROM cat_src_$tag
+                     WHERE o_orderkey % 3 = 2 OR o_orderkey % 15 = 1) s
+              ON t.o_orderkey = s.o_orderkey
+              WHEN MATCHED THEN UPDATE SET price_cents = 2 * s.price_cents
+              WHEN NOT MATCHED THEN INSERT (o_orderkey, price_cents, o_orderstatus)
+                VALUES (s.o_orderkey, 2 * s.price_cents, s.o_orderstatus)""")
+    // v7: the same UPDATE primitive MERGE-ON-READ — deletion-
+    // vector bits + appended post-images, zero files rewritten
+    val prevMode = s.conf.getOption("spark.graft.dml.mode")
+    s.conf.set("spark.graft.dml.mode", "mor")
+    try s.sql(s"UPDATE $cat.db.ord SET price_cents = price_cents + 1 " +
+      "WHERE o_orderkey % 13 = 0")
+    finally prevMode match {
+      case Some(m) => s.conf.set("spark.graft.dml.mode", m)
+      case None    => s.conf.unset("spark.graft.dml.mode")
     }
-    cat
+    // v8: schema evolution — one metadata commit; v9: an insert
+    // under the evolved schema (old rows read NULL for `flag`)
+    s.sql(s"ALTER TABLE $cat.db.ord ADD COLUMN flag STRING")
+    s.sql(s"INSERT INTO $cat.db.ord SELECT o_orderkey + 10000000, " +
+      s"price_cents, o_orderstatus, 'x' FROM cat_src_$tag " +
+      "WHERE o_orderkey % 17 = 5")
+    // a second table via ATOMIC CTAS: one commit carrying create +
+    // data + typed stats (StagingTableCatalog path)
+    s.sql(s"CREATE TABLE $cat.db.ctas AS " +
+      s"SELECT o_orderkey, price_cents FROM cat_src_$tag WHERE o_orderkey % 11 = 3")
+    // PARTITIONED BY identity (r14): inserts range-cluster by the
+    // partition column so its per-file ranges collapse; a
+    // partition predicate then prunes through ordinary typed
+    // stats (X-A38 as SQL)
+    s.sql(s"CREATE TABLE $cat.db.part " +
+      "(o_orderkey BIGINT, price_cents BIGINT, o_orderstatus STRING) " +
+      "PARTITIONED BY (o_orderstatus)")
+    s.sql(s"INSERT INTO $cat.db.part " +
+      s"SELECT * FROM cat_src_$tag WHERE o_orderkey % 4 = 1")
+    // BUCKET partition transform (r15): writers cluster by
+    // pmod(hash(k), 8), each file records its collapsed bucket id
+    // as a derived point stat, equality predicates prune to one
+    // bucket (Iceberg-style bucket(n, c) through X-A38's stats)
+    s.sql(s"CREATE TABLE $cat.db.bkt " +
+      "(o_orderkey BIGINT, price_cents BIGINT) " +
+      "PARTITIONED BY (bucket(8, o_orderkey))")
+    s.sql(s"INSERT INTO $cat.db.bkt SELECT o_orderkey, price_cents " +
+      s"FROM cat_src_$tag WHERE o_orderkey % 6 = 5")
+    // a CO-BUCKETED sibling: joining it with db.bkt is a
+    // storage-partitioned join — zero shuffles on either side
+    s.sql(s"CREATE TABLE $cat.db.bkt2 " +
+      "(o_orderkey BIGINT, pc3 BIGINT) " +
+      "PARTITIONED BY (bucket(8, o_orderkey))")
+    s.sql(s"INSERT INTO $cat.db.bkt2 SELECT o_orderkey, price_cents * 3 " +
+      s"FROM cat_src_$tag WHERE o_orderkey % 4 = 1")
+    // a COMPATIBLE-count sibling (r16): bucket(4) joins the
+    // bucket(8) fact shuffle-free through the bucket reducer
+    // (8 % 4 == 0 -> fine id % 4 == coarse id)
+    s.sql(s"CREATE TABLE $cat.db.bkt4 " +
+      "(o_orderkey BIGINT, pc5 BIGINT) " +
+      "PARTITIONED BY (bucket(4, o_orderkey))")
+    s.sql(s"INSERT INTO $cat.db.bkt4 SELECT o_orderkey, price_cents * 5 " +
+      s"FROM cat_src_$tag WHERE o_orderkey % 3 = 2")
+    // maintenance THROUGH SQL (r14, ProcedureCatalog): a DV delete
+    // folded clean by CALL compact_deletes, then CALL checkpoint
+    s.sql(s"CREATE TABLE $cat.db.proc AS SELECT o_orderkey, price_cents " +
+      s"FROM cat_src_$tag WHERE o_orderkey % 9 = 4")
+    s.sql(s"DELETE FROM $cat.db.proc WHERE o_orderkey % 2 = 0")
+    s.sql(s"CALL $cat.system.compact_deletes(table => 'db.proc', " +
+      "min_deleted_fraction => 0.1)")
+    s.sql(s"CALL $cat.system.checkpoint(table => 'db.proc')")
+    // ALTER COLUMN TYPE widening (r14): int->bigint, float->double
+    // across two file generations; f holds integral values so the
+    // float->double conversion is exact for the oracle
+    s.sql(s"CREATE TABLE $cat.db.wide (o_orderkey INT, f FLOAT)")
+    s.sql(s"INSERT INTO $cat.db.wide SELECT CAST(o_orderkey AS INT), " +
+      s"CAST(o_orderkey % 97 AS FLOAT) FROM cat_src_$tag WHERE o_orderkey % 19 = 2")
+    s.sql(s"ALTER TABLE $cat.db.wide ALTER COLUMN o_orderkey TYPE BIGINT")
+    s.sql(s"ALTER TABLE $cat.db.wide ALTER COLUMN f TYPE DOUBLE")
+    s.sql(s"INSERT INTO $cat.db.wide SELECT o_orderkey + 4000000000, " +
+      s"CAST(o_orderkey % 89 AS DOUBLE) FROM cat_src_$tag WHERE o_orderkey % 23 = 3")
+    // STREAMING WRITE (r14): db.ctas relayed into db.sw through
+    // readStream.table -> writeStream.toTable — the exactly-once
+    // epoch commit path, drained and stopped inside the fixture
+    s.sql(s"CREATE TABLE $cat.db.sw (o_orderkey BIGINT, price_cents BIGINT)")
+    val q = s.readStream.table(s"$cat.db.ctas")
+      .writeStream.option("checkpointLocation", s"$wh/_ckpt_sw")
+      .toTable(s"$cat.db.sw")
+    try q.processAllAvailable() finally q.stop()
+    // COMPLETE-MODE STREAMING WRITE (r15): a streaming aggregate
+    // over db.ctas materialized into db.swc — each epoch is ONE
+    // stream-replace transaction (the reference's own
+    // aggregate-to-sink topology, spark_stream.py:58–84)
+    s.sql(s"CREATE TABLE $cat.db.swc (grp BIGINT, n BIGINT, sum_pc BIGINT)")
+    val qc = s.readStream.table(s"$cat.db.ctas")
+      .groupBy((col("o_orderkey") % 7).as("grp"))
+      .agg(count(lit(1)).as("n"), sum(col("price_cents")).as("sum_pc"))
+      .writeStream.outputMode("complete")
+      .option("checkpointLocation", s"$wh/_ckpt_swc")
+      .toTable(s"$cat.db.swc")
+    try qc.processAllAvailable() finally qc.stop()
+    // UPDATE-MODE STREAMING WRITE (r16): the same aggregate in
+    // update mode, materialized through the mergeKey sink — each
+    // epoch's changed keys MERGE into db.swu, so the table equals
+    // the batch aggregate (the reference's actual output mode,
+    // spark_stream.py:73,83, as a lakehouse table)
+    s.sql(s"CREATE TABLE $cat.db.swu (grp BIGINT, n BIGINT, sum_pc BIGINT)")
+    val qu = s.readStream.table(s"$cat.db.ctas")
+      .groupBy((col("o_orderkey") % 7).as("grp"))
+      .agg(count(lit(1)).as("n"), sum(col("price_cents")).as("sum_pc"))
+      .writeStream.outputMode("update")
+      .option("mergeKey", "grp")
+      .option("checkpointLocation", s"$wh/_ckpt_swu")
+      .toTable(s"$cat.db.swu")
+    try qu.processAllAvailable() finally qu.stop()
+    // BRANCH REFS (r16): write-audit-publish — fork, branch DML
+    // (insert + DV delete) invisible to main, then ONE strictly
+    // fast-forward publish commit lands the audited state
+    s.sql(s"CREATE TABLE $cat.db.brt AS SELECT o_orderkey, price_cents " +
+      s"FROM cat_src_$tag WHERE o_orderkey % 14 = 3")
+    s.sql(s"CALL $cat.system.create_branch(table => 'db.brt', branch => 'wap')")
+    s.sql(s"INSERT INTO $cat.db.brt.branch_wap SELECT o_orderkey + 30000000, " +
+      s"price_cents FROM cat_src_$tag WHERE o_orderkey % 14 = 10")
+    s.sql(s"DELETE FROM $cat.db.brt.branch_wap WHERE o_orderkey % 2 = 0")
+    s.sql(s"CALL $cat.system.publish_branch(table => 'db.brt', branch => 'wap')")
+    s.sql(s"CALL $cat.system.create_tag(table => 'db.brt', " +
+      "tag => 'prewap', version => 1)")
+    // NOT NULL + DEFAULT contracts (r16): rows written BEFORE the
+    // ADD COLUMN read the frozen default ('bronze'), rows after
+    // carry their own value — zero rewrites, oracle-closed
+    s.sql(s"CREATE TABLE $cat.db.dflt " +
+      "(o_orderkey BIGINT NOT NULL, price_cents BIGINT)")
+    s.sql(s"INSERT INTO $cat.db.dflt SELECT o_orderkey, price_cents " +
+      s"FROM cat_src_$tag WHERE o_orderkey % 21 = 2")
+    s.sql(s"ALTER TABLE $cat.db.dflt ADD COLUMN tier STRING DEFAULT 'bronze'")
+    s.sql(s"INSERT INTO $cat.db.dflt SELECT o_orderkey + 20000000, " +
+      s"price_cents, 'gold' FROM cat_src_$tag WHERE o_orderkey % 21 = 9")
+    // MERGE WHEN NOT MATCHED BY SOURCE (r14): %26=1 is exactly
+    // half of the %13=1 target (26 = 2*13), so matched rows
+    // double and the other half deletes — fully oracle-closed
+    s.sql(s"CREATE TABLE $cat.db.nmbs AS SELECT o_orderkey, price_cents " +
+      s"FROM cat_src_$tag WHERE o_orderkey % 13 = 1")
+    s.sql(s"""MERGE INTO $cat.db.nmbs t
+              USING (SELECT o_orderkey, price_cents FROM cat_src_$tag
+                     WHERE o_orderkey % 26 = 1) s
+              ON t.o_orderkey = s.o_orderkey
+              WHEN MATCHED THEN UPDATE SET price_cents = 2 * s.price_cents
+              WHEN NOT MATCHED BY SOURCE THEN DELETE""")
+    // MATERIALIZED VIEW through SQL (r15): db.mv mirrors db.nmbs
+    // via CALL refresh_mv — offsets live in the target's own
+    // ledger, so a replayed refresh applies nothing twice
+    s.sql(s"CREATE TABLE $cat.db.mv (o_orderkey BIGINT, price_cents BIGINT)")
+    s.sql(s"CALL $cat.system.refresh_mv(source => 'db.nmbs', " +
+      "target => 'db.mv', key => 'o_orderkey')")
+    // NESTED/STRUCT columns (r17): writes stat struct LEAVES under
+    // dotted paths (meta.cents prunes like a top-level column),
+    // and one level of nesting evolves metadata-only — v3 ADDs
+    // meta.tier touching zero files (old rows read NULL), v4
+    // inserts carry it
+    s.sql(s"CREATE TABLE $cat.db.nest " +
+      "(o_orderkey BIGINT, meta STRUCT<cents: BIGINT, status: STRING>)")
+    s.sql(s"INSERT INTO $cat.db.nest SELECT o_orderkey, " +
+      "named_struct('cents', price_cents, 'status', o_orderstatus) " +
+      s"FROM cat_src_$tag WHERE o_orderkey % 8 = 6")
+    s.sql(s"ALTER TABLE $cat.db.nest ADD COLUMN meta.tier STRING")
+    s.sql(s"INSERT INTO $cat.db.nest SELECT o_orderkey + 40000000, " +
+      "named_struct('cents', price_cents, 'status', o_orderstatus, " +
+      s"'tier', 'gold') FROM cat_src_$tag WHERE o_orderkey % 8 = 2")
+    // RESTORE (r17): damage the CTAS state (a DV delete + an
+    // append), then ONE restore commit snaps files, DVs and
+    // schema back to v1 — history keeps all four versions
+    s.sql(s"CREATE TABLE $cat.db.rcs AS SELECT o_orderkey, price_cents " +
+      s"FROM cat_src_$tag WHERE o_orderkey % 17 = 4")             // v1
+    s.sql(s"DELETE FROM $cat.db.rcs WHERE o_orderkey % 2 = 0")    // v2
+    s.sql(s"INSERT INTO $cat.db.rcs SELECT o_orderkey + 50000000, " +
+      s"price_cents FROM cat_src_$tag WHERE o_orderkey % 17 = 9") // v3
+    s.sql(s"CALL $cat.system.restore(table => 'db.rcs', version => 1)") // v4
+    // SHALLOW CLONE (r17): db.cln shares db.rcs's bytes (zero
+    // copied; the fork version pinned on rcs against vacuum),
+    // then diverges with its own DV delete — rcs unchanged
+    s.sql(s"CALL $cat.system.clone(source => 'db.rcs', target => 'db.cln')")
+    s.sql(s"DELETE FROM $cat.db.cln WHERE o_orderkey % 3 = 0")
+    // COPY INTO (r17): a landing directory ingested in two waves
+    // with a full replay after each — the replay publishes NO
+    // commit (the guard pins head at v3), and a double-ingest
+    // would double the rows and fail the hash
+    val landing = java.nio.file.Paths.get(s"$wh/landing_cpy")
+    java.nio.file.Files.createDirectories(landing)
+    def landFile(name: String, m: Int): Unit = {
+      val tmp = java.nio.file.Files.createTempDirectory("graft_cpy_src")
+      s.sql(s"SELECT o_orderkey, price_cents FROM cat_src_$tag " +
+          s"WHERE o_orderkey % 3 = $m")
+        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val it = java.nio.file.Files.list(tmp).iterator()
+      val part = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      java.nio.file.Files.move(part, landing.resolve(s"$name.parquet"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    s.sql(s"CREATE TABLE $cat.db.cpy " +
+      "(o_orderkey BIGINT, price_cents BIGINT)")                  // v1
+    landFile("w0", 0); landFile("w1", 1)
+    s.sql(s"CALL $cat.system.copy_into(table => 'db.cpy', " +
+      s"source => '$landing')")                                   // v2
+    s.sql(s"CALL $cat.system.copy_into(table => 'db.cpy', " +
+      s"source => '$landing')")                                   // replay: no-op
+    landFile("w2", 2)
+    s.sql(s"CALL $cat.system.copy_into(table => 'db.cpy', " +
+      s"source => '$landing')")                                   // v3: the delta
+    s.sql(s"CALL $cat.system.copy_into(table => 'db.cpy', " +
+      s"source => '$landing')")                                   // replay: no-op
+    // TEMPORAL partition transform (r17): days(ts) range-clusters
+    // inserts by UTC epoch day, so each staged file spans few
+    // days and ts predicates prune through the existing typed
+    // micros stats (the transform needs NO new pruning domain)
+    Tables.orders(s, dir)
+      .select(col("o_orderkey"), col("o_orderdate").as("ts"),
+        round(col("o_totalprice") * 100).cast("long").as("price_cents"))
+      .where(col("o_orderkey") % 9 === 7)
+      .createOrReplaceTempView(s"cat_ts_$tag")
+    s.sql(s"CREATE TABLE $cat.db.tday " +
+      "(o_orderkey BIGINT, ts TIMESTAMP, price_cents BIGINT) " +
+      "PARTITIONED BY (days(ts))")                                // v1
+    s.sql(s"INSERT INTO $cat.db.tday SELECT * FROM cat_ts_$tag")  // v2
+    // predicate-scoped overwrite (r17): INSERT OVERWRITE one
+    // PARTITION = delete-matching + append in ONE commit; the
+    // other partitions' rows must survive byte-identically
+    s.sql(s"CREATE TABLE $cat.db.rw " +
+      "(o_orderkey BIGINT, price_cents BIGINT, o_orderstatus STRING) " +
+      "PARTITIONED BY (o_orderstatus)")                           // v1
+    s.sql(s"INSERT INTO $cat.db.rw " +
+      s"SELECT * FROM cat_src_$tag WHERE o_orderkey % 5 = 0")     // v2
+    s.sql(s"INSERT OVERWRITE $cat.db.rw PARTITION (o_orderstatus = 'F') " +
+      s"SELECT o_orderkey, price_cents * 3 FROM cat_src_$tag " +
+      "WHERE o_orderkey % 7 = 0 AND o_orderstatus = 'F'")         // v3
+    // PARTITION-SPEC EVOLUTION (r17, X-A86): one generation
+    // written under identity(o_orderstatus), one metadata commit
+    // re-declaring days(ts), one generation under the new spec —
+    // zero data movement, both generations readable and prunable
+    // through their own (sound) stats
+    Tables.orders(s, dir)
+      .select(col("o_orderkey"), col("o_orderdate").as("ts"),
+        round(col("o_totalprice") * 100).cast("long").as("price_cents"),
+        col("o_orderstatus"))
+      .where(col("o_orderkey") % 9 === 2)
+      .createOrReplaceTempView(s"cat_pev_$tag")
+    s.sql(s"CREATE TABLE $cat.db.pev " +
+      "(o_orderkey BIGINT, ts TIMESTAMP, price_cents BIGINT, " +
+      "o_orderstatus STRING) " +
+      "PARTITIONED BY (o_orderstatus)")                           // v1
+    s.sql(s"INSERT INTO $cat.db.pev " +
+      s"SELECT * FROM cat_pev_$tag WHERE o_orderkey % 2 = 0")     // v2
+    s.sql(s"CALL $cat.system.set_partitioning(table => 'db.pev', " +
+      "spec => 'days(ts)')")                                      // v3
+    s.sql(s"INSERT INTO $cat.db.pev " +
+      s"SELECT * FROM cat_pev_$tag WHERE o_orderkey % 2 = 1")     // v4
+    // GENERATED ALWAYS AS (r17, X-A89): `day` computes from ts on
+    // insert (omitted by name), enforces via the synthetic
+    // gen_day CHECK on every write path, and is an ordinary
+    // stat/partition column
+    s.sql(s"CREATE TABLE $cat.db.genc " +
+      "(o_orderkey BIGINT, ts TIMESTAMP, price_cents BIGINT, " +
+      "day DATE GENERATED ALWAYS AS (CAST(ts AS DATE))) " +
+      "PARTITIONED BY (day)")                                     // v1
+    s.sql(s"INSERT INTO $cat.db.genc (o_orderkey, ts, price_cents) " +
+      s"SELECT o_orderkey, ts, price_cents FROM cat_pev_$tag " +
+      "WHERE o_orderkey % 2 = 0")                                 // v2
+    // IDENTITY columns (r17, X-A90): two batches, ids minted in
+    // deterministic column order so even the VALUES are
+    // oracle-checkable; the second batch continues past the
+    // first's metadata-only high-water mark
+    s.sql(s"CREATE TABLE $cat.db.idn " +
+      "(id BIGINT GENERATED ALWAYS AS IDENTITY, " +
+      "o_orderkey BIGINT, price_cents BIGINT)")                   // v1
+    s.sql(s"INSERT INTO $cat.db.idn (o_orderkey, price_cents) " +
+      s"SELECT o_orderkey, price_cents FROM cat_src_$tag " +
+      "WHERE o_orderkey % 11 = 4 AND o_orderkey % 2 = 0")         // v2
+    s.sql(s"INSERT INTO $cat.db.idn (o_orderkey, price_cents) " +
+      s"SELECT o_orderkey, price_cents FROM cat_src_$tag " +
+      "WHERE o_orderkey % 11 = 4 AND o_orderkey % 2 = 1")         // v3
+    // unified CDF feed (r17, X-A91): insert + MOR update + MOR
+    // delete — the feed's _change_type classification is EXACT on
+    // deletion-vector DML
+    s.sql(s"CREATE TABLE $cat.db.fd " +
+      "(o_orderkey BIGINT, price_cents BIGINT)")                  // v1
+    s.sql(s"INSERT INTO $cat.db.fd SELECT o_orderkey, price_cents " +
+      s"FROM cat_src_$tag WHERE o_orderkey % 7 = 0")              // v2
+    val prevFd = s.conf.getOption("spark.graft.dml.mode")
+    s.conf.set("spark.graft.dml.mode", "mor")
+    try {
+      s.sql(s"UPDATE $cat.db.fd SET price_cents = price_cents + 1 " +
+        "WHERE o_orderkey % 14 = 0")                              // v3
+      s.sql(s"DELETE FROM $cat.db.fd WHERE o_orderkey % 21 = 0")  // v4
+    } finally prevFd match {
+      case Some(m) => s.conf.set("spark.graft.dml.mode", m)
+      case None    => s.conf.unset("spark.graft.dml.mode")
+    }
+    // r18 (X-A93): the COW twin — default-mode (copy-on-write)
+    // DML through the finalized delta write, whose commit carries
+    // exact kill bitmaps + row-preserving survivor files, so the
+    // feed is row-exact here too. The DELETE condition is a
+    // subquery ON PURPOSE: it fails canDeleteWhere and takes the
+    // row-level rewrite path (a translatable predicate would take
+    // the metadata DV path, which the `fd` table already covers).
+    s.sql(s"CREATE TABLE $cat.db.fdc " +
+      "(o_orderkey BIGINT, price_cents BIGINT)")                  // v1
+    s.sql(s"INSERT INTO $cat.db.fdc SELECT o_orderkey, price_cents " +
+      s"FROM cat_src_$tag WHERE o_orderkey % 5 = 0")              // v2
+    s.sql(s"UPDATE $cat.db.fdc SET price_cents = price_cents + 1 " +
+      "WHERE o_orderkey % 10 = 0")                                // v3 (COW)
+    s.sql(s"DELETE FROM $cat.db.fdc WHERE o_orderkey IN " +
+      s"(SELECT o_orderkey FROM cat_src_$tag WHERE o_orderkey % 15 = 0)") // v4 (COW)
   }
-
-  /** Maintained doc band indexes already built this JVM. */
-  private val materializedDocIndex =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** X-D17 end-to-end fixture (r19): a lakehouse `docs` table seeded
     * with the EXISTING corpus (doc_id % 10 != 0), then mutated by a
@@ -697,41 +558,26 @@ object SparkEntry {
     * maintenance machinery's end-to-end ANSWER (not just the spec's
     * index-equality) sits under the DuckDB oracle.
     */
-  private def ensureDocIndex(s: SparkSession, dir: String): String = {
+  private val ensureDocIndex = fixtures.withSession("dix",
+      (s, dir, wh) => { useCatalog(s, s"gdix_${dirTag(dir)}", wh); wh }) { (s, dir, wh) =>
     import graft.sources.{TxnLog, TxnStream}
     val tag = dirTag(dir)
     val cat = s"gdix_$tag"
-    val wh = s"$jvmTmp/graft_dix_${tag}_${ordersFingerprint(dir)}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    materializeOnce(materializedDocIndex, wh) {
-      val src = s"$wh/db/docs"
-      val idx = s"$wh/db/docsix"
-      if (TxnLog.currentVersion(src) != 4L ||
-          TxnStream.appliedVersion(idx, "bandix") != 4L) {
-        TxnLog.deleteRecursively(java.nio.file.Paths.get(wh))
-        Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)
-          .select(col("doc_id"), col("text"))
-          .createOrReplaceTempView(s"dix_src_$tag")
-        s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-        s.sql(s"CREATE TABLE $cat.db.docs (doc_id BIGINT, text STRING)") // v1
-        s.sql(s"INSERT INTO $cat.db.docs SELECT * FROM dix_src_$tag")    // v2
-        s.sql(s"UPDATE $cat.db.docs SET text = concat(text, ' updated twice over') " +
-          "WHERE doc_id % 7 = 1")                                        // v3 (COW)
-        s.sql(s"DELETE FROM $cat.db.docs WHERE doc_id % 5 = 3")          // v4 (DV)
-        TxnLog.init(idx)
-        TxnStream.maintainIndexInto(s, src, idx, "bandix", "doc_id")(
-          df => graft.operators.DedupOps.bandIndex(df, "doc_id", "text"))
-        ()
-      }
-    }
-    wh
+    val src = s"$wh/db/docs"
+    val idx = s"$wh/db/docsix"
+    Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)
+      .select(col("doc_id"), col("text"))
+      .createOrReplaceTempView(s"dix_src_$tag")
+    s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+    s.sql(s"CREATE TABLE $cat.db.docs (doc_id BIGINT, text STRING)") // v1
+    s.sql(s"INSERT INTO $cat.db.docs SELECT * FROM dix_src_$tag")    // v2
+    s.sql(s"UPDATE $cat.db.docs SET text = concat(text, ' updated twice over') " +
+      "WHERE doc_id % 7 = 1")                                        // v3 (COW)
+    s.sql(s"DELETE FROM $cat.db.docs WHERE doc_id % 5 = 3")          // v4 (DV)
+    TxnLog.init(idx)
+    TxnStream.maintainIndexInto(s, src, idx, "bandix", "doc_id")(
+      df => graft.operators.DedupOps.bandIndex(df, "doc_id", "text"))
   }
-
-  /** Maintained LSH postings indexes already built this JVM. */
-  private val materializedVecIndex =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** X-S22 end-to-end fixture (r19): the vector twin of
     * [[ensureDocIndex]] — a lakehouse `vecs` table seeded with the
@@ -741,43 +587,28 @@ object SparkEntry {
     * CDF-maintained into a sibling table. `sim_maintained_index`
     * answers incremental ANN dedup through it.
     */
-  private def ensureVecIndex(s: SparkSession, dir: String): String = {
+  private val ensureVecIndex = fixtures.withSession("vix",
+      (s, dir, wh) => { useCatalog(s, s"gvix_${dirTag(dir)}", wh); wh }) { (s, dir, wh) =>
     import graft.sources.{TxnLog, TxnStream}
     val tag = dirTag(dir)
     val cat = s"gvix_$tag"
-    val wh = s"$jvmTmp/graft_vix_${tag}_${ordersFingerprint(dir)}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    materializeOnce(materializedVecIndex, wh) {
-      val src = s"$wh/db/vecs"
-      val idx = s"$wh/db/vecsix"
-      if (TxnLog.currentVersion(src) != 4L ||
-          TxnStream.appliedVersion(idx, "annix") != 4L) {
-        TxnLog.deleteRecursively(java.nio.file.Paths.get(wh))
-        Tables.embeddings(s, dir).filter(col("vec_id") % 10 =!= 0)
-          .select(col("vec_id"), col("embedding"))
-          .createOrReplaceTempView(s"vix_src_$tag")
-        s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-        s.sql(s"CREATE TABLE $cat.db.vecs " +
-          "(vec_id BIGINT, embedding ARRAY<FLOAT>)")                    // v1
-        s.sql(s"INSERT INTO $cat.db.vecs SELECT * FROM vix_src_$tag")   // v2
-        s.sql(s"UPDATE $cat.db.vecs SET embedding = " +
-          "transform(embedding, x -> -x) WHERE vec_id % 7 = 1")         // v3 (COW)
-        s.sql(s"DELETE FROM $cat.db.vecs WHERE vec_id % 5 = 3")         // v4 (DV)
-        TxnLog.init(idx)
-        TxnStream.maintainIndexInto(s, src, idx, "annix", "vec_id")(df =>
-          graft.operators.VectorOps.lshIndex(df, "vec_id", "embedding")
-            .withColumnRenamed("__id", "vec_id"))
-        ()
-      }
-    }
-    wh
+    val src = s"$wh/db/vecs"
+    val idx = s"$wh/db/vecsix"
+    Tables.embeddings(s, dir).filter(col("vec_id") % 10 =!= 0)
+      .select(col("vec_id"), col("embedding"))
+      .createOrReplaceTempView(s"vix_src_$tag")
+    s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+    s.sql(s"CREATE TABLE $cat.db.vecs " +
+      "(vec_id BIGINT, embedding ARRAY<FLOAT>)")                    // v1
+    s.sql(s"INSERT INTO $cat.db.vecs SELECT * FROM vix_src_$tag")   // v2
+    s.sql(s"UPDATE $cat.db.vecs SET embedding = " +
+      "transform(embedding, x -> -x) WHERE vec_id % 7 = 1")         // v3 (COW)
+    s.sql(s"DELETE FROM $cat.db.vecs WHERE vec_id % 5 = 3")         // v4 (DV)
+    TxnLog.init(idx)
+    TxnStream.maintainIndexInto(s, src, idx, "annix", "vec_id")(df =>
+      graft.operators.VectorOps.lshIndex(df, "vec_id", "embedding")
+        .withColumnRenamed("__id", "vec_id"))
   }
-
-  /** Range-clustered stats-bearing txn tables already built this JVM. */
-  private val materializedTxnRangeTables =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** A second [[graft.sources.TxnLog]] table for the data-skipping
     * path: ONE append of the %3<=1 orders slice, staged
@@ -790,44 +621,30 @@ object SparkEntry {
     * the clustering order — every file's [min,max] of it spans the
     * whole domain and range stats can never prune a tag lookup);
     * each file carries a bloom filter over it, the index that serves
-    * exactly that lookup. Setup IO, paid by [[prepare]]. The root is
-    * generation-tagged: layout changes bump the tag so a /tmp
-    * survivor from an older build is never half-reused.
+    * exactly that lookup. Setup IO, paid by [[prepare]].
     */
-  private def ensureTxnRangeTable(s: SparkSession, dir: String): String = {
+  private val ensureTxnRangeTable = fixtures("txnr") { (s, dir, root) =>
     import graft.sources.TxnLog
-    val root =
-      s"$jvmTmp/graft_txnr_g3_${dirTag(dir)}_${ordersFingerprint(dir)}"
-    materializeOnce(materializedTxnRangeTables, root) {
-      if (TxnLog.currentVersion(root) != 1L) {
-        graft.sources.TxnLog.deleteRecursively(java.nio.file.Paths.get(root))
-        TxnLog.init(root)
-        // o_part: a hive-style partition column (coarse bucket of the
-        // clustering key — constant or near-constant per range file),
-        // statted ALONGSIDE o_orderkey via the multi-column map, so
-        // partition pruning is just stats pruning on o_part
-        val base = Tables.orders(s, dir)
-          .filter(col("o_orderkey") % 3 <= 1)
-          .select(col("o_orderkey"),
-            round(col("o_totalprice") * 100).cast("long").as("price_cents"),
-            (col("o_orderkey") * lit(2654435761L) % lit(1000000007L)).as("o_tag"),
-            floor(col("o_orderkey") / 2000).cast("long").as("o_part"))
-          .repartitionByRange(8, col("o_orderkey"))
-        val (files, _, blooms) = TxnLog.stageWithIndex(base, root, "v1-clustered",
-          statsCol = "o_orderkey", bloomCol = "o_tag")
-        val multi = TxnLog.statsForStaged(s, root, "v1-clustered",
-          Seq("o_orderkey", "o_part"), files)
-        TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
-          txnId = "v1-clustered", blooms = blooms, bloomCol = "o_tag",
-          multiStats = multi, schemaJson = TxnLog.encodeSchema(base.schema))
-        ()
-      }
-    }
+    TxnLog.init(root)
+    // o_part: a hive-style partition column (coarse bucket of the
+    // clustering key — constant or near-constant per range file),
+    // statted ALONGSIDE o_orderkey via the multi-column map, so
+    // partition pruning is just stats pruning on o_part
+    val base = Tables.orders(s, dir)
+      .filter(col("o_orderkey") % 3 <= 1)
+      .select(col("o_orderkey"),
+        round(col("o_totalprice") * 100).cast("long").as("price_cents"),
+        (col("o_orderkey") * lit(2654435761L) % lit(1000000007L)).as("o_tag"),
+        floor(col("o_orderkey") / 2000).cast("long").as("o_part"))
+      .repartitionByRange(8, col("o_orderkey"))
+    val (files, _, blooms) = TxnLog.stageWithIndex(base, root, "v1-clustered",
+      statsCol = "o_orderkey", bloomCol = "o_tag")
+    val multi = TxnLog.statsForStaged(s, root, "v1-clustered",
+      Seq("o_orderkey", "o_part"), files)
+    TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
+      txnId = "v1-clustered", blooms = blooms, bloomCol = "o_tag",
+      multiStats = multi, schemaJson = TxnLog.encodeSchema(base.schema))
   }
-
-  /** Deletion-vector txn tables already built this JVM. */
-  private val materializedTxnDeleteTables =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** A third [[graft.sources.TxnLog]] table for the row-level-delete
     * path: v1 appends the %3<=1 orders slice (8 range-clustered
@@ -836,31 +653,19 @@ object SparkEntry {
     * pure predicate over orders, which is what lets DuckDB oracle the
     * DV read path without seeing bitmaps.
     */
-  private def ensureTxnDeleteTable(s: SparkSession, dir: String): String = {
+  private val ensureTxnDeleteTable = fixtures("txnd") { (s, dir, root) =>
     import graft.sources.TxnLog
-    val root =
-      s"$jvmTmp/graft_txnd_${dirTag(dir)}_${ordersFingerprint(dir)}"
-    materializeOnce(materializedTxnDeleteTables, root) {
-      if (TxnLog.currentVersion(root) != 2L) {
-        graft.sources.TxnLog.deleteRecursively(java.nio.file.Paths.get(root))
-        TxnLog.init(root)
-        val base = Tables.orders(s, dir)
-          .filter(col("o_orderkey") % 3 <= 1)
-          .select(col("o_orderkey"),
-            round(col("o_totalprice") * 100).cast("long").as("price_cents"))
-          .repartitionByRange(8, col("o_orderkey"))
-        val (files, stats) = TxnLog.stageWithStats(base, root, "v1-append", "o_orderkey")
-        TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
-          txnId = "v1-append", stats = stats, statsCol = "o_orderkey")
-        TxnLog.deleteWhere(s, root, col("o_orderkey") % 5 === 2, "v2-delete")
-        ()
-      }
-    }
+    TxnLog.init(root)
+    val base = Tables.orders(s, dir)
+      .filter(col("o_orderkey") % 3 <= 1)
+      .select(col("o_orderkey"),
+        round(col("o_totalprice") * 100).cast("long").as("price_cents"))
+      .repartitionByRange(8, col("o_orderkey"))
+    val (files, stats) = TxnLog.stageWithStats(base, root, "v1-append", "o_orderkey")
+    TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
+      txnId = "v1-append", stats = stats, statsCol = "o_orderkey")
+    TxnLog.deleteWhere(s, root, col("o_orderkey") % 5 === 2, "v2-delete")
   }
-
-  /** Merge txn tables already built this JVM. */
-  private val materializedTxnMergeTables =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** A fourth [[graft.sources.TxnLog]] table for the MERGE path: v1
     * appends the %3<=1 orders slice (8 range-clustered, statted
@@ -870,34 +675,22 @@ object SparkEntry {
     * predicates over orders, so DuckDB oracles the merge semantics
     * without seeing the log.
     */
-  private def ensureTxnMergeTable(s: SparkSession, dir: String): String = {
+  private val ensureTxnMergeTable = fixtures("txnm") { (s, dir, root) =>
     import graft.sources.TxnLog
-    val root =
-      s"$jvmTmp/graft_txnm_${dirTag(dir)}_${ordersFingerprint(dir)}"
-    materializeOnce(materializedTxnMergeTables, root) {
-      if (TxnLog.currentVersion(root) != 2L) {
-        graft.sources.TxnLog.deleteRecursively(java.nio.file.Paths.get(root))
-        TxnLog.init(root)
-        val cents = round(col("o_totalprice") * 100).cast("long")
-        val base = Tables.orders(s, dir)
-          .filter(col("o_orderkey") % 3 <= 1)
-          .select(col("o_orderkey"), cents.as("price_cents"))
-          .repartitionByRange(8, col("o_orderkey"))
-        val (files, stats) = TxnLog.stageWithStats(base, root, "v1-append", "o_orderkey")
-        TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
-          txnId = "v1-append", stats = stats, statsCol = "o_orderkey")
-        val source = Tables.orders(s, dir)
-          .filter(col("o_orderkey") % 4 === 1)
-          .select(col("o_orderkey"), (cents + 7).as("price_cents"))
-        TxnLog.mergeInto(s, root, source, "o_orderkey", "v2-merge")
-        ()
-      }
-    }
+    TxnLog.init(root)
+    val cents = round(col("o_totalprice") * 100).cast("long")
+    val base = Tables.orders(s, dir)
+      .filter(col("o_orderkey") % 3 <= 1)
+      .select(col("o_orderkey"), cents.as("price_cents"))
+      .repartitionByRange(8, col("o_orderkey"))
+    val (files, stats) = TxnLog.stageWithStats(base, root, "v1-append", "o_orderkey")
+    TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
+      txnId = "v1-append", stats = stats, statsCol = "o_orderkey")
+    val source = Tables.orders(s, dir)
+      .filter(col("o_orderkey") % 4 === 1)
+      .select(col("o_orderkey"), (cents + 7).as("price_cents"))
+    TxnLog.mergeInto(s, root, source, "o_orderkey", "v2-merge")
   }
-
-  /** Z-order txn tables already built this JVM. */
-  private val materializedTxnZorderTables =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** A fifth [[graft.sources.TxnLog]] table for the OPTIMIZE ZORDER
     * path: v1 appends the %3<=1 orders slice in arrival order
@@ -907,32 +700,20 @@ object SparkEntry {
     * predicate over orders at every version, so DuckDB oracles the
     * rewrite's invariance without seeing the layout.
     */
-  private def ensureTxnZorderTable(s: SparkSession, dir: String): String = {
+  private val ensureTxnZorderTable = fixtures("txnz") { (s, dir, root) =>
     import graft.sources.TxnLog
-    val root =
-      s"$jvmTmp/graft_txnz_${dirTag(dir)}_${ordersFingerprint(dir)}"
-    materializeOnce(materializedTxnZorderTables, root) {
-      if (TxnLog.currentVersion(root) != 2L) {
-        graft.sources.TxnLog.deleteRecursively(java.nio.file.Paths.get(root))
-        TxnLog.init(root)
-        val base = Tables.orders(s, dir)
-          .filter(col("o_orderkey") % 3 <= 1)
-          .select(col("o_orderkey"), col("o_custkey").cast("long").as("cust"),
-            round(col("o_totalprice") * 100).cast("long").as("price_cents"))
-          .repartition(8) // arrival order: neither dim clustered
-        val files = TxnLog.stage(base, root, "v1-append")
-        TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
-          txnId = "v1-append")
-        TxnLog.optimizeZorder(s, root, "cust", "price_cents", nFiles = 8,
-          txnId = "v2-zorder")
-        ()
-      }
-    }
+    TxnLog.init(root)
+    val base = Tables.orders(s, dir)
+      .filter(col("o_orderkey") % 3 <= 1)
+      .select(col("o_orderkey"), col("o_custkey").cast("long").as("cust"),
+        round(col("o_totalprice") * 100).cast("long").as("price_cents"))
+      .repartition(8) // arrival order: neither dim clustered
+    val files = TxnLog.stage(base, root, "v1-append")
+    TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
+      txnId = "v1-append")
+    TxnLog.optimizeZorder(s, root, "cust", "price_cents", nFiles = 8,
+      txnId = "v2-zorder")
   }
-
-  /** DV-compaction txn tables already built this JVM. */
-  private val materializedTxnCompactTables =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** A seventh [[graft.sources.TxnLog]] table for the DV-density
     * compaction path (X-A45): v1 appends the %3<=1 orders slice
@@ -947,36 +728,24 @@ object SparkEntry {
     * (integer division), derived from the data so the density
     * regime — and thus that v4 COMMITS — holds at every SF.
     */
-  private def ensureTxnCompactTable(s: SparkSession, dir: String): String = {
+  private val ensureTxnCompactTable = fixtures("txnc") { (s, dir, root) =>
     import graft.sources.TxnLog
-    val root =
-      s"$jvmTmp/graft_txnc_${dirTag(dir)}_${ordersFingerprint(dir)}"
-    materializeOnce(materializedTxnCompactTables, root) {
-      if (TxnLog.currentVersion(root) != 4L) {
-        graft.sources.TxnLog.deleteRecursively(java.nio.file.Paths.get(root))
-        TxnLog.init(root)
-        val base = Tables.orders(s, dir)
-          .filter(col("o_orderkey") % 3 <= 1)
-          .select(col("o_orderkey"),
-            round(col("o_totalprice") * 100).cast("long").as("price_cents"))
-          .repartitionByRange(8, col("o_orderkey"))
-        val (files, stats) = TxnLog.stageWithStats(base, root, "v1-append", "o_orderkey")
-        TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
-          txnId = "v1-append", stats = stats, statsCol = "o_orderkey")
-        TxnLog.deleteWhere(s, root, col("o_orderkey") % 5 === 2, "v2-delete")
-        val cut = Tables.orders(s, dir)
-          .agg(max(col("o_orderkey")).cast("long")).head().getLong(0) / 3
-        TxnLog.deleteWhere(s, root, col("o_orderkey") <= cut, "v3-delete")
-        val c = TxnLog.optimizeCompactDeletes(s, root, 0.5, "v4-compact")
-        require(c.isDefined, "the dense third must cross the 0.5 threshold")
-        ()
-      }
-    }
+    TxnLog.init(root)
+    val base = Tables.orders(s, dir)
+      .filter(col("o_orderkey") % 3 <= 1)
+      .select(col("o_orderkey"),
+        round(col("o_totalprice") * 100).cast("long").as("price_cents"))
+      .repartitionByRange(8, col("o_orderkey"))
+    val (files, stats) = TxnLog.stageWithStats(base, root, "v1-append", "o_orderkey")
+    TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
+      txnId = "v1-append", stats = stats, statsCol = "o_orderkey")
+    TxnLog.deleteWhere(s, root, col("o_orderkey") % 5 === 2, "v2-delete")
+    val cut = Tables.orders(s, dir)
+      .agg(max(col("o_orderkey")).cast("long")).head().getLong(0) / 3
+    TxnLog.deleteWhere(s, root, col("o_orderkey") <= cut, "v3-delete")
+    val c = TxnLog.optimizeCompactDeletes(s, root, 0.5, "v4-compact")
+    require(c.isDefined, "the dense third must cross the 0.5 threshold")
   }
-
-  /** Typed-stats txn tables already built this JVM. */
-  private val materializedTxnTypedTables =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** A sixth [[graft.sources.TxnLog]] table for TYPED data skipping
     * (X-A44): the %3<=1 orders slice clustered by (o_orderpriority,
@@ -987,52 +756,28 @@ object SparkEntry {
     * plain long stats can never serve (and where a naive
     * cast-to-long stat silently mis-prunes: micros vs seconds).
     */
-  private def ensureTxnTypedTable(s: SparkSession, dir: String): String = {
+  private val ensureTxnTypedTable = fixtures("txnt") { (s, dir, root) =>
     import graft.sources.TxnLog
-    val root =
-      s"$jvmTmp/graft_txnt_${dirTag(dir)}_${ordersFingerprint(dir)}"
-    materializeOnce(materializedTxnTypedTables, root) {
-      if (TxnLog.currentVersion(root) != 1L) {
-        graft.sources.TxnLog.deleteRecursively(java.nio.file.Paths.get(root))
-        TxnLog.init(root)
-        val base = Tables.orders(s, dir)
-          .filter(col("o_orderkey") % 3 <= 1)
-          .select(col("o_orderkey"), col("o_orderpriority"), col("o_orderdate"))
-          .repartitionByRange(8, col("o_orderpriority"), col("o_orderdate"))
-        val files = TxnLog.stage(base, root, "v1-typed")
-        val multi = TxnLog.statsForStaged(s, root, "v1-typed",
-          Seq("o_orderkey", "o_orderpriority", "o_orderdate"), files)
-        TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
-          txnId = "v1-typed", multiStats = multi,
-          schemaJson = TxnLog.encodeSchema(base.schema))
-        ()
-      }
-    }
+    TxnLog.init(root)
+    val base = Tables.orders(s, dir)
+      .filter(col("o_orderkey") % 3 <= 1)
+      .select(col("o_orderkey"), col("o_orderpriority"), col("o_orderdate"))
+      .repartitionByRange(8, col("o_orderpriority"), col("o_orderdate"))
+    val files = TxnLog.stage(base, root, "v1-typed")
+    val multi = TxnLog.statsForStaged(s, root, "v1-typed",
+      Seq("o_orderkey", "o_orderpriority", "o_orderdate"), files)
+    TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
+      txnId = "v1-typed", multiStats = multi,
+      schemaJson = TxnLog.encodeSchema(base.schema))
   }
 
-  /** One-time side-artifact materialization for `dir` (the s8 file
-    * topic, the j9 bucketed tables, the partitioned events layout,
-    * the schema-evolved generations, the z-order file-stats manifest).
-    * Bench calls this before its timed loop so query timings measure
-    * operators, not setup IO; Verify and ad-hoc callers need not call
-    * it — each query lazily materializes what it needs.
+  /** Build every registered fixture for `dir`, and run each one's
+    * session step on `s`. Bench calls this before its timed loop so
+    * query timings measure operators, not setup IO; Verify and ad-hoc
+    * callers need not call it — each query lazily builds what it needs.
     */
-  def prepare(s: SparkSession, dir: String): Unit = {
-    ensureFileTopic(s, dir)
-    ensureBucketedTables(s, dir)
-    ensurePartitionedEvents(s, dir)
-    ensureEvolvedEvents(s, dir)
-    ensureZorderStats(s, dir)
-    ensureTxnTable(s, dir)
-    ensureTxnRangeTable(s, dir)
-    ensureTxnDeleteTable(s, dir)
-    ensureTxnMergeTable(s, dir)
-    ensureTxnZorderTable(s, dir)
-    ensureTxnTypedTable(s, dir)
-    ensureTxnCompactTable(s, dir)
-    ensureCatalogTable(s, dir)
-    ()
-  }
+  def prepare(s: SparkSession, dir: String): Unit =
+    fixtures.all.foreach(_(s, dir))
 
   /** IO/catalog surface as driver-checked queries (SURVEY §2 A-4/A-8):
     * a catalog-DDL-backed join (external parquet tables queried by
@@ -1121,7 +866,7 @@ object SparkEntry {
           "file_id", "n", targetRows = 5000)),
       "io_jdbc_roundtrip" -> ((s, dir) => {
         val tag = dirTag(dir)
-        val url = JdbcIO.derbyUrl(s"$jvmTmp/graft_derby_$tag/db")
+        val url = JdbcIO.derbyUrl(s"${Fixtures.jvmDir}/graft_derby_$tag/db")
         JdbcIO.write(Tables.nation(s, dir), url, "nation_rt")
         JdbcIO.read(s, url, "nation_rt")
           .select("n_nationkey", "n_name", "n_regionkey")
@@ -3065,9 +2810,6 @@ object SparkEntry {
       // checks every decision, not just the survivor list.
       "cur_multimodal_prune" -> ((s, dir) => {
         import graft.operators.{DedupOps, GraphOps}
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
         val docs = Tables.documents(s, dir)
         // r21 (guide §2.6): the three modality pipelines are mutually
         // independent jobs that were running SEQUENTIALLY — each one's
@@ -3081,28 +2823,27 @@ object SparkEntry {
         // is pinned with a localCheckpoint so its synth+decode runs
         // inside the overlap window too). Results are unchanged —
         // same three frames, same conjunction.
-        val imgF = Future(GraphOps.dedupClusters(
-          DedupOps.fingerprintPairs(
-            MultimodalOps.perceptualFeatures(
-              MultimodalOps.syntheticPngAssets(docs)).toDF()
-              .select(col("asset_id"), col("dhash")),
-            "asset_id", "dhash", maxHamming = 3, bits = 56))
-          .filter(!col("is_kept")).select(col("doc_id")))
         val aW = org.apache.spark.sql.expressions.Window
           .partitionBy(col("fingerprint"))
-        val audF = Future(MultimodalOps.audioFingerprints(
-            MultimodalOps.syntheticWavAssets(docs)).toDF()
-          .withColumn("__kept", min(col("asset_id")).over(aW))
-          .filter(col("asset_id") =!= col("__kept"))
-          .select(col("asset_id").as("doc_id"))
-          .localCheckpoint())
-        val txtF = Future(GraphOps.dedupClusters(
-            DedupOps.lshCandidatePairsCappedStar(docs, "doc_id", "text",
-              bucketCap = 32))
-          .filter(!col("is_kept")).select(col("doc_id")))
-        val imgLosers = Await.result(imgF, Duration.Inf)
-        val audLosers = Await.result(audF, Duration.Inf)
-        val txtLosers = Await.result(txtF, Duration.Inf)
+        val Seq(imgLosers, audLosers, txtLosers) =
+          runConcurrently(s, "cur_multimodal_prune")(
+            () => GraphOps.dedupClusters(
+              DedupOps.fingerprintPairs(
+                MultimodalOps.perceptualFeatures(
+                  MultimodalOps.syntheticPngAssets(docs)).toDF()
+                  .select(col("asset_id"), col("dhash")),
+                "asset_id", "dhash", maxHamming = 3, bits = 56))
+              .filter(!col("is_kept")).select(col("doc_id")),
+            () => MultimodalOps.audioFingerprints(
+                MultimodalOps.syntheticWavAssets(docs)).toDF()
+              .withColumn("__kept", min(col("asset_id")).over(aW))
+              .filter(col("asset_id") =!= col("__kept"))
+              .select(col("asset_id").as("doc_id"))
+              .localCheckpoint(),
+            () => GraphOps.dedupClusters(
+                DedupOps.lshCandidatePairsCappedStar(docs, "doc_id", "text",
+                  bucketCap = 32))
+              .filter(!col("is_kept")).select(col("doc_id")))
         docs.select(col("doc_id"))
           .join(imgLosers.withColumn("__li", lit(true)), Seq("doc_id"), "left")
           .join(audLosers.withColumn("__la", lit(true)), Seq("doc_id"), "left")
@@ -3115,6 +2856,42 @@ object SparkEntry {
               .as("keep"))
       })
     )
+  }
+
+  /** Run `pipelines` at once on driver futures, each in its own Spark
+    * job group, and return their results in order. On the first
+    * failure the siblings' groups are cancelled — again until each
+    * sibling settles, since a cancel reaches only jobs already
+    * submitted — and that failure's exception is rethrown as is.
+    */
+  private def runConcurrently[T](s: SparkSession, label: String)(
+      pipelines: (() => T)*): Seq[T] = {
+    import scala.concurrent.{Await, Future, Promise}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val sc = s.sparkContext
+    val groups = pipelines.indices.map(i => s"$label-$i-${java.util.UUID.randomUUID()}")
+    val futures = pipelines.zip(groups).map { case (p, g) =>
+      Future {
+        sc.setJobGroup(g, label, interruptOnCancel = true)
+        try p() finally sc.clearJobGroup()
+      }
+    }
+    val outcome = Promise[Seq[T]]()
+    futures.foreach(_.failed.foreach(outcome.tryFailure))
+    Future.sequence(futures).foreach(outcome.trySuccess)
+    Await.ready(outcome.future, Duration.Inf)
+    outcome.future.value.get match {
+      case scala.util.Success(results) => results
+      case scala.util.Failure(cause) =>
+        futures.zip(groups).foreach { case (f, g) =>
+          while (!f.isCompleted) {
+            sc.cancelJobGroup(g)
+            scala.util.Try(Await.ready(f, 100.millis))
+          }
+        }
+        throw cause
+    }
   }
 
   /** The image-dedup asset frame: every document's synthesized PNG
@@ -7657,4 +7434,103 @@ object SparkEntry {
                              AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
          GROUP BY c_mktsegment"""
   )
+}
+
+/** Named side artifacts (fixture tables, layouts, indexes), each built
+  * at most once per registry into its own root under `base`:
+  * `<base>/<name>_<dirTag>_<orders fingerprint>`. The fingerprint gives
+  * a REGENERATED source at the same path a fresh root instead of one
+  * built from the old bytes (which would diverge from the DuckDB
+  * oracle).
+  *
+  * The once-guard is one `computeIfAbsent` on the root, with the build
+  * INSIDE the mapping function: a concurrent caller for the same root
+  * blocks until the winner's build completes instead of reading a
+  * half-written layout, and a throwing build records no mapping, so the
+  * next caller retries. Every attempt starts by wiping the root, so a
+  * retry never sees a failed attempt's leftovers. A build must not
+  * ensure another fixture of the same registry (the map forbids nested
+  * updates).
+  */
+private[graft] final class Fixtures(base: => java.nio.file.Path) {
+  import scala.jdk.CollectionConverters._
+  import Fixtures._
+
+  private val memo = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private val registered = new java.util.concurrent.CopyOnWriteArrayList[Fixture[_]]()
+
+  /** One fixture: `session` runs on EVERY call (per-session state such
+    * as catalog confs) and returns the caller's handle; `build` writes
+    * the root once. Both get (session, sf dir, root). */
+  final class Fixture[A] private[Fixtures] (
+      val name: String,
+      session: (SparkSession, String, String) => A,
+      build: (SparkSession, String, String) => Unit) {
+    def root(dir: String): String =
+      base.resolve(s"${name}_${dirTag(dir)}_${ordersFingerprint(dir)}").toString
+
+    /** Whether `dir`'s root is built (or being built) in this registry. */
+    def built(dir: String): Boolean = memo.containsKey(root(dir))
+
+    def apply(s: SparkSession, dir: String): A = {
+      val r = root(dir)
+      val handle = session(s, dir, r)
+      memo.computeIfAbsent(r, _ => {
+        graft.sources.TxnLog.deleteRecursively(java.nio.file.Paths.get(r))
+        build(s, dir, r)
+        java.lang.Boolean.TRUE
+      })
+      handle
+    }
+  }
+
+  /** Register a fixture whose handle is its root. */
+  def apply(name: String)(build: (SparkSession, String, String) => Unit): Fixture[String] =
+    withSession(name, (_, _, root) => root)(build)
+
+  def withSession[A](name: String, session: (SparkSession, String, String) => A)(
+      build: (SparkSession, String, String) => Unit): Fixture[A] = {
+    require(!all.exists(_.name == name), s"fixture $name registered twice")
+    val f = new Fixture(name, session, build)
+    registered.add(f)
+    f
+  }
+
+  /** Every registered fixture, in registration order. */
+  def all: Seq[Fixture[_]] = registered.asScala.toSeq
+}
+
+private[graft] object Fixtures {
+  /** This JVM's fixture dir. `createTempDirectory` never returns a path
+    * that existed before, so no root under it can hold another JVM's
+    * half-built or concurrently rebuilt fixture (a dir shared across
+    * JVMs showed up as "version N out of range (head 2)" mid-query and
+    * as embedded Derby's one-JVM boot lock refusing the database).
+    * Deleted at JVM exit, best effort.
+    */
+  lazy val jvmDir: java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory("graft-jvm-")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      try graft.sources.TxnLog.deleteRecursively(d) catch { case _: Throwable => () }))
+    d
+  }
+
+  /** Filesystem-safe tag for `dir`, unique per raw dir string: the
+    * readable prefix strips non-alphanumerics — under which distinct
+    * dirs like /data/x and /data_x collide — so a hashCode suffix
+    * disambiguates (r10 advice #2). Shared by every fixture root and
+    * tagged table/DB name.
+    */
+  def dirTag(dir: String): String =
+    dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + Integer.toHexString(dir.hashCode)
+
+  /** Size+mtime fingerprint of the source `orders` parquet. */
+  private def ordersFingerprint(dir: String): String = {
+    val p = java.nio.file.Paths.get(dir, "orders.parquet")
+    val tag =
+      if (java.nio.file.Files.exists(p))
+        java.nio.file.Files.size(p) ^ java.nio.file.Files.getLastModifiedTime(p).toMillis
+      else 0L
+    java.lang.Long.toHexString(tag)
+  }
 }

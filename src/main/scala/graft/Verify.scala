@@ -30,20 +30,8 @@ object Verify {
       // cache so a 130-query dump can't accumulate heap
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // X-Q13 (r20): normalized physical-plan fingerprint per query —
     // the plan-regression ledger. The ~30 curated PlanShapeSpec pins
@@ -54,9 +42,23 @@ object Verify {
     // changes (the intentional-diff workflow: regenerate, read the
     // diff, commit the new PLANS.json naming the change).
     Files.writeString(Paths.get(s"$outDir/plans.json"),
-      plans.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",\n", "}"))
+      plans.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",\n", "}"))
     spark.stop()
   }
+
+  /** JSON string literal: escapes backslash, quote, and ALL control
+    * chars (<0x20) — a tab or CR in builder-authored SQL would
+    * otherwise make the driver's json.load fail and silently zero the
+    * round's correctness. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** Normalized plan fingerprint: the operator tree's shape with join
     * strategies/types and exchange partitioning kinds — no expression
@@ -68,7 +70,7 @@ object Verify {
   def fingerprint(plan: org.apache.spark.sql.execution.SparkPlan): String = {
     import org.apache.spark.sql.execution._
     // catalog BatchScan nodeNames embed the per-JVM warehouse root
-    // (graft:/tmp/graft-jvm-<pid>/graft_cat_.../db/t) — normalize the
+    // (graft:/tmp/graft-jvm-<random>/cat_.../db/t) — normalize the
     // root away so the 38 catalog-table fingerprints are stable
     // across JVMs (r20: a fresh pid used to flag every tx_cat row)
     def norm(s: String): String =

@@ -397,4 +397,30 @@ class MultimodalOpsSpec extends SparkTestBase {
     assert(e.getMessage.contains("undecodable") ||
       Option(e.getCause).exists(_.getMessage.contains("undecodable")))
   }
+
+  test("cur_multimodal_prune: a failing pipeline surfaces its own error and cancels the rest") {
+    import org.apache.spark.sql.functions.{min, when}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    // a copy of the corpus with one doc id set to -8: its synthesized
+    // PNG is 8x16, below the 9-wide dHash grid, so the image pipeline
+    // throws while the audio and text pipelines accept the id
+    val dir = java.nio.file.Files.createTempDirectory("graft-mm-fail")
+    try {
+      val docs = Tables.documents(spark, sfDir)
+      val first = docs.agg(min(col("doc_id"))).head().getLong(0)
+      docs.withColumn("doc_id",
+          when(col("doc_id") === first, lit(-8L)).otherwise(col("doc_id")))
+        .write.parquet(s"$dir/documents.parquet")
+      val e = intercept[Exception](
+        SparkEntry.queries("cur_multimodal_prune")(spark, dir.toString))
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(c => Option(c.getMessage).exists(_.contains("below the 9x7"))),
+        s"the image pipeline's own error must surface, got: $e")
+      assert(!chain.exists(_.isInstanceOf[java.util.concurrent.ExecutionException]))
+      eventually(timeout(30.seconds), interval(100.millis)) {
+        assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+      }
+    } finally graft.sources.TxnLog.deleteRecursively(dir)
+  }
 }
