@@ -1,9 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+
+import graft.operators.{CorpusOps, DedupOps, GraphOps, RelationalOps}
+import graft.queries.{CoreQueries, CorpusQueries, DedupQueries}
 
 /** Plan-inspection tool: print the formatted physical plan of one (or
-  * every) SparkEntry query and time its noop-sink execution.
+  * every) SparkEntry query, time its execution (rows discarded), then
+  * print the final adaptive plan it ran, with codegen ids.
   *
   *   sbt 'runMain graft.Explain <queryName|all> [sfDir]'
   *
@@ -18,45 +23,23 @@ object Explain {
     * inside the call, cache-lifecycle contract): their declared
     * spelling explains as a bare `Scan ExistingRDD`, so plan
     * inspection goes through the operators' Lazy internals instead —
-    * the exact plan the checkpointed run executed.
+    * the exact plan the checkpointed run executed. Each variant reads
+    * its query's input through the same battery helper the query
+    * uses, so the two cannot drift apart.
     */
-  private val lazyVariants: Map[String, (SparkSession, String) =>
-      org.apache.spark.sql.DataFrame] = Map(
-    "gr_pagerank" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val edges = Tables.orders(s, dir)
-        .select((col("o_custkey") * 3).as("src"), (col("o_orderkey") * 3 + 1).as("dst"))
-        .unionByName(Tables.lineitem(s, dir)
-          .select((col("l_orderkey") * 3 + 1).as("src"), (col("l_suppkey") * 3 + 2).as("dst")))
-      graft.operators.GraphOps.pageRankLazy(edges, "src", "dst", 3, 85)._1
-    }),
-    "g20_basket_rules" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      graft.operators.RelationalOps.basketRulesLazy(
-        Tables.lineitem(s, dir).select(col("l_orderkey").as("oid"),
-          pmod(col("l_partkey"), lit(100)).as("item")), "oid", "item", 5L)._1
-    }),
-    "gr_triangles" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val p = s.sparkContext.defaultParallelism
-      val edges = Tables.lineitem(s, dir)
-        .filter(col("l_orderkey").isNotNull && col("l_partkey").isNotNull)
-        .select(col("l_orderkey").as("oid"), pmod(col("l_partkey"), lit(200)).as("item"))
-        .repartition(p, col("oid"))
-        .groupBy(col("oid"))
-        .agg(sort_array(collect_set(col("item"))).as("__items"))
-        .select(explode(graft.operators.RelationalOps
-          .orderedPairs(col("__items"), "x", "y")).as("__p"))
-        .groupBy(col("__p.x").as("x"), col("__p.y").as("y"))
-        .agg(count(lit(1)).as("__n")).filter(col("__n") >= 3)
-      graft.operators.GraphOps.triangleCountsLazy(edges, "x", "y")
-    }),
+  private[graft] val lazyVariants: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "gr_pagerank" -> ((s, dir) =>
+      GraphOps.pageRankLazy(DedupQueries.pageRankEdges(s, dir), "src", "dst", 3, 85)._1),
+    "g20_basket_rules" -> ((s, dir) =>
+      RelationalOps.basketRulesLazy(CoreQueries.basketMemberships(s, dir),
+        "oid", "item", 5L)._1),
+    "gr_triangles" -> ((s, dir) =>
+      GraphOps.triangleCountsLazy(CoreQueries.triangleEdges(s, dir), "x", "y")),
     "dd_ngram_capped" -> ((s, dir) =>
-      graft.operators.DedupOps.ngramJaccardPairsCappedLazy(
-        Tables.documents(s, dir), "doc_id", "text", 0.5, 25, 3)._1),
+      DedupOps.ngramJaccardPairsCappedLazy(DedupQueries.ngramCappedDocs(s, dir),
+        "doc_id", "text", 0.5, 25, 3)._1),
     "txt_rake" -> ((s, dir) =>
-      graft.operators.CorpusOps.rakeKeywordsLazy(
-        Tables.documents(s, dir), "doc_id", "text", 3,
+      CorpusOps.rakeKeywordsLazy(CorpusQueries.rakeDocs(s, dir), "doc_id", "text", 3,
         Seq("the", "a", "and", "of", "to", "in", "is", "it"))._1)
   )
 
@@ -78,9 +61,14 @@ object Explain {
       val df = fn(spark, sfDir)
       println(s"========== $n ==========")
       df.explain("formatted")
+      // run df's OWN plan, rows discarded as a noop sink would: a
+      // write runs a separate copy of the plan, which would leave the
+      // plan printed below at AQE's un-run initial form
+      val qe = df.queryExecution
       val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
+      SQLExecution.withNewExecutionId(qe, Some(n))(qe.toRdd.foreach(_ => ()))
       println(f"[$n] executed in ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      println(qe.executedPlan)
     }
     spark.stop()
   }

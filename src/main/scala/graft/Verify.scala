@@ -1,37 +1,40 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each registered query's result → parquet, plus
+  * its oracle in oracle_sql.json, for the DuckDB compare
+  * (`tools/check.py`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [queryName...] — trailing names restrict the
-    // dump to those queries (local iteration; the driver passes two).
+    // dump (parquet, plans AND oracles) to those queries; a full dump
+    // passes just the two dirs.
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
+    val unknown = only -- SparkEntry.registry.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    val specs = SparkEntry.registry.values.filter(q => only.isEmpty || only(q.name)).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.configure(SparkSession.builder(), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Sessions.quietKnownBenignWarnings()
     new java.io.File(outDir).mkdirs()
     val plans = scala.collection.mutable.TreeMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    specs.foreach { q =>
       try {
-        val df = fn(spark, sfDir)
-        plans(name) = fingerprint(df.queryExecution.executedPlan)
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        val df = q.build(spark, sfDir)
+        plans(q.name) = fingerprint(df.queryExecution.executedPlan)
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q.name}")
       }
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
       // same inter-query hygiene as Bench: drop per-query pinned
       // cache so a 130-query dump can't accumulate heap
       spark.catalog.clearCache()
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
+    val json = specs
+      .map(q => s"${jsonString(q.name)}: ${jsonString(q.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // X-Q13 (r20): normalized physical-plan fingerprint per query —
     // the plan-regression ledger. The ~30 curated PlanShapeSpec pins

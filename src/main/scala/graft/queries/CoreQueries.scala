@@ -1,0 +1,2191 @@
+package graft
+package queries
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.Fixtures.dirTag
+import graft.operators.RelationalOps._
+import graft.SparkEntry.{ensureFileTopic, ensureBucketedTables}
+
+/** The core relational battery: the reference pipeline's own shapes
+  * (JSON parse/encode, grouped vote counts, enrichment joins, sorts,
+  * windows, sessions, streaming-style dedup), the TPC-H q1/q3/q4/q5/
+  * q6/q14/q17/q18/q22 analogs, and the warehouse operators around them
+  * (sketches, set ops, time series, graph, data quality, materialized
+  * views). See [[graft.operators.RelationalOps]].
+  */
+object CoreQueries {
+  private val propsSchema = new StructType().add("k", IntegerType)
+
+  /** g20_basket_rules' input: (order, item group) memberships. Shared
+    * with its lazy variant in [[graft.Explain]]. */
+  private[graft] def basketMemberships(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir).select(col("l_orderkey").as("oid"),
+      pmod(col("l_partkey"), lit(100)).as("item"))
+
+  /** gr_triangles' graph: item groups co-occurring in >= 3 orders.
+    * Shared with its lazy variant in [[graft.Explain]].
+    *
+    * r21: the edge build is the g19/g20 one-exchange shape — ONE
+    * shuffle on the order key collects each order's distinct item
+    * groups (collect_set dedupes in the aggregate, subsuming the
+    * former DISTINCT's exchange), a < b pairs are enumerated
+    * LOCALLY by positional array HOFs, and the (x, y) aggregate is
+    * map-side combined — replacing the former distinct + pair
+    * self-join (three exchanges + two sort passes; profiled at
+    * 0.6 s of the query's 1.2 s stage wall at sf0.1). Fan-out
+    * stays bounded by items-per-order², never by row volume. The
+    * exchange is pinned at defaultParallelism (the basketRules
+    * rationale: the stage above it is the CPU-dense set-build +
+    * generator body, and AQE byte-size coalescing is blind to CPU
+    * density — it folded this ~6 MB exchange to a handful of
+    * tasks). Null keys dropped explicitly: the former self-join
+    * (and the oracle's equi-join) never matched them.
+    */
+  private[graft] def triangleEdges(s: SparkSession, dir: String): DataFrame = {
+    val p = s.sparkContext.defaultParallelism
+    Tables.lineitem(s, dir)
+      .filter(col("l_orderkey").isNotNull && col("l_partkey").isNotNull)
+      .select(col("l_orderkey").as("oid"), pmod(col("l_partkey"), lit(200)).as("item"))
+      .repartition(p, col("oid"))
+      .groupBy(col("oid"))
+      .agg(sort_array(collect_set(col("item"))).as("__items"))
+      .select(explode(graft.operators.RelationalOps
+        .orderedPairs(col("__items"), "x", "y")).as("__p"))
+      .groupBy(col("__p.x").as("x"), col("__p.y").as("y"))
+      .agg(count(lit(1)).as("__n")).filter(col("__n") >= 3)
+  }
+
+  val specs: Seq[QuerySpec] = Seq(
+    // ---- Flagship: TPC-H-style pricing summary (G-1 batch shape at scale) ----
+    QuerySpec("q1_pricing_summary",
+      """SELECT l_returnflag, l_linestatus,
+         round(sum(l_quantity), 2) AS sum_qty,
+         round(sum(l_extendedprice), 2) AS sum_base_price,
+         round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+         round(avg(l_quantity), 4) AS avg_qty,
+         count(*) AS count_order
+         FROM lineitem
+         WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+         GROUP BY l_returnflag, l_linestatus""",
+      (s, dir) => {
+        Tables.lineitem(s, dir)
+          .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
+          .groupBy(col("l_returnflag"), col("l_linestatus"))
+          .agg(
+            round(sum(col("l_quantity")), 2).as("sum_qty"),
+            round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
+            round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
+            round(avg(col("l_quantity")), 4).as("avg_qty"),
+            count(lit(1)).as("count_order"))
+      }),
+
+    // ---- P-1..P-3: cast + from_json + struct flatten (spark_stream.py:50–52) ----
+    QuerySpec("p2_json_parse",
+      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
+         FROM events""",
+      (s, dir) => {
+        parseJson(Tables.events(s, dir), "props", propsSchema, keep = Seq("event_id"))
+      }),
+
+    // ---- P-5: to_json(struct(...)) encode (spark_stream.py:67,77) ----
+    QuerySpec("p5_json_encode",
+      """SELECT event_id,
+         CAST(to_json(struct_pack(event_id := event_id, event_type := event_type)) AS VARCHAR) AS js
+         FROM events""",
+      (s, dir) => {
+        Tables.events(s, dir)
+          .select(col("event_id"), encodeJson(Seq(col("event_id"), col("event_type"))).as("js"))
+      }),
+
+    // ---- P-14: 3-level nested extraction (main.py:100–107: the
+    // randomuser payload's name.first / location.street.number paths).
+    // Builds the nested JSON, parses it with an explicit 3-level
+    // schema, and extracts leaves BOTH ways Spark offers — struct
+    // dotted paths (typed, Catalyst-pruned) and get_json_object
+    // (string JSONPath) — while the oracle computes the expected leaf
+    // values directly from the base columns, checking the whole
+    // build→parse→extract chain end-to-end. ----
+    QuerySpec("p14_nested_extract",
+      // p14: the oracle computes the expected leaf values straight from
+      // the base columns — if Spark's build→from_json→extract chain
+      // mangles any level, the hash diverges.
+      """SELECT c_custkey,
+         c_custkey % 1000 AS street_number,
+         c_mktsegment AS street_name,
+         n_name AS city,
+         c_name AS full_name,
+         c_custkey % 1000 AS street_number_json
+         FROM customer JOIN nation ON c_nationkey = n_nationkey""",
+      (s, dir) => {
+        val n = Tables.nation(s, dir)
+        val js = to_json(struct(
+          struct(col("c_name").as("full")).as("name"),
+          struct(
+            struct((col("c_custkey") % 1000).as("number"),
+              col("c_mktsegment").as("name")).as("street"),
+            col("n_name").as("city")).as("location")))
+        val nestedSchema = new StructType()
+          .add("name", new StructType().add("full", StringType))
+          .add("location", new StructType()
+            .add("street", new StructType()
+              .add("number", LongType).add("name", StringType))
+            .add("city", StringType))
+        Tables.customer(s, dir)
+          .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
+          .select(col("c_custkey"), js.as("json_str"))
+          .select(col("c_custkey"),
+            from_json(col("json_str"), nestedSchema).as("u"), col("json_str"))
+          .select(
+            col("c_custkey"),
+            col("u.location.street.number").as("street_number"),
+            col("u.location.street.name").as("street_name"),
+            col("u.location.city").as("city"),
+            get_json_object(col("json_str"), "$.name.full").as("full_name"),
+            get_json_object(col("json_str"), "$.location.street.number")
+              .cast("long").as("street_number_json"))
+      }),
+
+    // ---- P-2 robustness: malformed-record quarantine. Real ingest
+    //      ALWAYS carries corrupt lines; from_json's PERMISSIVE mode
+    //      nulls them instead of failing the job, and the pipeline
+    //      routes them to a quarantine count. Corruption here is
+    //      deterministic (every event_id % 10 = 0 line gets a
+    //      non-JSON prefix) so the oracle can replay the split. ----
+    QuerySpec("p15_corrupt_quarantine",
+      // corruption is a pure function of event_id, so the oracle only
+      // replays the classification rule
+      """SELECT CASE WHEN event_id % 10 = 0 THEN 'quarantined' ELSE 'ok' END AS status,
+              count(*) AS n
+         FROM events GROUP BY 1""",
+      (s, dir) => {
+        val raw = Tables.events(s, dir).select(col("event_id"),
+          to_json(struct(col("event_id"), col("user_id"), col("value"))).as("line"))
+        val wire = raw.select(
+          when(col("event_id") % 10 === 0, concat(lit("!corrupt!"), col("line")))
+            .otherwise(col("line")).as("line"))
+        val schema = new StructType()
+          .add("event_id", LongType).add("user_id", StringType)
+          .add("value", DoubleType)
+        wire.select(from_json(col("line"), schema).as("data"))
+          .select(when(col("data").isNull || col("data.event_id").isNull,
+            "quarantined").otherwise("ok").as("status"))
+          .groupBy(col("status")).agg(count(lit(1)).as("n"))
+      }),
+
+    // ---- G-1: grouped SUM w/ carried dims (spark_stream.py:58–59) ----
+    QuerySpec("g1_votes_per_type",
+      """SELECT event_type, round(sum(value), 4) AS total_value, count(*) AS total_votes
+         FROM events GROUP BY event_type""",
+      (s, dir) => {
+        Tables.events(s, dir)
+          .groupBy(col("event_type"))
+          .agg(round(sum(col("value")), 4).as("total_value"),
+               count(lit(1)).as("total_votes"))
+      }),
+
+    // ---- G-2: grouped COUNT + rename over a broadcast dim join (spark_stream.py:62–64) ----
+    QuerySpec("g2_turnout_by_nation",
+      """SELECT n_name, count(*) AS total_voters
+         FROM customer JOIN nation ON c_nationkey = n_nationkey
+         GROUP BY n_name""",
+      (s, dir) => {
+        val c = Tables.customer(s, dir)
+        val n = Tables.nation(s, dir)
+        groupedCount(
+          c.join(broadcast(n), c("c_nationkey") === n("n_nationkey")),
+          Seq("n_name"), "total_voters")
+      }),
+
+    // ---- G-3: scalar COUNT(*) (streamlit-app.py:27–32) ----
+    QuerySpec("g3_scalar_count",
+      "SELECT count(*) AS n FROM events",
+      (s, dir) => scalarCount(Tables.events(s, dir), "n")),
+
+    // ---- G-4: argmax / leading candidate (streamlit-app.py:96) ----
+    QuerySpec("g4_leading_type",
+      """SELECT event_type, count(*) AS total_votes
+         FROM events GROUP BY event_type
+         ORDER BY total_votes DESC, event_type ASC LIMIT 1""",
+      (s, dir) => {
+        val agg = Tables.events(s, dir)
+          .groupBy(col("event_type")).agg(count(lit(1)).as("total_votes"))
+        argmax(agg, "total_votes", "event_type")
+      }),
+
+    // ---- G-6: share-of-total via unpartitioned window (streamlit-app.py:57–64) ----
+    QuerySpec("g6_share_of_total",
+      """SELECT event_type, total_votes,
+         round(CAST(total_votes AS DOUBLE) / sum(total_votes) OVER (), 6) AS share
+         FROM (SELECT event_type, count(*) AS total_votes FROM events GROUP BY event_type)""",
+      (s, dir) => {
+        val agg = Tables.events(s, dir)
+          .groupBy(col("event_type")).agg(count(lit(1)).as("total_votes"))
+        shareOfTotal(agg, "total_votes", "share")
+          .withColumn("share", round(col("share"), 6))
+      }),
+
+    // ---- J-1: broadcast enrichment join on a synthesized key (voting.py:68–74) ----
+    QuerySpec("j1_enrichment_join",
+      """SELECT event_id, user_id, n_name AS assigned_nation
+         FROM events JOIN nation ON user_id % 25 = n_nationkey""",
+      (s, dir) => {
+        val e = Tables.events(s, dir)
+        val n = Tables.nation(s, dir)
+        enrichmentJoin(e, n, e("user_id") % 25, n("n_nationkey"))
+          .select(col("event_id"), col("user_id"), col("n_name").as("assigned_nation"))
+      }),
+
+    // ---- S-6: keyed dedup, first-write-wins (main.py:77; voting.py:78–96) ----
+    QuerySpec("s6_dedup_first",
+      """SELECT user_id, event_type, event_id, ts FROM (
+           SELECT user_id, event_type, event_id, ts,
+                  row_number() OVER (PARTITION BY user_id, event_type
+                                     ORDER BY ts ASC, event_id ASC) AS rn
+           FROM events) WHERE rn = 1""",
+      (s, dir) => {
+        dedupFirst(Tables.events(s, dir), Seq("user_id", "event_type"),
+                   Seq(col("ts").asc, col("event_id").asc))
+          .select(col("user_id"), col("event_type"), col("event_id"), col("ts"))
+      }),
+
+    // ---- O-1: global sort, rank-observable (streamlit-app.py:72–74).
+    //      TakeOrderedAndProject bounds the rank window to k rows. ----
+    QuerySpec("o1_ranked_sort",
+      """SELECT event_id, value, rank FROM (
+           SELECT event_id, value,
+                  row_number() OVER (ORDER BY value DESC, event_id ASC) AS rank
+           FROM events) WHERE rank <= 1000""",
+      (s, dir) => {
+        topKRanked(Tables.events(s, dir).select(col("event_id"), col("value")),
+                   Seq(col("value").desc, col("event_id").asc), 1000, "rank")
+      }),
+
+    // ---- O-2: LIMIT/OFFSET pagination (streamlit-app.py:75–77) ----
+    QuerySpec("o2_pagination",
+      """SELECT event_id, value FROM events
+         ORDER BY value DESC, event_id ASC LIMIT 10 OFFSET 20""",
+      (s, dir) => {
+        paginate(Tables.events(s, dir).select(col("event_id"), col("value")),
+                 Seq(col("value").desc, col("event_id").asc), page = 3, size = 10)
+      }),
+
+    // ---- O-3: top-k (TakeOrderedAndProject) ----
+    QuerySpec("o3_top5",
+      """SELECT event_id, event_type, value FROM events
+         ORDER BY value DESC, event_id ASC LIMIT 5""",
+      (s, dir) => {
+        topK(Tables.events(s, dir).select(col("event_id"), col("event_type"), col("value")),
+             Seq(col("value").desc, col("event_id").asc), 5)
+      }),
+
+    // ---- S-1/G-1 windowed: event-time bucketed aggregation (batch equivalent
+    //      of the watermarked streaming agg, spark_stream.py:55–59) ----
+    QuerySpec("s1_hourly_agg",
+      """SELECT date_trunc('hour', ts) AS window_start, event_type,
+         count(*) AS n, round(sum(value), 4) AS total_value
+         FROM events GROUP BY 1, 2""",
+      (s, dir) => {
+        Tables.events(s, dir)
+          .groupBy(date_trunc("hour", col("ts")).as("window_start"), col("event_type"))
+          .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("total_value"))
+      }),
+
+    // ---- P-7..P-12: scalar expression battery (concat, split/substring,
+    //      conditional, modulo+format, literal — main.py:96–168) ----
+    QuerySpec("p7_scalar_exprs",
+      """SELECT c_custkey,
+         concat_ws(' ', c_name, c_mktsegment) AS full_label,
+         string_split(c_name, '#')[2] AS cust_num,
+         substr(c_name, 1, 8) AS name_prefix,
+         CASE WHEN c_acctbal < 0 THEN 'delinquent' ELSE 'ok' END AS acct_status,
+         printf('Party %d', (c_custkey % 3) + 1) AS party,
+         1 AS vote
+         FROM customer""",
+      (s, dir) => {
+        Tables.customer(s, dir).select(
+          col("c_custkey"),
+          concat_ws(" ", col("c_name"), col("c_mktsegment")).as("full_label"),
+          split(col("c_name"), "#").getItem(1).as("cust_num"),
+          substring(col("c_name"), 1, 8).as("name_prefix"),
+          when(col("c_acctbal") < 0, lit("delinquent")).otherwise(lit("ok")).as("acct_status"),
+          format_string("Party %d", pmod(col("c_custkey"), lit(3)) + 1).as("party"),
+          lit(1).as("vote"))
+      }),
+
+    // ---- O-4: top-k per group (partitioned window — scale-safe rank) ----
+    QuerySpec("o4_topk_per_group",
+      """SELECT event_id, event_type, value, rnk FROM (
+           SELECT event_id, event_type, value,
+                  row_number() OVER (PARTITION BY event_type
+                                     ORDER BY value DESC, event_id ASC) AS rnk
+           FROM events) WHERE rnk <= 3""",
+      (s, dir) => {
+        topKPerGroup(
+          Tables.events(s, dir).select(col("event_id"), col("event_type"), col("value")),
+          Seq("event_type"), Seq(col("value").desc, col("event_id").asc), 3, "rnk")
+      }),
+
+    // ---- Q3: multi-table join + grouped agg + top-k (shipping priority) ----
+    QuerySpec("q3_shipping_priority",
+      """SELECT l_orderkey, o_orderdate, o_orderpriority,
+         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+         FROM lineitem
+         JOIN orders ON l_orderkey = o_orderkey
+         JOIN customer ON o_custkey = c_custkey
+         WHERE c_mktsegment = 'BUILDING'
+           AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
+           AND l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
+         GROUP BY l_orderkey, o_orderdate, o_orderpriority
+         ORDER BY revenue DESC, l_orderkey ASC LIMIT 10""",
+      (s, dir) => {
+        val c = Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
+        val o = Tables.orders(s, dir)
+          .filter(col("o_orderdate") < lit("1998-03-15").cast("timestamp"))
+        val l = Tables.lineitem(s, dir)
+          .filter(col("l_shipdate") > lit("1998-03-15").cast("timestamp"))
+        l.join(o, col("l_orderkey") === col("o_orderkey"))
+          .join(c, col("o_custkey") === col("c_custkey"))
+          .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
+          .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
+          .orderBy(col("revenue").desc, col("l_orderkey").asc)
+          .limit(10)
+      }),
+
+    // ---- Q6 analog: pure scan-side filter + scalar agg — the
+    //      pushdown showcase (every predicate reaches the parquet
+    //      scan; zero shuffles before the final 1-row reduce) ----
+    QuerySpec("q6_forecast_revenue",
+      """SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
+         FROM lineitem
+         WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+           AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
+           AND l_discount BETWEEN 0.05 AND 0.07
+           AND l_quantity < 24""",
+      (s, dir) => {
+        Tables.lineitem(s, dir)
+          .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
+            col("l_shipdate") < lit("1998-01-01").cast("timestamp") &&
+            col("l_discount").between(0.05, 0.07) &&
+            col("l_quantity") < 24)
+          .agg(round(sum(col("l_extendedprice") * col("l_discount")), 2).as("revenue"))
+      }),
+
+    // ---- Q18 analog: large-volume customers — aggregate-then-join
+    //      with a HAVING-style threshold; the qualifying-orderkey set
+    //      is aggregated BEFORE joining back (semi-join on a shrunken
+    //      key set, not a fact-fact join) ----
+    QuerySpec("q18_large_orders",
+      """WITH big AS (
+           SELECT l_orderkey, round(sum(l_quantity), 2) AS total_qty
+           FROM lineitem GROUP BY l_orderkey
+           HAVING round(sum(l_quantity), 2) > 150)
+         SELECT c_name, o_orderkey, o_orderdate, o_totalprice, total_qty
+         FROM orders
+         JOIN big ON o_orderkey = l_orderkey
+         JOIN customer ON o_custkey = c_custkey""",
+      (s, dir) => {
+        val l = Tables.lineitem(s, dir)
+        val big = l.groupBy(col("l_orderkey"))
+          .agg(round(sum(col("l_quantity")), 2).as("total_qty"))
+          .filter(col("total_qty") > 150)
+        Tables.orders(s, dir)
+          .join(big, col("o_orderkey") === col("l_orderkey"))
+          .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
+          .select(col("c_name"), col("o_orderkey"), col("o_orderdate"),
+            col("o_totalprice"), col("total_qty"))
+      }),
+
+    // ---- Set operations: UNION / INTERSECT / EXCEPT over per-type
+    //      user sets. Each plans as aggregate-on-key after shuffle —
+    //      same scale shape as a distinct groupBy. ----
+    QuerySpec("set_union",
+      """SELECT user_id FROM events WHERE event_type = 'click'
+         UNION
+         SELECT user_id FROM events WHERE event_type = 'purchase'""",
+      (s, dir) => {
+        val e = Tables.events(s, dir)
+        e.filter(col("event_type") === "click").select(col("user_id"))
+          .union(e.filter(col("event_type") === "purchase").select(col("user_id")))
+          .distinct()
+      }),
+    QuerySpec("set_intersect",
+      """SELECT user_id FROM events WHERE event_type = 'click'
+         INTERSECT
+         SELECT user_id FROM events WHERE event_type = 'purchase'""",
+      (s, dir) => {
+        val e = Tables.events(s, dir)
+        e.filter(col("event_type") === "click").select(col("user_id"))
+          .intersect(e.filter(col("event_type") === "purchase").select(col("user_id")))
+      }),
+    QuerySpec("set_except",
+      """SELECT user_id FROM events WHERE event_type = 'click'
+         EXCEPT
+         SELECT user_id FROM events WHERE event_type = 'purchase'""",
+      (s, dir) => {
+        val e = Tables.events(s, dir)
+        e.filter(col("event_type") === "click").select(col("user_id"))
+          .except(e.filter(col("event_type") === "purchase").select(col("user_id")))
+      }),
+
+    // ---- G-7: exact distinct aggregation (two-phase: expand + partial
+    //      dedup per partition before the final shuffle) ----
+    QuerySpec("g7_distinct_users",
+      """SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n_events
+         FROM events GROUP BY event_type""",
+      (s, dir) => {
+        Tables.events(s, dir).groupBy(col("event_type"))
+          .agg(count_distinct(col("user_id")).as("n_users"),
+               count(lit(1)).as("n_events"))
+      }),
+
+    // ---- G-8: approximate distinct (HyperLogLog++). Estimates are
+    //      engine-specific, so no SQL oracle — the driver records the
+    //      weaker rows-only check; the error bound vs exact is pinned
+    //      in RelationalOpsSpec instead. At 100 TB this is THE way to
+    //      count distincts: fixed-size sketch, single shuffle of
+    //      sketches, no expand. ----
+    //      r8: the sketch estimate is engine-specific, so the DRIVER
+    //      gate hashes the EXACT distinct count and a boolean claiming
+    //      the estimate landed within 3·rsd of it — the oracle emits
+    //      literal TRUE, so a sketch drifting out of its error bound
+    //      turns the row red instead of invisible (VERDICT r7 item 3).
+    //      r9, timing-semantics decision (ADVICE r8): yes, this means
+    //      the BENCH timing of g8/g12/g21 includes the exact companion
+    //      the comments disclaim at 100 TB — accepted deliberately: one
+    //      ledger entry per operator keeps the correctness gate simple,
+    //      the sketch-only cost is visible in the probe battery
+    //      (BASELINE.md), and a bench-only fork of the query body would
+    //      mean the driver times code the correctness gate never runs.
+    //      The in-bound booleans are probabilistic by nature (3·rsd /
+    //      ±2·accuracy rank); HLL++ and GK are deterministic algorithms
+    //      on deterministic input, so a red here is a real drift, not
+    //      an unlucky coin flip.
+    QuerySpec("g8_approx_distinct",
+      // The sketch queries hash their EXACT companions; the booleans are
+      // Spark-side claims that each estimate sat inside its error bound —
+      // the oracle asserts them true, so a drifting sketch turns the row
+      // red (engine-specific estimate values themselves never hash).
+      """SELECT event_type, count(DISTINCT user_id) AS n_users,
+         true AS est_in_bound
+         FROM events GROUP BY event_type""",
+      (s, dir) => {
+        Tables.events(s, dir).groupBy(col("event_type"))
+          .agg(countDistinct(col("user_id")).as("n_users"),
+               approx_count_distinct(col("user_id"), 0.02).as("__est"))
+          .select(col("event_type"), col("n_users"),
+            (abs(col("__est").cast("double") - col("n_users")) <=
+              col("n_users") * lit(0.06)).as("est_in_bound"))
+      }),
+
+    // ---- G-9: hierarchical rollup (event_type × day → type → grand
+    //      total) — one pass, Expand feeds the same hash aggregate ----
+    QuerySpec("g9_rollup",
+      """SELECT event_type, date_trunc('day', ts) AS day,
+         count(*) AS n, round(sum(value), 4) AS total_value
+         FROM events GROUP BY ROLLUP (event_type, date_trunc('day', ts))""",
+      (s, dir) => {
+        Tables.events(s, dir)
+          .rollup(col("event_type"), date_trunc("day", col("ts")).as("day"))
+          .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("total_value"))
+      }),
+
+    // ---- G-15: min_by/max_by aggregates — the one-pass argmin/argmax
+    //      surface (vs G-4's join-back argmax); deterministic because
+    //      the ordering key event_id is unique ----
+    QuerySpec("g15_argminmax",
+      """SELECT user_id,
+         arg_min(event_type, event_id) AS first_type,
+         arg_max(event_type, event_id) AS last_type,
+         min(event_id) AS first_event,
+         max(event_id) AS last_event
+         FROM events GROUP BY user_id""",
+      (s, dir) => {
+        Tables.events(s, dir)
+          .groupBy(col("user_id"))
+          .agg(
+            min_by(col("event_type"), col("event_id")).as("first_type"),
+            max_by(col("event_type"), col("event_id")).as("last_type"),
+            min(col("event_id")).as("first_event"),
+            max(col("event_id")).as("last_event"))
+      }),
+
+    // ---- G-14: CUBE — all 2^k grouping sets in one Expand pass
+    //      (rollup's completion; same single-shuffle scale shape).
+    //      err_code is a deterministic NULLABLE dimension (nullif), so
+    //      the cube exercises null grouping keys too ----
+    QuerySpec("g14_cube",
+      """SELECT event_type, nullif(event_type, 'click') AS err_code,
+         count(*) AS n, round(sum(value), 4) AS total_value
+         FROM events GROUP BY CUBE (event_type, nullif(event_type, 'click'))""",
+      (s, dir) => {
+        Tables.events(s, dir)
+          .withColumn("err_code", expr("nullif(event_type, 'click')"))
+          .cube(col("event_type"), col("err_code"))
+          .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("total_value"))
+      }),
+
+    // ---- G: explicit GROUPING SETS — the general form behind
+    //      rollup/cube; picks exactly the aggregation levels a
+    //      dashboard needs ((type), (type, user-bucket), ()) in one
+    //      Expand pass / one shuffle ----
+    QuerySpec("g16_grouping_sets",
+      """SELECT event_type, user_id % 10 AS user_bucket,
+              count(*) AS n, round(sum(value), 4) AS total_value
+         FROM events
+         GROUP BY GROUPING SETS ((event_type), (event_type, user_id % 10), ())""",
+      (s, dir) => {
+        Tables.events(s, dir).createOrReplaceTempView("gs_events")
+        s.sql(
+          """SELECT event_type, user_id % 10 AS user_bucket,
+                  count(*) AS n, round(sum(value), 4) AS total_value
+             FROM gs_events
+             GROUP BY GROUPING SETS ((event_type), (event_type, user_id % 10), ())""")
+      }),
+
+    // ---- J-7: null-safe equality join (<=>) — null keys MATCH each
+    //      other instead of disappearing; the join stays an equi-join
+    //      (hash/sort-merge-able) because <=> is a deterministic key
+    //      comparison, not a residual predicate ----
+    QuerySpec("j7_null_safe_join",
+      """WITH e AS (SELECT event_id, nullif(event_type, 'click') AS err_code
+                    FROM events),
+         ec AS (SELECT err_code AS err_key, count(*) AS n_events
+                FROM e GROUP BY err_code)
+         SELECT event_id, err_code, n_events
+         FROM e JOIN ec ON e.err_code IS NOT DISTINCT FROM ec.err_key""",
+      (s, dir) => {
+        val e = Tables.events(s, dir)
+          .withColumn("err_code", expr("nullif(event_type, 'click')"))
+        val errCounts = e.groupBy(col("err_code").as("err_key"))
+          .agg(count(lit(1)).as("n_events"))
+        e.select(col("event_id"), col("err_code"))
+          .join(errCounts, col("err_code") <=> col("err_key"))
+          .select(col("event_id"), col("err_code"), col("n_events"))
+      }),
+
+    // ---- W-1: framed analytic window — 3-event moving average per
+    //      user (partitioned by user: one shuffle, bounded task state) ----
+    QuerySpec("w1_moving_avg",
+      """SELECT user_id, event_id, ts,
+         round(avg(value) OVER (PARTITION BY user_id
+                                ORDER BY ts ASC, event_id ASC
+                                ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 4) AS mavg3
+         FROM events""",
+      (s, dir) => {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("user_id"))
+          .orderBy(col("ts").asc, col("event_id").asc)
+          .rowsBetween(-2, 0)
+        Tables.events(s, dir).select(col("user_id"), col("event_id"), col("ts"),
+          round(avg(col("value")).over(w), 4).as("mavg3"))
+      }),
+
+    // ---- W-3: RANGE frame — "events in the trailing hour", a frame
+    //      defined by VALUE distance (epoch seconds), not row count:
+    //      rows with ties enter together and sparse/bursty streams get
+    //      the correct physical window, which rowsBetween cannot
+    //      express. Count (integer) keeps the contract exact; ordering
+    //      key must be unique-enough only for the ROWS case, not
+    //      RANGE. ----
+    QuerySpec("w3_range_frame",
+      """SELECT user_id, event_id,
+         count(*) OVER (PARTITION BY user_id
+                        ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
+                        RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS n_last_hour
+         FROM events""",
+      (s, dir) => {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("user_id"))
+          .orderBy(unix_timestamp(col("ts")))
+          .rangeBetween(-3600L, 0)
+        Tables.events(s, dir).select(col("user_id"), col("event_id"),
+          count(lit(1)).over(w).as("n_last_hour"))
+      }),
+
+    // ---- W-2: analytic-function battery over one partitioned window —
+    //      lead/lag/row_number/ntile/cume_dist/first_value + running
+    //      sum. ONE shuffle on user_id serves every function (a single
+    //      Window node); running sum rounded because DuckDB's
+    //      segment-tree accumulation orders additions differently. ----
+    QuerySpec("w2_window_battery",
+      """SELECT user_id, event_id,
+         lag(value, 1) OVER w AS prev_value,
+         lead(value, 1) OVER w AS next_value,
+         row_number() OVER w AS rn,
+         ntile(4) OVER w AS quartile,
+         round(cume_dist() OVER w, 6) AS cdist,
+         first_value(event_id) OVER wr AS first_event,
+         round(sum(value) OVER wr, 4) AS running_value
+         FROM events
+         WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC),
+                wr AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""",
+      (s, dir) => {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("user_id"))
+          .orderBy(col("ts").asc, col("event_id").asc)
+        val wRun = w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+        Tables.events(s, dir).select(
+          col("user_id"), col("event_id"),
+          lag(col("value"), 1).over(w).as("prev_value"),
+          lead(col("value"), 1).over(w).as("next_value"),
+          row_number().over(w).as("rn"),
+          ntile(4).over(w).as("quartile"),
+          round(cume_dist().over(w), 6).as("cdist"),
+          first(col("event_id")).over(wRun).as("first_event"),
+          round(sum(col("value")).over(wRun), 4).as("running_value"))
+      }),
+
+    // ---- W-4: exponentially-weighted trailing mean with DYADIC decay
+    //      (half-life = 1 row): weights 128,64,…,1 over the last 8
+    //      rows per user. Powers of two on milli-unit longs keep every
+    //      product and the truncated quotient exact integers — an
+    //      EWMA the oracle can hash-check, where a float alpha^k
+    //      recurrence could not be (cross-engine summation order).
+    //      All 8 lags share ONE Window node / one shuffle on user. ----
+    QuerySpec("w4_ewma",
+      // dyadic EWMA: integer milli-values, power-of-two weights over the
+      // trailing 8 rows, truncated integer quotient — exact on both sides
+      """WITH v AS (SELECT user_id, event_id, ts,
+                      CAST(round(value * 1000) AS BIGINT) AS v
+                    FROM events),
+         l AS (SELECT user_id, event_id, v,
+                 lag(v, 1) OVER w AS v1, lag(v, 2) OVER w AS v2,
+                 lag(v, 3) OVER w AS v3, lag(v, 4) OVER w AS v4,
+                 lag(v, 5) OVER w AS v5, lag(v, 6) OVER w AS v6,
+                 lag(v, 7) OVER w AS v7
+               FROM v
+               WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC))
+         SELECT user_id, event_id, v AS v_milli,
+                (v * 128 + COALESCE(v1, 0) * 64 + COALESCE(v2, 0) * 32
+                 + COALESCE(v3, 0) * 16 + COALESCE(v4, 0) * 8
+                 + COALESCE(v5, 0) * 4 + COALESCE(v6, 0) * 2 + COALESCE(v7, 0))
+                // (128 + CASE WHEN v1 IS NULL THEN 0 ELSE 64 END
+                   + CASE WHEN v2 IS NULL THEN 0 ELSE 32 END
+                   + CASE WHEN v3 IS NULL THEN 0 ELSE 16 END
+                   + CASE WHEN v4 IS NULL THEN 0 ELSE 8 END
+                   + CASE WHEN v5 IS NULL THEN 0 ELSE 4 END
+                   + CASE WHEN v6 IS NULL THEN 0 ELSE 2 END
+                   + CASE WHEN v7 IS NULL THEN 0 ELSE 1 END) AS ewma_milli
+         FROM l""",
+      (s, dir) => {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("user_id"))
+          .orderBy(col("ts").asc, col("event_id").asc)
+        val base = Tables.events(s, dir)
+          .withColumn("__v", round(col("value") * 1000).cast("long"))
+        val lags = (0 to 7).map { d =>
+          val lv = if (d == 0) col("__v") else lag(col("__v"), d).over(w)
+          (coalesce(lv, lit(0L)) * lit(1L << (7 - d)),
+            when(lv.isNotNull, lit(1L << (7 - d))).otherwise(lit(0L)))
+        }
+        base.select(col("user_id"), col("event_id"), col("__v").as("v_milli"),
+            lags.map(_._1).reduce(_ + _).as("__num"),
+            lags.map(_._2).reduce(_ + _).as("__den"))
+          // Division parity holds for NEGATIVE values too: Spark `div`,
+          // DuckDB integer `//`, and JVM long `/` (EwmaPipeline) all
+          // truncate toward zero (DuckDB -7 // 2 = -3, spot-checked;
+          // EdgeCasesSpec pins the Spark↔JVM leg), so a negative-valued
+          // metric stream hashes identically on all three.
+          .withColumn("ewma_milli", expr("__num div __den"))
+          .drop("__num", "__den")
+      }),
+
+    // ---- Cohort retention: users bucketed by first-seen date, distinct
+    //      actives per (cohort, day offset) — the standard retention
+    //      triangle. The cohort join key IS the aggregation key
+    //      (user_id), so the min-date exchange is reused by the join. ----
+    QuerySpec("g17_retention",
+      """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS d FROM events),
+         c AS (SELECT user_id, min(d) AS cohort_date FROM e GROUP BY user_id)
+         SELECT c.cohort_date, date_diff('day', c.cohort_date, e.d) AS day_offset,
+                count(DISTINCT e.user_id) AS n_users
+         FROM e JOIN c USING (user_id)
+         GROUP BY 1, 2""",
+      (s, dir) => {
+        val e = Tables.events(s, dir)
+          .select(col("user_id"), col("ts").cast("date").as("__d"))
+        val cohort = e.groupBy(col("user_id")).agg(min(col("__d")).as("cohort_date"))
+        e.join(cohort, Seq("user_id"))
+          .groupBy(col("cohort_date"),
+            datediff(col("__d"), col("cohort_date")).as("day_offset"))
+          .agg(countDistinct(col("user_id")).as("n_users"))
+      }),
+
+    // ---- Ordered funnel: view → click → purchase, each stage's first
+    //      timestamp AT OR AFTER the previous stage's (not just "did
+    //      both happen" — order matters). Three aggregates + two joins,
+    //      all on user_id: one logical key, shared shuffle. ----
+    QuerySpec("g18_funnel",
+      // ordered funnel: each stage's first timestamp at or after the
+      // previous stage's first timestamp
+      """WITH v AS (SELECT user_id, min(ts) AS t_view FROM events
+                    WHERE event_type = 'view' GROUP BY user_id),
+         c AS (SELECT e.user_id, min(e.ts) AS t_click
+               FROM events e JOIN v USING (user_id)
+               WHERE e.event_type = 'click' AND e.ts >= v.t_view
+               GROUP BY e.user_id),
+         p AS (SELECT e.user_id, min(e.ts) AS t_purchase
+               FROM events e JOIN c USING (user_id)
+               WHERE e.event_type = 'purchase' AND e.ts >= c.t_click
+               GROUP BY e.user_id)
+         SELECT v.user_id, v.t_view, c.t_click, p.t_purchase,
+                1 + CASE WHEN c.t_click IS NULL THEN 0 ELSE 1 END
+                  + CASE WHEN p.t_purchase IS NULL THEN 0 ELSE 1 END AS stage
+         FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)""",
+      (s, dir) => {
+        val e = Tables.events(s, dir)
+        val views = e.filter(col("event_type") === "view")
+          .groupBy(col("user_id")).agg(min(col("ts")).as("t_view"))
+        val clicks = e.join(views, Seq("user_id"))
+          .filter(col("event_type") === "click" && col("ts") >= col("t_view"))
+          .groupBy(col("user_id")).agg(min(col("ts")).as("t_click"))
+        val buys = e.join(clicks, Seq("user_id"))
+          .filter(col("event_type") === "purchase" && col("ts") >= col("t_click"))
+          .groupBy(col("user_id")).agg(min(col("ts")).as("t_purchase"))
+        views.join(clicks, Seq("user_id"), "left")
+          .join(buys, Seq("user_id"), "left")
+          .select(col("user_id"), col("t_view"), col("t_click"), col("t_purchase"),
+            (lit(1) + when(col("t_click").isNotNull, 1).otherwise(0)
+              + when(col("t_purchase").isNotNull, 1).otherwise(0)).as("stage"))
+      }),
+
+    // ---- Per-entity anomaly flags: events above their OWN user's
+    //      95th percentile — thresholds are per-key aggregates joined
+    //      back on the same key (the aggregate's exchange clusters the
+    //      join), never a global sort. The alerting primitive over a
+    //      metric stream. ----
+    QuerySpec("ts_anomaly",
+      """WITH t AS (SELECT user_id,
+                      round(quantile_cont(value, 0.95), 4) AS p95
+                    FROM events GROUP BY user_id)
+         SELECT e.user_id, e.event_id, e.value, t.p95
+         FROM events e JOIN t USING (user_id)
+         WHERE e.value > t.p95""",
+      (s, dir) => {
+        val e = Tables.events(s, dir)
+        val thr = e.groupBy(col("user_id"))
+          .agg(round(expr("percentile(value, 0.95)"), 4).as("p95"))
+        e.join(thr, Seq("user_id"))
+          .filter(col("value") > col("p95"))
+          .select(col("user_id"), col("event_id"), col("value"), col("p95"))
+      }),
+
+    // ---- Data-quality constraint audit over lineitem: the ingest
+    //      gate's expectations (domain bounds, non-negativity, date
+    //      ordering, enum membership), ALL evaluated in one scan —
+    //      each rule is a conditional count inside a single aggregate,
+    //      so the audit costs one table read however many rules run.
+    //      NULL rule results count as violations (conservative). ----
+    QuerySpec("dq_constraints",
+      // each rule's violation count via FILTER aggregates over one scan;
+      // NULL rule results count as violations on both engines
+      """WITH a AS (SELECT count(*) AS n,
+           count(*) FILTER (NOT COALESCE(l_quantity >= 1 AND l_quantity <= 50, false)) AS v_quantity_in_domain,
+           count(*) FILTER (NOT COALESCE(l_extendedprice > 0, false)) AS v_price_positive,
+           count(*) FILTER (NOT COALESCE(l_discount >= 0 AND l_discount <= 0.1, false)) AS v_discount_in_unit,
+           count(*) FILTER (NOT COALESCE(l_shipdate >= TIMESTAMP '1992-01-01 00:00:00', false)) AS v_shipdate_in_range,
+           count(*) FILTER (NOT COALESCE(l_returnflag IN ('A', 'N', 'R'), false)) AS v_returnflag_enum
+         FROM lineitem),
+         u AS (SELECT n, 'quantity_in_domain' AS rule, v_quantity_in_domain AS n_violations FROM a
+               UNION ALL SELECT n, 'price_positive', v_price_positive FROM a
+               UNION ALL SELECT n, 'discount_in_unit', v_discount_in_unit FROM a
+               UNION ALL SELECT n, 'shipdate_in_range', v_shipdate_in_range FROM a
+               UNION ALL SELECT n, 'returnflag_enum', v_returnflag_enum FROM a)
+         SELECT rule, n_violations, n AS n_checked,
+                n_violations = 0 AS pass
+         FROM u""",
+      (s, dir) => {
+        graft.operators.RelationalOps.constraintAudit(Tables.lineitem(s, dir), Seq(
+          "quantity_in_domain" ->
+            (col("l_quantity") >= 1 && col("l_quantity") <= 50),
+          "price_positive" -> (col("l_extendedprice") > 0),
+          "discount_in_unit" ->
+            (col("l_discount") >= 0 && col("l_discount") <= 0.1),
+          "shipdate_in_range" ->
+            (col("l_shipdate") >= lit("1992-01-01").cast("timestamp")),
+          "returnflag_enum" ->
+            col("l_returnflag").isInCollection(Seq("A", "N", "R"))))
+      }),
+
+    // ---- X-Q11: zero-extra-scan QC — the metrics ride the production
+    //      job's OWN scan as a CollectMetrics node (Dataset.observe)
+    //      instead of dq_constraints' dedicated audit pass, so at
+    //      100 TB the QC bill is a few per-task counters, not a second
+    //      table read. The job here is a returnflag revenue rollup run
+    //      to a noop sink; the ledger row is the metrics row that job
+    //      produced. All metrics are integer-exact (counts + a
+    //      long-cast sum — l_quantity is integral by construction), so
+    //      the parity hash is float-free. ----
+    QuerySpec("dq_observe",
+      // the observed-metrics row the production job's scan produced;
+      // count(when(...)) ≡ FILTER (both skip NULL/false predicates)
+      """SELECT count(*) AS n_rows,
+         CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
+         count(*) FILTER (l_discount < 0 OR l_discount > 0.1) AS n_bad_discount,
+         count(*) FILTER (l_shipdate IS NULL OR l_returnflag IS NULL) AS n_null_keys
+         FROM lineitem""",
+      (s, dir) => {
+        graft.operators.RelationalOps.observedAudit(
+          Tables.lineitem(s, dir), Seq(
+            count(lit(1)).as("n_rows"),
+            sum(col("l_quantity").cast("long")).as("sum_qty"),
+            count(when(col("l_discount") < 0 || col("l_discount") > 0.1, 1))
+              .as("n_bad_discount"),
+            count(when(col("l_shipdate").isNull || col("l_returnflag").isNull, 1))
+              .as("n_null_keys"))) { li =>
+          li.groupBy(col("l_returnflag"))
+            .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))
+              .as("revenue"))
+        }
+      }),
+
+    // ---- Per-type OLS trend of the daily value series: slope =
+    //      (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²) with x = epoch day and
+    //      y = daily cents — both sides emitted as INTEGER numerator /
+    //      denominator (the ts_acf discipline: no division, no float),
+    //      plus the truncated MILLI-slope for direct consumption
+    //      (milli, not micro: |num| can reach ~1e15 at sf0.1, so the
+    //      1e3 multiplier keeps the product well under Long.Max where
+    //      1e6 would flirt with overflow). One grid aggregate + one
+    //      scalar-per-group aggregate. ----
+    QuerySpec("ts_trend",
+      // OLS slope as integer numerator/denominator + truncated milli
+      // quotient; x = epoch day, y = daily cents, all BIGINT
+      """WITH d AS (SELECT event_type,
+                      CAST(date_diff('day', DATE '1970-01-01',
+                        CAST(ts AS DATE)) AS BIGINT) AS x,
+                      SUM(CAST(round(value * 100) AS BIGINT)) AS y
+                    FROM events GROUP BY 1, 2),
+         a AS (SELECT event_type, count(*) AS n,
+                 CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
+                 CAST(SUM(x * y) AS BIGINT) AS sxy,
+                 CAST(SUM(x * x) AS BIGINT) AS sxx
+               FROM d GROUP BY 1)
+         SELECT event_type, n,
+                CAST(n * sxy - sx * sy AS BIGINT) AS slope_num,
+                CAST(n * sxx - sx * sx AS BIGINT) AS slope_den,
+                CAST((n * sxy - sx * sy) * 1000 // (n * sxx - sx * sx)
+                  AS BIGINT) AS slope_milli
+         FROM a""",
+      (s, dir) => {
+        val daily = Tables.events(s, dir)
+          .groupBy(col("event_type"),
+            datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
+              .cast("long").as("__x"))
+          .agg(sum(round(col("value") * 100).cast("long")).as("__y"))
+        daily.groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("__x")).as("__sx"), sum(col("__y")).as("__sy"),
+            sum(col("__x") * col("__y")).as("__sxy"),
+            sum(col("__x") * col("__x")).as("__sxx"))
+          .select(col("event_type"), col("n"),
+            (col("n") * col("__sxy") - col("__sx") * col("__sy")).as("slope_num"),
+            (col("n") * col("__sxx") - col("__sx") * col("__sx")).as("slope_den"),
+            // a single-day group degenerates to den = 0: guard to NULL
+            // explicitly (ANSI div would throw; DuckDB // 0 yields NULL —
+            // the guard makes both engines emit the same NULL)
+            expr("""CASE WHEN n * __sxx - __sx * __sx = 0 THEN NULL
+                    ELSE (n * __sxy - __sx * __sy) * 1000
+                         div (n * __sxx - __sx * __sx) END""")
+              .as("slope_milli"))
+      }),
+
+    // ---- Lag-k autocovariance of the daily value series per event
+    //      type — the seasonality/persistence signal over a metric
+    //      stream. Daily cents are exact longs; each lag k ∈ {1,2,3}
+    //      reports the multiplied-out integer numerator
+    //      n·Σxy − Σx·Σy (the float-parity discipline: no division,
+    //      no float, order-independent long sums). ONE (event_type)
+    //      window serves all three lags; the stack unpivot fans out
+    //      3 rows per day — bounded by the lag count. ----
+    QuerySpec("ts_acf",
+      // daily cents are exact longs; the numerator is the multiplied-out
+      // integer form n*Sxy - Sx*Sy — no division, no float anywhere
+      """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
+                      SUM(CAST(round(value * 100) AS BIGINT)) AS c
+                    FROM events GROUP BY 1, 2),
+         l AS (SELECT event_type, c,
+                 lag(c, 1) OVER w AS l1, lag(c, 2) OVER w AS l2,
+                 lag(c, 3) OVER w AS l3
+               FROM d WINDOW w AS (PARTITION BY event_type ORDER BY day)),
+         u AS (SELECT event_type, 1 AS lag_k, c AS x, l1 AS y FROM l
+               UNION ALL SELECT event_type, 2, c, l2 FROM l
+               UNION ALL SELECT event_type, 3, c, l3 FROM l)
+         SELECT event_type, lag_k, count(*) AS n,
+                CAST(count(*) * SUM(x * y) - SUM(x) * SUM(y) AS BIGINT)
+                  AS acov_num
+         FROM u WHERE y IS NOT NULL GROUP BY 1, 2""",
+      (s, dir) => {
+        val daily = Tables.events(s, dir)
+          .groupBy(col("event_type"), col("ts").cast("date").as("__day"))
+          .agg(sum(round(col("value") * 100).cast("long")).as("__c"))
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("event_type")).orderBy(col("__day"))
+        daily
+          .withColumn("__l1", lag(col("__c"), 1).over(w))
+          .withColumn("__l2", lag(col("__c"), 2).over(w))
+          .withColumn("__l3", lag(col("__c"), 3).over(w))
+          .select(col("event_type"), col("__c"),
+            expr("stack(3, 1, __l1, 2, __l2, 3, __l3) AS (lag_k, __y)"))
+          .filter(col("__y").isNotNull)
+          .groupBy(col("event_type"), col("lag_k"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("__c")).as("__sx"), sum(col("__y")).as("__sy"),
+            sum(col("__c") * col("__y")).as("__sxy"))
+          .select(col("event_type"), col("lag_k"), col("n"),
+            (col("n") * col("__sxy") - col("__sx") * col("__sy")).as("acov_num"))
+      }),
+
+    // ---- X-G54: day-of-week seasonal profile — the seasonality index
+    //      (dow mean over overall mean, exact integer milli units via
+    //      cents·total_days·1000 div (total_cents·days_dow)) per event
+    //      type. One grid aggregate to the (type, day) grain, one to
+    //      (type, dow), totals as a window on the same partitioning.
+    //      Values are non-negative so truncating div ≡ floor div on
+    //      both engines. ----
+    QuerySpec("ts_seasonal",
+      // dow via isodow-1 (Monday=0) matches Spark's weekday(); integer
+      // milli index over non-negative sums, so // equals div exactly
+      """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
+                      SUM(CAST(round(value * 100) AS BIGINT)) AS c
+                    FROM events GROUP BY 1, 2),
+         p AS (SELECT event_type, CAST(isodow(day) - 1 AS BIGINT) AS dow,
+                 count(*) AS n_days, CAST(SUM(c) AS BIGINT) AS cents
+               FROM d GROUP BY 1, 2),
+         t AS (SELECT *,
+                 CAST(SUM(n_days) OVER (PARTITION BY event_type) AS BIGINT) AS nt,
+                 CAST(SUM(cents) OVER (PARTITION BY event_type) AS BIGINT) AS tot
+               FROM p)
+         SELECT event_type, dow, n_days, cents,
+                CAST(CAST(cents AS HUGEINT) * nt * 1000
+                     // (CAST(tot AS HUGEINT) * n_days) AS BIGINT) AS idx_milli
+         FROM t""",
+      (s, dir) => {
+        val daily = Tables.events(s, dir)
+          .groupBy(col("event_type"), col("ts").cast("date").as("__day"))
+          .agg(sum(round(col("value") * 100).cast("long")).as("__c"))
+        val perDow = daily
+          .groupBy(col("event_type"), weekday(col("__day")).cast("long").as("dow"))
+          .agg(count(lit(1)).as("n_days"), sum(col("__c")).as("cents"))
+        val w = org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))
+        perDow
+          .withColumn("__nt", sum(col("n_days")).over(w))
+          .withColumn("__tot", sum(col("cents")).over(w))
+          .select(col("event_type"), col("dow"), col("n_days"), col("cents"),
+            // wide-integer arithmetic: cents·nt·1000 can clear Long at
+            // large SF, and non-ANSI Spark would wrap silently where the
+            // oracle raises — DECIMAL(38,0) keeps the product exact
+            // (mirrored by HUGEINT on the oracle side); values are
+            // non-negative so truncating div ≡ floor div on both engines
+            expr("CAST(cents AS DECIMAL(38,0)) * __nt * 1000 " +
+              "div (CAST(__tot AS DECIMAL(38,0)) * n_days)").as("idx_milli"))
+      }),
+
+    // ---- X-G55: per-node triangle counts by DEGREE-ORIENTED
+    //      enumeration (Suri & Vassilvitskii WWW'11) over the
+    //      co-purchase graph: nodes = part groups (mod 200), an edge
+    //      where two groups share >= 3 orders. The item coarsening
+    //      bounds the graph by the vocabulary at ANY scale factor
+    //      (the g20 discipline); the orientation bounds the wedge
+    //      join's fan-out by sqrt(|E|) per node on any degree
+    //      distribution. ----
+    QuerySpec("gr_triangles",
+      // the oracle enumerates triangles DIRECTLY from the canonical
+      // a<b<c edge triples — an independent formulation checking the
+      // degree-oriented algorithm's result, not mirroring its steps
+      """WITH it AS (SELECT DISTINCT l_orderkey AS oid, l_partkey % 200 AS item
+                     FROM lineitem),
+         e0 AS (SELECT a.item AS lo, b.item AS hi
+                FROM it a JOIN it b ON a.oid = b.oid AND a.item < b.item
+                GROUP BY 1, 2 HAVING count(*) >= 3),
+         t AS (SELECT e1.lo AS a, e1.hi AS b, e2.hi AS c
+               FROM e0 e1
+               JOIN e0 e2 ON e1.hi = e2.lo
+               JOIN e0 e3 ON e3.lo = e1.lo AND e3.hi = e2.hi)
+         SELECT node, count(*) AS n_triangles
+         FROM (SELECT unnest([a, b, c]) AS node FROM t)
+         GROUP BY node""",
+      (s, dir) =>
+        graft.operators.GraphOps.triangleCounts(triangleEdges(s, dir), "x", "y")),
+
+    // ---- X-G52: CUSUM changepoint per event-type daily series — the
+    //      position maximizing |n·prefix_k − k·total| (the scaled
+    //      single-changepoint location statistic; see
+    //      RelationalOps.cusumChangepoint for the integer contract).
+    //      The fact scan collapses to the (type, day) grain first; the
+    //      windows run on that grain only. ----
+    QuerySpec("ts_cusum",
+      // the scaled CUSUM statistic |n·prefix_k − k·total| is pure
+      // integer, so the argmax day is engine-exact; ties break earliest
+      """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
+                      SUM(CAST(round(value * 100) AS BIGINT)) AS c
+                    FROM events GROUP BY 1, 2),
+         s AS (SELECT event_type, day,
+                 CAST(SUM(c) OVER w AS BIGINT) AS prefix,
+                 CAST(row_number() OVER w AS BIGINT) AS k,
+                 CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n,
+                 CAST(SUM(c) OVER (PARTITION BY event_type) AS BIGINT) AS total
+               FROM d WINDOW w AS (PARTITION BY event_type ORDER BY day))
+         SELECT event_type, day AS cp,
+                CAST(abs(n * prefix - k * total) AS BIGINT) AS s_max,
+                n AS n_points
+         FROM (SELECT *, row_number() OVER (PARTITION BY event_type
+                 ORDER BY abs(n * prefix - k * total) DESC, day ASC) AS r
+               FROM s)
+         WHERE r = 1""",
+      (s, dir) => {
+        val daily = Tables.events(s, dir)
+          .groupBy(col("event_type"), col("ts").cast("date").as("day"))
+          .agg(sum(round(col("value") * 100).cast("long")).as("__cents"))
+        graft.operators.RelationalOps.cusumChangepoint(
+          daily, "event_type", "day", "__cents")
+      }),
+
+    // ---- X-Q12: reconciliation summary between a table and its
+    //      "migrated" twin — the one-pass damage report (keys lost,
+    //      keys invented, per-column drift counts) run BEFORE any
+    //      row-level diff is materialized. The twin derives
+    //      deterministically from orders: every 97th key dropped,
+    //      every 31st price nudged one cent, every 53rd status
+    //      flipped, every 89th key re-added negated — so all four
+    //      metric classes and both per-column counters are
+    //      exercised. ----
+    QuerySpec("dq_table_diff",
+      // one full-outer join, six conditional counts — the same single
+      // pass the Spark side runs
+      """WITH o AS (SELECT o_orderkey AS k,
+                      CAST(round(o_totalprice * 100) AS BIGINT) AS p,
+                      o_orderstatus AS st
+                    FROM orders),
+         m AS (SELECT k, CASE WHEN k % 31 = 0 THEN p + 1 ELSE p END AS p,
+                      CASE WHEN k % 53 = 0 THEN 'X' ELSE st END AS st
+               FROM o WHERE k % 97 <> 0
+               UNION ALL SELECT -k, p, st FROM o WHERE k % 89 = 0),
+         j AS (SELECT o.k AS lk, m.k AS rk, o.p AS lp, m.p AS rp,
+                      o.st AS lst, m.st AS rst
+               FROM o FULL OUTER JOIN m ON o.k = m.k)
+         SELECT 'only_left' AS metric, count(*) AS n FROM j WHERE rk IS NULL
+         UNION ALL SELECT 'only_right', count(*) FROM j WHERE lk IS NULL
+         UNION ALL SELECT 'matched_equal', count(*) FROM j
+           WHERE lk IS NOT NULL AND rk IS NOT NULL
+             AND lp IS NOT DISTINCT FROM rp AND lst IS NOT DISTINCT FROM rst
+         UNION ALL SELECT 'matched_differ', count(*) FROM j
+           WHERE lk IS NOT NULL AND rk IS NOT NULL
+             AND (lp IS DISTINCT FROM rp OR lst IS DISTINCT FROM rst)
+         UNION ALL SELECT 'col_diff:price_cents', count(*) FROM j
+           WHERE lk IS NOT NULL AND rk IS NOT NULL AND lp IS DISTINCT FROM rp
+         UNION ALL SELECT 'col_diff:status', count(*) FROM j
+           WHERE lk IS NOT NULL AND rk IS NOT NULL AND lst IS DISTINCT FROM rst""",
+      (s, dir) => {
+        val o = Tables.orders(s, dir).select(col("o_orderkey"),
+          round(col("o_totalprice") * 100).cast("long").as("price_cents"),
+          col("o_orderstatus").as("status"))
+        val migrated = o.filter(col("o_orderkey") % 97 =!= 0)
+          .select(col("o_orderkey"),
+            when(col("o_orderkey") % 31 === 0, col("price_cents") + 1)
+              .otherwise(col("price_cents")).as("price_cents"),
+            when(col("o_orderkey") % 53 === 0, lit("X"))
+              .otherwise(col("status")).as("status"))
+          .unionByName(o.filter(col("o_orderkey") % 89 === 0)
+            .select((-col("o_orderkey")).as("o_orderkey"),
+              col("price_cents"), col("status")))
+        graft.operators.RelationalOps.reconcile(o, migrated,
+          Seq("o_orderkey"), Seq("price_cents", "status"))
+      }),
+
+    // ---- X-G53: recursive CTE hierarchy walk (Spark 4's WITH
+    //      RECURSIVE → UnionLoopExec). Each customer walks an implicit
+    //      forest where parent(c) = md5₂₈(c) mod c — strictly
+    //      decreasing, so every walk reaches node 0, and the md5
+    //      arithmetic is the engine-portable h7 idiom, so DuckDB runs
+    //      the SAME recursion. Depth distribution is the output: per
+    //      final depth, customer count + balance cents. Iteration
+    //      count is max-depth ≈ e·ln n (≈ 60 at 10¹⁰ rows — well under
+    //      the level limit); total materialized rows are Σ depth ≈
+    //      n·ln n, so the row-limit guard lifts to "unlimited" and the
+    //      real bound is the harmonic sum, not a config. ----
+    QuerySpec("gr_reachability",
+      // the identical md5-mod walk, recursion for recursion — DuckDB's
+      // WITH RECURSIVE checks Spark's UnionLoop execution end to end
+      """WITH RECURSIVE walk AS (
+           SELECT c_custkey AS node, c_custkey AS cur, 0 AS depth,
+                  CAST(round(c_acctbal * 100) AS BIGINT) AS bal
+           FROM customer
+           UNION ALL
+           SELECT node,
+                  CAST('0x' || substr(md5(CAST(cur AS VARCHAR)), 1, 7) AS BIGINT)
+                    % cur,
+                  depth + 1, bal
+           FROM walk WHERE cur > 0)
+         SELECT depth, count(*) AS n_customers,
+                CAST(sum(bal) AS BIGINT) AS bal_cents
+         FROM walk WHERE cur = 0 GROUP BY depth""",
+      (s, dir) => {
+        val v = s"cust_walk_${dirTag(dir)}"
+        Tables.customer(s, dir).select(col("c_custkey"),
+            round(col("c_acctbal") * 100).cast("long").as("bal_cents"))
+          .createOrReplaceTempView(v)
+        // lift the recursion row limit for THIS query only (the real
+        // bound is the harmonic sum, see above) — restore the session's
+        // limit afterwards so the safety net stays up for everyone else
+        val prevLimit = s.conf.getOption("spark.sql.cteRecursionRowLimit")
+        s.conf.set("spark.sql.cteRecursionRowLimit", "-1")
+        // the recursion must EXECUTE while the limit is lifted (the
+        // returned frame is otherwise lazy and would run after the
+        // restore) — the aggregate is tiny (≤ max walk depth rows), so
+        // an eager localCheckpoint pins it at negligible cost
+        try s.sql(
+          s"""WITH RECURSIVE walk (node, cur, depth, bal) AS (
+             |  SELECT c_custkey, c_custkey, 0, bal_cents FROM $v
+             |  UNION ALL
+             |  SELECT node,
+             |         CAST(conv(substring(md5(CAST(cur AS STRING)), 1, 7), 16, 10)
+             |              AS BIGINT) % cur,
+             |         depth + 1, bal
+             |  FROM walk WHERE cur > 0
+             |)
+             |SELECT depth, count(*) AS n_customers, sum(bal) AS bal_cents
+             |FROM walk WHERE cur = 0 GROUP BY depth""".stripMargin)
+          .localCheckpoint()
+        finally prevLimit match {
+          case Some(p) => s.conf.set("spark.sql.cteRecursionRowLimit", p)
+          case None    => s.conf.unset("spark.sql.cteRecursionRowLimit")
+        }
+      }),
+
+    // ---- Co-occurrence matrix: which event types happen TOGETHER in
+    //      the same (user, hour) — the association signal behind
+    //      "users who err also retry" dashboards. DISTINCT types per
+    //      group FIRST (≤ |types| rows per group), so the pair
+    //      self-join fans out at most |types|² per group — bounded by
+    //      the type vocabulary, never by event volume. ----
+    // ---- Market-basket association rules over order baskets:
+    //      support / confidence / lift for item pairs, the classic
+    //      affinity kernel. Items coarsened to 100 groups so pairs
+    //      repeat; DISTINCT per basket FIRST, so the pair self-join
+    //      fans out at most |items-per-basket|² per order (≤ ~50),
+    //      bounded by basket width, never by order volume. Confidence
+    //      and lift are integer micro-units (truncating div on both
+    //      engines); the basket total enters as a broadcast scalar. ----
+    QuerySpec("g20_basket_rules",
+      // pair counts over per-basket DISTINCT items; micro-unit ratios
+      // with truncating // match Spark's div exactly
+      """WITH it AS (SELECT DISTINCT l_orderkey AS oid, l_partkey % 100 AS item
+                     FROM lineitem),
+         nb AS (SELECT count(*) AS n FROM (SELECT DISTINCT oid FROM it)),
+         ci AS (SELECT item, count(*) AS ni FROM it GROUP BY item),
+         p AS (SELECT a.item AS item_a, b.item AS item_b, count(*) AS n_ab
+               FROM it a JOIN it b ON a.oid = b.oid AND a.item < b.item
+               GROUP BY 1, 2 HAVING count(*) >= 5)
+         SELECT item_a, item_b, n_ab,
+                CAST(n_ab * 1000000 // ca.ni AS BIGINT) AS conf_micro,
+                CAST(n_ab * nb.n * 1000000 // (ca.ni * cb.ni) AS BIGINT)
+                  AS lift_micro
+         FROM p JOIN ci ca ON p.item_a = ca.item
+                JOIN ci cb ON p.item_b = cb.item, nb""",
+      (s, dir) =>
+        graft.operators.RelationalOps.basketRules(basketMemberships(s, dir),
+          "oid", "item")),
+
+    // ---- X-G48: Space-Saving heavy hitters, driver-checkable via the
+    //      g8/g12 sketch recipe — the hashed rows are the EXACT
+    //      per-group top-3 (oracle-expressible) and the sketch's two
+    //      ICDT'05 guarantees ride as oracle-asserted booleans:
+    //      tracked_ok (every item with true freq > N/k IS tracked) and
+    //      bounds_ok (count−err ≤ f ≤ count for every tracked item).
+    //      `item` is a Zipf-ish deterministic integer map of user_id
+    //      (`150 div (1+uid%150)` puts ~50% of mass on item 1) because
+    //      the synthetic tables are uniform and uniform data has no
+    //      heavy hitters to guarantee anything about. The sketch folds
+    //      the SAME pure step the streaming pipeline folds
+    //      (TopKPipeline.step), over a secondary-sorted partition
+    //      iterator — O(k) state per live group, no group
+    //      materialization, one exchange. ----
+    QuerySpec("g21_heavy_hitters",
+      // the hashed rows are the EXACT per-group top-3; the Space-Saving
+      // guarantees are Spark-side claims the oracle asserts true (g8
+      // recipe) — a sketch violating its ICDT'05 bounds reds the row
+      """WITH exact AS (
+           SELECT event_type AS grp, 150 // (1 + user_id % 150) AS item,
+                  count(*) AS cnt
+           FROM events GROUP BY 1, 2)
+         SELECT grp, rnk, item, cnt,
+                true AS tracked_ok, true AS bounds_ok
+         FROM (SELECT grp, item, cnt,
+                      row_number() OVER (PARTITION BY grp
+                                         ORDER BY cnt DESC, item ASC) AS rnk
+               FROM exact)
+         WHERE rnk <= 3""",
+      (s, dir) => {
+        import s.implicits._
+        val k = 8
+        val ev = Tables.events(s, dir).select(
+          col("event_type").as("grp"),
+          expr("150 div (1 + user_id % 150)").as("item"),
+          col("event_id"), col("ts"))
+        // exact counts feed three consumers (threshold check, bounds
+        // check, hashed top-3) — checkpoint the vocab-bounded aggregate
+        // so the fact table is scanned once for it, and derive the
+        // per-group total from it (zero extra scans)
+        val exact = ev.groupBy(col("grp"), col("item")).agg(count(lit(1)).as("cnt"))
+          .localCheckpoint()
+        val n = exact.groupBy(col("grp")).agg(sum(col("cnt")).as("n_events"))
+        val tracked = graft.streaming.TopKPipeline.heavyHittersBatch(
+            ev.select(col("grp").as("group"), col("item"), col("event_id"), col("ts"))
+              .as[graft.streaming.TopKInput], k)
+          .toDF("grp", "item", "cnt_hi", "cnt_lo")
+          .localCheckpoint() // tiny (groups×k); feeds both guarantee branches
+        val trackedOk = exact.join(n, Seq("grp"))
+          .filter(col("cnt") * k > col("n_events"))
+          .join(tracked.select(col("grp"), col("item"), lit(true).as("__t")),
+            Seq("grp", "item"), "left")
+          .groupBy(col("grp"))
+          .agg(bool_and(coalesce(col("__t"), lit(false))).as("tracked_ok"))
+        val boundsOk = tracked.join(exact, Seq("grp", "item"), "left")
+          .groupBy(col("grp"))
+          .agg(bool_and(col("cnt_lo") <= col("cnt") && col("cnt") <= col("cnt_hi"))
+            .as("bounds_ok"))
+        topKPerGroup(exact, Seq("grp"), Seq(col("cnt").desc, col("item").asc), 3, "rnk")
+          .join(broadcast(trackedOk), Seq("grp"), "left")
+          .join(broadcast(boundsOk), Seq("grp"), "left")
+          // a group with no item above N/k has nothing to guarantee
+          .select(col("grp"), col("rnk"), col("item"), col("cnt"),
+            coalesce(col("tracked_ok"), lit(true)).as("tracked_ok"),
+            coalesce(col("bounds_ok"), lit(true)).as("bounds_ok"))
+      }),
+
+    // ---- S-6 scale path, driver-checkable: batch twin of streaming
+    //      dropDuplicatesWithinWatermark (RelationalOps.dedupWithinDelay
+    //      — greedy bounded-state dedup replayed over at-rest data).
+    //      The greedy kept set is not ANSI-SQL-expressible, but it is
+    //      UNIQUELY determined by three invariants, each checkable with
+    //      joins/windows: the key's first event is kept, consecutive
+    //      kept events sit > delay apart, and every event is covered by
+    //      a kept event within delay at-or-before it. Those booleans
+    //      are asserted by the oracle (g8 recipe); the exact hashed
+    //      companions are per-key n_events/first_ts. delay = 48 h vs
+    //      the events table's ~35 h median intra-key gap → genuinely
+    //      multi-epoch (real drops AND real re-admits). ----
+    QuerySpec("s9_dedup_within_delay",
+      // greedy watermark dedup is not ANSI-expressible; the oracle hashes
+      // the exact per-key companions and asserts the three invariants
+      // that uniquely determine the greedy kept set
+      """SELECT user_id, event_type, count(*) AS n_events, min(ts) AS first_ts,
+              true AS first_kept_ok, true AS gaps_ok, true AS cover_ok
+         FROM events GROUP BY 1, 2""",
+      (s, dir) => {
+        val delayMicros = 48L * 3600 * 1000000L
+        val delayI = expr("INTERVAL 48 HOURS")
+        val ev = Tables.events(s, dir)
+          .select(col("user_id"), col("event_type"), col("event_id"), col("ts"))
+        val kept = graft.operators.RelationalOps.dedupWithinDelay(
+            ev, Seq("user_id", "event_type"), "ts", Seq("event_id"), delayMicros)
+          .localCheckpoint() // feeds both invariant branches
+        // ONE pass over events carries every per-key exact it needs
+        // (count, first ts, first (ts, event_id)) — three fact scans
+        // total: the dedup itself, this aggregate, the coverage join
+        val evAgg = ev.groupBy(col("user_id"), col("event_type"))
+          .agg(count(lit(1)).as("n_events"), min(col("ts")).as("first_ts"),
+            min(struct(col("ts"), col("event_id"))).as("__f"))
+        // one pass over kept: the gap invariant (partitioned lag window)
+        // and the kept-side first event share the same grouped shape
+        val wk = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("user_id"), col("event_type"))
+          .orderBy(col("ts"), col("event_id"))
+        val keptAgg = kept.withColumn("__prev", lag(col("ts"), 1).over(wk))
+          .groupBy(col("user_id"), col("event_type"))
+          .agg(bool_and(col("__prev").isNull || col("ts") > col("__prev") + delayI)
+              .as("gaps_ok"),
+            min(struct(col("ts"), col("event_id"))).as("__fk"))
+        // per-event coverage: ≤ epochs-per-key kept candidates per event
+        // (span/delay-bounded fan-out), then bool_and up to the key
+        val coverOk = ev
+          .join(kept.select(col("user_id"), col("event_type"), col("ts").as("__kts")),
+            Seq("user_id", "event_type"))
+          .withColumn("__cov",
+            col("__kts") <= col("ts") && col("ts") <= col("__kts") + delayI)
+          .groupBy(col("user_id"), col("event_type"), col("event_id"))
+          .agg(max(col("__cov")).as("__c"))
+          .groupBy(col("user_id"), col("event_type"))
+          .agg(bool_and(col("__c")).as("cover_ok"))
+        evAgg
+          .join(keptAgg, Seq("user_id", "event_type"))
+          .join(coverOk, Seq("user_id", "event_type"))
+          .select(col("user_id"), col("event_type"), col("n_events"), col("first_ts"),
+            (col("__f") === col("__fk")).as("first_kept_ok"),
+            col("gaps_ok"), col("cover_ok"))
+      }),
+
+    QuerySpec("g19_cooccur",
+      """WITH e AS (SELECT DISTINCT user_id, date_trunc('hour', ts) AS hh, event_type
+                    FROM events)
+         SELECT a.event_type AS type_a, b.event_type AS type_b,
+                count(*) AS n_cooccur
+         FROM e a JOIN e b
+           ON a.user_id = b.user_id AND a.hh = b.hh
+          AND a.event_type < b.event_type
+         GROUP BY 1, 2""",
+      (s, dir) => {
+        // r20: one shuffle on the (user, hour) group — collect_set
+        // dedupes and materializes each group's types, a < b pairs are
+        // enumerated locally (sorted array HOFs), replacing the former
+        // distinct + merge self-join (two exchanges + two sorts) with
+        // identical pairs; fan-out stays bounded by |types|² per group.
+        // r21 (advice): null user/type rows are dropped explicitly —
+        // the former self-join (and the oracle's equi-join) never
+        // matched them, so the filter pins those semantics instead of
+        // inheriting groupBy/collect_set's null-grouping behavior.
+        Tables.events(s, dir)
+          .filter(col("user_id").isNotNull && col("event_type").isNotNull)
+          .select(col("user_id"), date_trunc("hour", col("ts")).as("__hh"),
+            col("event_type"))
+          .groupBy(col("user_id"), col("__hh"))
+          .agg(sort_array(collect_set(col("event_type"))).as("__types"))
+          .select(explode(graft.operators.RelationalOps
+            .orderedPairs(col("__types"), "type_a", "type_b")).as("__p"))
+          .groupBy(col("__p.type_a").as("type_a"), col("__p.type_b").as("type_b"))
+          .agg(count(lit(1)).as("n_cooccur"))
+      }),
+
+    // ---- J-3..J-5: outer / semi / anti joins (library completeness;
+    //      the reference needs only inner, a user switching needs all) ----
+    QuerySpec("j3_outer_join",
+      """SELECT c_custkey, count(o_orderkey) AS n_orders
+         FROM customer LEFT JOIN orders ON c_custkey = o_custkey
+         GROUP BY c_custkey""",
+      (s, dir) => {
+        val c = Tables.customer(s, dir)
+        val o = Tables.orders(s, dir)
+        c.join(o, c("c_custkey") === o("o_custkey"), "left_outer")
+          .groupBy(col("c_custkey"))
+          .agg(count(col("o_orderkey")).as("n_orders"))
+      }),
+    QuerySpec("j4_semi_join",
+      """SELECT c_custkey, c_mktsegment FROM customer
+         WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""",
+      (s, dir) => {
+        val c = Tables.customer(s, dir)
+        val o = Tables.orders(s, dir)
+        c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
+          .select(col("c_custkey"), col("c_mktsegment"))
+      }),
+    QuerySpec("j5_anti_join",
+      """SELECT c_custkey, c_mktsegment FROM customer
+         WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""",
+      (s, dir) => {
+        val c = Tables.customer(s, dir)
+        val o = Tables.orders(s, dir)
+        c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
+          .select(col("c_custkey"), col("c_mktsegment"))
+      }),
+
+    // ---- J-6: banded range self-join — error events of the same user
+    //      within 10 s of each other (equi-key + range predicate, so
+    //      the shuffle stays on user_id and the band filter runs
+    //      inside each key group) ----
+    QuerySpec("j6_range_self",
+      """SELECT a.user_id AS user_id, a.event_id AS e1, b.event_id AS e2
+         FROM (SELECT user_id, event_id, ts FROM events WHERE event_type = 'error') a
+         JOIN (SELECT user_id, event_id, ts FROM events WHERE event_type = 'error') b
+           ON a.user_id = b.user_id AND a.event_id < b.event_id
+          AND abs(CAST(floor(epoch(a.ts)) AS BIGINT) - CAST(floor(epoch(b.ts)) AS BIGINT)) <= 10""",
+      (s, dir) => {
+        val e = Tables.events(s, dir).filter(col("event_type") === "error")
+          .select(col("user_id"), col("event_id"), col("ts"))
+        e.alias("a").join(e.alias("b"),
+            col("a.user_id") === col("b.user_id") &&
+              col("a.event_id") < col("b.event_id") &&
+              abs(unix_timestamp(col("a.ts")) - unix_timestamp(col("b.ts"))) <= 10)
+          .select(col("a.user_id").as("user_id"),
+            col("a.event_id").as("e1"), col("b.event_id").as("e2"))
+      }),
+
+    // ---- J-8: interval join — the BATCH equivalent of the
+    //      stream-stream interval join (VotePipeline.registrationVoteJoin,
+    //      run here through the SAME operator: withWatermark is
+    //      analyzer-eliminated on batch inputs). signup events play the
+    //      registrations topic, purchases the votes topic; each vote
+    //      matches registrations of the same user within the prior
+    //      hour. Equi-key on user + residual time band, so the shuffle
+    //      stays on the user key — no cartesian. ----
+    QuerySpec("j8_interval_join",
+      """SELECT r.user_id AS voter_id, r.event_id AS reg_event,
+              v.event_id AS vote_event, v.ts AS voting_time
+         FROM (SELECT user_id, ts, event_id FROM events WHERE event_type = 'signup') r
+         JOIN (SELECT user_id, ts, event_id FROM events WHERE event_type = 'purchase') v
+           ON r.user_id = v.user_id
+          AND v.ts >= r.ts AND v.ts <= r.ts + INTERVAL 1 HOUR""",
+      (s, dir) => {
+        val e = Tables.events(s, dir)
+        val reg = e.filter(col("event_type") === "signup")
+          .select(col("user_id").as("voter_id"), col("ts").as("reg_time"),
+            col("event_id").as("reg_event"))
+        val votes = e.filter(col("event_type") === "purchase")
+          .select(col("user_id").as("vote_voter_id"), col("ts").as("voting_time"),
+            col("event_id").as("vote_event"))
+        graft.streaming.VotePipeline.registrationVoteJoin(reg, votes, maxDelay = "1 hour")
+          .select(col("voter_id"), col("reg_event"), col("vote_event"),
+            col("voting_time"))
+      }),
+
+    // ---- J-9: bucketed co-located join — customer and orders are
+    //      written ONCE as managed tables bucketed (and sorted) into 8
+    //      buckets on the join key; the recurring join then runs with
+    //      NO exchange on either side (StorageLayoutSpec pins the plan).
+    //      Money is aggregated in exact integer cents so the oracle
+    //      hash cannot drift on double summation order. ----
+    QuerySpec("j9_bucketed_join",
+      // the bucketed tables hold byte-identical copies of customer/
+      // orders, so the oracle joins the raw parquet; cents are exact ints
+      """SELECT c_mktsegment, count(*) AS n_orders,
+              CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+         FROM customer JOIN orders ON c_custkey = o_custkey
+         GROUP BY c_mktsegment""",
+      (s, dir) => {
+        val (cust, ord) = ensureBucketedTables(s, dir)
+        s.table(cust)
+          .join(s.table(ord).hint("merge"), col("c_custkey") === col("o_custkey"))
+          .groupBy(col("c_mktsegment"))
+          .agg(count(lit(1)).as("n_orders"),
+            sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
+      }),
+
+    // ---- S-8: consumer catch-up poll as a driver query — every event
+    //      row becomes an update-mode message stamped with a monotone
+    //      batch_id on a file topic; the query re-reads the topic and
+    //      keeps each key's LATEST message (VotePipeline.latestPerKey —
+    //      the io_jdbc_roundtrip pattern applied to the topic
+    //      transport). Topic dir is tagged with the sf dir so sf0.001
+    //      warm-up can't leak into the run; materialization is memoized
+    //      per (JVM, dir) so the TIMED body is the read path only — the
+    //      topic write is transport setup, not the operator under test
+    //      (Bench.prepare materializes it before the clock starts). ----
+    QuerySpec("s8_latest_per_key",
+      // batch_id = event_id, so "latest message per key" is the max-
+      // event_id row per (user_id, event_type)
+      """SELECT event_id, user_id, event_type, value FROM (
+           SELECT event_id, user_id, event_type, value,
+                  row_number() OVER (PARTITION BY user_id, event_type
+                                     ORDER BY event_id DESC) AS rn
+           FROM events) WHERE rn = 1""",
+      (s, dir) => {
+        val topicDir = ensureFileTopic(s, dir)
+        val msgSchema = new StructType()
+          .add("event_id", LongType).add("user_id", LongType)
+          .add("event_type", StringType).add("value", DoubleType)
+        graft.streaming.VotePipeline.latestPerKey(
+          graft.streaming.VotePipeline.readFileTopic(s, topicDir),
+          msgSchema, Seq("user_id", "event_type"))
+      }),
+
+    // ---- Incremental materialized-view maintenance: the per-(user,
+    //      type) stats view is maintained by MERGING the delta's
+    //      aggregates into the pre-split snapshot (sum-of-sums /
+    //      min-of-mins), never re-reading base rows — how a 100 TB
+    //      view stays fresh per ingest batch. The oracle computes the
+    //      same view directly over all events: merged ≡ recomputed is
+    //      exactly the mergeable-partial-aggregate contract. ----
+    QuerySpec("mv_incremental",
+      // the merged view must equal the view computed directly over ALL
+      // events — the mergeable-partial-aggregate contract
+      """SELECT user_id, event_type, count(*) AS n,
+              CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents,
+              min(ts) AS first_ts, max(ts) AS last_ts,
+              round(CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+                    / count(*), 6) AS avg_cents
+         FROM events GROUP BY user_id, event_type""",
+      (s, dir) => {
+        val split = lit("2024-01-15").cast("timestamp")
+        def aggOf(df: DataFrame) = df
+          .groupBy(col("user_id"), col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            sum(round(col("value") * 100).cast("long")).as("cents"),
+            min(col("ts")).as("first_ts"), max(col("ts")).as("last_ts"))
+        val ev = Tables.events(s, dir)
+        graft.operators.RelationalOps.mergeAggSnapshot(
+            aggOf(ev.filter(col("ts") < split)),
+            aggOf(ev.filter(col("ts") >= split)),
+            Seq("user_id", "event_type"), sumCols = Seq("n", "cents"),
+            minCols = Seq("first_ts"), maxCols = Seq("last_ts"))
+          .withColumn("avg_cents",
+            round(col("cents").cast("double") / col("n"), 6))
+      }),
+
+    // ---- X-A21: incremental DISTINCT-count MV via mergeable HLL
+    //      sketches (Datasketches, hll_sketch_agg/hll_union) — the one
+    //      aggregate [[mv_incremental]]'s sum/min/max algebra cannot
+    //      maintain: COUNT(DISTINCT) is not mergeable from partials,
+    //      so a 100 TB MV keeps a SKETCH column instead and folds each
+    //      delta with hll_union (freshness costs |snapshot|+|delta|,
+    //      never a base re-scan, at a bounded error). Gate = the g8
+    //      sketch recipe: hash the exact distinct count, assert the
+    //      merged-sketch estimate lands within 3·rsd(lgK=12 ≈ 1.6%)
+    //      as an oracle-checked boolean. HLL on deterministic input is
+    //      deterministic — a red here is drift, not luck. ----
+    QuerySpec("mv_hll_distinct",
+      // sketch estimates are engine-specific; the oracle hashes the
+      // exact distinct count and asserts the merged-sketch bound (g8
+      // recipe)
+      """SELECT event_type, count(DISTINCT user_id) AS n_users,
+              true AS est_in_bound
+         FROM events GROUP BY event_type""",
+      (s, dir) => {
+        val split = lit("2024-01-15").cast("timestamp")
+        def sketchOf(df: DataFrame) = df
+          .groupBy(col("event_type"))
+          .agg(hll_sketch_agg(col("user_id"), lit(12)).as("sk"))
+        val ev = Tables.events(s, dir)
+        val merged = sketchOf(ev.filter(col("ts") < split)).withColumnRenamed("sk", "sk_snap")
+          .join(sketchOf(ev.filter(col("ts") >= split)).withColumnRenamed("sk", "sk_delta"),
+            Seq("event_type"), "full")
+          .select(col("event_type"),
+            hll_sketch_estimate(
+              when(col("sk_snap").isNull, col("sk_delta"))
+                .when(col("sk_delta").isNull, col("sk_snap"))
+                .otherwise(hll_union(col("sk_snap"), col("sk_delta")))).as("__est"))
+        val exact = ev.groupBy(col("event_type"))
+          .agg(countDistinct(col("user_id")).as("n_users"))
+        exact.join(merged, Seq("event_type"))
+          .select(col("event_type"), col("n_users"),
+            (abs(col("__est").cast("double") - col("n_users")) <=
+              col("n_users") * lit(0.05)).as("est_in_bound"))
+      }),
+
+    // ---- Time-grid resample + LOCF gap fill: each user's hourly
+    //      buckets from their first to last event, empty hours carried
+    //      forward from the last observed bucket. ----
+    QuerySpec("ts_gapfill",
+      """WITH hourly AS (
+           SELECT user_id, date_trunc('hour', ts) AS bucket_ts,
+                  count(*) AS n_events,
+                  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+           FROM events GROUP BY 1, 2),
+         bounds AS (SELECT user_id, min(bucket_ts) AS mn, max(bucket_ts) AS mx
+                    FROM hourly GROUP BY 1),
+         grid AS (SELECT user_id,
+                    unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS bucket_ts
+                  FROM bounds)
+         SELECT g.user_id, g.bucket_ts,
+                coalesce(h.n_events, 0) AS n_events, h.cents,
+                last_value(h.cents IGNORE NULLS) OVER (
+                  PARTITION BY g.user_id ORDER BY g.bucket_ts
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cents_filled
+         FROM grid g LEFT JOIN hourly h
+           ON g.user_id = h.user_id AND g.bucket_ts = h.bucket_ts""",
+      (s, dir) =>
+        graft.operators.RelationalOps.resampleGapFill(Tables.events(s, dir),
+          "user_id", "ts", round(col("value") * 100).cast("long"))),
+
+    // ---- P-9: datetime expression battery ----
+    QuerySpec("p9_datetime_exprs",
+      """SELECT event_id,
+         year(ts) AS y, month(ts) AS mo, day(ts) AS d, hour(ts) AS h,
+         ts + INTERVAL 7 DAY AS ts_plus7,
+         date_diff('day', DATE '1998-01-01', CAST(ts AS DATE)) AS days_since,
+         CAST(floor(epoch(ts)) AS BIGINT) AS epoch_sec
+         FROM events""",
+      (s, dir) => {
+        Tables.events(s, dir).select(
+          col("event_id"),
+          year(col("ts")).as("y"),
+          month(col("ts")).as("mo"),
+          dayofmonth(col("ts")).as("d"),
+          hour(col("ts")).as("h"),
+          (col("ts") + expr("INTERVAL 7 DAYS")).as("ts_plus7"),
+          datediff(col("ts").cast("date"), lit("1998-01-01").cast("date")).as("days_since"),
+          unix_timestamp(col("ts")).as("epoch_sec"))
+      }),
+
+    // ---- P-10: null-handling battery ----
+    QuerySpec("p10_null_exprs",
+      """SELECT event_id,
+         coalesce(nullif(event_type, 'error'), 'none') AS type_or_none,
+         greatest(value, 0.0) AS v_pos,
+         least(value, 0.0) AS v_neg,
+         CASE WHEN value IS NULL THEN -1.0 ELSE value END AS v_filled
+         FROM events""",
+      (s, dir) => {
+        Tables.events(s, dir).select(
+          col("event_id"),
+          coalesce(nullif(col("event_type"), lit("error")), lit("none")).as("type_or_none"),
+          greatest(col("value"), lit(0.0)).as("v_pos"),
+          least(col("value"), lit(0.0)).as("v_neg"),
+          when(col("value").isNull, -1.0).otherwise(col("value")).as("v_filled"))
+      }),
+
+    // ---- P-13: string function battery #2 (regex extract, padding,
+    //      translate, repeat/reverse, substring search, edit distance) ----
+    QuerySpec("p13_string_funcs",
+      """SELECT c_custkey,
+         regexp_extract(c_name, '[0-9]+') AS cust_digits,
+         lpad(CAST(c_custkey AS VARCHAR), 10, '0') AS key_padded,
+         translate(c_mktsegment, 'AEIOU', 'aeiou') AS seg_translated,
+         repeat('*', c_custkey % 4) AS stars,
+         reverse(c_name) AS name_rev,
+         instr(c_name, '#') AS hash_pos,
+         levenshtein(c_mktsegment, 'BUILDING') AS seg_dist
+         FROM customer""",
+      (s, dir) => {
+        Tables.customer(s, dir).select(
+          col("c_custkey"),
+          regexp_extract(col("c_name"), "[0-9]+", 0).as("cust_digits"),
+          lpad(col("c_custkey").cast("string"), 10, "0").as("key_padded"),
+          translate(col("c_mktsegment"), "AEIOU", "aeiou").as("seg_translated"),
+          repeat(lit("*"), pmod(col("c_custkey"), lit(4)).cast("int")).as("stars"),
+          reverse(col("c_name")).as("name_rev"),
+          instr(col("c_name"), "#").as("hash_pos"),
+          levenshtein(col("c_mktsegment"), lit("BUILDING")).as("seg_dist"))
+      }),
+
+    // ---- G-11: pivot — per-user event-type count matrix. Expressed as
+    //      conditional aggregation (count of when()) rather than
+    //      .pivot(): one hash aggregate, no pivot machinery, no
+    //      null-filling pass — measured 4x faster at sf0.1 ----
+    QuerySpec("g11_pivot",
+      """SELECT user_id,
+         count(*) FILTER (event_type = 'click') AS click,
+         count(*) FILTER (event_type = 'error') AS error,
+         count(*) FILTER (event_type = 'purchase') AS purchase,
+         count(*) FILTER (event_type = 'signup') AS signup,
+         count(*) FILTER (event_type = 'view') AS view
+         FROM events GROUP BY user_id""",
+      (s, dir) => {
+        val types = Seq("click", "error", "purchase", "signup", "view")
+        val aggs = types.map(t => count(when(col("event_type") === t, 1)).as(t))
+        Tables.events(s, dir).groupBy(col("user_id"))
+          .agg(aggs.head, aggs.tail: _*)
+      }),
+
+    // ---- P-11: array aggregation battery — collect_set sorted into a
+    //      deterministic array, then array ops over it ----
+    QuerySpec("p11_collect_array",
+      """SELECT event_type, len(users) AS n_users,
+         array_to_string(users[1:3], ',') AS first3,
+         users[len(users)] AS max_user
+         FROM (SELECT event_type, list_sort(list(DISTINCT user_id)) AS users
+               FROM events GROUP BY event_type)""",
+      (s, dir) => {
+        Tables.events(s, dir).groupBy(col("event_type"))
+          .agg(sort_array(collect_set(col("user_id"))).as("users"))
+          .select(col("event_type"), size(col("users")).as("n_users"),
+            // serialize to a string: array-typed result columns are not
+            // portable across result comparators
+            array_join(transform(slice(col("users"), 1, 3), _.cast("string")), ",").as("first3"),
+            element_at(col("users"), -1).as("max_user"))
+      }),
+
+    // ---- J-2: as-of join — each purchase picks up the most recent
+    //      prior error event_id for the same user (composed from
+    //      union + ignore-nulls window; no native Spark asof) ----
+    QuerySpec("j2_asof_join",
+      """WITH l AS (SELECT user_id, ts, event_id, value,
+                      CAST(NULL AS BIGINT) AS le, 1 AS src
+                    FROM events WHERE event_type = 'purchase'),
+         r AS (SELECT user_id, ts, event_id, CAST(NULL AS DOUBLE) AS value,
+                 event_id AS le, 0 AS src
+               FROM events WHERE event_type = 'error'),
+         u AS (SELECT * FROM l UNION ALL SELECT * FROM r),
+         c AS (SELECT user_id, ts, event_id, value, src,
+                 last_value(le IGNORE NULLS) OVER (
+                   PARTITION BY user_id
+                   ORDER BY ts ASC, src ASC, event_id ASC
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_err
+               FROM u)
+         SELECT user_id, ts, event_id, value, last_err FROM c WHERE src = 1""",
+      (s, dir) => {
+        val e = Tables.events(s, dir)
+        asofJoin(
+          left = e.filter(col("event_type") === "purchase")
+            .select(col("user_id"), col("ts"), col("event_id"), col("value")),
+          right = e.filter(col("event_type") === "error")
+            .select(col("user_id"), col("ts"), col("event_id")),
+          keyCol = "user_id", tsCol = "ts", valueCol = "event_id",
+          alias = "last_err", tiebreakCols = Seq("event_id"))
+      }),
+
+    // ---- G-1 under skew: salted two-stage aggregation, identical
+    //      results to the direct groupBy (oracle is the plain SQL) ----
+    QuerySpec("g1_salted_skew",
+      """SELECT event_type, round(sum(value), 4) AS total_value, count(*) AS total_votes
+         FROM events GROUP BY event_type""",
+      (s, dir) => {
+        groupedSumSalted(Tables.events(s, dir), Seq("event_type"), "value",
+          "total_value", saltSource = col("event_id"), buckets = 16)
+          .select(col("event_type"), round(col("total_value"), 4).as("total_value"),
+            col("total_value_n").as("total_votes"))
+      }),
+
+    // ---- G-10: exact interpolated percentiles per group ----
+    QuerySpec("g10_percentiles",
+      """SELECT event_type,
+         round(quantile_cont(value, 0.5), 4) AS p50,
+         round(quantile_cont(value, 0.9), 4) AS p90
+         FROM events GROUP BY event_type""",
+      (s, dir) => {
+        Tables.events(s, dir).groupBy(col("event_type"))
+          .agg(round(expr("percentile(value, 0.5)"), 4).as("p50"),
+               round(expr("percentile(value, 0.9)"), 4).as("p90"))
+      }),
+
+    // ---- Q5: local-supplier volume — six-table join chain. Small dims
+    //      (region→nation) broadcast; the lineitem fact streams through
+    //      hash joins with both date filters pushed to the scans. ----
+    QuerySpec("q5_local_supplier",
+      """SELECT n_name,
+         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+         FROM lineitem
+         JOIN orders ON l_orderkey = o_orderkey
+         JOIN customer ON o_custkey = c_custkey
+         JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+         JOIN nation ON s_nationkey = n_nationkey
+         JOIN region ON n_regionkey = r_regionkey
+         WHERE r_name = 'ASIA'
+           AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
+           AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+         GROUP BY n_name""",
+      (s, dir) => {
+        val r = Tables.region(s, dir).filter(col("r_name") === "ASIA")
+        val n = Tables.nation(s, dir)
+        val c = Tables.customer(s, dir)
+        val o = Tables.orders(s, dir)
+          .filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
+                  col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
+        val l = Tables.lineitem(s, dir)
+        val su = Tables.supplier(s, dir)
+        l.join(o, col("l_orderkey") === col("o_orderkey"))
+          .join(c, col("o_custkey") === col("c_custkey"))
+          .join(su, col("l_suppkey") === col("s_suppkey") &&
+                    col("c_nationkey") === col("s_nationkey"))
+          .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
+          .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
+          .groupBy(col("n_name"))
+          .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
+            .as("revenue"))
+      }),
+
+    // ---- G-13: typed Aggregator (Dataset custom aggregation surface)
+    //      registered as a UDAF — min/max/count/sum fused in one pass,
+    //      constant-size buffer per group ----
+    QuerySpec("g13_typed_stats",
+      """SELECT event_type,
+         round(min(value), 6) AS vmin, round(max(value), 6) AS vmax,
+         count(*) AS n, round(sum(value), 4) AS vsum
+         FROM events GROUP BY event_type""",
+      (s, dir) => {
+        val stats = udaf(graft.functions.StatsAggregator)
+        Tables.events(s, dir).groupBy(col("event_type"))
+          .agg(stats(col("value")).as("st"))
+          .select(col("event_type"),
+            round(col("st.vmin"), 6).as("vmin"),
+            round(col("st.vmax"), 6).as("vmax"),
+            col("st.n").as("n"),
+            round(col("st.sum"), 4).as("vsum"))
+      }),
+
+    // ---- G-12: approximate percentiles (Greenwald-Khanna sketch).
+    //      Engine-specific estimates -> no SQL oracle (rows-only
+    //      check); the error bound vs exact g10 is pinned in
+    //      RelationalOpsSpec. THE scale path for quantiles: the exact
+    //      percentile buffers every value per group, the sketch is
+    //      fixed-size and merges map-side. ----
+    //      r8: hash-green via the g8 pattern — the output carries the
+    //      EXACT interpolated percentiles (the proven g10 ↔
+    //      quantile_cont parity) plus booleans claiming each sketch
+    //      value landed within ±0.01 RANK of its target (generous vs
+    //      the Greenwald-Khanna ε = 1/accuracy = 0.001 guarantee, but
+    //      robust to element discreteness at small n: the sketch
+    //      returns a dataset ELEMENT while `percentile` interpolates,
+    //      so a sub-element window is degenerate when groups are a few
+    //      hundred rows). The oracle emits literal TRUE.
+    QuerySpec("g12_approx_percentiles",
+      """SELECT event_type,
+         round(quantile_cont(value, 0.5), 4) AS p50,
+         round(quantile_cont(value, 0.9), 4) AS p90,
+         true AS p50_in_bound, true AS p90_in_bound
+         FROM events GROUP BY event_type""",
+      (s, dir) => {
+        Tables.events(s, dir).groupBy(col("event_type"))
+          .agg(expr("approx_percentile(value, 0.5, 1000)").as("__a50"),
+               expr("approx_percentile(value, 0.9, 1000)").as("__a90"),
+               expr("percentile(value, 0.49)").as("__lo50"),
+               expr("percentile(value, 0.51)").as("__hi50"),
+               expr("percentile(value, 0.89)").as("__lo90"),
+               expr("percentile(value, 0.91)").as("__hi90"),
+               round(expr("percentile(value, 0.5)"), 4).as("p50"),
+               round(expr("percentile(value, 0.9)"), 4).as("p90"))
+          .select(col("event_type"), col("p50"), col("p90"),
+            (col("__a50") >= col("__lo50") && col("__a50") <= col("__hi50"))
+              .as("p50_in_bound"),
+            (col("__a90") >= col("__lo90") && col("__a90") <= col("__hi90"))
+              .as("p90_in_bound"))
+      }),
+
+    // ---- S-3: Spark-native session_window aggregation — same 6h gap
+    //      as s2 but computed by the built-in merging-window operator
+    //      (one aggregation, no analytic window pass; the operator is
+    //      also directly usable in streaming with watermark eviction).
+    //      NOTE the boundary difference vs the lag formulation: a
+    //      session_window session spans [start, last + gap), so a gap
+    //      of EXACTLY 6h splits — the oracle encodes >= rather
+    //      than >. ----
+    QuerySpec("s3_session_window",
+      """WITH g AS (
+           SELECT user_id, ts, value,
+                  lag(ts) OVER (PARTITION BY user_id
+                                ORDER BY ts ASC, event_id ASC) AS prev_ts
+           FROM events),
+         s AS (
+           SELECT user_id, ts, value,
+                  sum(CASE WHEN prev_ts IS NULL
+                            OR date_diff('second', prev_ts, ts) >= 21600
+                           THEN 1 ELSE 0 END)
+                    OVER (PARTITION BY user_id
+                          ORDER BY ts ASC) AS seq
+           FROM g)
+         SELECT user_id, min(ts) AS session_start, count(*) AS n_events,
+                round(sum(value), 4) AS total_value
+         FROM s GROUP BY user_id, seq""",
+      (s, dir) => {
+        Tables.events(s, dir)
+          .groupBy(col("user_id"), session_window(col("ts"), "6 hours").as("sw"))
+          .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("total_value"))
+          .select(col("user_id"), col("sw.start").as("session_start"),
+            col("n_events"), col("total_value"))
+      }),
+
+    // ---- S-2 extension: gap-based sessionization (6h gap), rolled up ----
+    QuerySpec("s2_sessionize",
+      """WITH g AS (
+           SELECT user_id, event_id, ts, value,
+                  lag(ts) OVER (PARTITION BY user_id
+                                ORDER BY ts ASC, event_id ASC) AS prev_ts
+           FROM events),
+         s AS (
+           SELECT user_id, event_id, ts, value,
+                  CAST(sum(CASE WHEN prev_ts IS NULL
+                            OR date_diff('second', prev_ts, ts) > 21600
+                           THEN 1 ELSE 0 END)
+                    OVER (PARTITION BY user_id
+                          ORDER BY ts ASC, event_id ASC) AS BIGINT) AS session_seq
+           FROM g)
+         SELECT user_id, session_seq, count(*) AS n_events,
+                min(ts) AS session_start, max(ts) AS session_end,
+                round(sum(value), 4) AS total_value
+         FROM s GROUP BY user_id, session_seq""",
+      (s, dir) => {
+        sessionize(Tables.events(s, dir), "user_id", "ts",
+                   Seq(col("event_id").asc), gapSec = 21600L)
+          .groupBy(col("user_id"), col("session_seq"))
+          .agg(count(lit(1)).as("n_events"),
+               min(col("ts")).as("session_start"),
+               max(col("ts")).as("session_end"),
+               round(sum(col("value")), 4).as("total_value"))
+      }),
+
+    // ---- Q14 analog: promo revenue share — conditional aggregation
+    //      over a fact×dim join, the classic one-pass share-of-revenue
+    //      shape (no second scan, no self-join; both sums ride one
+    //      aggregate) ----
+    QuerySpec("q14_promo_share",
+      """SELECT round(
+           100.0 * sum(CASE WHEN p_type = 'PROMO'
+                            THEN l_extendedprice * (1 - l_discount)
+                            ELSE 0.0 END)
+                 / sum(l_extendedprice * (1 - l_discount)), 4) AS promo_share
+         FROM lineitem JOIN part ON l_partkey = p_partkey
+         WHERE l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
+           AND l_shipdate <  TIMESTAMP '1997-10-01 00:00:00'""",
+      (s, dir) => {
+        val l = Tables.lineitem(s, dir)
+          .filter(col("l_shipdate") >= lit("1997-09-01").cast("timestamp") &&
+                  col("l_shipdate") < lit("1997-10-01").cast("timestamp"))
+        val p = Tables.part(s, dir)
+        l.join(broadcast(p), col("l_partkey") === col("p_partkey"))
+          .agg(round(
+            lit(100.0) *
+              sum(when(col("p_type") === "PROMO",
+                col("l_extendedprice") * (lit(1) - col("l_discount"))).otherwise(0.0)) /
+              sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4)
+            .as("promo_share"))
+      }),
+
+    // ---- P-16: UNPIVOT/melt — wide metrics to long (metric, val)
+    //      rows, the transpose every feature-store export needs. The
+    //      native unpivot plans as one Expand pass (like cube) — 4×
+    //      the rows, ONE scan, no join. Values pass through untouched,
+    //      so the compare is bit-exact. ----
+    QuerySpec("p16_unpivot",
+      """SELECT l_orderkey, l_linenumber, 'l_quantity' AS metric, l_quantity AS val
+         FROM lineitem
+         UNION ALL
+         SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice
+         FROM lineitem
+         UNION ALL
+         SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
+         UNION ALL
+         SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem""",
+      (s, dir) =>
+        Tables.lineitem(s, dir)
+          .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
+            col("l_extendedprice"), col("l_discount"), col("l_tax"))
+          .unpivot(
+            Array(col("l_orderkey"), col("l_linenumber")),
+            Array(col("l_quantity"), col("l_extendedprice"), col("l_discount"),
+              col("l_tax")),
+            "metric", "val")),
+
+    // ---- P-17: higher-order array-function battery over the
+    //      embedding column — transform / filter / exists / aggregate /
+    //      zip_with / array_max / array_position, all evaluated inside
+    //      the scan projection (no explode, no shuffle, codegen'd).
+    //      Elements are micro-quantized to longs FIRST so every
+    //      aggregate is an exact integer — float fold order never
+    //      enters the compare. ----
+    QuerySpec("p17_array_hof",
+      // array HOF battery: micro-quantized longs so every fold is exact
+      """WITH q AS (SELECT vec_id, len(embedding) AS n_dims,
+                      list_transform(embedding,
+                        x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
+                    FROM embeddings)
+         SELECT vec_id, n_dims,
+                len(list_filter(qv, x -> x > 0)) AS n_pos,
+                CAST(list_sum(list_transform(qv, x -> abs(x))) AS BIGINT) AS l1_micro,
+                list_max(qv) AS max_micro,
+                list_position(qv, list_max(qv)) AS argmax_pos,
+                len(list_filter(qv, x -> abs(x) > 2000000)) > 0 AS has_big,
+                CAST(list_sum(list_transform(range(1, n_dims + 1),
+                  i -> qv[i] * qv[n_dims + 1 - i])) AS BIGINT) AS dot_rev
+         FROM q""",
+      (s, dir) => {
+        val qv = transform(col("embedding"),
+          x => round(x.cast("double") * 1e6).cast("long"))
+        Tables.embeddings(s, dir).select(
+          col("vec_id"),
+          size(col("embedding")).as("n_dims"),
+          size(filter(qv, _ > 0L)).as("n_pos"),
+          aggregate(qv, lit(0L), (a, x) => a + abs(x)).as("l1_micro"),
+          array_max(qv).as("max_micro"),
+          array_position(qv, array_max(qv)).as("argmax_pos"),
+          exists(qv, x => abs(x) > lit(2000000L)).as("has_big"),
+          aggregate(zip_with(qv, reverse(qv), _ * _), lit(0L), _ + _)
+            .as("dot_rev"))
+      }),
+
+    // ---- P-18 / X-P5: Spark 4 VariantType over a schema-DRIFTING
+    //      JSON feed — the open-schema ingestion path at 100 TB: parse
+    //      ONCE into the binary variant encoding (no schema-inference
+    //      pass, no per-reader from_json schema to keep in sync, no
+    //      re-ingest when a producer adds a field), then extract typed
+    //      fields by path with try_variant_get (absent/mistyped paths
+    //      degrade to NULL, not errors — the P-15 quarantine semantics
+    //      built into the type). The feed alternates a flat payload
+    //      {v: double}, a drifted nested payload {v: {amount}}, and a
+    //      corrupt non-JSON class; extraction coalesces both shapes
+    //      and corrupt rows surface as the NULL group. The oracle
+    //      computes the same semantic result straight from the source
+    //      columns, so the variant roundtrip must be value-preserving;
+    //      sums ride in cents (io_schema_evolution precedent). ----
+    QuerySpec("p18_variant",
+      // the variant parse/extract roundtrip must be value-preserving, so
+      // the oracle computes the same semantic result straight from the
+      // source columns: corrupt rows (event_id % 3 = 2) form the NULL
+      // group with a zero sum
+      """SELECT CASE WHEN event_id % 3 = 2 THEN NULL ELSE event_type END AS t,
+              count(*) AS n,
+              CAST(coalesce(sum(CASE WHEN event_id % 3 = 2 THEN NULL
+                            ELSE CAST(round(value * 100) AS BIGINT) END), 0)
+                   AS BIGINT) AS cents
+         FROM events GROUP BY 1""",
+      (s, dir) => {
+        val payload = when(col("event_id") % 3 === 0,
+            to_json(struct(col("value").as("v"), col("event_type").as("t"))))
+          .when(col("event_id") % 3 === 1,
+            to_json(struct(struct(col("value").as("amount")).as("v"),
+              col("event_type").as("t"))))
+          .otherwise(lit("not json"))
+        Tables.events(s, dir)
+          .select(col("event_id"), try_parse_json(payload).as("var"))
+          .select(
+            coalesce(
+              try_variant_get(col("var"), "$.v", "double"),
+              try_variant_get(col("var"), "$.v.amount", "double")).as("v"),
+            try_variant_get(col("var"), "$.t", "string").as("t"))
+          .groupBy(col("t"))
+          .agg(count(lit(1)).as("n"),
+            coalesce(sum(round(col("v") * 100).cast("long")), lit(0L)).as("cents"))
+      }),
+
+    // ---- Top-values profile: the frequency companion to
+    //      prof_columns — per column, the 3 most common values with
+    //      counts and rank. Pre-grouped per column (map-side-combined
+    //      groupBy on low-cardinality values — the prof_columns
+    //      speed-up pattern) then a bounded per-column rank. ----
+    QuerySpec("prof_topvalues",
+      """WITH u AS (
+           SELECT 'o_orderstatus' AS col_name,
+                  CAST(o_orderstatus AS VARCHAR) AS val, count(*) AS n
+           FROM orders GROUP BY 2
+           UNION ALL
+           SELECT 'o_orderpriority', CAST(o_orderpriority AS VARCHAR), count(*)
+           FROM orders GROUP BY 2
+           UNION ALL
+           SELECT 'o_year', CAST(year(o_orderdate) AS VARCHAR), count(*)
+           FROM orders GROUP BY 2)
+         SELECT col_name, val, n, rnk FROM (
+           SELECT col_name, val, n,
+                  row_number() OVER (PARTITION BY col_name
+                                     ORDER BY n DESC, val ASC) AS rnk
+           FROM u)
+         WHERE rnk <= 3""",
+      (s, dir) => {
+        val o = Tables.orders(s, dir)
+        val cols = Seq(
+          "o_orderstatus" -> col("o_orderstatus").cast("string"),
+          "o_orderpriority" -> col("o_orderpriority").cast("string"),
+          "o_year" -> year(col("o_orderdate")).cast("string"))
+        val counts = cols.map { case (n, c) =>
+          o.groupBy(c.as("val")).agg(count(lit(1)).as("n"))
+            .select(lit(n).as("col_name"), col("val"), col("n"))
+        }.reduce(_ unionByName _)
+        graft.operators.RelationalOps.topKPerGroup(counts, Seq("col_name"),
+          Seq(col("n").desc, col("val").asc), 3, "rnk")
+      }),
+
+    // ---- Column profiler: the first query anyone runs on a new
+    //      100 TB table. ONE scan — each row explodes into
+    //      (col_name, canonical string) entries, then a single grouped
+    //      aggregate computes rows/nulls/distinct/min/max per column.
+    //      Canonical forms are chosen engine-portable: zero-padded
+    //      integers (so lexicographic min/max == numeric order), exact
+    //      IEEE floor for the double (no decimal-tie rounding
+    //      divergence), fixed-pattern timestamps. n_distinct is the
+    //      only non-map-side-combining term — the comment on
+    //      profileColumns names approx_count_distinct as the 100 TB
+    //      swap. ----
+    QuerySpec("prof_columns",
+      """WITH s AS (
+           SELECT 'o_orderkey' AS col_name,
+                  lpad(CAST(o_orderkey AS VARCHAR), 12, '0') AS val FROM orders
+           UNION ALL SELECT 'o_custkey',
+                  lpad(CAST(o_custkey AS VARCHAR), 12, '0') FROM orders
+           UNION ALL SELECT 'o_orderstatus', o_orderstatus FROM orders
+           UNION ALL SELECT 'o_totalprice_floor',
+                  lpad(CAST(CAST(floor(o_totalprice) AS BIGINT) AS VARCHAR), 12, '0')
+                  FROM orders
+           UNION ALL SELECT 'o_orderdate',
+                  strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') FROM orders
+           UNION ALL SELECT 'o_orderpriority', o_orderpriority FROM orders
+           UNION ALL SELECT 'o_priority_nonlow',
+                  nullif(o_orderpriority, '5-LOW') FROM orders)
+         SELECT col_name, count(*) AS n_rows,
+                count(*) - count(val) AS n_nulls,
+                count(DISTINCT val) AS n_distinct,
+                min(val) AS min_val, max(val) AS max_val
+         FROM s GROUP BY col_name""",
+      (s, dir) => {
+        val o = Tables.orders(s, dir)
+        graft.operators.RelationalOps.profileColumns(o, Seq(
+          "o_orderkey" -> lpad(col("o_orderkey").cast("string"), 12, "0"),
+          "o_custkey" -> lpad(col("o_custkey").cast("string"), 12, "0"),
+          "o_orderstatus" -> col("o_orderstatus"),
+          "o_totalprice_floor" ->
+            lpad(floor(col("o_totalprice")).cast("long").cast("string"), 12, "0"),
+          "o_orderdate" -> date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss"),
+          "o_orderpriority" -> col("o_orderpriority"),
+          "o_priority_nonlow" -> expr("nullif(o_orderpriority, '5-LOW')")))
+      }),
+
+    // ---- Correlated-subquery battery: the SQL surface a warehouse
+    //      user actually writes. Catalyst DECORRELATES each of these
+    //      into joins (RewriteCorrelatedScalarSubquery /
+    //      RewritePredicateSubquery) — the plan must contain no
+    //      nested-loop re-execution per outer row, which is the
+    //      difference between O(n) and O(n²) at 100 TB. Plan shape
+    //      pinned in PlanShapeSpec (semi/anti/agg joins, no
+    //      per-row subquery nodes). ----
+
+    // q4 analog: EXISTS — orders in a quarter having at least one
+    // returned lineitem. Decorrelates to a LEFT SEMI join on
+    // l_orderkey; the lineitem side prunes to (l_orderkey) after the
+    // returnflag filter is pushed to the scan.
+    QuerySpec("q4_priority_exists",
+      """SELECT o_orderpriority, count(*) AS order_count
+         FROM orders
+         WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
+           AND o_orderdate <  TIMESTAMP '1997-04-01 00:00:00'
+           AND EXISTS (SELECT 1 FROM lineitem
+                       WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
+         GROUP BY o_orderpriority""",
+      (s, dir) => {
+        Tables.orders(s, dir).createOrReplaceTempView("q4_orders")
+        Tables.lineitem(s, dir).createOrReplaceTempView("q4_lineitem")
+        s.sql(
+          """SELECT o_orderpriority, count(*) AS order_count
+             FROM q4_orders
+             WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
+               AND o_orderdate <  TIMESTAMP '1997-04-01 00:00:00'
+               AND EXISTS (SELECT 1 FROM q4_lineitem
+                           WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
+             GROUP BY o_orderpriority""")
+      }),
+
+    // q17 analog: correlated SCALAR subquery — lineitems of one brand
+    // below half their part's average quantity. Decorrelates to an
+    // aggregate-then-join: ONE avg-per-partkey pass, not one avg per
+    // outer row. The threshold is exact cross-engine because
+    // l_quantity is integral (sum exact in double at any order).
+    QuerySpec("q17_small_qty",
+      """SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
+         FROM lineitem, part
+         WHERE p_partkey = l_partkey
+           AND p_brand = 'Brand#23'
+           AND l_quantity < (SELECT 0.5 * avg(l2.l_quantity)
+                             FROM lineitem l2
+                             WHERE l2.l_partkey = p_partkey)""",
+      (s, dir) => {
+        Tables.lineitem(s, dir).createOrReplaceTempView("q17_lineitem")
+        Tables.part(s, dir).createOrReplaceTempView("q17_part")
+        s.sql(
+          """SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
+             FROM q17_lineitem, q17_part
+             WHERE p_partkey = l_partkey
+               AND p_brand = 'Brand#23'
+               AND l_quantity < (SELECT 0.5 * avg(l2.l_quantity)
+                                 FROM q17_lineitem l2
+                                 WHERE l2.l_partkey = p_partkey)""")
+      }),
+
+    // q22 analog: uncorrelated scalar threshold + NOT EXISTS —
+    // above-average-balance customers with no recent orders. The
+    // scalar avg becomes a broadcast one-row join; NOT EXISTS becomes
+    // a LEFT ANTI join against the date-filtered orders.
+    QuerySpec("q22_idle_rich",
+      """SELECT c_mktsegment AS segment, count(*) AS n_cust,
+                round(sum(c_acctbal), 2) AS total_bal
+         FROM customer
+         WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer
+                            WHERE c_acctbal > 0)
+           AND NOT EXISTS (SELECT 1 FROM orders
+                           WHERE o_custkey = c_custkey
+                             AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
+         GROUP BY c_mktsegment""",
+      (s, dir) => {
+        Tables.customer(s, dir).createOrReplaceTempView("q22_customer")
+        Tables.orders(s, dir).createOrReplaceTempView("q22_orders")
+        s.sql(
+          """SELECT c_mktsegment AS segment, count(*) AS n_cust,
+                    round(sum(c_acctbal), 2) AS total_bal
+             FROM q22_customer
+             WHERE c_acctbal > (SELECT avg(c_acctbal) FROM q22_customer
+                                WHERE c_acctbal > 0)
+               AND NOT EXISTS (SELECT 1 FROM q22_orders
+                               WHERE o_custkey = c_custkey
+                                 AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
+             GROUP BY c_mktsegment""")
+      })
+  )
+}

@@ -559,4 +559,17 @@ class PlanShapeSpec extends SparkTestBase {
     assert(!plan.contains("Join"),
       s"exact-match election must not join or emit pairs:\n$plan")
   }
+
+  test("Explain's lazy variants return the same rows as their registered queries") {
+    // pins each variant's explicit arguments (PageRank's (3, 85), the
+    // n-gram cap's (0.5, 25, 3), RAKE's top-3 and stopwords) against
+    // the eager operators' defaults the queries rely on
+    Explain.lazyVariants.toSeq.sortBy(_._1).foreach { case (name, variant) =>
+      val want = SparkEntry.queries(name)(spark, sfDir).collect().map(_.toString).sorted
+      val got = variant(spark, sfDir).collect().map(_.toString).sorted
+      spark.catalog.clearCache()
+      assert(want.nonEmpty, s"$name returned no rows at $sfDir")
+      assert(got.toSeq === want.toSeq, s"$name: lazy variant rows differ")
+    }
+  }
 }
