@@ -25,6 +25,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, Flo
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
+import TxnLog.uuid12
+
 /** A DataSource V2 [[TableCatalog]] over [[TxnLog]] tables — the
   * packaging that makes the whole transaction layer SQL-NATIVE.
   * Register once:
@@ -134,9 +136,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   private def isTable(root: String): Boolean =
     java.nio.file.Files.isDirectory(java.nio.file.Paths.get(root, "_log"))
-
-  private def uuid12: String =
-    java.util.UUID.randomUUID().toString.replace("-", "").take(12)
 
   /** [[org.apache.spark.sql.connector.catalog.FunctionCatalog]]: the
     * `bucket` transform as a loadable V2 function — what Spark's
@@ -1025,12 +1024,8 @@ private[sources] object GraftTable {
     // holds one bucket and its derived stat collapses to a point
     val phys = TxnLog.clusterByPartitioning(phys0, pfields,
       s.sessionState.conf.numShufflePartitions)
-    val txnId = s"sql-write-a${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-    val statCols = statPaths(phys.schema)
-    val buckets = pfields.collect { case TxnLog.BucketField(n, c) => (n, c) }
-    val (files, multi) =
-      if (statCols.isEmpty && buckets.isEmpty) (TxnLog.stage(phys, root, txnId), Nil)
-      else TxnLog.stageWithStatsFor(phys, root, txnId, statCols, buckets)
+    val txnId = s"sql-write-a$uuid12"
+    val (files, multi) = stageFiles(phys, root, txnId, pfields)
     // guarded appends (identity allocation): the commit must observe
     // the readVersion the high-water mark was read at and CONFLICT
     // with any concurrent append — the staged files are deleted so a
@@ -1100,12 +1095,8 @@ private[sources] object GraftTable {
       .filter(f => phys0.columns.contains(f.col))
     val phys = TxnLog.clusterByPartitioning(phys0, pfields,
       s.sessionState.conf.numShufflePartitions)
-    val txnId = s"sql-replace-a${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-    val statCols = statPaths(phys.schema)
-    val buckets = pfields.collect { case TxnLog.BucketField(n, c) => (n, c) }
-    val (files, multi) =
-      if (statCols.isEmpty && buckets.isEmpty) (TxnLog.stage(phys, root, txnId), Nil)
-      else TxnLog.stageWithStatsFor(phys, root, txnId, statCols, buckets)
+    val txnId = s"sql-replace-a$uuid12"
+    val (files, multi) = stageFiles(phys, root, txnId, pfields)
     if (files.isEmpty && dead.isEmpty && dvFiles.isEmpty) return // no-op
     TxnLog.commit(root, "replace-where",
       added = files, removed = dead,
@@ -1153,6 +1144,42 @@ private[sources] object GraftTable {
          org.apache.spark.sql.types.StringType | org.apache.spark.sql.types.FloatType |
          org.apache.spark.sql.types.DoubleType => true
     case _ => false
+  }
+
+  /** The ONE stat decision for a staged table file: every
+    * [[statPaths]] column of `schema`, plus a derived `bucket(N;c)`
+    * stat per bucket transform of `partitioning` whose column the
+    * schema carries — so inserted, streamed and DML post-image files
+    * all keep bucket pruning. (Layout rewrites and the keyed merge
+    * paths in [[TxnLog]] record their own sets.)
+    */
+  private def stagedStats(schema: StructType, partitioning: Seq[TxnLog.PartField])
+    : (Seq[String], Seq[(Int, String)]) =
+    (statPaths(schema), partitioning.collect {
+      case TxnLog.BucketField(n, c) if schema.fieldNames.contains(c) => (n, c)
+    })
+
+  /** Stage `df` under `data/<dir>` with its [[stagedStats]], aligned
+    * with the returned files (Nil when there is nothing to record).
+    */
+  private[sources] def stageFiles(df: DataFrame, root: String, dir: String,
+                                  partitioning: Seq[TxnLog.PartField])
+    : (Seq[String], Seq[Map[String, TxnLog.FileStat]]) = {
+    val (cols, buckets) = stagedStats(df.schema, partitioning)
+    if (cols.isEmpty && buckets.isEmpty) (TxnLog.stage(df, root, dir), Nil)
+    else TxnLog.stageWithStatsFor(df, root, dir, cols, buckets)
+  }
+
+  /** [[stagedStats]] over `files` that executors already wrote under
+    * `data/<dir>` with `schema`, aligned with `files`.
+    */
+  private[sources] def statsForWritten(s: SparkSession, root: String, dir: String,
+                                       schema: StructType, files: Seq[String],
+                                       partitioning: Seq[TxnLog.PartField])
+    : Seq[Map[String, TxnLog.FileStat]] = {
+    val (cols, buckets) = stagedStats(schema, partitioning)
+    if (files.isEmpty || (cols.isEmpty && buckets.isEmpty)) Nil
+    else TxnLog.statsForStaged(s, root, dir, cols, files, buckets)
   }
 
   /** The stat-column PATHS a write collects: every statable top-level
@@ -1272,14 +1299,32 @@ class GraftTable(val root: String, version: Long, timeTraveled: Boolean)
   }
 
   /** SQL `UPDATE` / `MERGE INTO` (and rewrite-path DELETE) — the
-    * group-based copy-on-write framework, [[GraftRowLevelOperation]].
-    * Metadata-only DELETEs still take [[deleteWhere]] (Spark's
-    * metadata-delete optimization asks that first).
+    * delta write, [[GraftDeltaOperation]]. Metadata-only DELETEs still
+    * take [[deleteWhere]] (Spark's metadata-delete optimization asks
+    * that first). The write path is picked per session
+    * (`SET spark.graft.dml.mode = cow | mor`):
+    *
+    *  - `cow` (default): the delta write computes exact per-row kill
+    *    bitmaps + change files, then a synchronous finalize step
+    *    rewrites the touched files' SURVIVORS into the same commit —
+    *    the table state ends fully copy-on-write (no residual DVs),
+    *    while the bitmaps ride the commit as metadata so `t.feed`
+    *    serves EXACT `update_preimage`/`update_postimage`/`delete`
+    *    rows (O(changed rows), never whole post-image files). Costs
+    *    one extra read of the touched files.
+    *  - `mor`: deletion vectors + insert files, no rewrite — write
+    *    amplification O(changed rows); reads pay the DV filter until
+    *    `optimizeCompactDeletes`.
     */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
     : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    GraftRowLevelOperation.builder(root, schema, info)
+    () => {
+      val mode = spark.conf.get("spark.graft.dml.mode", "cow")
+      require(mode == "cow" || mode == "mor",
+        s"spark.graft.dml.mode must be cow or mor, got $mode")
+      new GraftDeltaOperation(root, schema, info.command(), finalizeCow = mode == "cow")
+    }
 
   // ---- DELETE FROM / TRUNCATE ----
 
@@ -1294,8 +1339,7 @@ class GraftTable(val root: String, version: Long, timeTraveled: Boolean)
   override def deleteWhere(predicates: Array[V2Predicate]): Unit = {
     val cond = predicates.toSeq.flatMap(GraftFilters.predicateToColumn)
       .reduceOption(_ && _).getOrElse(lit(true))
-    TxnLog.deleteWhere(spark, root, cond,
-      txnId = s"sql-delete-a${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}")
+    TxnLog.deleteWhere(spark, root, cond, txnId = s"sql-delete-a$uuid12")
     ()
   }
 
@@ -1307,7 +1351,7 @@ class GraftTable(val root: String, version: Long, timeTraveled: Boolean)
     val live = TxnLog.snapshotFiles(root, readV)
     if (live.nonEmpty)
       TxnLog.commit(root, "truncate", Nil, removed = live, readVersion = readV,
-        txnId = s"sql-truncate-a${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}")
+        txnId = s"sql-truncate-a$uuid12")
     true
   }
 }
@@ -1501,8 +1545,7 @@ private class StagedGraftTable(root: String, stagedSchema: StructType,
   policyProps.foreach { case (k, v) => TxnLog.validateProperty(k, v) }
 
   private def spark: SparkSession = SparkSession.active
-  private val txnId =
-    s"sql-ctas-a${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
+  private val txnId = s"sql-ctas-a$uuid12"
   @volatile private var staged
     : Option[(Seq[String], Seq[Map[String, TxnLog.FileStat]], StructType)] = None
 
@@ -1533,13 +1576,7 @@ private class StagedGraftTable(root: String, stagedSchema: StructType,
                 .filter(f => phys0.columns.contains(f.col))
               val phys = TxnLog.clusterByPartitioning(phys0, pfields,
                 data.sparkSession.sessionState.conf.numShufflePartitions)
-              val statCols = GraftTable.statPaths(phys.schema)
-              val buckets = pfields.collect {
-                case TxnLog.BucketField(n, c) => (n, c) }
-              val (files, multi) =
-                if (statCols.isEmpty && buckets.isEmpty)
-                  (TxnLog.stage(phys, root, txnId), Nil)
-                else TxnLog.stageWithStatsFor(phys, root, txnId, statCols, buckets)
+              val (files, multi) = GraftTable.stageFiles(phys, root, txnId, pfields)
               staged = Some((files, multi, phys.schema))
             }
           }
@@ -1741,7 +1778,7 @@ private class GraftUpsertWriteBuilder(root: String, info: LogicalWriteInfo,
 private[sources] class GraftScanBuilder(
     spark: SparkSession, root: String, version: Long,
     logicalSchema: StructType, options: CaseInsensitiveStringMap,
-    onPlan: Option[(Seq[String], Long) => Unit] = None)
+    onPlan: Option[Long => Unit] = None)
   extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
@@ -1890,7 +1927,7 @@ private class GraftScan(spark: SparkSession, root: String, version: Long,
                         fullSchema: StructType, required: StructType,
                         pushed: Array[Filter],
                         options: CaseInsensitiveStringMap,
-                        onPlan: Option[(Seq[String], Long) => Unit] = None)
+                        onPlan: Option[Long => Unit] = None)
   extends Scan with Batch with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
@@ -1949,7 +1986,7 @@ private class GraftScan(spark: SparkSession, root: String, version: Long,
   /** The post-prune live set: files whose typed stats / blooms cannot
     * rule the pushed filters out. Attribute refs are built in
     * PHYSICAL names, matching the stat keys. `@volatile var`: runtime
-    * group filtering ([[filter]]) narrows it after static planning.
+    * file pruning ([[filter]]) narrows it after static planning.
     */
   @volatile private var kept: Seq[(String, TxnLog.FileMeta)] = {
     val exprs = pushed.toSeq.flatMap(GraftFilters.toCatalyst(_, fullSchema, renames))
@@ -1960,29 +1997,18 @@ private class GraftScan(spark: SparkSession, root: String, version: Long,
     }
   }
 
-  /** RUNTIME group filtering: a row-level operation's rewrite scope
-    * narrows from "files the stats admit" to "files that actually
-    * hold matches" — Spark runs the matched-`_file` subquery and
-    * hands the result here as an IN/= predicate before the rewrite
-    * plans its partitions. At 100 TB this is the difference between
-    * rewriting every stats-admissible file and only the touched ones
-    * (and the commit's `removed` set shrinks with it). Unrecognized
-    * predicate shapes narrow nothing — sound.
-    */
   override def filterAttributes(): Array[NamedReference] =
-    // Row-level operation scans (onPlan set) advertise `_file`: their
-    // relations carry it in their output, so Spark's matched-group
-    // subquery resolves. Plain query scans advertise their PRUNABLE
-    // data columns instead — DYNAMIC FILE PRUNING: Spark's
-    // PartitionPruning rule then plants a DynamicPruningSubquery on a
-    // fact ⋈ filtered-dim join key, and [[filter]] narrows the fact
-    // files through the log's stats/blooms at RUNTIME (the Delta DFP
-    // recipe). Only read-schema columns some kept file can actually
-    // prune on (range stat, bucket stat, or bloom) are advertised —
-    // a filter on anything else couldn't drop a file anyway.
-    if (onPlan.isDefined)
-      Array(org.apache.spark.sql.connector.expressions.Expressions.column(
-        GraftTable.FileMetaCol))
+    // Query scans advertise their PRUNABLE data columns — DYNAMIC FILE
+    // PRUNING: Spark's PartitionPruning rule then plants a
+    // DynamicPruningSubquery on a fact ⋈ filtered-dim join key, and
+    // [[filter]] narrows the fact files through the log's
+    // stats/blooms at RUNTIME (the Delta DFP recipe). Only read-schema
+    // columns some kept file can actually prune on (range stat,
+    // bucket stat, or bloom) are advertised — a filter on anything
+    // else couldn't drop a file anyway. Row-level operation scans
+    // (onPlan set) advertise none: the delta write already touches
+    // only the rows that match.
+    if (onPlan.isDefined) Array.empty
     else if (!spark.conf.get("spark.graft.runtimeFilePruning.enabled", "true")
         .toBoolean) Array.empty
     else {
@@ -2001,14 +2027,11 @@ private class GraftScan(spark: SparkSession, root: String, version: Long,
     }
 
   override def filter(predicates: Array[V2Predicate]): Unit = {
-    val allowed = predicates.flatMap(GraftFilters.fileSet).reduceOption(_ & _)
-    allowed.foreach(set => kept = kept.filter { case (f, _) => set(f) })
     // data-column runtime filters (DFP): translate the materialized
     // subquery's IN/= predicate and re-prune through the SAME
     // stats/bloom admission the static push-down uses — unrecognized
     // shapes narrow nothing (sound)
     val exprs = predicates.iterator
-      .filter(p => GraftFilters.fileSet(p).isEmpty)
       .flatMap(GraftFilters.v2ToCatalyst(_, fullSchema, renames))
       .toSeq
     if (exprs.nonEmpty) {
@@ -2078,9 +2101,9 @@ private class GraftScan(spark: SparkSession, root: String, version: Long,
     }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // re-planned after [[filter]] narrows `kept`; the LAST capture —
-    // the set the rewrite actually read — is what the commit removes
-    onPlan.foreach(_(kept.map(_._1), pinnedV))
+    // a row-level operation captures the snapshot version it read:
+    // its commit's readVersion
+    onPlan.foreach(_(pinnedV))
     def toFile(f: String, m: TxnLog.FileMeta): GraftFilePartition = {
       val len =
         if (m.size >= 0L) m.size
@@ -2588,34 +2611,6 @@ private[sources] object GraftFilters {
         for (l <- sub(kids(0)); r <- sub(kids(1))) yield ce.Or(l, r)
       case "IS_NULL" if kids.length == 1     => attr(kids(0)).map(ce.IsNull)
       case "IS_NOT_NULL" if kids.length == 1 => attr(kids(0)).map(ce.IsNotNull)
-      case _ => None
-    }
-  }
-
-  /** The set of `_file` values a runtime-group-filter predicate
-    * admits (`_file IN (...)` / `_file = ...`), or None when the
-    * shape isn't recognized (no narrowing — sound).
-    */
-  def fileSet(p: V2Predicate): Option[Set[String]] = {
-    def isFileRef(e: org.apache.spark.sql.connector.expressions.Expression): Boolean =
-      e match {
-        case r: NamedReference =>
-          r.fieldNames.length == 1 && r.fieldNames()(0) == GraftTable.FileMetaCol
-        case _ => false
-      }
-    def str(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-      e match {
-        case l: V2Literal[_] if l.dataType == StringType && l.value != null =>
-          Some(l.value.toString)
-        case _ => None
-      }
-    val kids = p.children()
-    p.name() match {
-      case "IN" if kids.nonEmpty && isFileRef(kids.head) =>
-        val vs = kids.tail.map(str)
-        if (vs.forall(_.isDefined)) Some(vs.flatten.toSet) else None
-      case "=" if kids.length == 2 && isFileRef(kids(0)) => str(kids(1)).map(Set(_))
-      case "=" if kids.length == 2 && isFileRef(kids(1)) => str(kids(0)).map(Set(_))
       case _ => None
     }
   }

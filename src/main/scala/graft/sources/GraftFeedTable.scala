@@ -51,8 +51,9 @@ private[sources] object GraftFeedTable {
     * a MERGE's adds report `insert` and its kills `delete`
     * (matched/not-matched is decided per row at WRITE time — Delta's
     * CDC files — which a metadata-only feed cannot recover), and
-    * legacy `cow-group` rewrites report their whole post-image files
-    * as adds (the standing `changes` contract).
+    * whole-file rewrites with no kill bitmaps (`INSERT OVERWRITE`,
+    * raw [[TxnLog]] rewrites, the retired group-rewrite mode) report their
+    * whole post-image files as adds (the standing `changes` contract).
     */
   def changeTypeOf(action: String, killed: Boolean): String = action match {
     case "update" | "mor-update" =>

@@ -8,6 +8,8 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import TxnLog.uuid12
+
 /** SQL maintenance verbs for [[TxnLog]] tables — Spark 4's
   * [[org.apache.spark.sql.connector.catalog.ProcedureCatalog]] wired
   * to the log's programmatic maintenance API, so a table owner living
@@ -66,9 +68,6 @@ private[sources] object GraftProcedures {
       case c                => toPhysical(c)
     }
   }
-
-  private def uuid12: String =
-    java.util.UUID.randomUUID().toString.replace("-", "").take(12)
 
   /** The materialized view's exactly-once consumer id: derived from
     * the RESOLVED target root's canonical path (hashed — a raw path

@@ -6,140 +6,85 @@ import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, WriterCommitMessage}
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-/** SQL `UPDATE` and `MERGE INTO` (and rewrite-path `DELETE`) over
-  * [[TxnLog]] tables — Spark's group-based row-level operation
-  * framework (the public Iceberg copy-on-write recipe) wired to the
-  * log's transactional commit:
-  *
-  *  1. Spark asks the operation for a SCAN of the candidate rows.
-  *     That scan is a [[GraftScan]], so the command's ON/WHERE
-  *     condition prunes FILES against the log's typed stats and
-  *     blooms first — the "groups" that get rewritten are exactly
-  *     the files the predicate could touch, and the scan CAPTURES
-  *     that file list plus the snapshot version it resolved.
-  *  2. Spark computes the replacement rows (updated + carried-over +
-  *     merge-inserted) and hands them to the operation's WRITE — a
-  *     real distributed [[BatchWrite]]: each task writes a parquet
-  *     file into the transaction's staging directory through Spark's
-  *     own `OutputWriterFactory` closure; only (path, rowCount)
-  *     commit messages reach the driver.
-  *  3. `commit` stages typed per-file stats over the written files
-  *     and publishes ONE log record: `added` = the new files,
-  *     `removed` = the captured scan set, `readVersion` = the
-  *     captured snapshot — so the standard conflict matrix rejects a
-  *     lost update (a concurrent rewrite/DV of any victim aborts
-  *     this commit), and MERGE additionally sets
-  *     `failOnConcurrentAppend` (read-set protection: a concurrent
-  *     append may hold keys this merge decided to insert).
-  *
-  * Deletion vectors compose for free: the scan's readers already
-  * drop DV'd rows, so a rewrite COMPACTS prior deletes into the new
-  * files, and vectors on removed files die with them.
-  *
-  * 100 TB shape: rewrite scope = post-prune, post-RUNTIME-filter
-  * file set (files that actually hold matches — [[GraftScan.filter]]),
-  * writes are executor-side and stats-collected in one distributed
-  * pass; the driver sees file names and bitmap-scale metadata only.
-  *
-  * Since r18 this group-based single-pass rewrite is the
-  * `spark.graft.dml.mode=cow-group` variant: the DEFAULT `cow` mode
-  * runs [[GraftDeltaOperation]] with a synchronous finalize (exact
-  * per-row kill bitmaps for the change feed + survivor rewrite in
-  * the same commit), and `mor` writes deletion vectors only. See
-  * [[GraftRowLevelOperation.builder]] for the trade-off table.
-  */
-private[sources] class GraftRowLevelOperation(root: String,
-                                              tableSchema: StructType,
-                                              cmd: RowLevelOperation.Command)
-  extends RowLevelOperation {
-
-  /** (files the scan planned, snapshot version it resolved) — set on
-    * the driver during scan planning, read at write commit.
-    */
-  @volatile private var scanned: Option[(Seq[String], Long)] = None
-
-  override def command(): RowLevelOperation.Command = cmd
-
-  override def description(): String = s"GraftRowLevel($cmd, root=$root)"
-
-  /** Require the `_file` metadata column. Group-based rewrites don't
-    * strictly need it (the replaced file set is captured at scan
-    * planning) — but Spark's ReplaceData exec only applies its
-    * data-row projection through the metadata-carrying task: with no
-    * metadata attribute the raw query rows (operation column
-    * included) would reach the writer. Requiring `_file` keeps us on
-    * the same projection path every production connector exercises,
-    * at the cost of one repeated string per row in the rewrite scan.
-    */
-  override def requiredMetadataAttributes()
-    : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions.column(
-      GraftTable.FileMetaCol))
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(SparkSession.active, root, Long.MaxValue, tableSchema,
-      options, onPlan = Some((fs, v) => scanned = Some((fs, v))))
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder {
-      override def build(): Write = new Write {
-        override def description(): String = s"GraftRowLevelWrite($cmd)"
-        override def toBatch: BatchWrite =
-          new GraftBatchWrite(root, info.schema(),
-            action = cmd.toString.toLowerCase(java.util.Locale.ROOT),
-            () => scanned,
-            failOnConcurrentAppend = cmd == RowLevelOperation.Command.MERGE)
-      }
-    }
-}
-
-private object GraftRowLevelOperation {
-  /** DML write-path selection, per session
-    * (`SET spark.graft.dml.mode = cow | mor | cow-group`):
-    *
-    *  - `cow` (default): the delta write computes exact per-row kill
-    *    bitmaps + change files, then a synchronous finalize step
-    *    rewrites the touched files' SURVIVORS into the same commit —
-    *    the table state ends fully copy-on-write (no residual DVs),
-    *    while the bitmaps ride the commit as metadata so `t.feed`
-    *    serves EXACT `update_preimage`/`update_postimage`/`delete`
-    *    rows for COW DML (O(changed rows), never whole post-image
-    *    files). Costs one extra read of the touched files.
-    *  - `mor`: deletion vectors + insert files, no rewrite — write
-    *    amplification O(changed rows); reads pay the DV filter until
-    *    `optimizeCompactDeletes`.
-    *  - `cow-group`: the single-pass group-based rewrite (Spark's
-    *    ReplaceData framework) — reads touched files once and writes
-    *    their full replacement; for near-full-file UPDATEs this is
-    *    the cheapest write path, but the feed can only report its
-    *    post-image files wholesale (conservative CDC).
-    */
-  def builder(root: String, tableSchema: StructType,
-              info: RowLevelOperationInfo): RowLevelOperationBuilder =
-    new RowLevelOperationBuilder {
-      override def build(): RowLevelOperation = {
-        val mode = SparkSession.active.conf.get("spark.graft.dml.mode", "cow")
-        require(mode == "cow" || mode == "mor" || mode == "cow-group",
-          s"spark.graft.dml.mode must be cow, mor or cow-group, got $mode")
-        if (mode == "cow-group")
-          new GraftRowLevelOperation(root, tableSchema, info.command())
-        else new GraftDeltaOperation(root, tableSchema, info.command(),
-          finalizeCow = mode == "cow")
-      }
-    }
-}
-
 /** One written staging file. */
 private case class GraftFileMessage(path: String, rows: Long)
   extends WriterCommitMessage
+
+/** Spark's own parquet `OutputWriterFactory` for a table write's
+  * PHYSICAL schema, plus the Hadoop conf its writers need — prepared
+  * once on the driver and shipped to every task of a SQL row-level or
+  * streaming write, so rows, stats and parquet bytes never pass the
+  * driver.
+  */
+private class StagedParquet(schema: StructType, owf: OutputWriterFactory,
+                            conf: SerializableConfiguration) extends Serializable {
+
+  /** The writer of one staged file. Paths are per (partition, task):
+    * a retried or speculative attempt can never clobber another
+    * attempt's file.
+    */
+  def open(path: String, partitionId: Int, taskId: Long): StagedFileWriter =
+    new StagedFileWriter(path, partitionId, taskId)
+
+  /** Opened LAZILY on the first row, so a task with no rows — a
+    * delete-only delta task, an empty epoch partition — writes no
+    * file; an aborted attempt deletes what it wrote.
+    */
+  class StagedFileWriter(path: String, partitionId: Int, taskId: Long)
+    extends DataWriter[InternalRow] {
+    private var writer: OutputWriter = _
+    private var n = 0L
+
+    override def write(row: InternalRow): Unit = {
+      if (writer == null) {
+        val attempt = new TaskAttemptID(
+          new TaskID(new JobID("graft", 0), TaskType.MAP, partitionId), taskId.toInt)
+        writer = owf.newInstance(path, schema,
+          new TaskAttemptContextImpl(conf.value, attempt))
+      }
+      writer.write(row); n += 1
+    }
+
+    override def commit(): GraftFileMessage = {
+      if (writer != null) writer.close()
+      GraftFileMessage(path, n)
+    }
+
+    override def abort(): Unit = {
+      if (writer != null) writer.close()
+      Files.deleteIfExists(Paths.get(path))
+      ()
+    }
+
+    override def close(): Unit = ()
+  }
+}
+
+private object StagedParquet {
+  /** Staged files carry PHYSICAL names (all generations of a renamed
+    * table store the same column name); rows need no change — only
+    * the writer schema's field names differ.
+    */
+  def physicalSchema(root: String, logical: StructType): StructType = {
+    val renames = TxnLog.columnMapping(root)
+    StructType(logical.fields.map(f =>
+      f.copy(name = renames.getOrElse(f.name, f.name))))
+  }
+
+  def apply(spark: SparkSession, physSchema: StructType): StagedParquet = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val owf = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, physSchema)
+    new StagedParquet(physSchema, owf, new SerializableConfiguration(job.getConfiguration))
+  }
+}
 
 /** A delta task's result: files written (inserts) plus per-file
   * deleted-row bitmap words (sparse: only words with set bits). The
@@ -149,11 +94,15 @@ private case class GraftDeltaMessage(files: Seq[(String, Long)],
                                      deletes: Map[String, Array[Long]])
   extends WriterCommitMessage
 
-/** MERGE-ON-READ row-level operations ([[SupportsDelta]]): DELETE /
-  * UPDATE / MERGE write deletion-vector bits and NEW rows instead of
-  * rewriting the touched files — the Iceberg position-delete /
-  * Delta DV recipe through Spark's delta-write framework:
+/** SQL `UPDATE` / `MERGE INTO` (and rewrite-path `DELETE`) over
+  * [[TxnLog]] tables — the one row-level operation, through Spark's
+  * delta-write framework ([[SupportsDelta]], the Iceberg
+  * position-delete / Delta DV recipe):
   *
+  *  - the scan is a [[GraftScan]], so the command's ON/WHERE
+  *    condition prunes FILES against the log's typed stats and
+  *    blooms first, and the scan CAPTURES the snapshot version it
+  *    resolved — the commit's `readVersion`;
   *  - the row ID is `(_file, _pos)` — the coordinates the scan's
   *    readers already materialize and the DV format already
   *    addresses;
@@ -163,25 +112,31 @@ private case class GraftDeltaMessage(files: Seq[(String, Long)],
   *  - each task accumulates per-file bitmaps locally (a BitSet per
   *    touched file) and ships O(touched-rows/64) words; the driver
   *    ORs them and publishes ONE commit: `added` = insert files,
-  *    `dvFiles`/`dvs` = the vectors, nothing removed.
+  *    `dvFiles`/`dvs` = the vectors. MERGE additionally sets
+  *    `failOnConcurrentAppend` (read-set protection: a concurrent
+  *    append may hold keys this merge decided to insert).
   *
-  * At 100 TB this is the difference between a MERGE that rewrites
-  * every stats-admissible file (copy-on-write) and one whose write
-  * amplification is O(changed rows): a 0.1%-selectivity MERGE over a
-  * 1M-file table writes KB of bitmap per touched file instead of
-  * re-materializing each. Reads pay the DV filter until
-  * `optimizeCompactDeletes` folds dense vectors back in — the
-  * standard MOR maintenance contract. Mode selection is per session:
-  * `SET spark.graft.dml.mode=mor` (default `cow`,
-  * [[GraftRowLevelOperation]]).
+  * `finalizeCow` (the default `cow` mode) then rewrites the touched
+  * files' SURVIVORS into that same commit and removes the touched
+  * files: the table ends pure copy-on-write, while the bitmaps ride
+  * the commit so `t.feed` serves exact pre-images. Without it (`mor`)
+  * write amplification is O(changed rows): a 0.1%-selectivity MERGE
+  * over a 1M-file table writes KB of bitmap per touched file instead
+  * of re-materializing each, and reads pay the DV filter until
+  * `optimizeCompactDeletes` folds dense vectors back in — the standard
+  * MOR maintenance contract. Mode selection is per session, in
+  * [[GraftTable.newRowLevelOperationBuilder]].
   */
 private[sources] class GraftDeltaOperation(root: String,
                                            tableSchema: StructType,
                                            cmd: RowLevelOperation.Command,
-                                           finalizeCow: Boolean = false)
+                                           finalizeCow: Boolean)
   extends RowLevelOperation with org.apache.spark.sql.connector.write.SupportsDelta {
 
-  @volatile private var scanned: Option[(Seq[String], Long)] = None
+  /** The snapshot version the scan resolved — set on the driver
+    * during scan planning, read at write commit.
+    */
+  @volatile private var scannedVersion: Option[Long] = None
 
   override def command(): RowLevelOperation.Command = cmd
   override def description(): String = s"GraftDelta($cmd, root=$root)"
@@ -199,7 +154,7 @@ private[sources] class GraftDeltaOperation(root: String,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(SparkSession.active, root, Long.MaxValue, tableSchema,
-      options, onPlan = Some((fs, v) => scanned = Some((fs, v))))
+      options, onPlan = Some(v => scannedVersion = Some(v)))
 
   override def newWriteBuilder(info: LogicalWriteInfo)
     : org.apache.spark.sql.connector.write.DeltaWriteBuilder =
@@ -235,41 +190,33 @@ private[sources] class GraftDeltaOperation(root: String,
             new GraftDeltaBatchWrite(root, info.schema(),
               action = (if (finalizeCow) "" else "mor-") +
                 cmd.toString.toLowerCase(java.util.Locale.ROOT),
-              () => scanned,
+              () => scannedVersion,
               failOnConcurrentAppend = cmd == RowLevelOperation.Command.MERGE,
               finalizeCow = finalizeCow)
         }
     }
 }
 
-/** The delta batch write: insert files staged exactly like
-  * [[GraftBatchWrite]], deletion bitmaps assembled from the sparse
+/** The delta batch write: insert files staged executor-side
+  * ([[StagedParquet]]), deletion bitmaps assembled from the sparse
   * per-task words, one commit carrying both.
   */
 private class GraftDeltaBatchWrite(root: String, logicalSchema: StructType,
                                    action: String,
-                                   scanned: () => Option[(Seq[String], Long)],
+                                   scannedVersion: () => Option[Long],
                                    failOnConcurrentAppend: Boolean,
-                                   finalizeCow: Boolean = false)
+                                   finalizeCow: Boolean)
   extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
 
   private def spark = SparkSession.active
-  private val txnId =
-    s"sql-$action-a${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-  private val physSchema = {
-    val renames = TxnLog.columnMapping(root)
-    StructType(logicalSchema.fields.map(f =>
-      f.copy(name = renames.getOrElse(f.name, f.name))))
-  }
+  private val txnId = s"sql-$action-a${TxnLog.uuid12}"
+  private val physSchema = StagedParquet.physicalSchema(root, logicalSchema)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
     : org.apache.spark.sql.connector.write.DeltaWriterFactory = {
     val dir = Paths.get(root, "data", txnId)
     Files.createDirectories(dir)
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val owf = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, physSchema)
-    new GraftDeltaWriterFactory(dir.toString, physSchema,
-      new SerializableConfiguration(job.getConfiguration), owf)
+    new GraftDeltaWriterFactory(dir.toString, StagedParquet(spark, physSchema))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -293,16 +240,11 @@ private class GraftDeltaBatchWrite(root: String, logicalSchema: StructType,
     // honor CHECK + NOT NULL like every other write; pure-DV deletes
     // stage no rows and skip via the empty-files early return
     TxnLog.checkStagedConstraints(spark, root, files)
-    val readV = scanned().map(_._2).getOrElse(TxnLog.currentVersion(root))
-    val statCols = GraftTable.statPaths(physSchema)
-    // bucket-partitioned tables: post-image files re-record their
-    // derived bucket stats so rewrites never lose bucket pruning
-    val buckets = TxnLog.partitionFields(root).collect {
-      case TxnLog.BucketField(n, c) if physSchema.fieldNames.contains(c) => (n, c)
-    }
-    val multi =
-      if (files.isEmpty || (statCols.isEmpty && buckets.isEmpty)) Nil
-      else TxnLog.statsForStaged(spark, root, txnId, statCols, files, buckets)
+    val readV = scannedVersion().getOrElse(TxnLog.currentVersion(root))
+    // post-image files record insert-grade stats, bucket stats
+    // included, so rewrites never lose pruning
+    val multi = GraftTable.statsForWritten(spark, root, txnId, physSchema,
+      files, TxnLog.partitionFields(root))
     // COW finalize: rewrite the touched files' SURVIVORS into this
     // same commit — added = change files + survivor files (survivors
     // marked row-preserving via `radds`), removed = the touched
@@ -344,30 +286,18 @@ private class GraftDeltaBatchWrite(root: String, logicalSchema: StructType,
     }
 }
 
-private class GraftDeltaWriterFactory(stagingDir: String, schema: StructType,
-                                      conf: SerializableConfiguration,
-                                      owf: OutputWriterFactory)
+private class GraftDeltaWriterFactory(stagingDir: String, format: StagedParquet)
   extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long)
     : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] = {
-    val path = s"$stagingDir/part-$partitionId-$taskId.parquet"
+    val inserts =
+      format.open(s"$stagingDir/part-$partitionId-$taskId.parquet", partitionId, taskId)
     new org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
-      // insert file opened LAZILY: a delete-only task writes no file
-      private var writer: org.apache.spark.sql.execution.datasources.OutputWriter = _
-      private var n = 0L
       private val deletes =
         scala.collection.mutable.Map.empty[String, java.util.BitSet]
 
-      override def insert(row: InternalRow): Unit = {
-        if (writer == null) {
-          val attempt = new TaskAttemptID(
-            new TaskID(new JobID("graft", 1), TaskType.MAP, partitionId), taskId.toInt)
-          writer = owf.newInstance(path, schema,
-            new TaskAttemptContextImpl(conf.value, attempt))
-        }
-        writer.write(row); n += 1
-      }
+      override def insert(row: InternalRow): Unit = inserts.write(row)
 
       /** `id` carries the row's `(_file, _pos)` in [[rowId]] order. */
       override def delete(metadata: InternalRow, id: InternalRow): Unit = {
@@ -383,122 +313,14 @@ private class GraftDeltaWriterFactory(stagingDir: String, schema: StructType,
           "updates are represented as delete+insert (representUpdateAsDeleteAndInsert)")
 
       override def commit(): WriterCommitMessage = {
-        if (writer != null) writer.close()
-        if (n == 0L) Files.deleteIfExists(Paths.get(path))
+        val written = inserts.commit()
         GraftDeltaMessage(
-          if (n > 0L) Seq((path, n)) else Nil,
+          if (written.rows > 0L) Seq((written.path, written.rows)) else Nil,
           deletes.view.mapValues(_.toLongArray).toMap)
       }
 
-      override def abort(): Unit = {
-        if (writer != null) writer.close()
-        Files.deleteIfExists(Paths.get(path))
-        ()
-      }
+      override def abort(): Unit = inserts.abort()
 
-      override def close(): Unit = ()
-    }
-  }
-}
-
-/** A true DataSource V2 batch write into a [[TxnLog]] transaction:
-  * executors write parquet into `data/<txnId>/` via Spark's own
-  * serialized `OutputWriterFactory`, the driver collects (path,
-  * rowCount) messages, stats the staged files in one distributed
-  * pass, and publishes a single commit. Speculative / retried tasks
-  * are safe: the commit coordinator admits one winner per partition,
-  * losers' files stay unreferenced in the staging dir (reclaimed by
-  * [[TxnLog.vacuumStaging]]'s orphan sweep once nothing references
-  * the dir, ignored by stats alignment otherwise).
-  */
-private class GraftBatchWrite(root: String, logicalSchema: StructType,
-                              action: String,
-                              scanned: () => Option[(Seq[String], Long)],
-                              failOnConcurrentAppend: Boolean)
-  extends BatchWrite {
-
-  private def spark = SparkSession.active
-  private val txnId =
-    s"sql-$action-a${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-  // staged files carry PHYSICAL names (all generations of a renamed
-  // table store the same column name); rows need no change — only
-  // the writer schema's field names differ
-  private val physSchema = {
-    val renames = TxnLog.columnMapping(root)
-    StructType(logicalSchema.fields.map(f =>
-      f.copy(name = renames.getOrElse(f.name, f.name))))
-  }
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val dir = Paths.get(root, "data", txnId)
-    Files.createDirectories(dir)
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val owf = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, physSchema)
-    new GraftDataWriterFactory(dir.toString, physSchema,
-      new SerializableConfiguration(job.getConfiguration), owf)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.collect {
-      case GraftFileMessage(p, n) if n > 0 => p
-    }.toSeq.sorted
-    val (removed, readV) =
-      scanned().getOrElse((Nil, TxnLog.currentVersion(root)))
-    if (files.isEmpty && removed.isEmpty) return // nothing matched, nothing inserted
-    // X-A42's contract covers DML too: UPDATE/MERGE post-images must
-    // honor CHECK + NOT NULL before anything publishes (a DELETE's
-    // staged rows are carried-over survivors — already proven)
-    if (action != "delete") TxnLog.checkStagedConstraints(spark, root, files)
-    val statCols = GraftTable.statPaths(physSchema)
-    // bucket-partitioned tables: post-image files re-record their
-    // derived bucket stats so rewrites never lose bucket pruning
-    val buckets = TxnLog.partitionFields(root).collect {
-      case TxnLog.BucketField(n, c) if physSchema.fieldNames.contains(c) => (n, c)
-    }
-    val multi =
-      if (files.isEmpty || (statCols.isEmpty && buckets.isEmpty)) Nil
-      else TxnLog.statsForStaged(spark, root, txnId, statCols, files, buckets)
-    TxnLog.commit(root, action, added = files, removed = removed,
-      readVersion = readV, txnId = txnId, multiStats = multi,
-      schemaId = TxnLog.schemaFingerprint(physSchema),
-      schemaJson = GraftTable.declareJson(root, physSchema),
-      failOnConcurrentAppend = failOnConcurrentAppend)
-    ()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case GraftFileMessage(p, _) => Files.deleteIfExists(Paths.get(p)); ()
-      case _                      => ()
-    }
-}
-
-private class GraftDataWriterFactory(stagingDir: String, schema: StructType,
-                                     conf: SerializableConfiguration,
-                                     owf: OutputWriterFactory)
-  extends DataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    // per-(partition, task) names: a retried or speculative attempt
-    // can never clobber another attempt's file
-    val path = s"$stagingDir/part-$partitionId-$taskId.parquet"
-    val attempt = new TaskAttemptID(
-      new TaskID(new JobID("graft", 0), TaskType.MAP, partitionId), taskId.toInt)
-    val ctx = new TaskAttemptContextImpl(conf.value, attempt)
-    val writer = owf.newInstance(path, schema, ctx)
-    new DataWriter[InternalRow] {
-      private var n = 0L
-      override def write(row: InternalRow): Unit = { writer.write(row); n += 1 }
-      override def commit(): WriterCommitMessage = {
-        writer.close()
-        if (n == 0L) Files.deleteIfExists(Paths.get(path)) // no empty-file litter
-        GraftFileMessage(path, n)
-      }
-      override def abort(): Unit = {
-        writer.close()
-        Files.deleteIfExists(Paths.get(path))
-        ()
-      }
       override def close(): Unit = ()
     }
   }

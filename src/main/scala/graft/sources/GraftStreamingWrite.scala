@@ -2,16 +2,11 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.execution.datasources.OutputWriterFactory
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
 
 /** `df.writeStream.toTable("graft.db.t")` — the STREAMING write half
   * of the catalog, closing the loop with `readStream.table`: the same
@@ -23,8 +18,8 @@ import org.apache.spark.util.SerializableConfiguration
   *
   *  - each epoch's tasks write parquet into a per-run staging
   *    directory (`data/stream-<queryId>-a<run>-e<epoch>/`) through
-  *    Spark's own `OutputWriterFactory` closure — fully distributed,
-  *    the driver sees (path, rowCount) messages only;
+  *    the shared [[StagedParquet]] writer — fully distributed, the
+  *    driver sees (path, rowCount) messages only;
   *  - `commit(epochId)` publishes ONE log record whose txnId is
   *    `stream-<queryId>-e<epochId>`. `queryId` is Structured
   *    Streaming's STABLE query id (persisted in the checkpoint's
@@ -66,18 +61,13 @@ private abstract class GraftStreamingStaging(root: String,
   protected def spark = SparkSession.active
 
   // staged files carry PHYSICAL names, like every other write path
-  protected val physSchema = {
-    val renames = TxnLog.columnMapping(root)
-    StructType(logicalSchema.fields.map(f =>
-      f.copy(name = renames.getOrElse(f.name, f.name))))
-  }
+  protected val physSchema = StagedParquet.physicalSchema(root, logicalSchema)
 
   /** Per-RUN token: restarts (and speculative duplicate drivers)
     * stage into their own directories and can never clobber another
     * attempt's files — the [[TxnLog.stageAttempt]] contract.
     */
-  protected val runToken =
-    s"stream-$queryId-a${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
+  protected val runToken = s"stream-$queryId-a${TxnLog.uuid12}"
 
   protected def epochDir(epochId: Long): String = s"$runToken-e$epochId"
 
@@ -86,12 +76,9 @@ private abstract class GraftStreamingStaging(root: String,
     */
   protected def epochTxnId(epochId: Long): String = s"stream-$queryId-e$epochId"
 
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val owf = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, physSchema)
+  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new GraftStreamingWriterFactory(Paths.get(root, "data").toString, runToken,
-      physSchema, new SerializableConfiguration(job.getConfiguration), owf)
-  }
+      StagedParquet(spark, physSchema))
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
@@ -120,28 +107,14 @@ private class GraftStreamingWrite(root: String, logicalSchema: StructType,
         val live = if (replaceEach) TxnLog.snapshotFiles(root, readV) else Nil
         if (files.nonEmpty || (replaceEach && live.nonEmpty)) {
           // gate on BOTH write contracts: CHECK constraints and NOT
-          // NULL columns (checkConstraints enforces the two in one
-          // fused pass) — a table with only NOT NULL declarations
+          // NULL columns — a table with only NOT NULL declarations
           // must still reject a null-bearing epoch at commit time
-          val mustCheck = files.nonEmpty &&
-            (TxnLog.activeConstraints(root).nonEmpty ||
-              TxnLog.tableSchema(root).exists(_.fields.exists(!_.nullable)))
-          if (mustCheck)
-            TxnLog.checkConstraints(spark, root,
-              TxnLog.toLogical(spark.read.parquet(files: _*),
-                TxnLog.columnMapping(root)))
-          val statCols = GraftTable.statPaths(physSchema)
+          TxnLog.checkStagedConstraints(spark, root, files)
           // bucket stats recorded but typically un-collapsed here (the
           // streaming path declares no bucket distribution): SOUND by
           // construction — a wide bucket range just keeps the file
-          val buckets = TxnLog.partitionFields(root).collect {
-            case TxnLog.BucketField(n, c)
-              if physSchema.fieldNames.contains(c) => (n, c)
-          }
-          val multi =
-            if ((statCols.isEmpty && buckets.isEmpty) || files.isEmpty) Nil
-            else TxnLog.statsForStaged(spark, root, epochDir(epochId), statCols,
-              files, buckets)
+          val multi = GraftTable.statsForWritten(spark, root, epochDir(epochId),
+            physSchema, files, TxnLog.partitionFields(root))
           val rec =
             if (replaceEach)
               TxnLog.commit(root, "stream-replace", added = files,
@@ -161,17 +134,13 @@ private class GraftStreamingWrite(root: String, logicalSchema: StructType,
           // ordinary `compact` transaction, OPPORTUNISTIC by design:
           // a conflict with concurrent maintenance just skips (the
           // next epoch retries); the epoch's own commit stands
-          // regardless. Policy resolves TABLE properties first
-          // (`graft.autoCompact.{minFiles, smallBytes, targetBytes}`,
-          // X-A95 — the threshold travels with the table, like
-          // Delta's delta.autoOptimize), session conf
-          // `spark.graft.stream.autoCompact.*` as the fallback
-          // (0 = off, default).
+          // regardless. Policy is the TABLE properties
+          // `graft.autoCompact.{minFiles, smallBytes, targetBytes}`
+          // (X-A95 — the threshold travels with the table, like
+          // Delta's delta.autoOptimize; minFiles 0 = off, default).
           val tProps = TxnLog.tableProperties(root)
           def knob(name: String, dflt: Long): Long =
-            tProps.get(s"graft.autoCompact.$name")
-              .orElse(spark.conf.getOption(s"spark.graft.stream.autoCompact.$name"))
-              .map(_.toLong).getOrElse(dflt)
+            tProps.get(s"graft.autoCompact.$name").map(_.toLong).getOrElse(dflt)
           val acMin = knob("minFiles", 0L).toInt
           // (pointless under replaceEach: the next epoch swaps the
           // whole live set anyway, so small files never accumulate)
@@ -240,40 +209,18 @@ private class GraftStreamingUpsertWrite(root: String,
   }
 }
 
-/** The streaming sibling of `GraftDataWriterFactory`: one parquet
-  * file per (epoch, partition, task) under the epoch's own staging
-  * directory, created executor-side (the factory is built once per
-  * run and reused across epochs).
+/** One [[StagedParquet]] file per (epoch, partition, task) under the
+  * epoch's own staging directory, created executor-side (the factory
+  * is built once per run and reused across epochs).
   */
 private class GraftStreamingWriterFactory(dataDir: String, runToken: String,
-                                          schema: StructType,
-                                          conf: SerializableConfiguration,
-                                          owf: OutputWriterFactory)
+                                          format: StagedParquet)
   extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] = {
     val dir = Paths.get(dataDir, s"$runToken-e$epochId")
     Files.createDirectories(dir)
-    val path = s"$dir/part-$partitionId-$taskId.parquet"
-    val attempt = new TaskAttemptID(
-      new TaskID(new JobID("graft", 2), TaskType.MAP, partitionId), taskId.toInt)
-    val ctx = new TaskAttemptContextImpl(conf.value, attempt)
-    val writer = owf.newInstance(path, schema, ctx)
-    new DataWriter[InternalRow] {
-      private var n = 0L
-      override def write(row: InternalRow): Unit = { writer.write(row); n += 1 }
-      override def commit(): WriterCommitMessage = {
-        writer.close()
-        if (n == 0L) Files.deleteIfExists(Paths.get(path))
-        GraftFileMessage(path, n)
-      }
-      override def abort(): Unit = {
-        writer.close()
-        Files.deleteIfExists(Paths.get(path))
-        ()
-      }
-      override def close(): Unit = ()
-    }
+    format.open(s"$dir/part-$partitionId-$taskId.parquet", partitionId, taskId)
   }
 }

@@ -974,7 +974,7 @@ object TxnLog {
     }
 
   /** Publish a sidecar under a PER-ATTEMPT-unique name (the
-    * `attemptId` staging recipe): no replayed transaction, crashed
+    * [[stageAttempt]] staging recipe): no replayed transaction, crashed
     * attempt, or concurrent checkpointer can ever reuse — let alone
     * clobber or truncate — a path some published record already
     * references; losing attempts leave small orphan files, the same
@@ -984,8 +984,7 @@ object TxnLog {
   private def spillSidecar(root: String, prefix: String, hex: String): String = {
     val dir = logDir(root).resolve("dv")
     Files.createDirectories(dir)
-    val p = dir.resolve(
-      s"$prefix-a${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}.dv")
+    val p = dir.resolve(s"$prefix-a$uuid12.dv")
     Files.writeString(p, hex)
     "@" + p.toString
   }
@@ -1339,9 +1338,9 @@ object TxnLog {
     val phys = toPhysical(adds, columnMapping(root, readV))
     val statCols = GraftTable.statPaths(phys.schema)
     val (files, multi) =
-      if (statCols.isEmpty) (stage(phys, root, attemptId(txnId)),
+      if (statCols.isEmpty) (stage(phys, root, s"$txnId-a$uuid12"),
         Seq.empty[Map[String, FileStat]])
-      else stageWithStatsFor(phys, root, attemptId(txnId), statCols)
+      else stageWithStatsFor(phys, root, s"$txnId-a$uuid12", statCols)
     commit(root, "index-delta", added = files, removed = Nil,
       readVersion = readV, txnId = txnId, multiStats = multi,
       dvFiles = dvFiles, dvs = dvs,
@@ -1466,7 +1465,7 @@ object TxnLog {
         if physSource.columns.contains(spec._1) => spec }
     def stageMergeOut(df: DataFrame): (Seq[String], Seq[Map[String, FileStat]],
         Seq[String], String) = {
-      val dirId = attemptId(txnId)
+      val dirId = s"$txnId-a$uuid12"
       val (files, stats) = stageWithStatsFor(df, root, dirId, statCols, buckets)
       bloomPlan match {
         case Some((bcol, bits, k)) if files.nonEmpty =>
@@ -1617,9 +1616,9 @@ object TxnLog {
   }
 
   /** Enforce CHECK + NOT NULL constraints over already-STAGED parquet
-    * files — the SQL DML write paths ([[GraftRowLevelOperation]] COW
-    * rewrites, [[GraftDeltaOperation]] MOR post-images), whose rows
-    * exist only as executor-written files by commit time. One extra
+    * files — the SQL DML post-images ([[GraftDeltaOperation]]) and
+    * streamed epochs ([[GraftStreamingWrite]]), whose rows exist only
+    * as executor-written files by commit time. One extra
     * scan of the staged bytes — O(changed data), never O(table); a
     * table with no constraints pays nothing (metadata-only early
     * return). On violation the staged files are deleted and NOTHING
@@ -1730,7 +1729,7 @@ object TxnLog {
     // statable column keeps skipping — a layout job must never erode
     // the table's metadata
     val statCols = (GraftTable.statPaths(clustered.schema) ++ phys).distinct
-    val (files, multi) = stageWithStatsFor(clustered, root, attemptId(txnId),
+    val (files, multi) = stageWithStatsFor(clustered, root, s"$txnId-a$uuid12",
       statCols)
     commit(root, "zorder", files, removed = st0.files.map(_._1),
       readVersion = readV, txnId = txnId, multiStats = multi)
@@ -1805,9 +1804,9 @@ object TxnLog {
     val (cols, buckets) =
       splitStatKeys(victims.flatMap(_._2.stats.keys).filter(_.nonEmpty).distinct)
     val (files, multi) =
-      if (cols.isEmpty && buckets.isEmpty) (stage(clean, root, attemptId(txnId)),
+      if (cols.isEmpty && buckets.isEmpty) (stage(clean, root, s"$txnId-a$uuid12"),
         Seq.empty[Map[String, FileStat]])
-      else stageWithStatsFor(clean, root, attemptId(txnId), cols, buckets)
+      else stageWithStatsFor(clean, root, s"$txnId-a$uuid12", cols, buckets)
     Some(commit(root, "compact-deletes", files, removed = victims.map(_._1),
       readVersion = readV, txnId = txnId, multiStats = multi))
   }
@@ -1888,17 +1887,10 @@ object TxnLog {
       (f, m.copy(dv = Some(hexOr(m.dv, hex))))
     }
     val clean = readForRewrite(s, declaredSchemaJson(root, readV), victims)
-    // INSERT-grade stats on the carried rows: every statable column of
-    // the TABLE's declared physical schema (not the write's — a
-    // DELETE's LogicalWriteInfo schema is the operation's), plus
-    // derived bucket stats where the table is bucket-partitioned
-    val cols = GraftTable.statPaths(clean.schema)
-    val buckets = partitionFields(root, readV).collect {
-      case BucketField(n, c) if clean.columns.contains(c) => (n, c)
-    }
-    if (cols.isEmpty && buckets.isEmpty)
-      (stage(clean, root, attemptId(txnId)), Nil)
-    else stageWithStatsFor(clean, root, attemptId(txnId), cols, buckets)
+    // INSERT-grade stats on the carried rows, decided over the TABLE's
+    // declared physical schema (not the write's — a DELETE's
+    // LogicalWriteInfo schema is the operation's)
+    GraftTable.stageFiles(clean, root, s"$txnId-a$uuid12", partitionFields(root, readV))
   }
 
   /** Open data files under the DECLARED physical schema when the log
@@ -1939,8 +1931,8 @@ object TxnLog {
     * This is the standing fold-back path for high-frequency small
     * commits — streaming ingest and MOR post-images — runnable as
     * `CALL graft.system.compact_files(...)` or automatically via the
-    * streaming writer's opt-in auto-compact
-    * (`spark.graft.stream.autoCompact.minFiles`).
+    * streaming writer's opt-in auto-compact (table property
+    * `graft.autoCompact.minFiles`).
     */
   /** Analyze a predicate (SQL text over LOGICAL column names) against
     * the table's schema and return its conjuncts over PHYSICAL names —
@@ -2020,9 +2012,9 @@ object TxnLog {
     val (cols, buckets) =
       splitStatKeys(victims.flatMap(_._2.stats.keys).filter(_.nonEmpty).distinct)
     val (files, multi) =
-      if (cols.isEmpty && buckets.isEmpty) (stage(folded, root, attemptId(txnId)),
+      if (cols.isEmpty && buckets.isEmpty) (stage(folded, root, s"$txnId-a$uuid12"),
         Seq.empty[Map[String, FileStat]])
-      else stageWithStatsFor(folded, root, attemptId(txnId), cols, buckets)
+      else stageWithStatsFor(folded, root, s"$txnId-a$uuid12", cols, buckets)
     Some(commit(root, "compact", files, removed = victims.map(_._1),
       readVersion = readV, txnId = txnId, multiStats = multi))
   }
@@ -2106,7 +2098,14 @@ object TxnLog {
     f"${scala.util.hashing.MurmurHash3.stringHash(canon)}%08x"
   }
 
-  /** A fresh per-ATTEMPT staging id: `<txnId>-a<random>`. Replay
+  /** 12 random hex digits — the unique suffix of txn ids, staging
+    * dirs and sidecar names.
+    */
+  private[sources] def uuid12: String =
+    java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+
+  /** [[stage]] into a fresh per-ATTEMPT dir, `<txnId>-a<uuid12>` — the
+    * staging entry point for every idempotent-replay writer. Replay
     * paths (crash-recovered streams, duplicate consumers in other
     * JVMs) stage each attempt into its own directory, so no process
     * can ever wipe or collide with another's in-flight files — the
@@ -2116,15 +2115,9 @@ object TxnLog {
     * before restaging, which could delete a concurrent process's
     * staged files between ITS stage and commit.)
     */
-  private def attemptId(txnId: String): String =
-    s"$txnId-a${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-
-  /** [[stage]] into a fresh [[attemptId]] dir — the staging entry
-    * point for every idempotent-replay writer.
-    */
   private[sources] def stageAttempt(df: DataFrame, root: String,
                                     txnId: String): Seq[String] =
-    stage(df, root, attemptId(txnId))
+    stage(df, root, s"$txnId-a$uuid12")
 
   /** Delete staging directories referenced by NO commit record —
     * losing/crashed write attempts — and DV sidecar files referenced
@@ -3927,7 +3920,7 @@ object TxnLog {
     // PIN FIRST: createTag's own post-write existence proof closes
     // the clone-vs-vacuum race (it deletes the tag and errors if the
     // snapshot lost the race)
-    val pinName = s"clone_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
+    val pinName = s"clone_$uuid12"
     createTag(srcRoot, pinName, forkV)
     try {
       val st = resolveState(srcRoot, forkV)
@@ -4292,7 +4285,7 @@ object TxnLog {
         // per-attempt staging dir: a crashed earlier attempt's orphan
         // is left alone (vacuumStaging reclaims it) and a concurrent
         // replay in ANOTHER process can never wipe ours mid-flight
-        val files = stage(phys, root, attemptId(txnId))
+        val files = stage(phys, root, s"$txnId-a$uuid12")
         // appends have an empty read set: readVersion 0 never conflicts
         val rec = commit(root, "stream-append", files, Nil, readVersion = 0L,
           txnId = txnId, schemaId = schemaFingerprint(phys.schema),
@@ -4411,12 +4404,8 @@ object TxnLog {
         .filter(f => phys0.columns.contains(f.col))
       val phys = clusterByPartitioning(phys0, pfields,
         s.sessionState.conf.numShufflePartitions)
-      val txnId = s"copy-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-      val statCols = GraftTable.statPaths(phys.schema)
-      val buckets = pfields.collect { case BucketField(n, c) => (n, c) }
-      val (files, multi) =
-        if (statCols.isEmpty && buckets.isEmpty) (stage(phys, root, txnId), Nil)
-        else stageWithStatsFor(phys, root, txnId, statCols, buckets)
+      val txnId = s"copy-$uuid12"
+      val (files, multi) = GraftTable.stageFiles(phys, root, txnId, pfields)
       val rows = multi.map(_.values.map(_.rows).maxOption.getOrElse(0L)).sum
       try {
         val rec = commit(root, "copy-into", added = files, removed = Nil,

@@ -204,9 +204,10 @@ object TxnStream {
     *
     * Per-version work: O(changed rows) through `indexOf` + a
     * file-pruned keyed retraction on the index — never proportional
-    * to the corpus or the index. A COW rewrite commit whose kills
-    * are not bitmap-described (legacy `cow-group`, overwrite)
-    * retracts by the removed-files diff, like [[maintainMirror]].
+    * to the corpus or the index. A rewrite commit whose kills are
+    * not bitmap-described (`INSERT OVERWRITE`, raw [[TxnLog]]
+    * rewrites) retracts by the removed-files diff, like
+    * [[maintainMirror]].
     *
     * @param indexOf maps a frame of source rows to their index rows;
     *                its output must carry `keyCol` (the source key
@@ -233,7 +234,7 @@ object TxnStream {
           val addRows = delta
             .filter(col(ChangeTypeCol).isin("insert", "update_postimage"))
             .drop(CommitVersionCol, ChangeTypeCol)
-          // non-bitmap rewrites (legacy cow-group, overwrite): the
+          // non-bitmap rewrites (INSERT OVERWRITE, raw TxnLog): the
           // killed keys are the removed files' keys — retract them
           // all; survivors re-add through addRows in the same txn
           val cs = TxnLog.commitsInRange(sourceRoot, v - 1, v)

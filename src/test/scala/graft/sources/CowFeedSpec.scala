@@ -181,17 +181,23 @@ class CowFeedSpec extends SparkTestBase {
     assert(full > 1L, "the default full re-add view keeps its semantics")
   }
 
-  test("cow-group remains available as the single-pass conservative path") {
+  test("spark.graft.dml.mode accepts only cow and mor; any other value " +
+       "fails the UPDATE and commits nothing") {
     warehouse
     spark.sql("CREATE TABLE gcf.db.cg (k BIGINT, v BIGINT)")
     spark.sql("INSERT INTO gcf.db.cg SELECT id, id FROM range(0, 50)")
-    withSQLConf("spark.graft.dml.mode" -> "cow-group") {
-      spark.sql("UPDATE gcf.db.cg SET v = 0 WHERE k < 5")
+    val v0 = TxnLog.currentVersion(root("cg"))
+    Seq("cow-group", "bogus").foreach { mode =>
+      val e = intercept[Exception] {
+        withSQLConf("spark.graft.dml.mode" -> mode) {
+          spark.sql("UPDATE gcf.db.cg SET v = 0 WHERE k < 5")
+        }
+      }
+      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      assert(msg.contains(s"spark.graft.dml.mode must be cow or mor, got $mode"), msg)
+      assert(TxnLog.currentVersion(root("cg")) === v0, s"$mode must commit nothing")
     }
-    // semantics hold; the commit is a whole-file rewrite (no bitmaps)
-    assert(spark.sql("SELECT sum(v) FROM gcf.db.cg").head.getLong(0)
-      === (5L until 50L).sum)
-    val c = TxnLog.commits(root("cg")).find(_.version == 3L).get
-    assert(c.dvFiles.isEmpty && c.radds.isEmpty && c.removed.nonEmpty)
+    assert(spark.sql("SELECT sum(v) FROM gcf.db.cg").head.getLong(0) === (0L until 50L).sum)
   }
 }

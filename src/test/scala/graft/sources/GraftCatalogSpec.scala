@@ -1114,32 +1114,27 @@ class GraftCatalogSpec extends SparkTestBase {
     // accumulates 12 small files
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     spark.sql("CREATE TABLE gcat.db.swa (k BIGINT)")
-    spark.conf.set("spark.graft.stream.autoCompact.minFiles", "4")
-    spark.conf.set("spark.graft.stream.autoCompact.smallBytes", (1024L * 1024).toString)
-    spark.conf.set("spark.graft.stream.autoCompact.targetBytes", (1024L * 1024).toString)
+    spark.sql("ALTER TABLE gcat.db.swa SET TBLPROPERTIES (" +
+      "'graft.autoCompact.minFiles' = '4', " +
+      s"'graft.autoCompact.smallBytes' = '${1024L * 1024}', " +
+      s"'graft.autoCompact.targetBytes' = '${1024L * 1024}')")
+    val ckpt = Files.createTempDirectory("graft-swa-ckpt").toString
+    val in = MemoryStream[Long](spark)
+    val q = in.toDF().selectExpr("value AS k")
+      .writeStream.option("checkpointLocation", ckpt).toTable("gcat.db.swa")
     try {
-      val ckpt = Files.createTempDirectory("graft-swa-ckpt").toString
-      val in = MemoryStream[Long](spark)
-      val q = in.toDF().selectExpr("value AS k")
-        .writeStream.option("checkpointLocation", ckpt).toTable("gcat.db.swa")
-      try {
-        (0 until 12).foreach { i =>
-          in.addData(i * 10L until i * 10L + 10L: _*)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      assert(TxnLog.snapshotFiles(root("swa")).size <= 6,
-        s"auto-compact must bound the small-file count, got " +
-          TxnLog.snapshotFiles(root("swa")).size)
-      assert(spark.sql("SELECT count(*), sum(k) FROM gcat.db.swa").head.toSeq ===
-        Seq(120L, (0L until 120L).sum), "folding must lose or duplicate nothing")
-      assert(spark.sql("SELECT action FROM gcat.db.swa.history")
-        .collect().map(_.getString(0)).contains("compact"))
-    } finally {
-      spark.conf.unset("spark.graft.stream.autoCompact.minFiles")
-      spark.conf.unset("spark.graft.stream.autoCompact.smallBytes")
-      spark.conf.unset("spark.graft.stream.autoCompact.targetBytes")
-    }
+      (0 until 12).foreach { i =>
+        in.addData(i * 10L until i * 10L + 10L: _*)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    assert(TxnLog.snapshotFiles(root("swa")).size <= 6,
+      s"auto-compact must bound the small-file count, got " +
+        TxnLog.snapshotFiles(root("swa")).size)
+    assert(spark.sql("SELECT count(*), sum(k) FROM gcat.db.swa").head.toSeq ===
+      Seq(120L, (0L until 120L).sum), "folding must lose or duplicate nothing")
+    assert(spark.sql("SELECT action FROM gcat.db.swa.history")
+      .collect().map(_.getString(0)).contains("compact"))
   }
 
   test("CREATE TABLE / CTAS TBLPROPERTIES persist as table policy (r19)") {
@@ -1724,6 +1719,57 @@ class GraftCatalogSpec extends SparkTestBase {
       "each epoch's aggregate must stay time-travelable")
     // each replace removed the previous epoch's whole live set
     assert(cs.tail.forall(_.removed.nonEmpty))
+  }
+
+  test("one stat decision: every SQL and streaming write path records " +
+       "statPaths(schema) plus bucket(N;c) on each file it adds") {
+    warehouse
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.functions.col
+    def rows(lo: Long, hi: Long): String =
+      s"SELECT id AS k, id * 2 AS v, concat('s', id) AS s, " +
+        s"named_struct('x', id) AS n FROM range($lo, $hi)"
+    spark.sql(s"CREATE TABLE gcat.db.sd PARTITIONED BY (bucket(4, k)) AS ${rows(0, 40)}")
+    val r = root("sd")
+    val want = GraftTable.statPaths(TxnLog.tableSchema(r).get) :+
+      TxnLog.bucketStatKey(4, "k")
+    assert(want.toSet === Set("k", "v", "s", "n.x", "bucket(4;k)"))
+    /** Every file a write path added records exactly `want`. */
+    def check(path: String, before: Set[String]): Unit = {
+      val added = TxnLog.snapshotState(r).filterNot { case (f, _) => before(f) }
+      assert(added.nonEmpty, s"$path added no file")
+      added.foreach { case (f, m) =>
+        assert(m.stats.keySet === want.toSet, s"$path: $f recorded ${m.stats.keySet}")
+      }
+    }
+    def addedBy(path: String)(op: => Unit): Unit = {
+      val before = TxnLog.snapshotFiles(r).toSet
+      op
+      check(path, before)
+    }
+    check("ctas", Set.empty)
+    addedBy("insert")(spark.sql(s"INSERT INTO gcat.db.sd ${rows(40, 80)}"))
+    addedBy("stream") {
+      val ckpt = Files.createTempDirectory("graft-sd-ckpt").toString
+      val in = MemoryStream[Long](spark)
+      val q = in.toDF().selectExpr("value AS k", "value * 2 AS v",
+          "concat('s', value) AS s", "named_struct('x', value) AS n")
+        .writeStream.option("checkpointLocation", ckpt).toTable("gcat.db.sd")
+      try { in.addData(80L until 100L: _*); q.processAllAvailable() }
+      finally q.stop()
+    }
+    Seq("cow", "mor").foreach { mode =>
+      withSQLConf("spark.graft.dml.mode" -> mode) {
+        addedBy(s"$mode update")(spark.sql("UPDATE gcat.db.sd SET v = v + 1 WHERE k % 7 = 3"))
+        addedBy(s"$mode merge")(spark.sql(
+          s"MERGE INTO gcat.db.sd t USING (${rows(95, 110)}) src ON t.k = src.k " +
+            "WHEN MATCHED THEN UPDATE SET v = src.v + 5 " +
+            "WHEN NOT MATCHED THEN INSERT *"))
+      }
+    }
+    addedBy("replace-where")(spark.sql(rows(200, 230)).writeTo("gcat.db.sd")
+      .overwrite(col("k") >= 200))
+    assert(spark.sql("SELECT count(*) FROM gcat.db.sd").head.getLong(0) === 140L)
   }
 
   test("PARTITIONED BY bucket(n, c): equality prunes to ONE bucket; " +

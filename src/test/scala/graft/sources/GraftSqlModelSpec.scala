@@ -16,8 +16,8 @@ import graft.SparkTestBase
   * the table must equal the model, and at the end every intermediate
   * version must time-travel back to its recorded model state. This
   * is the [[TxnLogModelSpec]] discipline one layer up: every
-  * interleaving exercises the full V2 stack (pushdown, runtime group
-  * filtering, DV readers, distributed writes) through `spark.sql`
+  * interleaving exercises the full V2 stack (pushdown, runtime file
+  * pruning, DV readers, distributed writes) through `spark.sql`
   * alone. Fixed seeds keep CI deterministic.
   */
 class GraftSqlModelSpec extends SparkTestBase {
