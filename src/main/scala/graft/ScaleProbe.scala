@@ -684,8 +684,8 @@ object ScaleProbe {
         (1 to n).foreach(i =>
           TxnLog.commit(root, "append", Seq(s"/fake/f$i"), Nil,
             readVersion = 0L, txnId = s"t$i",
-            stats = Seq(Some(TxnLog.FileStat(i * 100L, i * 100L + 99L, 1000L))),
-            statsCol = "k"))
+            multiStats =
+              Seq(Map("k" -> TxnLog.FileStat(i * 100L, i * 100L + 99L, 1000L)))))
         TxnLog.checkpoint(root)
         val t0 = System.nanoTime()
         (1 to 20).foreach(_ => TxnLog.statsAggregate(spark, root, "k").head())
@@ -702,10 +702,11 @@ object ScaleProbe {
         .repartitionByRange(32, col("k"))
       // ~16 bits/key (2048 rows/file): FPR ≈ 0.2% at k=4 — the
       // production sizing rule; the 8192-bit default suits ≤1k-row files
-      val (files, stats, blooms) = TxnLog.stageWithIndex(df, root, "t1",
-        statsCol = "k", bloomCol = "tag", bloomBits = 32768)
+      val (files, stats) = TxnLog.stageWithStatsFor(df, root, "t1", Seq("k"))
+      val blooms = TxnLog.bloomsForStaged(spark, root, "t1", "tag", files,
+        bloomBits = 32768)
       TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-        stats = stats, statsCol = "k", blooms = blooms, bloomCol = "tag")
+        multiStats = stats, blooms = blooms, bloomCol = "tag")
       val probeTag = 4242L * 2654435761L % 1000000007L
       def timeN(f: => Long): (Double, Long) = {
         val t0 = System.nanoTime(); var r = 0L
@@ -733,9 +734,9 @@ object ScaleProbe {
         val df = spark.range(0, 65536)
           .select(col("id").as("k"), (col("id") * 7 % 13).as("v"))
           .repartitionByRange(32, col("k"))
-        val (files, stats) = TxnLog.stageWithStats(df, root, "t1", "k")
+        val (files, stats) = TxnLog.stageWithStatsFor(df, root, "t1", Seq("k"))
         TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-          stats = stats, statsCol = "k")
+          multiStats = stats)
         (root, files)
       }
       def bytes(fs: Seq[String]): Long =
@@ -750,10 +751,10 @@ object ScaleProbe {
       val (cowRoot, cowFiles) = freshTable()
       val t1 = System.nanoTime()
       val kept = TxnLog.read(spark, cowRoot).filter(!(col("k") % 100 === 7))
-      val (newFiles, newStats) = TxnLog.stageWithStats(
-        kept.repartitionByRange(32, col("k")), cowRoot, "rw1", "k")
+      val (newFiles, newStats) = TxnLog.stageWithStatsFor(
+        kept.repartitionByRange(32, col("k")), cowRoot, "rw1", Seq("k"))
       TxnLog.commit(cowRoot, "upsert", newFiles, removed = cowFiles,
-        readVersion = 1L, txnId = "rw1", stats = newStats, statsCol = "k")
+        readVersion = 1L, txnId = "rw1", multiStats = newStats)
       val cowSec = (System.nanoTime() - t1) / 1e9
       val cowBytes = bytes(newFiles)
       val dvCount = TxnLog.read(spark, dvRoot).count()
@@ -793,9 +794,9 @@ object ScaleProbe {
         val df = spark.range(0, 65536)
           .select(col("id").as("k"), (col("id") * 7 % 13).as("v"))
           .repartitionByRange(32, col("k"))
-        val (files, stats) = TxnLog.stageWithStats(df, root, "t1", "k")
+        val (files, stats) = TxnLog.stageWithStatsFor(df, root, "t1", Seq("k"))
         TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-          stats = stats, statsCol = "k")
+          multiStats = stats)
         (root, files)
       }
       val (hRoot, _) = freshTable("half")
@@ -1162,9 +1163,9 @@ object ScaleProbe {
         val base = spark.range(0, rows)
           .select(col("id").as("k"), (col("id") * 7 % 13).as("v"))
           .repartitionByRange(files, col("k"))
-        val (f1, st1) = TxnLog.stageWithStats(base, src, "t1", "k")
+        val (f1, st1) = TxnLog.stageWithStatsFor(base, src, "t1", Seq("k"))
         TxnLog.commit(src, "append", f1, Nil, readVersion = 0L, txnId = "t1",
-          stats = st1, statsCol = "k")
+          multiStats = st1)
         TxnStream.maintainMirror(spark, src, mir, "m", "k") // catch-up, untimed
         // TWO incremental versions: a 64-key UPDATE merge confined to
         // one file's range, and a 64-row DV delete

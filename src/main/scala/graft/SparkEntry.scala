@@ -639,10 +639,9 @@ object SparkEntry {
         (col("o_orderkey") * lit(2654435761L) % lit(1000000007L)).as("o_tag"),
         floor(col("o_orderkey") / 2000).cast("long").as("o_part"))
       .repartitionByRange(8, col("o_orderkey"))
-    val (files, _, blooms) = TxnLog.stageWithIndex(base, root, "v1-clustered",
-      statsCol = "o_orderkey", bloomCol = "o_tag")
-    val multi = TxnLog.statsForStaged(s, root, "v1-clustered",
-      Seq("o_orderkey", "o_part"), files)
+    val (files, multi) = TxnLog.stageWithStatsFor(base, root, "v1-clustered",
+      Seq("o_orderkey", "o_part"))
+    val blooms = TxnLog.bloomsForStaged(s, root, "v1-clustered", "o_tag", files)
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
       txnId = "v1-clustered", blooms = blooms, bloomCol = "o_tag",
       multiStats = multi, schemaJson = TxnLog.encodeSchema(base.schema))
@@ -663,9 +662,10 @@ object SparkEntry {
       .select(col("o_orderkey"),
         round(col("o_totalprice") * 100).cast("long").as("price_cents"))
       .repartitionByRange(8, col("o_orderkey"))
-    val (files, stats) = TxnLog.stageWithStats(base, root, "v1-append", "o_orderkey")
+    val (files, stats) = TxnLog.stageWithStatsFor(base, root, "v1-append",
+      Seq("o_orderkey"))
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
-      txnId = "v1-append", stats = stats, statsCol = "o_orderkey")
+      txnId = "v1-append", multiStats = stats)
     TxnLog.deleteWhere(s, root, col("o_orderkey") % 5 === 2, "v2-delete")
   }
 
@@ -685,9 +685,10 @@ object SparkEntry {
       .filter(col("o_orderkey") % 3 <= 1)
       .select(col("o_orderkey"), cents.as("price_cents"))
       .repartitionByRange(8, col("o_orderkey"))
-    val (files, stats) = TxnLog.stageWithStats(base, root, "v1-append", "o_orderkey")
+    val (files, stats) = TxnLog.stageWithStatsFor(base, root, "v1-append",
+      Seq("o_orderkey"))
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
-      txnId = "v1-append", stats = stats, statsCol = "o_orderkey")
+      txnId = "v1-append", multiStats = stats)
     val source = Tables.orders(s, dir)
       .filter(col("o_orderkey") % 4 === 1)
       .select(col("o_orderkey"), (cents + 7).as("price_cents"))
@@ -738,9 +739,10 @@ object SparkEntry {
       .select(col("o_orderkey"),
         round(col("o_totalprice") * 100).cast("long").as("price_cents"))
       .repartitionByRange(8, col("o_orderkey"))
-    val (files, stats) = TxnLog.stageWithStats(base, root, "v1-append", "o_orderkey")
+    val (files, stats) = TxnLog.stageWithStatsFor(base, root, "v1-append",
+      Seq("o_orderkey"))
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
-      txnId = "v1-append", stats = stats, statsCol = "o_orderkey")
+      txnId = "v1-append", multiStats = stats)
     TxnLog.deleteWhere(s, root, col("o_orderkey") % 5 === 2, "v2-delete")
     val cut = Tables.orders(s, dir)
       .agg(max(col("o_orderkey")).cast("long")).head().getLong(0) / 3

@@ -303,15 +303,8 @@ private[sources] object GraftProcedures {
             // of a fresh consumer replaying the source's history
             // (which fails outright once pre-horizon source versions
             // are vacuumed)
-            // one-time migration bridge: pre-r17 offsets were marked
-            // under the typed-identifier consumer id (`mv-<ident>`);
-            // its applied version floors the resume point so an
-            // upgraded MV never replays (or fails on vacuumed)
-            // history. New markers land under the canonical id.
-            val legacyFloor = TxnStream.appliedVersion(tgtRoot, s"mv-$tgtIdent")
             val applied = TxnStream.maintainMirror(s, srcRoot, tgtRoot,
-              consumerId = GraftProcedures.mvConsumerId(tgtRoot), keyCol = key,
-              minApplied = legacyFloor)
+              consumerId = GraftProcedures.mvConsumerId(tgtRoot), keyCol = key)
             Seq(Seq(applied.size.toLong, TxnLog.currentVersion(srcRoot)))
         }
       // SET NOT NULL as a procedure: Spark's analyzer refuses the

@@ -66,9 +66,8 @@ import org.apache.spark.sql.types.StructType
 object TxnLog {
 
   /** Per-file data-skipping statistics: (min, max) of a column plus
-    * the file's row count (`rows = -1` when unknown — records written
-    * by a pre-r12 build carry only the range). The row count is what
-    * makes COUNT/MIN/MAX answerable from the log alone
+    * the file's row count (`rows = -1` when unknown). The row count
+    * is what makes COUNT/MIN/MAX answerable from the log alone
     * ([[statsAggregate]]): at 100 TB the metadata answer costs a few
     * KB of JSON instead of a full table scan.
     *
@@ -78,8 +77,7 @@ object TxnLog {
     * prune bug: timestamp micros vs a seconds-scale long stat)
     * structurally impossible:
     *
-    *  - `"l"` integral: `lo`/`hi` are the long range (legacy records
-    *    are all `"l"`),
+    *  - `"l"` integral: `lo`/`hi` are the long range,
     *  - `"t"` timestamp: `lo`/`hi` are epoch MICROS (Catalyst's
     *    internal timestamp value),
     *  - `"d"` date: `lo`/`hi` are epoch DAYS,
@@ -121,54 +119,38 @@ object TxnLog {
     java.util.Base64.getDecoder.decode(v)
 
   /** Everything the log knows about one live data file: per-COLUMN
-    * stats (Delta collects stats for its leading columns the same
-    * way — a partition column is just a stat with lo == hi, so
-    * hive-style partition pruning falls out of this map for free),
-    * its bloom filter (and ITS column), and its deletion vector. The
-    * `""` stats key marks legacy records that never named their
-    * column; pruning treats those as caller-asserted (the pre-r12
-    * contract) — every NEW stage/commit names columns, so a reader
-    * querying a different column can never be mis-pruned. `dv` is a
-    * hex bitset over ROW INDEXES (parquet scan order,
-    * `_metadata.row_index`): set bits are deleted rows, unioned
-    * across delete commits, cleared when the file itself is
+    * stats keyed by (physical) column name (Delta collects stats for
+    * its leading columns the same way — a partition column is just a
+    * stat with lo == hi, so hive-style partition pruning falls out of
+    * this map for free), its bloom filter (and ITS column), and its
+    * deletion vector. A stat only ever answers a query on its own
+    * column. `dv` is a hex bitset over ROW INDEXES (parquet scan
+    * order, `_metadata.row_index`): set bits are deleted rows,
+    * unioned across delete commits, cleared when the file itself is
     * rewritten.
     */
   case class FileMeta(stats: Map[String, FileStat] = Map.empty,
                       bloom: Option[String] = None, bloomCol: String = "",
                       dv: Option[String] = None, size: Long = -1L,
                       modTime: Long = 0L,
-                      rowBase: Option[Long] = None) {
-    /** The stat governing a query on `column`: an exact column match,
-      * else the legacy unnamed stat (caller-asserted). A query that
-      * names no column is the pre-r12 single-clustering contract: it
-      * accepts the file's stat only when there is exactly ONE — a
-      * multi-stat file yields None (an arbitrary column's range
-      * could unsoundly prune).
-      */
-    def statFor(column: String): Option[FileStat] =
-      if (column.isEmpty)
-        stats.get("").orElse(if (stats.size == 1) stats.values.headOption else None)
-      else stats.get(column).orElse(stats.get(""))
-  }
+                      rowBase: Option[Long] = None)
 
-  /** One committed log record. `stats` (when present) is aligned with
-    * `added`: per-file [[FileStat]] of `statsCol`, the data-skipping
-    * metadata [[readRange]]/[[statsAggregate]] use — inline in the
-    * record (the Delta recipe), so planning needs no sidecar reads
-    * and the stats survive as long as the log does. `blooms` (when
-    * present) is likewise aligned with `added`: a hex-encoded bloom
-    * filter over `bloomCol` per file ("" = none), the point-lookup
-    * skipping index [[readPoint]] probes. `dvFiles`/`dvs` (aligned
-    * with each other, NOT with `added`) carry row-level deletes:
-    * per-file hex bitsets of deleted row indexes ([[deleteWhere]]) —
-    * a delete prices at O(deleted-row metadata), not a file rewrite.
+  /** One committed log record. `multiStats` (when present) is aligned
+    * with `added`: per file, the rendered column -> [[FileStat]] map,
+    * the data-skipping metadata [[readRange]]/[[statsAggregate]] use —
+    * inline in the record (the Delta recipe), so planning needs no
+    * sidecar reads and the stats survive as long as the log does.
+    * `blooms` (when present) is likewise aligned with `added`: a
+    * hex-encoded bloom filter over `bloomCol` per file ("" = none),
+    * the point-lookup skipping index [[readPoint]] probes.
+    * `dvFiles`/`dvs` (aligned with each other, NOT with `added`) carry
+    * row-level deletes: per-file hex bitsets of deleted row indexes
+    * ([[deleteWhere]]) — a delete prices at O(deleted-row metadata),
+    * not a file rewrite.
     */
   case class Commit(version: Long, action: String, txnId: String,
                     readVersion: Long, added: Seq[String], removed: Seq[String],
-                    stats: Seq[Option[FileStat]] = Nil,
                     schemaId: String = "",
-                    statsCol: String = "",
                     blooms: Seq[String] = Nil,
                     bloomCol: String = "",
                     dvFiles: Seq[String] = Nil,
@@ -282,37 +264,22 @@ object TxnLog {
         s"txn log path contains reserved character '$c': $p"))
     }
 
-  private def renderStat(s: Option[FileStat]): String =
-    s.map(st => if (st.rows < 0) s"${st.lo} ${st.hi}"
-                else s"${st.lo} ${st.hi} ${st.rows}").getOrElse("-")
-
-  private def parseStat(s: String): Option[FileStat] =
-    if (s == "-") None
-    else s.split(" ") match {
-      case Array(lo, hi)    => Some(FileStat(lo.toLong, hi.toLong))
-      case Array(lo, hi, n) => Some(FileStat(lo.toLong, hi.toLong, n.toLong))
-      case _ => sys.error(s"bad stat token: $s")
-    }
-
-  // one file's EXTRA per-column stats, '|'-joined per column:
-  //   "col:lo:hi:rows"                 legacy long stat (typ "l"), or
-  //   "col:<typ>:lo:hi:rows:nulls"     typed (r13+; for "s"/"f" the
-  //                                    bounds are base64 / Double
-  //                                    strings — neither contains
-  //                                    ':', '|', ',' or spaces)
-  // field COUNT dispatches the two shapes; column names are validated
+  // one file's per-column stats, '|'-joined per column:
+  //   "col:<typ>:lo:hi:rows:nulls[:hll]"  for "s"/"f" the bounds are
+  //                                       base64 / Double strings —
+  //                                       neither contains ':', '|',
+  //                                       ',' or spaces
+  // (rows / nulls -1 = unknown); column names are validated
   // separator-free at commit time.
   private def renderOneStat(c: String, s: FileStat): String = {
     val h = if (s.hll.isEmpty) "" else s":${s.hll}"
-    if (s.typ == "l" && s.nulls < 0L && s.hll.isEmpty) s"$c:${s.lo}:${s.hi}:${s.rows}"
-    else if (s.typ == "s" || s.typ == "f")
+    if (s.typ == "s" || s.typ == "f")
       s"$c:${s.typ}:${s.loS}:${s.hiS}:${s.rows}:${s.nulls}$h"
     else s"$c:${s.typ}:${s.lo}:${s.hi}:${s.rows}:${s.nulls}$h"
   }
 
   private def parseOneStat(typ: String, lo: String, hi: String,
-                           rows: Long, nulls: Long,
-                           hll: String = ""): FileStat =
+                           rows: Long, nulls: Long, hll: String): FileStat =
     if (typ == "s" || typ == "f") FileStat(0L, 0L, rows, typ, lo, hi, nulls, hll)
     else FileStat(lo.toLong, hi.toLong, rows, typ, "", "", nulls, hll)
 
@@ -324,21 +291,14 @@ object TxnLog {
     if (s.isEmpty) Map.empty
     else s.split("\\|").map { tok =>
       tok.split(":", -1) match {
-        case Array(c, lo, hi, n) => c -> FileStat(lo.toLong, hi.toLong, n.toLong)
-        case Array(c, t, lo, hi, n, nl) =>
-          c -> parseOneStat(t, lo, hi, n.toLong, nl.toLong)
-        case Array(c, t, lo, hi, n, nl, h) => // + base64 HLL sketch (r14)
-          c -> parseOneStat(t, lo, hi, n.toLong, nl.toLong, h)
+        case Array(c, t, lo, hi, n, nl, hll @ _*) if hll.size <= 1 =>
+          c -> parseOneStat(t, lo, hi, n.toLong, nl.toLong, hll.mkString)
         case _ => sys.error(s"bad multi-stat token: $tok")
       }
     }.toMap
 
   private def render(c: Commit): String = {
     def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val statsPart =
-      if (c.stats.isEmpty) "" else s""","stats":${arr(c.stats.map(renderStat))}"""
-    val statsColPart =
-      if (c.statsCol.isEmpty) "" else s""","statsCol":"${c.statsCol}""""
     val bloomsPart =
       if (c.blooms.isEmpty) "" else s""","blooms":${arr(c.blooms)}"""
     val bloomColPart =
@@ -385,7 +345,7 @@ object TxnLog {
       if (!c.conReset) "" else s""","conReset":1"""
     s"""{"version":${c.version},"action":"${c.action}","txnId":"${c.txnId}",""" +
       s""""readVersion":${c.readVersion},"added":${arr(c.added)},""" +
-      s""""removed":${arr(c.removed)}$statsPart$statsColPart$multiPart$bloomsPart$bloomColPart$dvPart$schemaPart$tsPart$constraintPart$schemaJsonPart$renamePart$sizesPart$caddsPart$partByPart$restatPart$histsPart$ingestsPart$raddsPart$rbasesPart$rowHwmPart$paddsPart$propResetPart$conResetPart}"""
+      s""""removed":${arr(c.removed)}$multiPart$bloomsPart$bloomColPart$dvPart$schemaPart$tsPart$constraintPart$schemaJsonPart$renamePart$sizesPart$caddsPart$partByPart$restatPart$histsPart$ingestsPart$raddsPart$rbasesPart$rowHwmPart$paddsPart$propResetPart$conResetPart}"""
   }
 
   private def parse(line: String): Commit = {
@@ -410,8 +370,7 @@ object TxnLog {
       s""""$k":(-?\\d+)""".r.findFirstMatchIn(line).map(_.group(1).toLong).getOrElse(0L)
     Commit(num("version"), str("action"), str("txnId"), num("readVersion"),
       arr("added", required = true), arr("removed", required = true),
-      arr("stats", required = false).map(parseStat), strOpt("schema"),
-      strOpt("statsCol"), arr("blooms", required = false), strOpt("bloomCol"),
+      strOpt("schema"), arr("blooms", required = false), strOpt("bloomCol"),
       arr("dvFiles", required = false), arr("dvs", required = false),
       numOpt("ts"), arr("mstats", required = false), strOpt("constraint"),
       strOpt("schemaJson"), strOpt("rename"),
@@ -478,24 +437,24 @@ object TxnLog {
     headFromListing(listDir(logDir(root)))
 
   // ---- checkpoints ----
-  // `_log/<version>.checkpoint`, format v2: a header line, then
+  // `_log/<version>.checkpoint`: the `#graft-ckpt-v2` header line, then
   //   S <schemaId>                       current schema fingerprint (if any)
   //   T <txnId> <version>                one per committed transaction <= version
-  //   F <path>                           one per LIVE file (no stats), or
-  //   F <path> <lo> <hi>                 legacy stats, column unnamed, or
-  //   F <path> <col|-> <lo> <hi> <rows>  long stats (rows -1 = unknown), or
-  //   F <path> <col> <typ> <lo> <hi> <rows> <nulls>  typed stats (r13+;
-  //                                      "s"/"f" bounds are base64 /
-  //                                      Double strings — space-free)
+  //   F <path>                           one per LIVE file without stats, or
+  //   F <path> <col> <typ> <lo> <hi> <rows> <nulls> [<hll>]
+  //                                      one per statted column of a live
+  //                                      file, the record's mstats token
+  //                                      split on spaces ("s"/"f" bounds
+  //                                      are base64 / Double strings —
+  //                                      space-free; -1 = unknown)
+  //   Z <path> <size> <modTime>          recorded size of a live file
   //   B <path> <col> <hex>               bloom filter of a live file
-  //   R <logical> <physical>             column-mapping entry (r13+)
+  //   R <logical> <physical>             column-mapping entry
   // Everything snapshot resolution, txnId idempotency, schema
   // enforcement, stats pruning and bloom point-skipping need, in one
   // atomically-published artifact — resolution for any version >= the
-  // checkpoint folds only the log tail behind it. Legacy v1
-  // checkpoints (bare path lines) still load; they carry no ledger,
-  // so folds that need one fall back to version 0 (correct, just
-  // unseeded).
+  // checkpoint folds only the log tail behind it. Any other line (a
+  // missing header included) fails the load.
 
   private val CkptHeader = "#graft-ckpt-v2"
 
@@ -503,7 +462,6 @@ object TxnLog {
                                files: Seq[(String, FileMeta)],
                                txns: Map[String, Long],
                                schema: String,
-                               hasLedger: Boolean,
                                constraints: Map[String, String] = Map.empty,
                                schemaJson: String = "",
                                renames: Map[String, String] = Map.empty,
@@ -542,77 +500,63 @@ object TxnLog {
 
   private def parseCheckpoint(v: Long, body: String): CkptState = {
     val lines = body.split("\n").toSeq.filter(_.nonEmpty)
-    if (lines.headOption.contains(CkptHeader)) {
-      var schema = ""
-      var schemaJson = ""
-      var partitionBy = ""
-      val txns = Map.newBuilder[String, Long]
-      val constraints = Map.newBuilder[String, String]
-      val renames = Map.newBuilder[String, String]
-      val hists = Map.newBuilder[String, String]
-      val ingests = Set.newBuilder[String]
-      val props = Map.newBuilder[String, String]
-      var rowHwm = 0L
-      val files = scala.collection.mutable.LinkedHashMap.empty[String, FileMeta]
-      lines.drop(1).foreach { l =>
-        def addStat(f: String, c: String, st: FileStat): Unit = {
+    if (!lines.headOption.contains(CkptHeader))
+      sys.error(s"bad checkpoint line: ${lines.headOption.getOrElse("")}")
+    var schema = ""
+    var schemaJson = ""
+    var partitionBy = ""
+    val txns = Map.newBuilder[String, Long]
+    val constraints = Map.newBuilder[String, String]
+    val renames = Map.newBuilder[String, String]
+    val hists = Map.newBuilder[String, String]
+    val ingests = Set.newBuilder[String]
+    val props = Map.newBuilder[String, String]
+    var rowHwm = 0L
+    val files = scala.collection.mutable.LinkedHashMap.empty[String, FileMeta]
+    lines.drop(1).foreach { l =>
+      // `C <name> <expr…>`: the expr half may contain spaces —
+      // handled before the token match
+      if (l.startsWith("C ")) {
+        val rest = l.drop(2)
+        val cut = rest.indexOf(' ')
+        constraints += (rest.take(cut) -> rest.drop(cut + 1))
+      } else if (l.startsWith("K ")) {
+        // `K <key> <value…>`: the value half may contain spaces
+        val rest = l.drop(2)
+        val cut = rest.indexOf(' ')
+        props += (rest.take(cut) -> rest.drop(cut + 1))
+      } else l.split(" ").toSeq match {
+        case Seq("S", id)          => schema = id
+        case Seq("J", b64)         => schemaJson = b64
+        case Seq("T", txn, ver)    => txns += (txn -> ver.toLong)
+        case Seq("F", f)           =>
+          files(f) = files.getOrElse(f, FileMeta())
+        case Seq("F", f, c, t, lo, hi, n, nl, hll @ _*) if hll.size <= 1 =>
           val m = files.getOrElse(f, FileMeta())
-          files(f) = m.copy(stats = m.stats + (c -> st))
-        }
-        // `C <name> <expr…>`: the expr half may contain spaces —
-        // handled before the token match
-        if (l.startsWith("C ")) {
-          val rest = l.drop(2)
-          val cut = rest.indexOf(' ')
-          constraints += (rest.take(cut) -> rest.drop(cut + 1))
-        } else if (l.startsWith("K ")) {
-          // `K <key> <value…>`: the value half may contain spaces
-          val rest = l.drop(2)
-          val cut = rest.indexOf(' ')
-          props += (rest.take(cut) -> rest.drop(cut + 1))
-        } else l.split(" ").toSeq match {
-          case Seq("S", id)          => schema = id
-          case Seq("J", b64)         => schemaJson = b64
-          case Seq("T", txn, ver)    => txns += (txn -> ver.toLong)
-          case Seq("F", f)           =>
-            files(f) = files.getOrElse(f, FileMeta())
-          case Seq("F", f, lo, hi)   => // legacy unnamed-column stat
-            addStat(f, "", FileStat(lo.toLong, hi.toLong))
-          case Seq("F", f, c, lo, hi, n) => // one line per statted column
-            addStat(f, if (c == "-") "" else c,
-              FileStat(lo.toLong, hi.toLong, n.toLong))
-          case Seq("F", f, c, t, lo, hi, n, nl) => // typed stat (r13+)
-            addStat(f, if (c == "-") "" else c,
-              parseOneStat(t, lo, hi, n.toLong, nl.toLong))
-          case Seq("F", f, c, t, lo, hi, n, nl, h) => // + HLL sketch (r14)
-            addStat(f, if (c == "-") "" else c,
-              parseOneStat(t, lo, hi, n.toLong, nl.toLong, h))
-          case Seq("B", f, c, hex)   =>
-            files(f) = files.getOrElse(f, FileMeta())
-              .copy(bloom = Some(hex), bloomCol = c)
-          case Seq("D", f, hex)      =>
-            files(f) = files.getOrElse(f, FileMeta()).copy(dv = Some(hex))
-          case Seq("R", l2, p)       => renames += (l2 -> p)
-          case Seq("P", cols)        => partitionBy = cols
-          case Seq("H", c, payload)  => hists += (c -> payload)
-          case Seq("I", id)          => ingests += id
-          case Seq("Z", f, sz)       =>
-            files(f) = files.getOrElse(f, FileMeta()).copy(size = sz.toLong)
-          case Seq("Z", f, sz, mt)   =>
-            files(f) = files.getOrElse(f, FileMeta())
-              .copy(size = sz.toLong, modTime = mt.toLong)
-          case Seq("O", f, b)        => // base row id (X-A96)
-            files(f) = files.getOrElse(f, FileMeta())
-              .copy(rowBase = Some(b.toLong))
-          case Seq("W", hwm)         => rowHwm = hwm.toLong
-          case other => sys.error(s"bad checkpoint line: $l")
-        }
+          files(f) = m.copy(stats = m.stats +
+            (c -> parseOneStat(t, lo, hi, n.toLong, nl.toLong, hll.mkString)))
+        case Seq("B", f, c, hex)   =>
+          files(f) = files.getOrElse(f, FileMeta())
+            .copy(bloom = Some(hex), bloomCol = c)
+        case Seq("D", f, hex)      =>
+          files(f) = files.getOrElse(f, FileMeta()).copy(dv = Some(hex))
+        case Seq("R", l2, p)       => renames += (l2 -> p)
+        case Seq("P", cols)        => partitionBy = cols
+        case Seq("H", c, payload)  => hists += (c -> payload)
+        case Seq("I", id)          => ingests += id
+        case Seq("Z", f, sz, mt)   =>
+          files(f) = files.getOrElse(f, FileMeta())
+            .copy(size = sz.toLong, modTime = mt.toLong)
+        case Seq("O", f, b)        => // base row id (X-A96)
+          files(f) = files.getOrElse(f, FileMeta())
+            .copy(rowBase = Some(b.toLong))
+        case Seq("W", hwm)         => rowHwm = hwm.toLong
+        case _ => sys.error(s"bad checkpoint line: $l")
       }
-      CkptState(v, files.toSeq, txns.result(), schema, hasLedger = true,
-        constraints.result(), schemaJson, renames.result(), partitionBy,
-        hists.result(), ingests.result(), props.result(), rowHwm)
-    } else // legacy v1: live paths only
-      CkptState(v, lines.map(_ -> FileMeta()), Map.empty, "", hasLedger = false)
+    }
+    CkptState(v, files.toSeq, txns.result(), schema,
+      constraints.result(), schemaJson, renames.result(), partitionBy,
+      hists.result(), ingests.result(), props.result(), rowHwm)
   }
 
   /** Latest checkpoint at or below `version`, from a pre-fetched log
@@ -644,16 +588,12 @@ object TxnLog {
 
   /** Fold the table state at `version`: live files (with stats), the
     * committed-txn ledger, and the current schema — seeded from the
-    * latest usable checkpoint, then the log tail. Metadata-only.
+    * latest checkpoint, then the log tail. Metadata-only.
     */
   private def resolveState(root: String, version: Long): CkptState = {
-    val prior = loadCheckpoint(root, version)
-    val (fromV, seed) = prior match {
-      case Some(c) if c.hasLedger => (c.version, c)
-      // a v1 checkpoint has no ledger/schema — refold from 0 (rare:
-      // only tables checkpointed by a pre-v2 build)
-      case _ => (0L, CkptState(0L, Nil, Map.empty, "", hasLedger = true))
-    }
+    val seed = loadCheckpoint(root, version)
+      .getOrElse(CkptState(0L, Nil, Map.empty, ""))
+    val fromV = seed.version
     val live = scala.collection.mutable.LinkedHashMap.empty[String, FileMeta]
     seed.files.foreach { case (f, m) => live(f) = m }
     var schema = seed.schema
@@ -674,7 +614,6 @@ object TxnLog {
     var rowHwm = seed.rowHwm
     var top = fromV
     commitsInRange(root, fromV, version).foreach { c =>
-      val stats = if (c.stats.size == c.added.size) c.stats else c.added.map(_ => None)
       val blooms = if (c.blooms.size == c.added.size) c.blooms else c.added.map(_ => "")
       val multi = if (c.multiStats.size == c.added.size) c.multiStats
                   else c.added.map(_ => "")
@@ -682,13 +621,11 @@ object TxnLog {
       val rbases = if (c.rbases.size == c.added.size) c.rbases
                    else c.added.map(_ => -1L)
       c.added.zipWithIndex.foreach { case (f, i) =>
-        val (st, bl, ms) = (stats(i), blooms(i), multi(i))
-        val statMap = parseMultiStat(ms) ++
-          st.map(s => c.statsCol -> s).toMap // primary col last: it wins ties
+        val bl = blooms(i)
         // modTime = the commit's timestamp: when the file became
         // table-visible — what `_metadata.file_modification_time`
         // surfaces without a filesystem stat
-        live(f) = FileMeta(statMap,
+        live(f) = FileMeta(parseMultiStat(multi(i)),
           Some(bl).filter(_.nonEmpty), if (bl.nonEmpty) c.bloomCol else "",
           size = sizes(i), modTime = c.ts,
           rowBase = Some(rbases(i)).filter(_ >= 0L))
@@ -783,7 +720,7 @@ object TxnLog {
       }
       top = c.version
     }
-    CkptState(top, live.toSeq, txns.toMap, schema, hasLedger = true,
+    CkptState(top, live.toSeq, txns.toMap, schema,
       constraints.toMap, schemaJson, renames.toMap, partitionBy, hists.toMap,
       ingests.toSet, props.toMap, rowHwm)
   }
@@ -826,20 +763,10 @@ object TxnLog {
     st.files.foreach { case (f, meta) =>
       if (meta.stats.isEmpty) body.append("F ").append(f).append('\n')
       else meta.stats.toSeq.sortBy(_._1).foreach { case (c, s) =>
-        body.append("F ").append(f)
-          .append(' ').append(if (c.isEmpty) "-" else c)
-        if (s.typ == "l" && s.nulls < 0L && s.hll.isEmpty) // legacy long line
-          body.append(' ').append(s.lo).append(' ').append(s.hi)
-            .append(' ').append(s.rows).append('\n')
-        else {
-          body.append(' ').append(s.typ)
-          if (s.typ == "s" || s.typ == "f")
-            body.append(' ').append(s.loS).append(' ').append(s.hiS)
-          else body.append(' ').append(s.lo).append(' ').append(s.hi)
-          body.append(' ').append(s.rows).append(' ').append(s.nulls)
-          if (s.hll.nonEmpty) body.append(' ').append(s.hll)
-          body.append('\n')
-        }
+        // the record's mstats token, space-separated (no token field
+        // contains a space or ':')
+        body.append("F ").append(f).append(' ')
+          .append(renderOneStat(c, s).replace(':', ' ')).append('\n')
       }
       if (meta.size >= 0L)
         body.append("Z ").append(f).append(' ').append(meta.size)
@@ -1398,16 +1325,12 @@ object TxnLog {
     // before touching files or stats (no-ops on rename-free tables)
     val physSource = toPhysical(source, st0.renames)
     val physKeys = keyCols.map(physicalName(st0.renames, _))
-    // EXACT column match only: the legacy unnamed ("") stat is
-    // caller-asserted on the explicit readRange path, but a merge's
-    // key-uniqueness invariant must not ride an assertion — a pre-r12
-    // table statted on a different column would otherwise skip
-    // genuinely affected files and silently duplicate keys. Files
-    // with only a legacy stat land in `unranged` = always affected.
-    // And only an INTEGRAL key may range-compare against "l" stats at
-    // all: cast("long") of a string key is not order-preserving (a
-    // non-numeric key nulls/throws), so a non-integral key disables
-    // pruning — every file is affected, correct just unpruned.
+    // Files without an "l" stat on the key land in `unranged` =
+    // always affected. And only an INTEGRAL key may range-compare
+    // against "l" stats at all: cast("long") of a string key is not
+    // order-preserving (a non-numeric key nulls/throws), so a
+    // non-integral key disables pruning — every file is affected,
+    // correct just unpruned.
     // per-column admission, intersected across the key columns
     def admittedFor(pk: String): Option[Set[String]] = {
       val integral = physSource.schema(pk).dataType match {
@@ -1802,7 +1725,7 @@ object TxnLog {
     val victims = state.filter(f => victimSet(f._1))
     val clean = readForRewrite(s, resolveState(root, readV).schemaJson, victims)
     val (cols, buckets) =
-      splitStatKeys(victims.flatMap(_._2.stats.keys).filter(_.nonEmpty).distinct)
+      splitStatKeys(victims.flatMap(_._2.stats.keys).distinct)
     val (files, multi) =
       if (cols.isEmpty && buckets.isEmpty) (stage(clean, root, s"$txnId-a$uuid12"),
         Seq.empty[Map[String, FileStat]])
@@ -2010,7 +1933,7 @@ object TxnLog {
       if (pfields.nonEmpty) clusterByPartitioning(clean, pfields, nOut)
       else clean.repartition(nOut)
     val (cols, buckets) =
-      splitStatKeys(victims.flatMap(_._2.stats.keys).filter(_.nonEmpty).distinct)
+      splitStatKeys(victims.flatMap(_._2.stats.keys).distinct)
     val (files, multi) =
       if (cols.isEmpty && buckets.isEmpty) (stage(folded, root, s"$txnId-a$uuid12"),
         Seq.empty[Map[String, FileStat]])
@@ -2183,32 +2106,6 @@ object TxnLog {
       .map(_.toString).sorted
   }
 
-  /** Stage with per-file (min, max, rowCount) of `statsCol` computed
-    * in one pass — returned aligned with the file list, for the
-    * caller to pass to [[commit]] so the stats land INLINE in the log
-    * record (no sidecar read at plan time; stats survive vacuum of
-    * other dirs and live exactly as long as the log does). The
-    * per-file grain is bounded by the file count, not the row count —
-    * the collect is metadata-scale.
-    */
-  def stageWithStats(df: DataFrame, root: String, txnId: String,
-                     statsCol: String): (Seq[String], Seq[Option[FileStat]]) = {
-    val files = stage(df, root, txnId)
-    val spark = df.sparkSession
-    import org.apache.spark.sql.functions.{col, count, lit, max => fmax, min => fmin}
-    val ranges = spark.read.parquet(Paths.get(root, "data", txnId).toString)
-      .select(inputFilePath.as("f"), col(statsCol).cast("long").as("s"))
-      .groupBy("f").agg(fmin("s").as("lo"), fmax("s").as("hi"), count(lit(1)).as("n"))
-      .collect()
-      .flatMap(r =>
-        // an empty or all-null file has no range: record no stat (it
-        // then always survives pruning — sound — and scans in aggs)
-        if (r.isNullAt(1) || r.isNullAt(2)) None
-        else Some((r.getString(0),
-          FileStat(r.getLong(1), r.getLong(2), r.getLong(3))))).toMap
-    (files, files.map(ranges.get))
-  }
-
   /** Stage with per-file (min, max, rowCount) for EVERY column in
     * `cols`, one scan pass — multi-column data skipping: a range read
     * or metadata aggregate on ANY of them prunes (Delta collects its
@@ -2226,7 +2123,7 @@ object TxnLog {
 
   /** Per-file per-column (min, max, rowCount, nullCount) over an
     * already-staged txn dir, one scan pass — for composing stats with
-    * other staging flows (e.g. [[stageWithIndex]]'s bloom build).
+    * other staging flows (e.g. a [[bloomsForStaged]] build).
     * Aligned with `files`.
     *
     * Stats are TYPED ([[FileStat.typ]]): integral columns record a
@@ -2509,10 +2406,13 @@ object TxnLog {
     */
   val AnalyzeChunkFiles = 2048
 
-  /** [[stageWithStats]] plus a per-file BLOOM FILTER over `bloomCol`
-    * (a high-cardinality lookup key — typically NOT the clustering
-    * column, whose lookups min/max stats already serve). Returns
-    * (files, stats, blooms) aligned; pass all three to [[commit]].
+  /** Per-file BLOOM FILTERS over `bloomCol` (a high-cardinality
+    * lookup key — typically NOT the clustering column, whose lookups
+    * min/max stats already serve) for an ALREADY-staged txn dir,
+    * aligned with `files`; pass them to [[commit]] with the
+    * [[stageWithStatsFor]] stats. Rewrite paths ([[mergeIntoKeys]])
+    * re-attach the point-lookup index their victim files carried with
+    * the same (column, bits, k) the victims were built under.
     *
     * The filter is the standard double-hashing bloom (Kirsch &
     * Mitzenmacher 2006): bit positions `(h1 + i·h2) mod m` for
@@ -2523,24 +2423,7 @@ object TxnLog {
     * (file, position), distinct (bounded by m per file — map-side
     * combine collapses duplicates), then OR into a driver-side bitset
     * whose size is files × m/8 bytes — metadata-scale, same class as
-    * the stats collect above.
-    */
-  def stageWithIndex(df: DataFrame, root: String, txnId: String,
-                     statsCol: String, bloomCol: String,
-                     bloomBits: Int = 8192, bloomK: Int = 4)
-      : (Seq[String], Seq[Option[FileStat]], Seq[String]) = {
-    val (files, stats) = stageWithStats(df, root, txnId, statsCol)
-    (files, stats,
-      bloomsForStaged(df.sparkSession, root, txnId, bloomCol, files,
-        bloomBits, bloomK))
-  }
-
-  /** The bloom half of [[stageWithIndex]], over an ALREADY-staged txn
-    * dir: per-file filters over `bloomCol`, aligned with `files` —
-    * factored out so rewrite paths ([[mergeIntoKeys]]) can re-attach
-    * the point-lookup index their victim files carried with the same
-    * (column, bits, k) the victims were built under. Same build/probe
-    * contract as [[stageWithIndex]].
+    * the stats collect.
     */
   def bloomsForStaged(spark: SparkSession, root: String, txnId: String,
                       bloomCol: String, files: Seq[String],
@@ -2597,7 +2480,7 @@ object TxnLog {
     * with both hashes REDUCED mod m first — the sums then stay under
     * `(k+1)·m`, so the arithmetic can never overflow (ANSI mode
     * rejects wrapping). ONE definition shared by build
-    * ([[stageWithIndex]]) and probe ([[readPoint]]), so the two can
+    * ([[bloomsForStaged]]) and probe ([[readPoint]]), so the two can
     * never drift.
     */
   private def bloomPosExprs(v: org.apache.spark.sql.Column, bloomBits: Int,
@@ -2690,12 +2573,10 @@ object TxnLog {
     val column0 = physicalName(st0.renames, column)
     val kept = state.filter {
       case (f, m) => {
-        // only an EXACT column match OF THE MATCHING KIND may
-        // range-prune a point lookup (the legacy unnamed stat stays
-        // caller-asserted for ranges, but a point probe is precise
-        // enough to demand precision; a typed stat of another kind
-        // keeps the file — sound). Any type lit() accepts can
-        // bloom-probe (the build hashes the column).
+        // only a stat OF THE MATCHING KIND may range-prune a point
+        // lookup (a typed stat of another kind keeps the file —
+        // sound). Any type lit() accepts can bloom-probe (the build
+        // hashes the column).
         val rangeOk = value match {
           case l: Long => m.stats.get(column0).filter(_.typ == "l")
             .forall(st => l >= st.lo && l <= st.hi)
@@ -2736,9 +2617,7 @@ object TxnLog {
     */
   def commit(root: String, action: String, added: Seq[String],
              removed: Seq[String], readVersion: Long, txnId: String,
-             stats: Seq[Option[FileStat]] = Nil,
              schemaId: String = "",
-             statsCol: String = "",
              blooms: Seq[String] = Nil,
              bloomCol: String = "",
              dvFiles: Seq[String] = Nil,
@@ -2767,7 +2646,6 @@ object TxnLog {
     require(rowBases.isEmpty || rowBases.size == added.size,
       s"txn $txnId: rowBases (${rowBases.size}) must align with added (${added.size})")
     validateToken("txnId", txnId)
-    if (statsCol.nonEmpty) validateToken("statsCol", statsCol)
     if (bloomCol.nonEmpty) validateToken("bloomCol", bloomCol)
     require(!constraint.exists(c => c == '\n' || c == '\r' || c == '"'),
       s"txn $txnId: constraint text may not contain newlines or quotes")
@@ -2776,8 +2654,6 @@ object TxnLog {
     require(multiStats.flatMap(_.keys).forall(c =>
         c.nonEmpty && !c.exists(":|, \"".contains(_))),
       s"txn $txnId: multi-stat column names must be non-empty and separator-free")
-    require(stats.isEmpty || stats.size == added.size,
-      s"txn $txnId: stats (${stats.size}) must align with added (${added.size})")
     require(blooms.isEmpty || blooms.size == added.size,
       s"txn $txnId: blooms (${blooms.size}) must align with added (${added.size})")
     require(blooms.forall(b => b.isEmpty || b.matches("\\d+n?:[0-9a-f]+")),
@@ -2848,7 +2724,7 @@ object TxnLog {
     // Checkpoint state is read ONCE: commits landing after it show up
     // in the per-attempt tail fold below, and checkpoints never
     // change conflict outcomes.
-    val ckpt = loadCheckpoint(root, Long.MaxValue).filter(_.hasLedger)
+    val ckpt = loadCheckpoint(root, Long.MaxValue)
     val baseV = ckpt.map(_.version).getOrElse(0L)
     // txnId idempotency, ledger fast path: a replayed transaction
     // (crash-recovered stream batch, retried job) finds its own
@@ -2950,15 +2826,10 @@ object TxnLog {
       // counts allocate nothing (their rows read `_row_id` null —
       // sound, never wrong).
       val rowsPerFile: Seq[Long] = added.indices.map { i =>
-        val fromMulti =
-          if (multiStats.size == added.size)
-            multiStats(i).values.collectFirst { case st if st.rows >= 0 => st.rows }
-          else None
-        val fromStat =
-          if (stats.size == added.size)
-            stats(i).collect { case st if st.rows >= 0 => st.rows }
-          else None
-        fromMulti.orElse(fromStat).getOrElse(-1L)
+        if (multiStats.size == added.size)
+          multiStats(i).values.collectFirst { case st if st.rows >= 0 => st.rows }
+            .getOrElse(-1L)
+        else -1L
       }
       val hwm0 = math.max(ckpt.map(_.rowHwm).getOrElse(0L),
         tail.iterator.map(_.rowHwm).foldLeft(0L)(math.max))
@@ -2994,7 +2865,7 @@ object TxnLog {
       val hwmTop = math.max(allocTop, math.max(rowHwmFloor, passTop))
       val newHwm = if (hwmTop > hwm0) hwmTop else -1L
       val rec = Commit(head + 1, action, txnId, readVersion, added, removed,
-        stats, schemaId, statsCol, blooms, bloomCol, dvFiles, dvPayloads,
+        schemaId, blooms, bloomCol, dvFiles, dvPayloads,
         commitTs, multiStats.map(renderMultiStat), constraint, schemaJson,
         rename, sizes, caddsB64, partitionBy.mkString(","),
         restatFiles, restats.map(renderMultiStat), histsB64, ingests, radds,
@@ -3022,64 +2893,44 @@ object TxnLog {
     * recipe, [[TxnStream.maintainInto]]).
     */
   def committedTxnIds(root: String): Map[String, Long] = {
-    val ckpt = loadCheckpoint(root, Long.MaxValue).filter(_.hasLedger)
+    val ckpt = loadCheckpoint(root, Long.MaxValue)
     ckpt.map(_.txns).getOrElse(Map.empty) ++
       commitsInRange(root, ckpt.map(_.version).getOrElse(0L), Long.MaxValue)
         .map(c => c.txnId -> c.version)
   }
 
   /** The commit with this txnId, if any — ledger fast path, log-tail
-    * fallback. O(tail) given a v2 checkpoint.
+    * fallback. O(tail) given a checkpoint.
     */
   def findCommit(root: String, txnId: String): Option[Commit] = {
-    val ckpt = loadCheckpoint(root, Long.MaxValue).filter(_.hasLedger)
+    val ckpt = loadCheckpoint(root, Long.MaxValue)
     ckpt.flatMap(_.txns.get(txnId)).map(readCommit(root, _))
       .orElse(commitsInRange(root, ckpt.map(_.version).getOrElse(0L), Long.MaxValue)
         .find(_.txnId == txnId))
   }
 
-  /** The snapshot's live files whose [min, max] range of the stats
-    * column overlaps [lo, hi]. Stats come from the commit records /
-    * checkpoint (inline); files committed by a pre-r12 build fall
-    * back to their staging dir's `_stats.json` sidecar. Files with no
-    * stats anywhere are always kept (pruning must never be unsound).
-    * Metadata-only.
+  /** The snapshot's live files whose [min, max] range of `column`
+    * (its physical name) overlaps [lo, hi], from the stats inline in
+    * the commit records / checkpoint. Files with no stat on `column`
+    * are always kept (pruning must never be unsound). Metadata-only.
     */
-  def prunedFiles(root: String, lo: Long, hi: Long,
-                  version: Long = Long.MaxValue,
-                  statsCol: String = ""): Seq[String] =
-    pruneState(snapshotState(root, version), lo, hi, statsCol).map(_._1)
+  def prunedFiles(root: String, column: String, lo: Long, hi: Long,
+                  version: Long = Long.MaxValue): Seq[String] =
+    pruneState(snapshotState(root, version), column, lo, hi).map(_._1)
 
   /** The pruning decision over an ALREADY-resolved state — lets range
     * reads resolve the snapshot once for pruning AND deletion
-    * vectors. A stat applies only if it describes the queried column
-    * (legacy stats with no recorded column are caller-asserted, the
-    * pre-r12 contract, and legacy `_stats.json` sidecars still load);
-    * a non-applicable or missing stat keeps the file — pruning must
-    * never be unsound.
+    * vectors. Only a LONG-typed stat of `column` itself can answer a
+    * caller's long range: a typed ("s"/"t"/"d"/"f") stat's long
+    * fields are not the caller's scale, so like a missing stat it
+    * keeps the file (sound).
     */
-  private def pruneState(state: Seq[(String, FileMeta)], lo: Long, hi: Long,
-                         statsCol: String): Seq[(String, FileMeta)] = {
-    val sidecars = scala.collection.mutable.Map.empty[Path, Map[String, (Long, Long)]]
-    def sidecarStat(f: String): Option[FileStat] = {
-      val dir = Paths.get(f).getParent
-      sidecars.getOrElseUpdate(dir, {
-        val sc = dir.resolve("_stats.json")
-        if (!Files.exists(sc)) Map.empty
-        else Files.readString(sc).split("\n").filter(_.nonEmpty).map { line =>
-          val Array(p, l, h) = line.split(" ")
-          p -> ((l.toLong, h.toLong))
-        }.toMap
-      }).get(f).map { case (l, h) => FileStat(l, h) }
-    }
-    state.filter { case (f, m) =>
-      // only a LONG-typed stat can answer a caller's long range —
-      // a typed ("s"/"t"/"d"/"f") stat's long fields are not the
-      // caller's scale, so it keeps the file (sound)
-      m.statFor(statsCol).filter(_.typ == "l").orElse(sidecarStat(f))
+  private def pruneState(state: Seq[(String, FileMeta)], column: String,
+                         lo: Long, hi: Long): Seq[(String, FileMeta)] =
+    state.filter { case (_, m) =>
+      m.stats.get(column).filter(_.typ == "l")
         .forall(s => s.hi >= lo && s.lo <= hi)
     }
-  }
 
   /** Range read with file skipping: scans only [[prunedFiles]] and
     * applies the residual predicate (file ranges can straddle the
@@ -3095,7 +2946,7 @@ object TxnLog {
     // tail fold)
     val st0 = resolveState(root, version)
     val phys = physicalName(st0.renames, statsCol)
-    val kept = pruneState(st0.files, lo, hi, phys)
+    val kept = pruneState(st0.files, phys, lo, hi)
     // no overlapping file means provably zero matching rows (files
     // without stats are never pruned) — keep the snapshot's schema if
     // it has one, and skip the residual filter: on a fully empty
@@ -3108,8 +2959,8 @@ object TxnLog {
   /** COUNT(*) / MIN / MAX of `statsCol` answered from the LOG, not
     * the data: files whose commit record carries full stats (range +
     * row count) for that column contribute pure metadata; only files
-    * without applicable stats — staged by a legacy build, or statted
-    * on a different column — are actually scanned, and their exact
+    * without such a stat (staged without stats, or statted on other
+    * columns) are actually scanned, and their exact
     * aggregate is unioned in. A fully-statted table answers with ZERO
     * data-file opens: at 100 TB that is a few KB of JSON against a
     * full scan, the Delta/Iceberg metadata-only query path. Returns
@@ -3129,10 +2980,10 @@ object TxnLog {
     // possibly its min/max (the extremes may be dead) — DV'd files
     // take the scan path, which applies the vector
     val (metadata, scan) = state.partition { case (_, m) =>
-      m.statFor(phys).exists(s => s.typ == "l" && s.rows >= 0) && m.dv.isEmpty
+      m.stats.get(phys).exists(s => s.typ == "l" && s.rows >= 0) && m.dv.isEmpty
     }
     val metaDF = metadata
-      .map { case (_, m) => val st = m.statFor(phys).get; (st.rows, st.lo, st.hi) }
+      .map { case (_, m) => val st = m.stats(phys); (st.rows, st.lo, st.hi) }
       .toDF("n", "lo", "hi")
     val scanDF =
       if (scan.isEmpty) metaDF.limit(0)

@@ -167,9 +167,8 @@ class TxnLogFileIndex(spark: SparkSession, root: String,
 
   /** Could any row of a file with metadata `m` satisfy `e`? Errs on
     * `true` for every shape it doesn't understand — pruning must
-    * never be unsound. Only an EXACT statted-column match OF THE
-    * ATTRIBUTE'S KIND prunes (the legacy unnamed stat is
-    * caller-asserted and the optimizer is not a caller).
+    * never be unsound. Only a stat on the attribute's own column, OF
+    * THE ATTRIBUTE'S KIND, prunes.
     */
   private def mayMatch(m: TxnLog.FileMeta, e: Expression): Boolean = e match {
     case And(l, r) => mayMatch(m, l) && mayMatch(m, r)

@@ -262,13 +262,6 @@ object TxnStream {
     }
   }
 
-  /** The consumer id `CALL refresh_mv` uses for a given target root —
-    * public so callers can check a materialized view's applied offset
-    * through [[appliedVersion]].
-    */
-  def mvConsumerId(tgtRoot: String): String =
-    GraftProcedures.mvConsumerId(tgtRoot)
-
   /** The highest source version this consumer has applied to
     * `targetRoot`, recovered from the target's OWN committed-txn
     * ledger (O(tail) with checkpoints). 0 = nothing applied.
@@ -316,19 +309,10 @@ object TxnStream {
     */
   def maintainMirror(s: SparkSession, sourceRoot: String, targetRoot: String,
                      consumerId: String, keyCol: String,
-                     upTo: Long = Long.MaxValue,
-                     minApplied: Long = 0L): Seq[Long] = {
+                     upTo: Long = Long.MaxValue): Seq[Long] = {
     import org.apache.spark.sql.functions.col
     val head = math.min(TxnLog.currentVersion(sourceRoot), upTo)
-    // `minApplied` floors the resume point for consumers whose offset
-    // markers live under a LEGACY id (`refresh_mv` pre-r17 used the
-    // typed identifier, not the canonical root): the caller reads the
-    // legacy consumer's applied version and passes it here, so an
-    // upgraded MV resumes instead of replaying the full source
-    // history (which fails outright once pre-horizon source versions
-    // have been vacuumed). Markers written from here on use
-    // `consumerId`; the floor is a one-time migration bridge.
-    val from = math.max(appliedVersion(targetRoot, consumerId), minApplied)
+    val from = appliedVersion(targetRoot, consumerId)
     ((from + 1) to head).flatMap { v =>
       val txnId = s"$consumerId-v$v"
       TxnLog.withTxnLock(txnId) {

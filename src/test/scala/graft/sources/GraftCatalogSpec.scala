@@ -896,38 +896,6 @@ class GraftCatalogSpec extends SparkTestBase {
     assert(e.getMessage.contains("no table"))
   }
 
-  test("refresh_mv upgrade: offsets under the legacy mv-<ident> consumer id floor the resume point — no history replay") {
-    warehouse
-    spark.sql("CREATE TABLE gcat.db.mlsrc (k BIGINT, v BIGINT)")
-    spark.sql("CREATE TABLE gcat.db.mlt (k BIGINT, v BIGINT)")
-    spark.sql("INSERT INTO gcat.db.mlsrc SELECT id, id FROM range(0, 20)")
-    spark.sql("INSERT INTO gcat.db.mlsrc SELECT id, id FROM range(20, 40)")
-    // simulate a pre-r17 deployment: the mirror was maintained under
-    // the TYPED-IDENTIFIER consumer id (`mv-<ident>`), so the target
-    // ledger holds offsets ONLY under that legacy id
-    TxnStream.maintainMirror(spark, root("mlsrc"), root("mlt"),
-      consumerId = "mv-db.mlt", keyCol = "k")
-    assert(spark.sql("SELECT count(*) FROM gcat.db.mlt").head.getLong(0) === 40L)
-    assert(TxnStream.appliedVersion(root("mlt"),
-      TxnStream.mvConsumerId(root("mlt"))) === 0L,
-      "precondition: nothing under the canonical id yet")
-    // one NEW source version, then the upgraded CALL: it must apply
-    // exactly that one version — a replay of the already-applied
-    // history (the pre-fix behavior on a lost offset) would report 3+
-    spark.sql("INSERT INTO gcat.db.mlsrc SELECT id, -id FROM range(40, 50)")
-    val applied = spark.sql(
-      "CALL gcat.system.refresh_mv(source => 'db.mlsrc', target => 'db.mlt', " +
-        "key => 'k')").head.getLong(0)
-    assert(applied === 1L,
-      s"legacy offsets must floor the resume point, applied $applied versions")
-    assert(spark.sql(
-      """SELECT (SELECT count(*) FROM (SELECT * FROM gcat.db.mlsrc
-                                       EXCEPT SELECT * FROM gcat.db.mlt)) +
-                (SELECT count(*) FROM (SELECT * FROM gcat.db.mlt
-                                       EXCEPT SELECT * FROM gcat.db.mlsrc))""")
-      .head.getLong(0) === 0L)
-  }
-
   test("N-dim z-order: CALL optimize_zorder(cols => 'a,b,c') gives tight 3-dim " +
        "boxes and every dimension prunes") {
     warehouse

@@ -265,14 +265,34 @@ class TxnLogSpec extends SparkTestBase {
     assert(TxnLog.checkpoint(root) === 4L, "re-checkpoint at the new head")
   }
 
+  test("the log rejects record and checkpoint shapes it does not write") {
+    def rejects(file: String, body: String, bad: String): Unit = {
+      val root = freshRoot()
+      Files.writeString(java.nio.file.Paths.get(root, "_log", file), body)
+      val e = intercept[RuntimeException](TxnLog.snapshotState(root))
+      assert(e.getMessage.contains(bad), s"expected '$bad' in: ${e.getMessage}")
+    }
+    val ckpt = f"${1L}%020d.checkpoint"
+    // a checkpoint without the header line
+    rejects(ckpt, "/t/data/a.parquet\n", "/t/data/a.parquet")
+    // an unnamed `F <path> <lo> <hi>` stat line
+    rejects(ckpt, "#graft-ckpt-v2\nT t1 1\nF /t/data/a.parquet 1 9\n",
+      "F /t/data/a.parquet 1 9")
+    // a 4-field `col:lo:hi:rows` mstats token in a commit record
+    rejects(f"${1L}%020d.json",
+      """{"version":1,"action":"append","txnId":"t1","readVersion":0,""" +
+        """"added":["/t/data/a.parquet"],"removed":[],"mstats":["k:1:9:10"]}""",
+      "k:1:9:10")
+  }
+
   test("inline commit-record stats prune non-overlapping files; the range read equals filter-after-full-scan") {
     val root = freshRoot()
     // 64 keys range-clustered into 8 files -> disjoint ~8-key ranges
     val data = (1L to 64L).map(k => (k, k * 10L))
-    val (files, stats) = TxnLog.stageWithStats(
-      data.toDF("k", "v").repartitionByRange(8, $"k"), root, "t1", "k")
+    val (files, stats) = TxnLog.stageWithStatsFor(
+      data.toDF("k", "v").repartitionByRange(8, $"k"), root, "t1", Seq("k"))
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-      stats = stats)
+      multiStats = stats)
     assert(files.size === 8)
     // the stats live IN the log record — no sidecar file anywhere, so
     // pruning below provably does zero sidecar reads
@@ -280,7 +300,7 @@ class TxnLogSpec extends SparkTestBase {
       "r12 staging must not write a sidecar; stats are inline in the commit")
 
     // a 10-key range overlaps at most 3 of the 8 range-files
-    val pruned = TxnLog.prunedFiles(root, lo = 20L, hi = 29L)
+    val pruned = TxnLog.prunedFiles(root, "k", lo = 20L, hi = 29L)
     assert(pruned.nonEmpty && pruned.size <= 3,
       s"expected <=3 of 8 files to survive pruning, got ${pruned.size}")
     val got = TxnLog.readRange(spark, root, "k", 20L, 29L)
@@ -289,13 +309,13 @@ class TxnLogSpec extends SparkTestBase {
       "skipping must be invisible in the result")
 
     // a range beyond every file: provably empty without opening data
-    assert(TxnLog.prunedFiles(root, 1000L, 2000L).isEmpty)
+    assert(TxnLog.prunedFiles(root, "k", 1000L, 2000L).isEmpty)
     assert(TxnLog.readRange(spark, root, "k", 1000L, 2000L).count() === 0L)
 
     // files staged WITHOUT stats are never pruned (soundness)
     val plain = TxnLog.stage(Seq((500L, 1L)).toDF("k", "v"), root, "t2")
     TxnLog.commit(root, "append", plain, Nil, readVersion = 1L, txnId = "t2")
-    assert(TxnLog.prunedFiles(root, 20L, 29L).toSet === pruned.toSet ++ plain,
+    assert(TxnLog.prunedFiles(root, "k", 20L, 29L).toSet === pruned.toSet ++ plain,
       "stat-less files must always survive pruning")
     assert(TxnLog.readRange(spark, root, "k", 490L, 510L)
       .as[(Long, Long)].collect().toSet === Set((500L, 1L)))
@@ -304,32 +324,7 @@ class TxnLogSpec extends SparkTestBase {
     // post-checkpoint resolution prunes identically with no record
     // opens and no sidecars
     TxnLog.checkpoint(root)
-    assert(TxnLog.prunedFiles(root, 20L, 29L).toSet === pruned.toSet ++ plain)
-  }
-
-  test("legacy sidecar stats still prune: files committed by a pre-r12 build keep their skipping") {
-    val root = freshRoot()
-    val data = (1L to 64L).map(k => (k, k * 10L))
-    // stage WITHOUT inline stats, then hand-write the old-format
-    // sidecar exactly as the pre-r12 stageWithStats did
-    val files = TxnLog.stage(
-      data.toDF("k", "v").repartitionByRange(8, $"k"), root, "t1")
-    TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1")
-    val ranges = spark.read.parquet(java.nio.file.Paths.get(root, "data", "t1").toString)
-      .select(org.apache.spark.sql.functions.input_file_name().as("f"), $"k")
-      .groupBy("f").agg(org.apache.spark.sql.functions.min("k").as("lo"),
-        org.apache.spark.sql.functions.max("k").as("hi"))
-      .collect()
-      .map(r => (r.getString(0).stripPrefix("file://").stripPrefix("file:"),
-        r.getLong(1), r.getLong(2)))
-    Files.writeString(java.nio.file.Paths.get(root, "data", "t1", "_stats.json"),
-      ranges.map { case (f, lo, hi) => s"$f $lo $hi" }.mkString("\n"))
-    val pruned = TxnLog.prunedFiles(root, 20L, 29L)
-    assert(pruned.nonEmpty && pruned.size <= 3,
-      s"sidecar fallback must still prune: got ${pruned.size} of 8")
-    assert(TxnLog.readRange(spark, root, "k", 20L, 29L)
-      .as[(Long, Long)].collect().toSet ===
-      data.filter(d => d._1 >= 20 && d._1 <= 29).toSet)
+    assert(TxnLog.prunedFiles(root, "k", 20L, 29L).toSet === pruned.toSet ++ plain)
   }
 
   test("schema enforcement: a drifted append aborts; an explicit schema-evolve commit lands") {
@@ -478,10 +473,10 @@ class TxnLogSpec extends SparkTestBase {
   test("statsAggregate answers COUNT/MIN/MAX from the log alone: correct with every data file corrupted") {
     val root = freshRoot()
     val data = (1L to 64L).map(k => (k, k * 10L))
-    val (files, stats) = TxnLog.stageWithStats(
-      data.toDF("k", "v").repartitionByRange(8, $"k"), root, "t1", "k")
+    val (files, stats) = TxnLog.stageWithStatsFor(
+      data.toDF("k", "v").repartitionByRange(8, $"k"), root, "t1", Seq("k"))
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-      stats = stats, statsCol = "k")
+      multiStats = stats)
     def agg(): (Long, Long, Long) = {
       val r = TxnLog.statsAggregate(spark, root, "k").head()
       (r.getLong(0), r.getLong(1), r.getLong(2))
@@ -500,10 +495,10 @@ class TxnLogSpec extends SparkTestBase {
 
   test("statsAggregate hybrid: files without applicable stats are scanned, not guessed") {
     val root = freshRoot()
-    val (f1, st1) = TxnLog.stageWithStats(
-      (1L to 10L).map(k => (k, k)).toDF("k", "v"), root, "t1", "k")
+    val (f1, st1) = TxnLog.stageWithStatsFor(
+      (1L to 10L).map(k => (k, k)).toDF("k", "v"), root, "t1", Seq("k"))
     TxnLog.commit(root, "append", f1, Nil, readVersion = 0L, txnId = "t1",
-      stats = st1, statsCol = "k")
+      multiStats = st1)
     // second commit has NO stats: its rows must come from a real scan
     val f2 = TxnLog.stage(Seq((100L, 1L), (101L, 1L)).toDF("k", "v"), root, "t2")
     TxnLog.commit(root, "append", f2, Nil, readVersion = 1L, txnId = "t2")
@@ -511,10 +506,10 @@ class TxnLogSpec extends SparkTestBase {
     assert((r.getLong(0), r.getLong(1), r.getLong(2)) === ((12L, 1L, 101L)))
     // stats recorded for a DIFFERENT column must not masquerade as
     // k-stats: v-stats on a third commit, aggregate on k still exact
-    val (f3, st3) = TxnLog.stageWithStats(
-      Seq((200L, 7L)).toDF("k", "v"), root, "t3", "v")
+    val (f3, st3) = TxnLog.stageWithStatsFor(
+      Seq((200L, 7L)).toDF("k", "v"), root, "t3", Seq("v"))
     TxnLog.commit(root, "append", f3, Nil, readVersion = 2L, txnId = "t3",
-      stats = st3, statsCol = "v")
+      multiStats = st3)
     val r2 = TxnLog.statsAggregate(spark, root, "k").head()
     assert((r2.getLong(0), r2.getLong(1), r2.getLong(2)) === ((13L, 1L, 200L)),
       "wrong-column stats must fall back to scanning, not claim v-ranges as k-ranges")
@@ -527,12 +522,12 @@ class TxnLogSpec extends SparkTestBase {
     // the shape where range stats are useless and blooms are the
     // only index that works
     val data = (1L to 512L).map(k => (k, k * 2654435761L % 1000000007L))
-    val (files, stats, blooms) = TxnLog.stageWithIndex(
-      data.toDF("k", "tag").repartitionByRange(8, $"k"), root, "t1",
-      statsCol = "k", bloomCol = "tag")
+    val (files, stats) = TxnLog.stageWithStatsFor(
+      data.toDF("k", "tag").repartitionByRange(8, $"k"), root, "t1", Seq("k"))
+    val blooms = TxnLog.bloomsForStaged(spark, root, "t1", "tag", files)
     assert(files.size === 8 && blooms.forall(_.nonEmpty))
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-      stats = stats, statsCol = "k", blooms = blooms, bloomCol = "tag")
+      multiStats = stats, blooms = blooms, bloomCol = "tag")
 
     val probe = 137L * 2654435761L % 1000000007L
     val got = TxnLog.readPoint(spark, root, "tag", probe)
@@ -561,10 +556,10 @@ class TxnLogSpec extends SparkTestBase {
   test("deletion vectors: row-level delete with zero file rewrites; time travel sees pre-delete rows") {
     val root = freshRoot()
     val data = (1L to 64L).map(k => (k, k * 10L))
-    val (files, stats) = TxnLog.stageWithStats(
-      data.toDF("k", "v").repartitionByRange(8, $"k"), root, "t1", "k")
+    val (files, stats) = TxnLog.stageWithStatsFor(
+      data.toDF("k", "v").repartitionByRange(8, $"k"), root, "t1", Seq("k"))
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-      stats = stats, statsCol = "k")
+      multiStats = stats)
     val fingerprints = files.map(f => (f, Files.getLastModifiedTime(
       java.nio.file.Paths.get(f)), Files.size(java.nio.file.Paths.get(f))))
 
@@ -659,10 +654,10 @@ class TxnLogSpec extends SparkTestBase {
   test("mergeInto: upsert semantics with stats-pruned rewrites — untouched files keep their bytes") {
     val root = freshRoot()
     val data = (1L to 64L).map(k => (k, k * 10L))
-    val (files, stats) = TxnLog.stageWithStats(
-      data.toDF("k", "v").repartitionByRange(8, $"k"), root, "t1", "k")
+    val (files, stats) = TxnLog.stageWithStatsFor(
+      data.toDF("k", "v").repartitionByRange(8, $"k"), root, "t1", Seq("k"))
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-      stats = stats, statsCol = "k")
+      multiStats = stats)
     val mtimes = files.map(f => (f, Files.getLastModifiedTime(java.nio.file.Paths.get(f))))
 
     // source confined to keys 20..29 (+ one insert at 1000): at most
@@ -754,9 +749,9 @@ class TxnLogSpec extends SparkTestBase {
   test("mergeInto: merge∥merge on overlapping keys conflicts; merge compacts deletion vectors in") {
     val root = freshRoot()
     val data = (1L to 16L).map(k => (k, k))
-    val (f1, st1) = TxnLog.stageWithStats(data.toDF("k", "v"), root, "t1", "k")
+    val (f1, st1) = TxnLog.stageWithStatsFor(data.toDF("k", "v"), root, "t1", Seq("k"))
     TxnLog.commit(root, "append", f1, Nil, readVersion = 0L, txnId = "t1",
-      stats = st1, statsCol = "k")
+      multiStats = st1)
     // DV first: merge must not resurrect the deleted row
     TxnLog.deleteWhere(spark, root, col("k") === 3L, "d1")
     TxnLog.mergeInto(spark, root, Seq((1L, 100L)).toDF("k", "v"), "k", "m1")
@@ -780,10 +775,9 @@ class TxnLogSpec extends SparkTestBase {
   test("table(): arbitrary DataFrame and SQL filters drive log-stats file skipping through the optimizer") {
     val root = freshRoot()
     val data = (1L to 512L).map(k => (k, k * 2654435761L % 1000000007L))
-    val (files, _, blooms) = TxnLog.stageWithIndex(
-      data.toDF("k", "tag").repartitionByRange(8, $"k"), root, "t1",
-      statsCol = "k", bloomCol = "tag")
-    val multi = TxnLog.statsForStaged(spark, root, "t1", Seq("k"), files)
+    val (files, multi) = TxnLog.stageWithStatsFor(
+      data.toDF("k", "tag").repartitionByRange(8, $"k"), root, "t1", Seq("k"))
+    val blooms = TxnLog.bloomsForStaged(spark, root, "t1", "tag", files)
     // schemaJson makes planning fully metadata-only: table() must not
     // read any footer, which the corruption below also PROVES
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
@@ -860,7 +854,7 @@ class TxnLogSpec extends SparkTestBase {
     assert(rows(root).contains((6L, -60L)))
   }
 
-  test("r12 review regressions: token validation, insert-insert merge conflict, sound unnamed-stat fallback, staging vacuum") {
+  test("r12 review regressions: token validation, insert-insert merge conflict, staging vacuum") {
     val root = freshRoot()
     // a txnId with a space would corrupt the 10th commit's checkpoint
     // T-line and brick the table — reject at the API boundary
@@ -885,18 +879,6 @@ class TxnLogSpec extends SparkTestBase {
         failOnConcurrentAppend = true)
     }
 
-    // a multi-stat file must NOT prune under the legacy unnamed
-    // contract (an arbitrary column's range could be the wrong one)
-    val root2 = freshRoot()
-    val (f2, multi) = TxnLog.stageWithStatsFor(
-      Seq((1L, 100L)).toDF("a", "b"), root2, "t1", Seq("a", "b"))
-    TxnLog.commit(root2, "append", f2, Nil, readVersion = 0L, txnId = "t1",
-      multiStats = multi)
-    assert(TxnLog.prunedFiles(root2, 50L, 60L).size === f2.size,
-      "unnamed-column pruning over a multi-stat file must keep every file")
-    assert(TxnLog.prunedFiles(root2, 50L, 60L, statsCol = "a").isEmpty,
-      "...while the named column still prunes")
-
     // staging vacuum reclaims orphaned attempt dirs, never live ones
     val root3 = freshRoot()
     TxnLog.appendOnce(Seq((1L, 1L)).toDF("k", "v"), root3, "s", 0L)
@@ -911,11 +893,11 @@ class TxnLogSpec extends SparkTestBase {
   test("bloom point lookup on a STRING key: the canonical UUID-lookup shape") {
     val root = freshRoot()
     val data = (1L to 256L).map(k => (k, f"doc-$k%04d-${k * 2654435761L % 100000}"))
-    val (files, stats, blooms) = TxnLog.stageWithIndex(
-      data.toDF("k", "uid").repartitionByRange(8, $"k"), root, "t1",
-      statsCol = "k", bloomCol = "uid")
+    val (files, stats) = TxnLog.stageWithStatsFor(
+      data.toDF("k", "uid").repartitionByRange(8, $"k"), root, "t1", Seq("k"))
+    val blooms = TxnLog.bloomsForStaged(spark, root, "t1", "uid", files)
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-      stats = stats, statsCol = "k", blooms = blooms, bloomCol = "uid")
+      multiStats = stats, blooms = blooms, bloomCol = "uid")
     val probe = data.find(_._1 == 137L).get._2
     val hit = TxnLog.readPoint(spark, root, "uid", probe)
     assert(hit.as[(Long, String)].collect().toSet === Set((137L, probe)))
@@ -937,12 +919,12 @@ class TxnLogSpec extends SparkTestBase {
       multiStats = multi)
 
     // pruning works on BOTH columns independently
-    assert(TxnLog.prunedFiles(root, 20L, 29L, statsCol = "k").size <= 3)
-    val partFiles = TxnLog.prunedFiles(root, 2L, 2L, statsCol = "p")
+    assert(TxnLog.prunedFiles(root, "k", 20L, 29L).size <= 3)
+    val partFiles = TxnLog.prunedFiles(root, "p", 2L, 2L)
     assert(partFiles.nonEmpty && partFiles.size <= 3,
       s"partition-equality pruning must skip non-matching files, kept ${partFiles.size} of 8")
     // an unstatted column never prunes
-    assert(TxnLog.prunedFiles(root, 0L, 0L, statsCol = "v").size === 8)
+    assert(TxnLog.prunedFiles(root, "v", 0L, 0L).size === 8)
 
     // both reads stay exact
     assert(TxnLog.readRange(spark, root, "p", 2L, 2L)
@@ -954,7 +936,7 @@ class TxnLogSpec extends SparkTestBase {
 
     // the per-column map survives a checkpoint (one F-line per column)
     TxnLog.checkpoint(root)
-    assert(TxnLog.prunedFiles(root, 2L, 2L, statsCol = "p").toSet === partFiles.toSet)
+    assert(TxnLog.prunedFiles(root, "p", 2L, 2L).toSet === partFiles.toSet)
     assert(TxnLog.snapshotState(root).forall(_._2.stats.keySet === Set("k", "p")))
   }
 
@@ -966,7 +948,7 @@ class TxnLogSpec extends SparkTestBase {
       data.toDF("x", "y").repartition(8), root, "t1")
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1")
     // unclustered: a narrow range on either dim overlaps every file
-    assert(TxnLog.prunedFiles(root, 0L, 127L, statsCol = "x").size === 8,
+    assert(TxnLog.prunedFiles(root, "x", 0L, 127L).size === 8,
       "fixture: stat-less arrival order must not prune")
 
     val c = TxnLog.optimizeZorder(spark, root, "x", "y", nFiles = 8, txnId = "z1")
@@ -977,8 +959,8 @@ class TxnLogSpec extends SparkTestBase {
     // an eighth of EITHER dimension's domain now touches a minority
     // of files — the property a single-column sort gives only to its
     // own column
-    val xPruned = TxnLog.prunedFiles(root, 0L, 127L, statsCol = "x")
-    val yPruned = TxnLog.prunedFiles(root, 0L, 127L, statsCol = "y")
+    val xPruned = TxnLog.prunedFiles(root, "x", 0L, 127L)
+    val yPruned = TxnLog.prunedFiles(root, "y", 0L, 127L)
     assert(xPruned.size <= 4, s"x-range must prune: ${xPruned.size} of 8")
     assert(yPruned.size <= 4, s"y-range must prune: ${yPruned.size} of 8")
     assert(TxnLog.readRange(spark, root, "y", 0L, 127L).as[(Long, Long)]
@@ -1015,18 +997,20 @@ class TxnLogSpec extends SparkTestBase {
 
   test("bloom soundness: bloom-less files and foreign-column blooms are always scanned") {
     val root = freshRoot()
-    val (f1, st1, bl1) = TxnLog.stageWithIndex(
-      Seq((1L, 111L)).toDF("k", "tag"), root, "t1", statsCol = "k", bloomCol = "tag")
+    val (f1, st1) = TxnLog.stageWithStatsFor(
+      Seq((1L, 111L)).toDF("k", "tag"), root, "t1", Seq("k"))
+    val bl1 = TxnLog.bloomsForStaged(spark, root, "t1", "tag", f1)
     TxnLog.commit(root, "append", f1, Nil, readVersion = 0L, txnId = "t1",
-      stats = st1, statsCol = "k", blooms = bl1, bloomCol = "tag")
+      multiStats = st1, blooms = bl1, bloomCol = "tag")
     // bloom-less commit: must always be scanned
     val f2 = TxnLog.stage(Seq((2L, 222L)).toDF("k", "tag"), root, "t2")
     TxnLog.commit(root, "append", f2, Nil, readVersion = 1L, txnId = "t2")
     // bloom over a DIFFERENT column: irrelevant for tag lookups
-    val (f3, st3, bl3) = TxnLog.stageWithIndex(
-      Seq((3L, 333L)).toDF("k", "tag"), root, "t3", statsCol = "k", bloomCol = "k")
+    val (f3, st3) = TxnLog.stageWithStatsFor(
+      Seq((3L, 333L)).toDF("k", "tag"), root, "t3", Seq("k"))
+    val bl3 = TxnLog.bloomsForStaged(spark, root, "t3", "k", f3)
     TxnLog.commit(root, "append", f3, Nil, readVersion = 2L, txnId = "t3",
-      stats = st3, statsCol = "k", blooms = bl3, bloomCol = "k")
+      multiStats = st3, blooms = bl3, bloomCol = "k")
     assert(TxnLog.readPoint(spark, root, "tag", 222L)
       .as[(Long, Long)].collect().toSet === Set((2L, 222L)))
     assert(TxnLog.readPoint(spark, root, "tag", 333L)
@@ -1040,13 +1024,13 @@ class TxnLogSpec extends SparkTestBase {
     // probing a long bloom column with an Int computed wrong bit
     // positions and silently pruned the containing file
     val data = (1L to 256L).map(k => (k, k * 7L))
-    val (files, stats, blooms) = TxnLog.stageWithIndex(
-      data.toDF("k", "tag").repartitionByRange(4, $"k"), root, "t1",
-      statsCol = "k", bloomCol = "tag")
+    val (files, stats) = TxnLog.stageWithStatsFor(
+      data.toDF("k", "tag").repartitionByRange(4, $"k"), root, "t1", Seq("k"))
+    val blooms = TxnLog.bloomsForStaged(spark, root, "t1", "tag", files)
     assert(blooms.forall(_.startsWith("4n:")),
       "an integral bloom column must carry the normalization flag")
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-      stats = stats, statsCol = "k", blooms = blooms, bloomCol = "tag")
+      multiStats = stats, blooms = blooms, bloomCol = "tag")
     // Int probe vs Long column: must not lose rows to a wrong-type hash
     assert(TxnLog.readPoint(spark, root, "tag", 84)
       .as[(Long, Long)].collect().toSet === Set((12L, 84L)))
@@ -1065,16 +1049,16 @@ class TxnLogSpec extends SparkTestBase {
     val root = dir.resolve("100%odd#table").toString
     TxnLog.init(root)
     val data = (1L to 64L).map(k => (k, k * 2654435761L % 1000000007L))
-    val (files, stats, blooms) = TxnLog.stageWithIndex(
-      data.toDF("k", "tag").repartitionByRange(4, $"k"), root, "t1",
-      statsCol = "k", bloomCol = "tag")
-    assert(stats.forall(_.isDefined),
+    val (files, stats) = TxnLog.stageWithStatsFor(
+      data.toDF("k", "tag").repartitionByRange(4, $"k"), root, "t1", Seq("k"))
+    val blooms = TxnLog.bloomsForStaged(spark, root, "t1", "tag", files)
+    assert(stats.forall(_.contains("k")),
       "every staged file must resolve a stat under an encodable root")
     assert(blooms.forall(_.nonEmpty),
       "every staged file must resolve a bloom under an encodable root")
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-      stats = stats, statsCol = "k", blooms = blooms, bloomCol = "tag")
-    assert(TxnLog.prunedFiles(root, 1L, 5L, statsCol = "k").size < files.size,
+      multiStats = stats, blooms = blooms, bloomCol = "tag")
+    assert(TxnLog.prunedFiles(root, "k", 1L, 5L).size < files.size,
       "range pruning must actually skip files on an encodable root")
     assert(TxnLog.readRange(spark, root, "k", 1L, 5L).count() === 5L)
     // multi-column stats take the same decoded-key path
@@ -1082,32 +1066,13 @@ class TxnLogSpec extends SparkTestBase {
     assert(multi.forall(_.nonEmpty))
   }
 
-  test("r13: merge treats legacy unnamed stats as always-affected — key uniqueness survives") {
-    val root = freshRoot()
-    // simulate a pre-r12 table: stats recorded with NO column name
-    // (here: statted on v, committed unnamed). A merge on k must NOT
-    // trust v's ranges as k's — that would skip affected files and
-    // silently duplicate keys.
-    val (files, stats) = TxnLog.stageWithStats(
-      (1L to 100L).map(k => (k, 1000L + k)).toDF("k", "v")
-        .repartitionByRange(4, $"k"), root, "t1", statsCol = "v")
-    TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-      stats = stats, statsCol = "") // unnamed: the legacy shape
-    TxnLog.mergeInto(spark, root,
-      Seq((7L, 7000L)).toDF("k", "v"), "k", "m1")
-    val got = TxnLog.read(spark, root).as[(Long, Long)].collect()
-    assert(got.count(_._1 == 7L) === 1, "merge must not duplicate key 7")
-    assert(got.toSet.contains((7L, 7000L)))
-    assert(got.length === 100)
-  }
-
   test("r13: deleteWhereKeys — join-driven keyed retraction, stats-pruned, one DV row per file") {
     val root = freshRoot()
-    val (files, stats) = TxnLog.stageWithStats(
+    val (files, stats) = TxnLog.stageWithStatsFor(
       (1L to 1024L).map(k => (k, k * 3L)).toDF("k", "v")
-        .repartitionByRange(8, $"k"), root, "t1", statsCol = "k")
+        .repartitionByRange(8, $"k"), root, "t1", Seq("k"))
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-      stats = stats, statsCol = "k")
+      multiStats = stats)
     // keys live in two files' ranges only; the scan must stay pruned
     val keys = Seq(5L, 6L, 7L, 1020L).toDF("k")
     val c = TxnLog.deleteWhereKeys(spark, root, keys, "k", "d1").get
@@ -1159,11 +1124,11 @@ class TxnLogSpec extends SparkTestBase {
     val root = freshRoot()
     // ONE 100k-row file: a half-delete's bitmap is 12.5 KB = 25,000
     // hex chars — far past the 4,096-char inline threshold
-    val (files, stats) = TxnLog.stageWithStats(
+    val (files, stats) = TxnLog.stageWithStatsFor(
       spark.range(0, 100000).selectExpr("id AS k", "id * 3 AS v").coalesce(1),
-      root, "t1", statsCol = "k")
+      root, "t1", Seq("k"))
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-      stats = stats, statsCol = "k")
+      multiStats = stats)
     val c = TxnLog.deleteWhere(spark, root, col("k") % 2 === 0, "d1").get
     assert(c.dvs.forall(_.startsWith("@")),
       s"a dense vector must spill to a sidecar ref, got inline of ${c.dvs.map(_.length)}")
@@ -1212,9 +1177,9 @@ class TxnLogSpec extends SparkTestBase {
     val root = freshRoot()
     val base = (1L to 64L).map(k => (k, k * 10L)).toDF("k", "v")
       .repartitionByRange(4, $"k")
-    val (files, stats) = TxnLog.stageWithStats(base, root, "t1", statsCol = "k")
+    val (files, stats) = TxnLog.stageWithStatsFor(base, root, "t1", Seq("k"))
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-      stats = stats, statsCol = "k",
+      multiStats = stats,
       schemaJson = TxnLog.encodeSchema(base.schema))              // v1
 
     TxnLog.renameColumn(root, "v", "amount", "r1")                // v2
@@ -1275,11 +1240,11 @@ class TxnLogSpec extends SparkTestBase {
 
   test("r13: optimizeCompactDeletes — dense-DV files rewritten clean, sparse vectors kept, history intact") {
     val root = freshRoot()
-    val (files, stats) = TxnLog.stageWithStats(
+    val (files, stats) = TxnLog.stageWithStatsFor(
       (1L to 1024L).map(k => (k, k)).toDF("k", "v")
-        .repartitionByRange(4, $"k"), root, "t1", statsCol = "k")
+        .repartitionByRange(4, $"k"), root, "t1", Seq("k"))
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-      stats = stats, statsCol = "k")                                  // v1
+      multiStats = stats)                                             // v1
     // dense deletes in the low key range (~90% of file 1), sparse
     // everywhere (every 97th key)
     TxnLog.deleteWhere(spark, root, col("k") <= 230L, "d1")           // v2
@@ -1325,13 +1290,20 @@ class TxnLogSpec extends SparkTestBase {
       .withColumn("opt", when(col("k") > 200L, col("name"))) // nulls iff k <= 200
       .repartitionByRange(4, col("k"))
     val files = TxnLog.stage(df, root, "t1")
+    // k's stat is hand-built the way a caller of the raw commit API
+    // builds one: FileStat(lo, hi, rows), null count unknown (-1)
+    val handK = TxnLog.statsForStaged(spark, root, "t1", Seq("k"), files)
+      .map { m => val st = m("k"); TxnLog.FileStat(st.lo, st.hi, st.rows) }
     val multi = TxnLog.statsForStaged(spark, root, "t1",
-      Seq("k", "name", "ts", "d", "x", "opt"), files)
+      Seq("name", "ts", "d", "x", "opt"), files)
+      .zip(handK).map { case (m, k) => m + ("k" -> k) }
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
       multiStats = multi, schemaJson = TxnLog.encodeSchema(df.schema))
 
     // the stats are TYPED, with null counts
     val metas = TxnLog.snapshotState(root).map(_._2)
+    assert(metas.map(_.stats("k")) === handK && handK.forall(_.nulls == -1L),
+      "a long stat with unknown nulls must read back unchanged from the record")
     assert(metas.forall(_.stats("name").typ == "s"))
     assert(metas.forall(_.stats("ts").typ == "t"))
     assert(metas.forall(_.stats("d").typ == "d"))
@@ -1363,8 +1335,10 @@ class TxnLogSpec extends SparkTestBase {
     assert(t.filter($"opt".isNull).count() === 200L,
       "IS NULL must prune files whose recorded null count is zero")
 
-    // typed stats survive the checkpoint round trip (typed F-lines)
+    // typed stats survive the checkpoint round trip (typed F-lines),
+    // the hand-built k stat with its unknown null count included
     TxnLog.checkpoint(root)
+    assert(TxnLog.snapshotState(root).map(_._2.stats) === metas.map(_.stats))
     assert(TxnLog.table(spark, root)
       .filter($"name".startsWith("n01")).count() === 100L)
 
@@ -1381,11 +1355,11 @@ class TxnLogSpec extends SparkTestBase {
 
   test("r13: executor-built DV bitmaps — a 50% delete collects one row per file, bitmaps exact") {
     val root = freshRoot()
-    val (files, stats) = TxnLog.stageWithStats(
+    val (files, stats) = TxnLog.stageWithStatsFor(
       (0L until 32768L).map(k => (k, k)).toDF("k", "v")
-        .repartitionByRange(8, $"k"), root, "t1", statsCol = "k")
+        .repartitionByRange(8, $"k"), root, "t1", Seq("k"))
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-      stats = stats, statsCol = "k")
+      multiStats = stats)
     // the regime the r12 per-row collect shipped 16k rows to the
     // driver for: the aggregate result is structurally one row per
     // touched file (dvBitmaps groups by __fp), O(files × bitmap-bytes)
@@ -1401,10 +1375,10 @@ class TxnLogSpec extends SparkTestBase {
   test("rowCountFromStats (r18, X-V6): metadata-only live count, DV-aware; None without stats") {
     val root = freshRoot()
     val data = (1L to 100L).map(k => (k, k * 2L))
-    val (files, stats) = TxnLog.stageWithStats(
-      data.toDF("k", "v").repartitionByRange(4, $"k"), root, "t1", "k")
+    val (files, stats) = TxnLog.stageWithStatsFor(
+      data.toDF("k", "v").repartitionByRange(4, $"k"), root, "t1", Seq("k"))
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-      stats = stats, statsCol = "k")
+      multiStats = stats)
     assert(TxnLog.rowCountFromStats(root) === Some(100L))
     // a deletion vector subtracts its set bits — still zero tasks
     TxnLog.deleteWhere(spark, root, col("k") % 10 === 0, "d1")
