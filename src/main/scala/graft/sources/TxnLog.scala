@@ -5,6 +5,13 @@ import java.util.stream.Collectors
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.annotation.JsonInclude
+import com.fasterxml.jackson.annotation.JsonInclude.Include
+import com.fasterxml.jackson.core.JacksonException
+import com.fasterxml.jackson.databind.DeserializationFeature
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -82,9 +89,8 @@ object TxnLog {
     *    internal timestamp value),
     *  - `"d"` date: `lo`/`hi` are epoch DAYS,
     *  - `"s"` string: `loS`/`hiS` are BASE64 of the min/max string's
-    *    UTF-8 bytes (binary order, = Spark's string comparison order;
-    *    base64 survives the log's `:`/`|`/space-delimited formats for
-    *    ANY string value),
+    *    UTF-8 bytes (binary order, = Spark's string comparison order,
+    *    which [[byteCompare]] tests on the decoded bytes),
     *  - `"f"` float/double: `loS`/`hiS` are `Double.toString` values.
     *
     * `nulls` is the column's null count in the file (-1 unknown) —
@@ -133,11 +139,13 @@ object TxnLog {
                       bloom: Option[String] = None, bloomCol: String = "",
                       dv: Option[String] = None, size: Long = -1L,
                       modTime: Long = 0L,
+                      @JsonDeserialize(contentAs = classOf[java.lang.Long])
                       rowBase: Option[Long] = None)
 
-  /** One committed log record. `multiStats` (when present) is aligned
-    * with `added`: per file, the rendered column -> [[FileStat]] map,
-    * the data-skipping metadata [[readRange]]/[[statsAggregate]] use —
+  /** One committed log record; its file is this value's [[codec]]
+    * encoding. `multiStats` (when present) is aligned with `added`:
+    * per file, the column -> [[FileStat]] map, the data-skipping
+    * metadata [[readRange]]/[[statsAggregate]] use —
     * inline in the record (the Delta recipe), so planning needs no
     * sidecar reads and the stats survive as long as the log does.
     * `blooms` (when present) is likewise aligned with `added`: a
@@ -146,33 +154,40 @@ object TxnLog {
     * `dvFiles`/`dvs` (aligned with each other, NOT with `added`) carry
     * row-level deletes: per-file hex bitsets of deleted row indexes
     * ([[deleteWhere]]) — a delete prices at O(deleted-row metadata),
-    * not a file rewrite.
+    * not a file rewrite. `cadds`/`padds`/`hists` are the (name,
+    * expression) constraints, (key, value) properties and (column,
+    * payload) histograms born with the commit. The fields without a
+    * default are the ones every record must carry.
     */
   case class Commit(version: Long, action: String, txnId: String,
-                    readVersion: Long, added: Seq[String], removed: Seq[String],
+                    readVersion: Long,
+                    @JsonInclude(Include.ALWAYS) added: Seq[String],
+                    @JsonInclude(Include.ALWAYS) removed: Seq[String],
                     schemaId: String = "",
                     blooms: Seq[String] = Nil,
                     bloomCol: String = "",
                     dvFiles: Seq[String] = Nil,
                     dvs: Seq[String] = Nil,
-                    ts: Long = 0L,
-                    multiStats: Seq[String] = Nil,
+                    ts: Long,
+                    multiStats: Seq[Map[String, FileStat]] = Nil,
                     constraint: String = "",
                     schemaJson: String = "",
                     rename: String = "",
+                    @JsonDeserialize(contentAs = classOf[java.lang.Long])
                     sizes: Seq[Long] = Nil,
-                    cadds: Seq[String] = Nil,
+                    cadds: Seq[(String, String)] = Nil,
                     partitionBy: String = "",
                     restatFiles: Seq[String] = Nil,
-                    restats: Seq[String] = Nil,
-                    hists: Seq[String] = Nil,
+                    restats: Seq[Map[String, FileStat]] = Nil,
+                    hists: Seq[(String, String)] = Nil,
                     ingests: Seq[String] = Nil,
                     radds: Seq[String] = Nil,
+                    @JsonDeserialize(contentAs = classOf[java.lang.Long])
                     rbases: Seq[Long] = Nil,
                     rowHwm: Long = -1L,
-                    padds: Seq[String] = Nil,
-                    propReset: Boolean = false,
-                    conReset: Boolean = false)
+                    padds: Seq[(String, String)] = Nil,
+                    @JsonInclude(Include.NON_DEFAULT) propReset: Boolean = false,
+                    @JsonInclude(Include.NON_DEFAULT) conReset: Boolean = false)
 
   /** A commit lost the optimistic-concurrency check: a concurrent
     * commit rewrote data this transaction also rewrites. The caller
@@ -241,17 +256,40 @@ object TxnLog {
   }
 
   // ---- log encoding ----
-  // One JSON object per file. [[commit]] validates every path against
-  // the characters this encoding (and the checkpoint's space-delimited
-  // lines) reserves, so the string-field extraction below is exact for
-  // everything the log can ever contain.
+  // One codec for both on-disk artifacts: a commit record is the JSON
+  // encoding of a [[Commit]], a checkpoint that of a [[CkptState]].
+  // A field holding an empty string, collection or option is left
+  // out (an element or map entry never is), so a record carries only
+  // what it says. On read, a field without a Scala default is
+  // required: a missing one, or a key the case class does not have,
+  // fails the load ([[decode]]). Every `Long` inside a container is
+  // annotated `contentAs = java.lang.Long`, or it would decode as a
+  // boxed Integer that fails at its first arithmetic.
+  private[sources] val codec: JsonMapper = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .defaultPropertyInclusion(
+      JsonInclude.Value.construct(Include.NON_EMPTY, Include.ALWAYS))
+    .enable(DeserializationFeature.FAIL_ON_NULL_FOR_PRIMITIVES,
+      DeserializationFeature.FAIL_ON_NULL_CREATOR_PROPERTIES)
+    .build()
 
+  private def decode[T](file: Path, cls: Class[T]): T =
+    try codec.readValue(Files.readAllBytes(file), cls)
+    catch {
+      case e: JacksonException =>
+        throw new RuntimeException(s"bad txn log file $file: ${e.getMessage}", e)
+    }
+
+  // `[`, `]` and `\` are Hadoop glob syntax: `spark.read.parquet`
+  // would expand a data path holding one instead of opening it. The
+  // codec escapes the others; they stay excluded as the accepted-path
+  // contract.
   private val PathReserved = Array('"', ',', '[', ']', ' ', '\n', '\r', '\\')
 
-  // txnIds, column names and constraint text ride SPACE-delimited
-  // checkpoint lines (T/F/B/C): a space or newline inside one would
-  // corrupt the checkpoint at the 10th streaming commit and brick the
-  // table until hand repair — reject at the API boundary instead.
+  // txnIds (which also name staging dirs and temp files) and the
+  // column names the log keys by. A space still splits `rename`'s
+  // "<old> <new>" payload; the codec carries any other text, so the
+  // newline and quote rule is kept as the accepted-token contract.
   private def validateToken(kind: String, v: String): Unit = {
     require(v.nonEmpty, s"$kind must be non-empty")
     require(!v.exists(c => c == ' ' || c == '\n' || c == '\r' || c == '"'),
@@ -264,131 +302,8 @@ object TxnLog {
         s"txn log path contains reserved character '$c': $p"))
     }
 
-  // one file's per-column stats, '|'-joined per column:
-  //   "col:<typ>:lo:hi:rows:nulls[:hll]"  for "s"/"f" the bounds are
-  //                                       base64 / Double strings —
-  //                                       neither contains ':', '|',
-  //                                       ',' or spaces
-  // (rows / nulls -1 = unknown); column names are validated
-  // separator-free at commit time.
-  private def renderOneStat(c: String, s: FileStat): String = {
-    val h = if (s.hll.isEmpty) "" else s":${s.hll}"
-    if (s.typ == "s" || s.typ == "f")
-      s"$c:${s.typ}:${s.loS}:${s.hiS}:${s.rows}:${s.nulls}$h"
-    else s"$c:${s.typ}:${s.lo}:${s.hi}:${s.rows}:${s.nulls}$h"
-  }
-
-  private def parseOneStat(typ: String, lo: String, hi: String,
-                           rows: Long, nulls: Long, hll: String): FileStat =
-    if (typ == "s" || typ == "f") FileStat(0L, 0L, rows, typ, lo, hi, nulls, hll)
-    else FileStat(lo.toLong, hi.toLong, rows, typ, "", "", nulls, hll)
-
-  private def renderMultiStat(m: Map[String, FileStat]): String =
-    m.toSeq.sortBy(_._1)
-      .map { case (c, s) => renderOneStat(c, s) }.mkString("|")
-
-  private def parseMultiStat(s: String): Map[String, FileStat] =
-    if (s.isEmpty) Map.empty
-    else s.split("\\|").map { tok =>
-      tok.split(":", -1) match {
-        case Array(c, t, lo, hi, n, nl, hll @ _*) if hll.size <= 1 =>
-          c -> parseOneStat(t, lo, hi, n.toLong, nl.toLong, hll.mkString)
-        case _ => sys.error(s"bad multi-stat token: $tok")
-      }
-    }.toMap
-
-  private def render(c: Commit): String = {
-    def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val bloomsPart =
-      if (c.blooms.isEmpty) "" else s""","blooms":${arr(c.blooms)}"""
-    val bloomColPart =
-      if (c.bloomCol.isEmpty) "" else s""","bloomCol":"${c.bloomCol}""""
-    val multiPart =
-      if (c.multiStats.forall(_.isEmpty)) "" else s""","mstats":${arr(c.multiStats)}"""
-    val dvPart =
-      if (c.dvFiles.isEmpty) ""
-      else s""","dvFiles":${arr(c.dvFiles)},"dvs":${arr(c.dvs)}"""
-    val schemaPart =
-      if (c.schemaId.isEmpty) "" else s""","schema":"${c.schemaId}""""
-    val tsPart = if (c.ts == 0L) "" else s""","ts":${c.ts}"""
-    val constraintPart =
-      if (c.constraint.isEmpty) "" else s""","constraint":"${c.constraint}""""
-    val schemaJsonPart = // base64: schema JSON would break the record format
-      if (c.schemaJson.isEmpty) "" else s""","schemaJson":"${c.schemaJson}""""
-    val renamePart =
-      if (c.rename.isEmpty) "" else s""","rename":"${c.rename}""""
-    val sizesPart = // bytes per added file (omitted when unstatable)
-      if (c.sizes.isEmpty || c.sizes.forall(_ < 0L)) ""
-      else s""","sizes":[${c.sizes.mkString(",")}]"""
-    val caddsPart = // base64("name expr") per constraint born WITH the commit
-      if (c.cadds.isEmpty) "" else s""","cadds":${arr(c.cadds)}"""
-    val partByPart = // comma-joined partition columns (identity transforms)
-      if (c.partitionBy.isEmpty) "" else s""","partitionBy":"${c.partitionBy}""""
-    val restatPart = // ANALYZE overlays: stats refreshed onto LIVE files
-      if (c.restatFiles.isEmpty) ""
-      else s""","restatFiles":${arr(c.restatFiles)},"restats":${arr(c.restats)}"""
-    val histsPart = // base64("col payload") per TABLE-level histogram
-      if (c.hists.isEmpty) "" else s""","hists":${arr(c.hists)}"""
-    val ingestsPart = // "md5(path):size" per COPY INTO source file
-      if (c.ingests.isEmpty) "" else s""","ingests":${arr(c.ingests)}"""
-    val raddsPart = // row-preserving subset of `added` (COW survivors)
-      if (c.radds.isEmpty) "" else s""","radds":${arr(c.radds)}"""
-    val rbasesPart = // base row id per added file (X-A96 row tracking)
-      if (c.rbases.isEmpty) "" else s""","rbases":[${c.rbases.mkString(",")}]"""
-    val rowHwmPart =
-      if (c.rowHwm < 0L) "" else s""","rowHwm":${c.rowHwm}"""
-    val paddsPart = // base64("key value") per property born WITH the commit
-      if (c.padds.isEmpty) "" else s""","padds":${arr(c.padds)}"""
-    val propResetPart = // RTAS: clear inherited props before padds apply
-      if (!c.propReset) "" else s""","propReset":1"""
-    val conResetPart = // RTAS: clear inherited constraints before cadds
-      if (!c.conReset) "" else s""","conReset":1"""
-    s"""{"version":${c.version},"action":"${c.action}","txnId":"${c.txnId}",""" +
-      s""""readVersion":${c.readVersion},"added":${arr(c.added)},""" +
-      s""""removed":${arr(c.removed)}$multiPart$bloomsPart$bloomColPart$dvPart$schemaPart$tsPart$constraintPart$schemaJsonPart$renamePart$sizesPart$caddsPart$partByPart$restatPart$histsPart$ingestsPart$raddsPart$rbasesPart$rowHwmPart$paddsPart$propResetPart$conResetPart}"""
-  }
-
-  private def parse(line: String): Commit = {
-    def num(k: String): Long =
-      s""""$k":(-?\\d+)""".r.findFirstMatchIn(line)
-        .getOrElse(sys.error(s"txn log record missing $k: $line")).group(1).toLong
-    def str(k: String): String =
-      s""""$k":"([^"]*)"""".r.findFirstMatchIn(line)
-        .getOrElse(sys.error(s"txn log record missing $k: $line")).group(1)
-    def strOpt(k: String): String =
-      s""""$k":"([^"]*)"""".r.findFirstMatchIn(line).map(_.group(1)).getOrElse("")
-    def arr(k: String, required: Boolean): Seq[String] = {
-      val m = s""""$k":\\[([^\\]]*)\\]""".r.findFirstMatchIn(line)
-      if (m.isEmpty) {
-        if (required) sys.error(s"txn log record missing $k: $line") else return Nil
-      }
-      val body = m.get.group(1)
-      if (body.isEmpty) Nil
-      else body.split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-    }
-    def numOpt(k: String): Long =
-      s""""$k":(-?\\d+)""".r.findFirstMatchIn(line).map(_.group(1).toLong).getOrElse(0L)
-    Commit(num("version"), str("action"), str("txnId"), num("readVersion"),
-      arr("added", required = true), arr("removed", required = true),
-      strOpt("schema"), arr("blooms", required = false), strOpt("bloomCol"),
-      arr("dvFiles", required = false), arr("dvs", required = false),
-      numOpt("ts"), arr("mstats", required = false), strOpt("constraint"),
-      strOpt("schemaJson"), strOpt("rename"),
-      arr("sizes", required = false).map(_.toLong),
-      arr("cadds", required = false), strOpt("partitionBy"),
-      arr("restatFiles", required = false), arr("restats", required = false),
-      arr("hists", required = false), arr("ingests", required = false),
-      arr("radds", required = false),
-      arr("rbases", required = false).map(_.toLong),
-      s""""rowHwm":(-?\\d+)""".r.findFirstMatchIn(line)
-        .map(_.group(1).toLong).getOrElse(-1L),
-      arr("padds", required = false),
-      numOpt("propReset") == 1L,
-      numOpt("conReset") == 1L)
-  }
-
   private def readCommit(root: String, v: Long): Commit =
-    parse(Files.readString(entryPath(root, v)))
+    decode(entryPath(root, v), classOf[Commit])
 
   /** The record at exactly version `v`, opened by FILENAME — no
     * directory listing, no neighbors. What incremental walkers (the
@@ -412,7 +327,7 @@ object TxnLog {
       .map(p => (p.getFileName.toString.stripSuffix(".json").toLong, p))
       .filter { case (v, _) => v > fromExclusive && v <= toInclusive }
       .sortBy(_._1)
-      .map { case (_, p) => parse(Files.readString(p)) }
+      .map { case (_, p) => decode(p, classOf[Commit]) }
 
   def commitsInRange(root: String, fromExclusive: Long,
                      toInclusive: Long): Seq[Commit] =
@@ -437,39 +352,27 @@ object TxnLog {
     headFromListing(listDir(logDir(root)))
 
   // ---- checkpoints ----
-  // `_log/<version>.checkpoint`: the `#graft-ckpt-v2` header line, then
-  //   S <schemaId>                       current schema fingerprint (if any)
-  //   T <txnId> <version>                one per committed transaction <= version
-  //   F <path>                           one per LIVE file without stats, or
-  //   F <path> <col> <typ> <lo> <hi> <rows> <nulls> [<hll>]
-  //                                      one per statted column of a live
-  //                                      file, the record's mstats token
-  //                                      split on spaces ("s"/"f" bounds
-  //                                      are base64 / Double strings —
-  //                                      space-free; -1 = unknown)
-  //   Z <path> <size> <modTime>          recorded size of a live file
-  //   B <path> <col> <hex>               bloom filter of a live file
-  //   R <logical> <physical>             column-mapping entry
-  // Everything snapshot resolution, txnId idempotency, schema
-  // enforcement, stats pruning and bloom point-skipping need, in one
-  // atomically-published artifact — resolution for any version >= the
-  // checkpoint folds only the log tail behind it. Any other line (a
-  // missing header included) fails the load.
+  // `_log/<version>.checkpoint` is the [[codec]] encoding of the table
+  // state at that version: everything snapshot resolution, txnId
+  // idempotency, schema enforcement, stats pruning and bloom
+  // point-skipping need, in one atomically-published artifact.
+  // Resolution for any version >= the checkpoint folds only the log
+  // tail behind it. `files` keeps the live files in snapshot order.
 
-  private val CkptHeader = "#graft-ckpt-v2"
-
-  private case class CkptState(version: Long,
-                               files: Seq[(String, FileMeta)],
-                               txns: Map[String, Long],
-                               schema: String,
-                               constraints: Map[String, String] = Map.empty,
-                               schemaJson: String = "",
-                               renames: Map[String, String] = Map.empty,
-                               partitionBy: String = "",
-                               hists: Map[String, String] = Map.empty,
-                               ingests: Set[String] = Set.empty,
-                               props: Map[String, String] = Map.empty,
-                               rowHwm: Long = 0L)
+  private[sources] case class CkptState(
+      version: Long,
+      files: Seq[(String, FileMeta)] = Nil,
+      @JsonDeserialize(contentAs = classOf[java.lang.Long])
+      txns: Map[String, Long] = Map.empty,
+      schema: String = "",
+      constraints: Map[String, String] = Map.empty,
+      schemaJson: String = "",
+      renames: Map[String, String] = Map.empty,
+      partitionBy: String = "",
+      hists: Map[String, String] = Map.empty,
+      ingests: Set[String] = Set.empty,
+      props: Map[String, String] = Map.empty,
+      rowHwm: Long = 0L)
 
   private def ckptPath(root: String, v: Long): Path =
     logDir(root).resolve(f"$v%020d.checkpoint")
@@ -498,65 +401,15 @@ object TxnLog {
       ckptCache.keySet.removeIf(k => newest.get(k._1).exists(_ != k._2))
     }
 
-  private def parseCheckpoint(v: Long, body: String): CkptState = {
-    val lines = body.split("\n").toSeq.filter(_.nonEmpty)
-    if (!lines.headOption.contains(CkptHeader))
-      sys.error(s"bad checkpoint line: ${lines.headOption.getOrElse("")}")
-    var schema = ""
-    var schemaJson = ""
-    var partitionBy = ""
-    val txns = Map.newBuilder[String, Long]
-    val constraints = Map.newBuilder[String, String]
-    val renames = Map.newBuilder[String, String]
-    val hists = Map.newBuilder[String, String]
-    val ingests = Set.newBuilder[String]
-    val props = Map.newBuilder[String, String]
-    var rowHwm = 0L
-    val files = scala.collection.mutable.LinkedHashMap.empty[String, FileMeta]
-    lines.drop(1).foreach { l =>
-      // `C <name> <expr…>`: the expr half may contain spaces —
-      // handled before the token match
-      if (l.startsWith("C ")) {
-        val rest = l.drop(2)
-        val cut = rest.indexOf(' ')
-        constraints += (rest.take(cut) -> rest.drop(cut + 1))
-      } else if (l.startsWith("K ")) {
-        // `K <key> <value…>`: the value half may contain spaces
-        val rest = l.drop(2)
-        val cut = rest.indexOf(' ')
-        props += (rest.take(cut) -> rest.drop(cut + 1))
-      } else l.split(" ").toSeq match {
-        case Seq("S", id)          => schema = id
-        case Seq("J", b64)         => schemaJson = b64
-        case Seq("T", txn, ver)    => txns += (txn -> ver.toLong)
-        case Seq("F", f)           =>
-          files(f) = files.getOrElse(f, FileMeta())
-        case Seq("F", f, c, t, lo, hi, n, nl, hll @ _*) if hll.size <= 1 =>
-          val m = files.getOrElse(f, FileMeta())
-          files(f) = m.copy(stats = m.stats +
-            (c -> parseOneStat(t, lo, hi, n.toLong, nl.toLong, hll.mkString)))
-        case Seq("B", f, c, hex)   =>
-          files(f) = files.getOrElse(f, FileMeta())
-            .copy(bloom = Some(hex), bloomCol = c)
-        case Seq("D", f, hex)      =>
-          files(f) = files.getOrElse(f, FileMeta()).copy(dv = Some(hex))
-        case Seq("R", l2, p)       => renames += (l2 -> p)
-        case Seq("P", cols)        => partitionBy = cols
-        case Seq("H", c, payload)  => hists += (c -> payload)
-        case Seq("I", id)          => ingests += id
-        case Seq("Z", f, sz, mt)   =>
-          files(f) = files.getOrElse(f, FileMeta())
-            .copy(size = sz.toLong, modTime = mt.toLong)
-        case Seq("O", f, b)        => // base row id (X-A96)
-          files(f) = files.getOrElse(f, FileMeta())
-            .copy(rowBase = Some(b.toLong))
-        case Seq("W", hwm)         => rowHwm = hwm.toLong
-        case _ => sys.error(s"bad checkpoint line: $l")
-      }
-    }
-    CkptState(v, files.toSeq, txns.result(), schema,
-      constraints.result(), schemaJson, renames.result(), partitionBy,
-      hists.result(), ingests.result(), props.result(), rowHwm)
+  private def checkpointsIn(listing: Seq[Path]): Seq[(Long, Path)] =
+    listing
+      .filter(_.getFileName.toString.endsWith(".checkpoint"))
+      .map(p => (p.getFileName.toString.stripSuffix(".checkpoint").toLong, p))
+
+  private def readCheckpoint(v: Long, p: Path): CkptState = {
+    val st = decode(p, classOf[CkptState])
+    if (st.version != v) sys.error(s"bad txn log file $p: holds version ${st.version}")
+    st
   }
 
   /** Latest checkpoint at or below `version`, from a pre-fetched log
@@ -566,15 +419,11 @@ object TxnLog {
     */
   private def loadCheckpointFrom(root: String, listing: Seq[Path],
                                  version: Long): Option[CkptState] = {
-    val candidates = listing
-      .filter(_.getFileName.toString.endsWith(".checkpoint"))
-      .map(p => (p.getFileName.toString.stripSuffix(".checkpoint").toLong, p))
-      .filter(_._1 <= version)
-      .sortBy(-_._1)
+    val candidates = checkpointsIn(listing).filter(_._1 <= version).sortBy(-_._1)
     candidates.iterator.flatMap { case (v, p) =>
       Option(ckptCache.get((root, v))).orElse {
         try {
-          val st = parseCheckpoint(v, Files.readString(p))
+          val st = readCheckpoint(v, p)
           boundCkptCache()
           ckptCache.put((root, v), st)
           Some(st)
@@ -592,7 +441,7 @@ object TxnLog {
     */
   private def resolveState(root: String, version: Long): CkptState = {
     val seed = loadCheckpoint(root, version)
-      .getOrElse(CkptState(0L, Nil, Map.empty, ""))
+      .getOrElse(CkptState(0L))
     val fromV = seed.version
     val live = scala.collection.mutable.LinkedHashMap.empty[String, FileMeta]
     seed.files.foreach { case (f, m) => live(f) = m }
@@ -616,7 +465,7 @@ object TxnLog {
     commitsInRange(root, fromV, version).foreach { c =>
       val blooms = if (c.blooms.size == c.added.size) c.blooms else c.added.map(_ => "")
       val multi = if (c.multiStats.size == c.added.size) c.multiStats
-                  else c.added.map(_ => "")
+                  else c.added.map(_ => Map.empty[String, FileStat])
       val sizes = if (c.sizes.size == c.added.size) c.sizes else c.added.map(_ => -1L)
       val rbases = if (c.rbases.size == c.added.size) c.rbases
                    else c.added.map(_ => -1L)
@@ -625,7 +474,7 @@ object TxnLog {
         // modTime = the commit's timestamp: when the file became
         // table-visible — what `_metadata.file_modification_time`
         // surfaces without a filesystem stat
-        live(f) = FileMeta(parseMultiStat(multi(i)),
+        live(f) = FileMeta(multi(i),
           Some(bl).filter(_.nonEmpty), if (bl.nonEmpty) c.bloomCol else "",
           size = sizes(i), modTime = c.ts,
           rowBase = Some(rbases(i)).filter(_ >= 0L))
@@ -642,15 +491,11 @@ object TxnLog {
       // concurrent or later rewrite is simply skipped, so an overlay
       // can never resurrect data or clobber a deletion vector
       c.restatFiles.zip(c.restats).foreach { case (f, ms) =>
-        live.get(f).foreach(m => live(f) = m.copy(stats = m.stats ++ parseMultiStat(ms)))
+        live.get(f).foreach(m => live(f) = m.copy(stats = m.stats ++ ms))
       }
       // TABLE-level histograms (ANALYZE ... histogram_bins): latest
       // analyze wins per column
-      c.hists.foreach { b =>
-        val dec = new String(b64dec(b), java.nio.charset.StandardCharsets.UTF_8)
-        val cut = dec.indexOf(' ')
-        hists(dec.take(cut)) = dec.drop(cut + 1)
-      }
+      hists ++= c.hists
       txns(c.txnId) = c.version
       ingests ++= c.ingests
       if (c.schemaId.nonEmpty) schema = c.schemaId
@@ -690,11 +535,7 @@ object TxnLog {
       // properties FIRST (RTAS: replace resets configuration
       // wholesale, it never inherits the replaced table's policy).
       if (c.propReset) props.clear()
-      c.padds.foreach { b =>
-        val dec = new String(b64dec(b), java.nio.charset.StandardCharsets.UTF_8)
-        val cut = dec.indexOf(' ')
-        props(dec.take(cut)) = dec.drop(cut + 1)
-      }
+      props ++= c.padds
       // constraints born WITH a commit (atomic CREATE TABLE: schema,
       // data and constraints in ONE record — no window where the
       // table is visible unconstrained). conReset clears inherited
@@ -702,11 +543,7 @@ object TxnLog {
       // declares the new table's whole constraint set — a stale CHECK
       // from the replaced table must not keep rejecting writes.
       if (c.conReset) constraints.clear()
-      c.cadds.foreach { b =>
-        val dec = new String(b64dec(b), java.nio.charset.StandardCharsets.UTF_8)
-        val cut = dec.indexOf(' ')
-        constraints(dec.take(cut)) = dec.drop(cut + 1)
-      }
+      constraints ++= c.cadds
       if (c.rename.nonEmpty) {
         // LOGICAL rename over a stable PHYSICAL name: the map tracks
         // logical -> physical; renaming back to the physical name
@@ -740,59 +577,21 @@ object TxnLog {
     val v = currentVersion(root)
     val target = ckptPath(root, v)
     if (v == 0L || Files.exists(target)) return v
-    val st = resolveState(root, v)
-    val body = new StringBuilder(CkptHeader).append('\n')
-    if (st.schema.nonEmpty) body.append("S ").append(st.schema).append('\n')
-    if (st.schemaJson.nonEmpty) body.append("J ").append(st.schemaJson).append('\n')
-    st.constraints.toSeq.sortBy(_._1).foreach { case (n, e) =>
-      body.append("C ").append(n).append(' ').append(e).append('\n') }
-    st.props.toSeq.sortBy(_._1).foreach { case (k, v2) =>
-      body.append("K ").append(k).append(' ').append(v2).append('\n') }
-    if (st.rowHwm > 0L)
-      body.append("W ").append(st.rowHwm).append('\n')
-    st.renames.toSeq.sortBy(_._1).foreach { case (l, p) =>
-      body.append("R ").append(l).append(' ').append(p).append('\n') }
-    if (st.partitionBy.nonEmpty)
-      body.append("P ").append(st.partitionBy).append('\n')
-    st.hists.toSeq.sortBy(_._1).foreach { case (c, p) =>
-      body.append("H ").append(c).append(' ').append(p).append('\n') }
-    st.ingests.toSeq.sorted.foreach { id =>
-      body.append("I ").append(id).append('\n') }
-    st.txns.toSeq.sortBy(_._2).foreach { case (t, ver) =>
-      body.append("T ").append(t).append(' ').append(ver).append('\n') }
-    st.files.foreach { case (f, meta) =>
-      if (meta.stats.isEmpty) body.append("F ").append(f).append('\n')
-      else meta.stats.toSeq.sortBy(_._1).foreach { case (c, s) =>
-        // the record's mstats token, space-separated (no token field
-        // contains a space or ':')
-        body.append("F ").append(f).append(' ')
-          .append(renderOneStat(c, s).replace(':', ' ')).append('\n')
-      }
-      if (meta.size >= 0L)
-        body.append("Z ").append(f).append(' ').append(meta.size)
-          .append(' ').append(meta.modTime).append('\n')
-      meta.rowBase.foreach { b =>
-        body.append("O ").append(f).append(' ').append(b).append('\n') }
-      meta.bloom.foreach { hex =>
-        body.append("B ").append(f).append(' ').append(meta.bloomCol)
-          .append(' ').append(hex).append('\n')
-      }
-      meta.dv.foreach { enc0 =>
-        // a UNION of repeated partial deletes materialized inline
-        // during resolution — re-spill it so checkpoint lines stay
-        // metadata-thin too. Per-attempt names: a concurrent
-        // checkpointer at the same version writes its own sidecars
-        // and exactly one checkpoint publishes (the link CAS below);
-        // the loser's sidecars orphan, nothing ever shares or
-        // overwrites a referenced path.
-        val enc =
-          if (enc0.startsWith("@") || enc0.length <= DvSidecarThreshold) enc0
-          else spillSidecar(root, s"ckpt$v", enc0)
-        body.append("D ").append(f).append(' ').append(enc).append('\n')
-      }
-    }
+    val st0 = resolveState(root, v)
+    // a DV materialized inline during resolution is the UNION of
+    // repeated partial deletes — re-spill it so the checkpoint stays
+    // metadata-thin too. Per-attempt names: a concurrent checkpointer
+    // at the same version writes its own sidecars and exactly one
+    // checkpoint publishes (the link CAS below); the loser's sidecars
+    // orphan, nothing ever shares or overwrites a referenced path.
+    val st = st0.copy(files = st0.files.map { case (f, meta) =>
+      (f, meta.copy(dv = meta.dv.map { enc =>
+        if (enc.startsWith("@") || enc.length <= DvSidecarThreshold) enc
+        else spillSidecar(root, s"ckpt$v", enc)
+      }))
+    })
     val tmp = logDir(root).resolve(s".tmp-ckpt-$v")
-    Files.writeString(tmp, body.toString)
+    Files.writeString(tmp, codec.writeValueAsString(st))
     try Files.createLink(target, tmp)
     catch { case _: FileAlreadyExistsException => () } // concurrent checkpointer won
     finally Files.deleteIfExists(tmp)
@@ -801,10 +600,7 @@ object TxnLog {
     // stays O(commits + 2) instead of growing a checkpoint per
     // interval, and a reader racing this delete falls back to the
     // surviving newer one (loadCheckpointFrom retries down the list).
-    listDir(logDir(root))
-      .filter(_.getFileName.toString.endsWith(".checkpoint"))
-      .map(p => (p.getFileName.toString.stripSuffix(".checkpoint").toLong, p))
-      .sortBy(-_._1).drop(2)
+    checkpointsIn(listDir(logDir(root))).sortBy(-_._1).drop(2)
       .foreach { case (cv, p) => Files.deleteIfExists(p); ckptCache.remove((root, cv)) }
     v
   }
@@ -867,7 +663,7 @@ object TxnLog {
     * bitmap whose hex rendering exceeds this many chars (2 KiB of
     * bitmap ≈ a 16k-row span) is spilled to `_log/dv/<name>.dv` and
     * referenced from the record as `@<absolute path>` — the Delta
-    * inline-vs-DV-file split. The log record and checkpoint line stay
+    * inline-vs-DV-file split. The log record and checkpoint stay
     * metadata-thin no matter how dense the delete (a dense DV on a
     * 10M-row file would otherwise put a 1.25 MB hex string in ONE
     * JSON record); the bitmap bytes are read only when the table is
@@ -1375,8 +1171,9 @@ object TxnLog {
     }
     // bloom carry: the dominant (column, bits, k) among live files'
     // filters — rewrites and inserts keep point-lookup skipping alive
-    // instead of eroding it file by file. Absent/legacy encodings =
-    // no bloom (sound: an absent bloom never prunes).
+    // instead of eroding it file by file. A file without a bloom, or
+    // with one whose width is not a power of two, adds no vote
+    // (sound: an absent bloom never prunes).
     val bloomPlan: Option[(String, Int, Int)] = state.iterator
       .flatMap { case (_, m) =>
         m.bloom.filter(_ => m.bloomCol.nonEmpty)
@@ -1433,9 +1230,10 @@ object TxnLog {
     * enforcement happens on the incoming BATCH, O(batch) not
     * O(table), before anything publishes: bad data never becomes
     * visible. The constraint itself rides the log (and checkpoints),
-    * so every writer sees it. Constraint names and expressions may
-    * not contain double quotes (the record format's fail-fast rule,
-    * same as paths).
+    * so every writer sees it. A constraint name may not contain a
+    * space (the `constraint` payload is "<name> <expr>", cut at the
+    * first space); names and expressions may not contain double
+    * quotes.
     */
   def setConstraint(root: String, name: String, sqlExpr: String,
                     txnId: String): Commit = {
@@ -1979,10 +1777,10 @@ object TxnLog {
       st.renames)
   }
 
-  /** Base64 of a schema's JSON — safe inside the record format (a
-    * raw schema JSON is full of double quotes). What schema-bearing
-    * writers pass as [[commit]]'s `schemaJson`, making the TABLE'S
-    * SCHEMA a log fact: planning ([[table]]) needs no footer reads.
+  /** Base64 of a schema's JSON, the form the log keeps. What
+    * schema-bearing writers pass as [[commit]]'s `schemaJson`, making
+    * the TABLE'S SCHEMA a log fact: planning ([[table]]) needs no
+    * footer reads.
     */
   def encodeSchema(schema: StructType): String =
     java.util.Base64.getEncoder.encodeToString(
@@ -2080,10 +1878,8 @@ object TxnLog {
     // sweep above: a root reached via a different spelling (symlink,
     // relative path, doubled separator) must never make a referenced
     // sidecar look orphaned.
-    val ckptRefs = listDir(logDir(root))
-      .filter(_.getFileName.toString.endsWith(".checkpoint"))
-      .flatMap(p => parseCheckpoint(0L, Files.readString(p)).files
-        .flatMap(_._2.dv))
+    val ckptRefs = checkpointsIn(listDir(logDir(root)))
+      .flatMap { case (v, p) => readCheckpoint(v, p).files.flatMap(_._2.dv) }
     val liveNames = (allCommits.flatMap(_.dvs) ++ ckptRefs)
       .collect { case v if v.startsWith("@") =>
         Paths.get(v.drop(1)).getFileName.toString }.toSet
@@ -2354,10 +2150,10 @@ object TxnLog {
       else Some((c, e, pctRow.getSeq[Double](idx)))
     }.filter { case (_, _, b) =>
       // A column containing ±Infinity (or NaN) yields non-finite
-      // percentile boundaries the space-delimited H-line payload
-      // cannot carry — skip the column (like strings), rather than
-      // letting commit()'s payload guard abort the LAST chunk after
-      // earlier restat chunks already landed.
+      // percentile boundaries commit()'s payload guard rejects — skip
+      // the column (like strings), rather than letting that guard
+      // abort the LAST chunk after earlier restat chunks already
+      // landed.
       b.size == k + 1 && b.forall(java.lang.Double.isFinite)
     }
     if (bounded.isEmpty) return Nil
@@ -2464,12 +2260,11 @@ object TxnLog {
 
   /** Parse a bloom encoding's (bits, k) back out of its
     * `"<k>[n]:<hex>"` form — how a rewrite recovers the parameters
-    * its victim files were built under. None for legacy/opaque
-    * encodings (sound: the rewrite then just carries no bloom).
+    * its victim files were built under. None when the width is not
+    * a power of two (sound: the rewrite then just carries no bloom).
     */
   private def bloomSpec(enc: String): Option[(Int, Int)] = {
     val i = enc.indexOf(':')
-    if (i <= 0) return None
     val k = enc.take(i).takeWhile(_.isDigit)
     val bits = (enc.length - i - 1) * 4
     if (k.isEmpty || bits <= 0 || Integer.bitCount(bits) != 1) None
@@ -2518,13 +2313,14 @@ object TxnLog {
   private[sources] def bloomAdmits(s: SparkSession, m: FileMeta,
                                    column: String, value: Any): Boolean =
     m.bloom.forall { enc =>
-      m.bloomCol != column || !enc.contains(':') || {
+      m.bloomCol != column || {
         val Array(kTok, hex) = enc.split(":", 2)
         // 'n' flag: the build hashed the column cast to LONG —
         // normalize integral probe values the same way, so an Int
-        // probe of a Long-built filter tests the right bits. Legacy
-        // unflagged filters hashed the raw column type; the raw probe
-        // value preserves their (probe type == column type) contract.
+        // probe of a Long-built filter tests the right bits. An
+        // unflagged filter (what bloomsForStaged builds over a
+        // non-integral column) hashed the raw column type; the raw
+        // probe value keeps its (probe type == column type) contract.
         val normalized = kTok.endsWith("n")
         val k = (if (normalized) kTok.dropRight(1) else kTok).toInt
         val probe: Any =
@@ -2672,10 +2468,8 @@ object TxnLog {
       require(e.nonEmpty && !e.contains('"'),
         s"txn $txnId: constraint expressions may not contain double quotes")
     }
-    val caddsB64 = cadds.map { case (n, e) => b64enc(s"$n $e") }
     // properties riding the commit: same validation as setTableProperty
     padds.foreach { case (k, v) => validateProperty(k, v) }
-    val paddsB64 = padds.map { case (k, v) => b64enc(s"$k $v") }
     partitionBy.foreach { c =>
       validateToken("partition column", c)
       require(!c.exists(":|,".contains(_)),
@@ -2686,17 +2480,15 @@ object TxnLog {
     require(restats.flatMap(_.keys).forall(c =>
         c.nonEmpty && !c.exists(":|, \"".contains(_))),
       s"txn $txnId: restat column names must be non-empty and separator-free")
-    // table-level histograms: (col, payload) — payload rides a
-    // space-delimited checkpoint H line, so it must be space-free
+    // table-level histograms: (col, payload) — the payload is the
+    // `height;lo,hi,ndv;…` text [[tableHistograms]] parses
     hists.foreach { case (c, p) =>
       validateToken("histogram column", c)
       require(p.nonEmpty && p.matches("[-0-9.,;Ee]+"),
         s"txn $txnId: malformed histogram payload for $c")
     }
-    val histsB64 = hists.map { case (c, p) => b64enc(s"$c $p") }
-    // COPY INTO source markers: md5(path):size — hex + digits keeps
-    // them safe in both the record's JSON array and the checkpoint's
-    // space-delimited I line
+    // COPY INTO source markers: md5(path):size, the one shape the
+    // ingest ledger compares
     require(ingests.forall(_.matches("[0-9a-f]{32}:\\d+")),
       s"txn $txnId: malformed ingest marker (want md5hex:size)")
     val myRemoved = removed.toSet
@@ -2854,10 +2646,10 @@ object TxnLog {
           (bs, b)
         } else if (explicitBases.exists(_ >= 0L)) (explicitBases, hwm0)
         else (Seq.empty[Long], hwm0)
-      // the W line moves for fresh allocation, a cross-log floor
-      // (clone/fork/publish carry the source log's mark so later
-      // inserts never mint ids under carried ranges), or a passed-
-      // through range that tops the current mark
+      // the high-water mark moves for fresh allocation, a cross-log
+      // floor (clone/fork/publish carry the source log's mark so
+      // later inserts never mint ids under carried ranges), or a
+      // passed-through range that tops the current mark
       val passTop = added.indices.iterator
         .filter(i => explicitBases(i) >= 0L && rowsPerFile(i) >= 0L)
         .map(i => explicitBases(i) + rowsPerFile(i))
@@ -2866,12 +2658,12 @@ object TxnLog {
       val newHwm = if (hwmTop > hwm0) hwmTop else -1L
       val rec = Commit(head + 1, action, txnId, readVersion, added, removed,
         schemaId, blooms, bloomCol, dvFiles, dvPayloads,
-        commitTs, multiStats.map(renderMultiStat), constraint, schemaJson,
-        rename, sizes, caddsB64, partitionBy.mkString(","),
-        restatFiles, restats.map(renderMultiStat), histsB64, ingests, radds,
-        rbases, newHwm, paddsB64, propReset, conReset)
+        commitTs, multiStats, constraint, schemaJson,
+        rename, sizes, cadds, partitionBy.mkString(","),
+        restatFiles, restats, hists, ingests, radds,
+        rbases, newHwm, padds, propReset, conReset)
       val tmp = logDir(root).resolve(s".tmp-$txnId-${rec.version}")
-      Files.writeString(tmp, render(rec))
+      Files.writeString(tmp, codec.writeValueAsString(rec))
       try {
         Files.createLink(entryPath(root, rec.version), tmp)
         Files.deleteIfExists(tmp)
@@ -3518,8 +3310,7 @@ object TxnLog {
     * history, so a wall clock stepping backwards between sessions can
     * never make time travel non-deterministic (the Delta
     * TIMESTAMP AS OF contract). O(history) record opens — an
-    * administrative query, not a planning path; legacy records
-    * without timestamps (ts = 0) sort before every real clock.
+    * administrative query, not a planning path.
     */
   def versionAsOf(root: String, tsMillis: Long): Long = {
     var best = -1L

@@ -268,21 +268,27 @@ class TxnLogSpec extends SparkTestBase {
   test("the log rejects record and checkpoint shapes it does not write") {
     def rejects(file: String, body: String, bad: String): Unit = {
       val root = freshRoot()
-      Files.writeString(java.nio.file.Paths.get(root, "_log", file), body)
+      val path = java.nio.file.Paths.get(root, "_log", file)
+      Files.writeString(path, body)
       val e = intercept[RuntimeException](TxnLog.snapshotState(root))
-      assert(e.getMessage.contains(bad), s"expected '$bad' in: ${e.getMessage}")
+      assert(e.getMessage.contains(path.toString) && e.getMessage.contains(bad),
+        s"expected the file and '$bad' in: ${e.getMessage}")
     }
-    val ckpt = f"${1L}%020d.checkpoint"
-    // a checkpoint without the header line
-    rejects(ckpt, "/t/data/a.parquet\n", "/t/data/a.parquet")
-    // an unnamed `F <path> <lo> <hi>` stat line
-    rejects(ckpt, "#graft-ckpt-v2\nT t1 1\nF /t/data/a.parquet 1 9\n",
-      "F /t/data/a.parquet 1 9")
-    // a 4-field `col:lo:hi:rows` mstats token in a commit record
-    rejects(f"${1L}%020d.json",
+    def record(rest: String): String =
       """{"version":1,"action":"append","txnId":"t1","readVersion":0,""" +
-        """"added":["/t/data/a.parquet"],"removed":[],"mstats":["k:1:9:10"]}""",
-      "k:1:9:10")
+        s""""added":["/t/data/a.parquet"],"removed":[]$rest}"""
+    val rec = f"${1L}%020d.json"
+    // a checkpoint in the old `#graft-ckpt-v2` line format
+    rejects(f"${1L}%020d.checkpoint", "#graft-ckpt-v2\nT t1 1\nF /t/data/a.parquet\n",
+      "'#'")
+    // a checkpoint whose body holds another version than its name
+    rejects(f"${2L}%020d.checkpoint", """{"version":1}""", "holds version 1")
+    // a key Commit does not have (the old name of `schemaId`)
+    rejects(rec, record(""","ts":5,"schema":"s1""""), "\"schema\"")
+    // a record without its timestamp
+    rejects(rec, record(""), "\"ts\"")
+    // an old string stat token where a column -> stat map belongs
+    rejects(rec, record(""","ts":5,"multiStats":["k:l:1:9:10:0"]"""), "k:l:1:9:10:0")
   }
 
   test("inline commit-record stats prune non-overlapping files; the range read equals filter-after-full-scan") {
@@ -357,7 +363,7 @@ class TxnLogSpec extends SparkTestBase {
     TxnLog.commit(root, "append", f4, Nil, readVersion = 2L, txnId = "t4",
       schemaId = gen2Id)
     assert(TxnLog.read(spark, root, mergeSchema = true).count() === 3L)
-    // enforcement survives a checkpoint (current schema rides the S-line)
+    // enforcement survives a checkpoint (it carries the current schema)
     TxnLog.checkpoint(root)
     val f5 = TxnLog.stage(gen1, root, "t5")
     intercept[TxnLog.SchemaMismatchException] {
@@ -584,7 +590,7 @@ class TxnLogSpec extends SparkTestBase {
     assert(TxnLog.deleteWhere(spark, root, col("k") === 17L, "d3") === None)
     assert(TxnLog.currentVersion(root) === 3L)
 
-    // DVs ride checkpoints (D-lines)
+    // DVs ride checkpoints
     TxnLog.checkpoint(root)
     assert(rows(root) === data.filterNot(d => d._1 % 5 == 2 || d._1 % 7 == 3).toSet)
 
@@ -856,8 +862,7 @@ class TxnLogSpec extends SparkTestBase {
 
   test("r12 review regressions: token validation, insert-insert merge conflict, staging vacuum") {
     val root = freshRoot()
-    // a txnId with a space would corrupt the 10th commit's checkpoint
-    // T-line and brick the table — reject at the API boundary
+    // a txnId with a space is rejected at the API boundary
     intercept[IllegalArgumentException] {
       TxnLog.commit(root, "append", Nil, Nil, readVersion = 0L, txnId = "my stream-b0")
     }
@@ -1115,7 +1120,7 @@ class TxnLogSpec extends SparkTestBase {
       java.nio.file.Paths.get(f + ".hidden"), java.nio.file.Paths.get(f)))
     // data restored: the same plan executes correctly
     assert(TxnLog.table(spark, root).filter($"k" <= 10L).count() === 10L)
-    // sizes survive checkpoints (Z-lines)
+    // sizes survive checkpoints
     TxnLog.checkpoint(root)
     assert(TxnLog.snapshotState(root).forall(_._2.size >= 0L))
   }
@@ -1145,7 +1150,7 @@ class TxnLogSpec extends SparkTestBase {
     TxnLog.deleteWhere(spark, root, col("k") % 3 === 0 && col("k") % 2 =!= 0, "d2")
     val expect = (0L until 100000L).filterNot(k => k % 2 == 0 || k % 3 == 0)
     assert(TxnLog.read(spark, root).count() === expect.size.toLong)
-    // the checkpoint re-spills the materialized union: thin D-line,
+    // the checkpoint re-spills the materialized union: thin entry,
     // correct reads from checkpoint-seeded resolution
     TxnLog.checkpoint(root)
     val ckpt = java.nio.file.Files.list(java.nio.file.Paths.get(root, "_log"))
