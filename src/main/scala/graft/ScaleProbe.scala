@@ -856,7 +856,7 @@ object ScaleProbe {
           .select(col("id").as("k"), (col("id") * 7 % 13).as("v"))
         val files = TxnLog.stage(df, root, s"t$i")
         TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
-          txnId = s"t$i", schemaJson = TxnLog.encodeSchema(schema))
+          txnId = s"t$i", physSchema = Some(schema))
       }
       val t0 = System.nanoTime()
       val q = spark.readStream.format("graft-txn")

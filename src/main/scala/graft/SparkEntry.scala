@@ -644,7 +644,7 @@ object SparkEntry {
     val blooms = TxnLog.bloomsForStaged(s, root, "v1-clustered", "o_tag", files)
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
       txnId = "v1-clustered", blooms = blooms, bloomCol = "o_tag",
-      multiStats = multi, schemaJson = TxnLog.encodeSchema(base.schema))
+      multiStats = multi, physSchema = Some(base.schema))
   }
 
   /** A third [[graft.sources.TxnLog]] table for the row-level-delete
@@ -772,7 +772,7 @@ object SparkEntry {
       Seq("o_orderkey", "o_orderpriority", "o_orderdate"), files)
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
       txnId = "v1-typed", multiStats = multi,
-      schemaJson = TxnLog.encodeSchema(base.schema))
+      physSchema = Some(base.schema))
   }
 
   /** Build every registered fixture for `dir`, and run each one's

@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, NonEmptyNamespaceException, TableAlreadyExistsException}
 import org.apache.spark.sql.catalyst.{expressions => ce}
 import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, SupportsDeleteV2, SupportsNamespaces, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
-import org.apache.spark.sql.connector.expressions.{NamedReference, Transform, Literal => V2Literal}
+import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform, Literal => V2Literal}
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
@@ -329,9 +329,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     TxnLog.commit(root, "create", Nil, Nil, readVersion = 0L,
       txnId = s"create-table-a$uuid12",
       schemaId = TxnLog.schemaFingerprint(schema),
-      schemaJson = TxnLog.encodeSchema(schema),
+      physSchema = Some(schema),
       cadds = GraftTable.constraintProps(properties) ++ genChecks,
-      partitionBy = pcols,
+      partitionBy = Some(pcols),
       // user TBLPROPERTIES ride the SAME record (r20, the padds fold):
       // declared policy (graft.autoCompact.*) is visible at the first
       // version the table exists — a crash can never leave a visible
@@ -427,7 +427,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
               readVersion = TxnLog.currentVersion(root),
               txnId = s"sql-addnested-a$uuid12",
               schemaId = TxnLog.schemaFingerprint(evolved),
-              schemaJson = TxnLog.encodeSchema(evolved))
+              physSchema = Some(evolved))
           case other => throw new IllegalArgumentException(
             s"graft: $topL is ${other.simpleString}, not a struct")
         }
@@ -454,7 +454,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
               readVersion = TxnLog.currentVersion(root),
               txnId = s"sql-dropnested-a$uuid12",
               schemaId = TxnLog.schemaFingerprint(evolved),
-              schemaJson = TxnLog.encodeSchema(evolved))
+              physSchema = Some(evolved))
           case other => throw new IllegalArgumentException(
             s"graft: $topL is ${other.simpleString}, not a struct")
         }
@@ -509,8 +509,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         TxnLog.commit(root, "schema-evolve", Nil, Nil,
           readVersion = TxnLog.currentVersion(root), txnId = s"sql-addcol-a$uuid12",
           schemaId = TxnLog.schemaFingerprint(evolved),
-          schemaJson = TxnLog.encodeSchema(evolved),
-          rename = if (phys == nm) "" else s"$phys $nm")
+          physSchema = Some(evolved),
+          rename = Option.when(phys != nm)(phys -> nm))
       // SET / DROP NOT NULL: a metadata commit; SET first proves the
       // live rows are null-free (stats fast path, else one probe)
       case nl: TableChange.UpdateColumnNullability =>
@@ -548,7 +548,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           readVersion = TxnLog.currentVersion(root),
           txnId = s"sql-setdefault-a$uuid12",
           schemaId = TxnLog.schemaFingerprint(evolved),
-          schemaJson = TxnLog.encodeSchema(evolved))
+          physSchema = Some(evolved))
       case d: TableChange.DeleteColumn =>
         require(d.fieldNames.length == 1,
           s"graft: only top-level columns drop: ${d.fieldNames.mkString(".")}")
@@ -562,7 +562,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         TxnLog.commit(root, "schema-evolve", Nil, Nil,
           readVersion = TxnLog.currentVersion(root), txnId = s"sql-dropcol-a$uuid12",
           schemaId = TxnLog.schemaFingerprint(evolved),
-          schemaJson = TxnLog.encodeSchema(evolved))
+          physSchema = Some(evolved))
       // ALTER COLUMN c TYPE <wider>: one metadata commit; old files
       // read through the widened schema (Spark's parquet readers
       // up-convert int32->int64 and float->double), and typed stats
@@ -587,7 +587,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         TxnLog.commit(root, "schema-evolve", Nil, Nil,
           readVersion = TxnLog.currentVersion(root), txnId = s"sql-widen-a$uuid12",
           schemaId = TxnLog.schemaFingerprint(evolved),
-          schemaJson = TxnLog.encodeSchema(evolved))
+          physSchema = Some(evolved))
       case c =>
         throw new UnsupportedOperationException(s"graft: unsupported ALTER TABLE change: $c")
     }
@@ -746,6 +746,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 private[sources] object GraftTable {
   val ConstraintProp = "graft.constraint."
 
+  /** A column name as a backquoted identifier: the V2 reference
+    * parser (`Expressions.column`, `identity`, `bucket`, …) then
+    * keeps `first name`, `a,b` or `-` as one column.
+    */
+  def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
+
   /** The CHECK constraints among a DDL statement's table properties,
     * as (name, expr) pairs for [[TxnLog.commit]]'s `cadds`. Other
     * properties (location/comment/provider) are warehouse-managed and
@@ -819,8 +825,8 @@ private[sources] object GraftTable {
     * land as `cadds` in the create record itself) nor Spark's
     * reserved bookkeeping. Persisted right after the create commit so
     * a policy declared at CREATE (`graft.autoCompact.*`) actually
-    * takes effect — previously these were silently dropped. A key or
-    * value [[TxnLog.setTableProperty]] cannot encode rejects loudly.
+    * takes effect — previously these were silently dropped. An empty
+    * key or value rejects loudly ([[TxnLog.validateProperty]]).
     */
   def policyProps(properties: util.Map[String, String]): Seq[(String, String)] =
     properties.asScala.toSeq.filterNot { case (k, _) =>
@@ -831,8 +837,8 @@ private[sources] object GraftTable {
   /** GENERATED ALWAYS AS columns declared on the schema, as
     * (column, generation-expression SQL) — the analyzer validated
     * determinism and type agreement at CREATE and ships the text in
-    * the field metadata, which [[TxnLog.encodeSchema]] preserves
-    * verbatim (schema JSON carries metadata), so the declaration
+    * the field metadata, which the log's schema preserves verbatim
+    * (schema JSON carries metadata), so the declaration
     * round-trips through the log with zero extra machinery.
     */
   def generatedColumns(schema: StructType): Seq[(String, String)] = {
@@ -1036,7 +1042,7 @@ private[sources] object GraftTable {
       readVersion = if (overwrite || guardAppends) readV else 0L,
       txnId = txnId, multiStats = multi,
       schemaId = TxnLog.schemaFingerprint(phys.schema),
-      schemaJson = declareJson(root, phys.schema),
+      physSchema = declareSchema(root, phys.schema),
       failOnConcurrentAppend = guardAppends)
     catch {
       case e: TxnLog.ConflictException =>
@@ -1102,12 +1108,12 @@ private[sources] object GraftTable {
       added = files, removed = dead,
       readVersion = readV, txnId = txnId, multiStats = multi,
       schemaId = TxnLog.schemaFingerprint(phys.schema),
-      schemaJson = declareJson(root, phys.schema),
+      physSchema = declareSchema(root, phys.schema),
       dvFiles = dvFiles, dvs = dvs)
     ()
   }
 
-  /** The schemaJson a WRITE should carry: "" when the log already
+  /** The schema a WRITE should declare: None when the log already
     * declares a schema — an append must never REDEFINE the table's
     * schema (the write query's nullability is an artifact of the
     * statement: `VALUES`/`range` rows are non-nullable, and letting
@@ -1116,10 +1122,9 @@ private[sources] object GraftTable {
     * legitimately serve NULL). Only schema-bearing DDL (CREATE,
     * ALTER, RTAS) and the first write of a raw-API table set it.
     */
-  private[sources] def declareJson(root: String,
-                                   sch: StructType): String =
-    if (TxnLog.rawTableSchema(root).isDefined) ""
-    else TxnLog.encodeSchema(sch)
+  private[sources] def declareSchema(root: String,
+                                     sch: StructType): Option[StructType] =
+    if (TxnLog.rawTableSchema(root).isDefined) None else Some(sch)
 
   /** Safe type WIDENINGS for ALTER COLUMN TYPE: within the integral
     * family upward, and float->double. Every pair here is one Spark's
@@ -1248,21 +1253,16 @@ class GraftTable(val root: String, version: Long, timeTraveled: Boolean)
     */
   override def partitioning(): Array[Transform] = {
     val p2l = TxnLog.columnMapping(root, version).map(_.swap)
-    TxnLog.partitionFields(root, version).map {
-      case TxnLog.IdentityField(c) =>
-        org.apache.spark.sql.connector.expressions.Expressions.identity(
-          p2l.getOrElse(c, c))
-      case TxnLog.BucketField(n, c) =>
-        org.apache.spark.sql.connector.expressions.Expressions.bucket(
-          n, p2l.getOrElse(c, c))
+    def ref(c: String) = GraftTable.quoted(p2l.getOrElse(c, c))
+    TxnLog.partitionFields(root, version).map[Transform] {
+      case TxnLog.IdentityField(c)  => Expressions.identity(ref(c))
+      case TxnLog.BucketField(n, c) => Expressions.bucket(n, ref(c))
       case TxnLog.TemporalField(u, c) =>
-        import org.apache.spark.sql.connector.expressions.Expressions._
-        val l = p2l.getOrElse(c, c)
         u match {
-          case "years"  => years(l)
-          case "months" => months(l)
-          case "days"   => days(l)
-          case _        => hours(l)
+          case "years"  => Expressions.years(ref(c))
+          case "months" => Expressions.months(ref(c))
+          case "days"   => Expressions.days(ref(c))
+          case _        => Expressions.hours(ref(c))
         }
     }.toArray
   }
@@ -1590,8 +1590,8 @@ private class StagedGraftTable(root: String, stagedSchema: StructType,
       TxnLog.commit(root, "create", added = files, removed = Nil,
         readVersion = 0L, txnId = txnId, multiStats = multi,
         schemaId = TxnLog.schemaFingerprint(sch),
-        schemaJson = TxnLog.encodeSchema(sch), cadds = constraints,
-        partitionBy = partitionBy,
+        physSchema = Some(sch), cadds = constraints,
+        partitionBy = Some(partitionBy),
         // declared TBLPROPERTIES ride the create record (r20): the
         // table is never visible without its declared policy
         padds = policyProps)
@@ -1610,8 +1610,9 @@ private class StagedGraftTable(root: String, stagedSchema: StructType,
         removed = TxnLog.snapshotFiles(root, readV),
         readVersion = readV, txnId = txnId, multiStats = multi,
         schemaId = TxnLog.schemaFingerprint(sch),
-        schemaJson = TxnLog.encodeSchema(sch), cadds = constraints,
-        partitionBy = partitionBy,
+        physSchema = Some(sch), cadds = constraints,
+        // no PARTITIONED BY keeps the replaced table's partitioning
+        partitionBy = Option.when(partitionBy.nonEmpty)(partitionBy),
         padds = policyProps, propReset = true, conReset = true)
     }
     ()
@@ -1691,8 +1692,8 @@ private class GraftWriteBuilder(root: String, info: LogicalWriteInfo)
         org.apache.spark.sql.connector.distributions.Distributions.unspecified()
       else
         org.apache.spark.sql.connector.distributions.Distributions.ordered(
-          pcols.map(c => org.apache.spark.sql.connector.expressions.Expressions.sort(
-            org.apache.spark.sql.connector.expressions.Expressions.column(c),
+          pcols.map(c => Expressions.sort(
+            Expressions.column(GraftTable.quoted(c)),
             org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)).toArray)
 
     override def requiredOrdering()
@@ -2021,8 +2022,7 @@ private class GraftScan(spark: SparkSession, root: String, version: Long,
       }.filter(_.nonEmpty).toSet
       required.fields.iterator.map(_.name)
         .filter(n => prunablePhys(physName(n)))
-        .map(n =>
-          org.apache.spark.sql.connector.expressions.Expressions.column(n))
+        .map(n => Expressions.column(GraftTable.quoted(n)))
         .toArray
     }
 
@@ -2093,8 +2093,7 @@ private class GraftScan(spark: SparkSession, root: String, version: Long,
       case Some((n, c)) =>
         val logical = renames.map(_.swap).getOrElse(c, c)
         new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-          Array(org.apache.spark.sql.connector.expressions.Expressions.bucket(
-            n, logical)), n)
+          Array(Expressions.bucket(n, GraftTable.quoted(logical))), n)
       case None =>
         new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(
           kept.size)
@@ -2250,8 +2249,7 @@ private class GraftScan(spark: SparkSession, root: String, version: Long,
           val hist = hists.get(physName(fd.name))
             .filter(_ => kind.nonEmpty && minV.isDefined)
           if (ndv.isDefined || nulls.isDefined)
-            out.put(org.apache.spark.sql.connector.expressions.Expressions
-                .column(fd.name),
+            out.put(Expressions.column(GraftTable.quoted(fd.name)),
               new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {
                 override def distinctCount(): OptionalLong =
                   ndv.map(OptionalLong.of).getOrElse(OptionalLong.empty())
@@ -2271,7 +2269,7 @@ private class GraftScan(spark: SparkSession, root: String, version: Long,
                         override def height(): Double = h.height
                         override def bins(): Array[
                             org.apache.spark.sql.connector.read.colstats.HistogramBin] =
-                          h.bins.map { case (l, u, d) =>
+                          h.bins.map { case TxnLog.HistBin(l, u, d) =>
                             new org.apache.spark.sql.connector.read.colstats.HistogramBin {
                               override def lo(): Double = l
                               override def hi(): Double = u
@@ -2486,28 +2484,28 @@ private[sources] object GraftFilters {
 
   def toCatalyst(f: Filter, schema: StructType,
                  renames: Map[String, String]): Option[ce.Expression] = {
-    // a DOTTED attribute (`s.x` — Spark encodes nested pushdown
-    // references this way) resolves through the struct to its LEAF
-    // type; the emitted attribute keeps the dotted name, which is the
-    // stat key [[GraftTable.statPaths]] collects under. Renames apply
-    // to the TOP-level segment only (nested fields never rename — the
-    // flat column mapping does not address struct leaves).
-    def attr(name: String): Option[ce.AttributeReference] = {
-      val i = name.indexOf('.')
-      if (i < 0)
-        schema.fields.find(_.name == name).map(fd =>
-          ce.AttributeReference(renames.getOrElse(name, name), fd.dataType)())
-      else {
-        val (top, leaf) = (name.take(i), name.drop(i + 1))
-        if (leaf.contains('.')) None // one level of nesting only
-        else schema.fields.find(_.name == top).map(_.dataType).flatMap {
-          case st: StructType => st.fields.find(_.name == leaf).map(g =>
-            ce.AttributeReference(
-              s"${renames.getOrElse(top, top)}.$leaf", g.dataType)())
-          case _ => None
-        }
+    // The name arrives as a quoted multipart identifier (`first name`,
+    // `a,b`, s.x) and is parsed into its parts. A two-part name — a
+    // nested pushdown reference — resolves through the struct to its
+    // LEAF type; the emitted attribute keeps the dotted name, which is
+    // the stat key [[GraftTable.statPaths]] collects under. Renames
+    // apply to the TOP-level segment only (nested fields never rename
+    // — the flat column mapping does not address struct leaves).
+    def attr(name: String): Option[ce.AttributeReference] =
+      scala.util.Try(org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+          .parseMultipartIdentifier(name)).toOption.flatMap {
+        case Seq(top) =>
+          schema.fields.find(_.name == top).map(fd =>
+            ce.AttributeReference(renames.getOrElse(top, top), fd.dataType)())
+        case Seq(top, leaf) =>
+          schema.fields.find(_.name == top).map(_.dataType).flatMap {
+            case st: StructType => st.fields.find(_.name == leaf).map(g =>
+              ce.AttributeReference(
+                s"${renames.getOrElse(top, top)}.$leaf", g.dataType)())
+            case _ => None
+          }
+        case _ => None // one level of nesting only
       }
-    }
     def lit(v: Any, dt: DataType): Option[ce.Literal] =
       try Some(ce.Literal.create(v, dt))
       catch { case _: RuntimeException => None }

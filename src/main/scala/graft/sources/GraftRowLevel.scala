@@ -271,8 +271,8 @@ private class GraftDeltaBatchWrite(root: String, logicalSchema: StructType,
       readVersion = readV, txnId = txnId, multiStats = allMulti,
       dvFiles = dvFiles, dvs = dvs,
       schemaId = if (files.isEmpty) "" else TxnLog.schemaFingerprint(physSchema),
-      schemaJson =
-        if (files.isEmpty) "" else GraftTable.declareJson(root, physSchema),
+      physSchema =
+        if (files.isEmpty) None else GraftTable.declareSchema(root, physSchema),
       failOnConcurrentAppend = failOnConcurrentAppend,
       radds = survivors)
     ()

@@ -121,12 +121,12 @@ private class GraftStreamingWrite(root: String, logicalSchema: StructType,
                 removed = live, readVersion = readV,
                 txnId = txnId, multiStats = multi,
                 schemaId = TxnLog.schemaFingerprint(physSchema),
-                schemaJson = GraftTable.declareJson(root, physSchema))
+                physSchema = GraftTable.declareSchema(root, physSchema))
             else
               TxnLog.commit(root, "stream-append", added = files,
                 removed = Nil, readVersion = 0L, txnId = txnId, multiStats = multi,
                 schemaId = TxnLog.schemaFingerprint(physSchema),
-                schemaJson = GraftTable.declareJson(root, physSchema))
+                physSchema = GraftTable.declareSchema(root, physSchema))
           if (rec.version % TxnLog.CheckpointInterval == 0) TxnLog.checkpoint(root)
           // opt-in AUTO-COMPACT: long-lived ingest manufactures small
           // files faster than unscheduled maintenance folds them, so

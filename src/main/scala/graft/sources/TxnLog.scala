@@ -142,6 +142,17 @@ object TxnLog {
                       @JsonDeserialize(contentAs = classOf[java.lang.Long])
                       rowBase: Option[Long] = None)
 
+  /** One equi-height histogram bin: the value range [lo, hi] and its
+    * distinct count.
+    */
+  case class HistBin(lo: Double, hi: Double, ndv: Long)
+
+  /** A table-level equi-height histogram over one column (keyed by
+    * its PHYSICAL name): rows per bin and the bins in value order.
+    */
+  case class ColHistogram(height: Double,
+                          @JsonInclude(Include.ALWAYS) bins: Seq[HistBin])
+
   /** One committed log record; its file is this value's [[codec]]
     * encoding. `multiStats` (when present) is aligned with `added`:
     * per file, the column -> [[FileStat]] map, the data-skipping
@@ -154,10 +165,17 @@ object TxnLog {
     * `dvFiles`/`dvs` (aligned with each other, NOT with `added`) carry
     * row-level deletes: per-file hex bitsets of deleted row indexes
     * ([[deleteWhere]]) — a delete prices at O(deleted-row metadata),
-    * not a file rewrite. `cadds`/`padds`/`hists` are the (name,
-    * expression) constraints, (key, value) properties and (column,
-    * payload) histograms born with the commit. The fields without a
-    * default are the ones every record must carry.
+    * not a file rewrite.
+    *
+    * Table metadata rides as typed values: `physSchema` is the
+    * declared schema in PHYSICAL names; `cadds`/`padds` set (name,
+    * expression) constraints and (key, value) properties, and
+    * `cdrops`/`pdrops` drop them by name; `hists` are the table-level
+    * histograms per physical column; `rename` is one (old, new)
+    * logical column rename; `partitionBy` re-declares the partition
+    * tokens — `None` leaves the partitioning as it is, `Some(Nil)`
+    * clears it (NON_ABSENT keeps the empty list in the record). The
+    * fields without a default are the ones every record must carry.
     */
   case class Commit(version: Long, action: String, txnId: String,
                     readVersion: Long,
@@ -170,22 +188,24 @@ object TxnLog {
                     dvs: Seq[String] = Nil,
                     ts: Long,
                     multiStats: Seq[Map[String, FileStat]] = Nil,
-                    constraint: String = "",
-                    schemaJson: String = "",
-                    rename: String = "",
+                    physSchema: Option[StructType] = None,
+                    rename: Option[(String, String)] = None,
                     @JsonDeserialize(contentAs = classOf[java.lang.Long])
                     sizes: Seq[Long] = Nil,
                     cadds: Seq[(String, String)] = Nil,
-                    partitionBy: String = "",
+                    cdrops: Seq[String] = Nil,
+                    @JsonInclude(Include.NON_ABSENT)
+                    partitionBy: Option[Seq[String]] = None,
                     restatFiles: Seq[String] = Nil,
                     restats: Seq[Map[String, FileStat]] = Nil,
-                    hists: Seq[(String, String)] = Nil,
+                    hists: Map[String, ColHistogram] = Map.empty,
                     ingests: Seq[String] = Nil,
                     radds: Seq[String] = Nil,
                     @JsonDeserialize(contentAs = classOf[java.lang.Long])
                     rbases: Seq[Long] = Nil,
                     rowHwm: Long = -1L,
                     padds: Seq[(String, String)] = Nil,
+                    pdrops: Seq[String] = Nil,
                     @JsonInclude(Include.NON_DEFAULT) propReset: Boolean = false,
                     @JsonInclude(Include.NON_DEFAULT) conReset: Boolean = false)
 
@@ -258,13 +278,19 @@ object TxnLog {
   // ---- log encoding ----
   // One codec for both on-disk artifacts: a commit record is the JSON
   // encoding of a [[Commit]], a checkpoint that of a [[CkptState]].
+  // Every field is a typed value — names, expressions, paths and
+  // property values are JSON strings the codec escapes, so no
+  // character is reserved by the encoding. A Spark schema is a JSON
+  // subtree through the Jackson binding Spark's `DataType` declares
+  // itself (its own `json` on write, `DataType.fromJson` on read).
   // A field holding an empty string, collection or option is left
   // out (an element or map entry never is), so a record carries only
   // what it says. On read, a field without a Scala default is
-  // required: a missing one, or a key the case class does not have,
-  // fails the load ([[decode]]). Every `Long` inside a container is
-  // annotated `contentAs = java.lang.Long`, or it would decode as a
-  // boxed Integer that fails at its first arithmetic.
+  // required: a missing one, a key the case class does not have, or
+  // a schema Spark cannot read fails the load ([[decode]]). Every
+  // `Long` inside a container is annotated `contentAs =
+  // java.lang.Long`, or it would decode as a boxed Integer that fails
+  // at its first arithmetic.
   private[sources] val codec: JsonMapper = JsonMapper.builder()
     .addModule(DefaultScalaModule)
     .defaultPropertyInclusion(
@@ -281,20 +307,16 @@ object TxnLog {
     }
 
   // `[`, `]` and `\` are Hadoop glob syntax: `spark.read.parquet`
-  // would expand a data path holding one instead of opening it. The
-  // codec escapes the others; they stay excluded as the accepted-path
-  // contract.
-  private val PathReserved = Array('"', ',', '[', ']', ' ', '\n', '\r', '\\')
+  // would expand a data path holding one instead of opening it.
+  private val PathReserved = Array('[', ']', '\\')
 
-  // txnIds (which also name staging dirs and temp files) and the
-  // column names the log keys by. A space still splits `rename`'s
-  // "<old> <new>" payload; the codec carries any other text, so the
-  // newline and quote rule is kept as the accepted-token contract.
-  private def validateToken(kind: String, v: String): Unit = {
-    require(v.nonEmpty, s"$kind must be non-empty")
-    require(!v.exists(c => c == ' ' || c == '\n' || c == '\r' || c == '"'),
-      s"$kind may not contain spaces, newlines or quotes: $v")
-  }
+  // A txnId names staging directories and temp files under the
+  // table root, so it must be one file-name component.
+  private def validateTxnId(txnId: String): Unit =
+    require(txnId.nonEmpty && txnId != "." && txnId != ".." &&
+        !txnId.exists(c => c == '/' || c == '\\' || c == '\u0000'),
+      s"txnId must be a single file-name component (non-empty; no '/', '\\' " +
+        s"or NUL; not '.' or '..'): '$txnId'")
 
   private def validatePaths(paths: Seq[String]): Unit =
     paths.foreach { p =>
@@ -357,7 +379,10 @@ object TxnLog {
   // idempotency, schema enforcement, stats pruning and bloom
   // point-skipping need, in one atomically-published artifact.
   // Resolution for any version >= the checkpoint folds only the log
-  // tail behind it. `files` keeps the live files in snapshot order.
+  // tail behind it. `files` keeps the live files in snapshot order;
+  // `schema` is the schema fingerprint, `physSchema` the declared
+  // schema itself (physical names), `partitionBy` the partition
+  // tokens (empty = unpartitioned).
 
   private[sources] case class CkptState(
       version: Long,
@@ -366,10 +391,10 @@ object TxnLog {
       txns: Map[String, Long] = Map.empty,
       schema: String = "",
       constraints: Map[String, String] = Map.empty,
-      schemaJson: String = "",
+      physSchema: Option[StructType] = None,
       renames: Map[String, String] = Map.empty,
-      partitionBy: String = "",
-      hists: Map[String, String] = Map.empty,
+      partitionBy: Seq[String] = Nil,
+      hists: Map[String, ColHistogram] = Map.empty,
       ingests: Set[String] = Set.empty,
       props: Map[String, String] = Map.empty,
       rowHwm: Long = 0L)
@@ -446,7 +471,7 @@ object TxnLog {
     val live = scala.collection.mutable.LinkedHashMap.empty[String, FileMeta]
     seed.files.foreach { case (f, m) => live(f) = m }
     var schema = seed.schema
-    var schemaJson = seed.schemaJson
+    var physSchema = seed.physSchema
     val txns = scala.collection.mutable.Map.empty[String, Long]
     txns ++= seed.txns
     val constraints = scala.collection.mutable.Map.empty[String, String]
@@ -454,7 +479,7 @@ object TxnLog {
     val renames = scala.collection.mutable.LinkedHashMap.empty[String, String]
     renames ++= seed.renames
     var partitionBy = seed.partitionBy
-    val hists = scala.collection.mutable.Map.empty[String, String]
+    val hists = scala.collection.mutable.Map.empty[String, ColHistogram]
     hists ++= seed.hists
     val ingests = scala.collection.mutable.Set.empty[String]
     ingests ++= seed.ingests
@@ -499,34 +524,19 @@ object TxnLog {
       txns(c.txnId) = c.version
       ingests ++= c.ingests
       if (c.schemaId.nonEmpty) schema = c.schemaId
-      if (c.partitionBy.nonEmpty) partitionBy = c.partitionBy
-      if (c.schemaJson.nonEmpty) {
-        schemaJson = c.schemaJson
+      c.partitionBy.foreach(p => partitionBy = p)
+      c.physSchema.foreach { declared =>
+        physSchema = Some(declared)
         // a declared schema retires column-mapping entries whose
         // PHYSICAL target left it: after DROP COLUMN b (physical a),
         // the stale b->a entry would otherwise resurface pre-drop
         // bytes under a re-added name and block re-adding `a`
-        val declared = try org.apache.spark.sql.types.DataType.fromJson(
-            new String(java.util.Base64.getDecoder.decode(c.schemaJson),
-              java.nio.charset.StandardCharsets.UTF_8))
-            .asInstanceOf[StructType].fieldNames.toSet
-          catch { case scala.util.control.NonFatal(_) => null }
-        if (declared != null)
-          renames.filterInPlace((_, p) => declared.contains(p))
+        val names = declared.fieldNames.toSet
+        renames.filterInPlace((_, p) => names.contains(p))
       }
-      if (c.action == "set-constraint" && c.constraint.nonEmpty) {
-        val cut = c.constraint.indexOf(' ')
-        constraints(c.constraint.take(cut)) = c.constraint.drop(cut + 1)
-      }
-      if (c.action == "drop-constraint") constraints.remove(c.constraint)
-      // table PROPERTIES (X-A95): `set-property` carries "key value"
-      // in the constraint slot (same validation), `drop-property` the
-      // bare key — the tblproperties fold, linear like constraints
-      if (c.action == "set-property" && c.constraint.nonEmpty) {
-        val cut = c.constraint.indexOf(' ')
-        props(c.constraint.take(cut)) = c.constraint.drop(cut + 1)
-      }
-      if (c.action == "drop-property") props.remove(c.constraint)
+      // drop-constraint / drop-property commits name what they drop
+      constraints --= c.cdrops
+      props --= c.pdrops
       // properties born WITH a commit (r20, the atomic twin of cadds):
       // CREATE/CTAS-declared TBLPROPERTIES land in the create record
       // itself — no version at which the table is visible without its
@@ -544,13 +554,12 @@ object TxnLog {
       // from the replaced table must not keep rejecting writes.
       if (c.conReset) constraints.clear()
       constraints ++= c.cadds
-      if (c.rename.nonEmpty) {
+      c.rename.foreach { case (o, n) =>
         // LOGICAL rename over a stable PHYSICAL name: the map tracks
         // logical -> physical; renaming back to the physical name
         // drops the entry (identity mappings never accumulate). Any
         // action may carry one — a schema-evolve re-adding a dropped
         // name rides its fresh-physical mapping in the same record.
-        val Array(o, n) = c.rename.split(" ")
         val phys = renames.getOrElse(o, o)
         renames.remove(o)
         if (n != phys) renames(n) = phys
@@ -558,7 +567,7 @@ object TxnLog {
       top = c.version
     }
     CkptState(top, live.toSeq, txns.toMap, schema,
-      constraints.toMap, schemaJson, renames.toMap, partitionBy, hists.toMap,
+      constraints.toMap, physSchema, renames.toMap, partitionBy, hists.toMap,
       ingests.toSet, props.toMap, rowHwm)
   }
 
@@ -648,8 +657,7 @@ object TxnLog {
       // added columns) — the mergeSchema flag only governs the
       // schema-less raw-API fallback
       val base =
-        if (st.schemaJson.nonEmpty) openFiles(s, st.schemaJson, files)
-        else if (mergeSchema) s.read.option("mergeSchema", "true").parquet(files: _*)
+        if (st.physSchema.isDefined || mergeSchema) openFiles(s, st.physSchema, files)
         else s.read.parquet(files: _*)
       // files store PHYSICAL names; the snapshot surfaces the logical
       // names AS OF this version — time travel under a rename shows
@@ -1068,7 +1076,7 @@ object TxnLog {
       readVersion = readV, txnId = txnId, multiStats = multi,
       dvFiles = dvFiles, dvs = dvs,
       schemaId = schemaFingerprint(phys.schema),
-      schemaJson = GraftTable.declareJson(root, phys.schema))
+      physSchema = GraftTable.declareSchema(root, phys.schema))
   }
 
   /** Keyed MERGE (upsert): rows of `source` REPLACE table rows with
@@ -1199,7 +1207,7 @@ object TxnLog {
       return commit(root, "merge", files, Nil, readVersion = readV,
         txnId = txnId, multiStats = stats, blooms = blooms, bloomCol = bcol,
         schemaId = schemaFingerprint(physSource.schema),
-        schemaJson = encodeSchema(physSource.schema),
+        physSchema = Some(physSource.schema),
         failOnConcurrentAppend = true)
     }
     val affectedState = state.filter(f => affected(f._1))
@@ -1209,7 +1217,7 @@ object TxnLog {
     // source rows, which mint fresh ids off the staged files' bases
     // (the null-materialized slot), the same delete+insert identity
     // the COW DML path gives updated rows
-    val existing = readForRewrite(s, st0.schemaJson, affectedState)
+    val existing = readForRewrite(s, st0.physSchema, affectedState)
     val out = existing.join(physSource.select(physKeys.map(col): _*),
         physKeys, "left_anti")
       .unionByName(physSource.withColumn(RowIdPhysCol,
@@ -1219,7 +1227,7 @@ object TxnLog {
       readVersion = readV, txnId = txnId, multiStats = stats,
       blooms = blooms, bloomCol = bcol,
       schemaId = schemaFingerprint(physSource.schema),
-      schemaJson = encodeSchema(physSource.schema),
+      physSchema = Some(physSource.schema),
       failOnConcurrentAppend = true)
   }
 
@@ -1229,27 +1237,20 @@ object TxnLog {
     * explicit [[checkConstraints]] call before a raw [[commit]]) —
     * enforcement happens on the incoming BATCH, O(batch) not
     * O(table), before anything publishes: bad data never becomes
-    * visible. The constraint itself rides the log (and checkpoints),
-    * so every writer sees it. A constraint name may not contain a
-    * space (the `constraint` payload is "<name> <expr>", cut at the
-    * first space); names and expressions may not contain double
-    * quotes.
+    * visible. The constraint itself rides the log (and checkpoints)
+    * as a `cadds` pair, so every writer sees it. Name and expression
+    * must be non-empty.
     */
   def setConstraint(root: String, name: String, sqlExpr: String,
-                    txnId: String): Commit = {
-    require(name.nonEmpty && !name.contains(' ') && !name.contains('"'),
-      s"bad constraint name: $name")
-    require(sqlExpr.nonEmpty && !sqlExpr.contains('"'),
-      "constraint expressions may not contain double quotes")
+                    txnId: String): Commit =
     commit(root, "set-constraint", Nil, Nil,
       readVersion = currentVersion(root), txnId = txnId,
-      constraint = s"$name $sqlExpr")
-  }
+      cadds = Seq(name -> sqlExpr))
 
   /** Drop a CHECK constraint by name. */
   def dropConstraint(root: String, name: String, txnId: String): Commit =
     commit(root, "drop-constraint", Nil, Nil,
-      readVersion = currentVersion(root), txnId = txnId, constraint = name)
+      readVersion = currentVersion(root), txnId = txnId, cdrops = Seq(name))
 
   /** The CHECK constraints active at `version` (name → expression). */
   def activeConstraints(root: String,
@@ -1266,12 +1267,10 @@ object TxnLog {
     * RESTORE rewinds data, not operational policy.
     */
   def setTableProperty(root: String, key: String, value: String,
-                       txnId: String): Commit = {
-    validateProperty(key, value)
+                       txnId: String): Commit =
     commit(root, "set-property", Nil, Nil,
       readVersion = currentVersion(root), txnId = txnId,
-      constraint = s"$key $value")
-  }
+      padds = Seq(key -> value))
 
   /** The one property-shape contract, shared by [[setTableProperty]]
     * and the `padds` riding a CREATE/CTAS/RTAS commit — so a property
@@ -1280,17 +1279,14 @@ object TxnLog {
     * (a failed CREATE TABLE leaves no table behind).
     */
   def validateProperty(key: String, value: String): Unit = {
-    require(key.nonEmpty && !key.contains(' ') && !key.contains('"'),
-      s"bad property key: $key")
-    require(value.nonEmpty && !value.contains('"') &&
-        !value.exists(c => c == '\n' || c == '\r'),
-      s"property values may not contain quotes or newlines (key $key)")
+    require(key.nonEmpty, "property keys must be non-empty")
+    require(value.nonEmpty, s"property values must be non-empty (key $key)")
   }
 
   /** Unset a table property by key. */
   def unsetTableProperty(root: String, key: String, txnId: String): Commit =
     commit(root, "drop-property", Nil, Nil,
-      readVersion = currentVersion(root), txnId = txnId, constraint = key)
+      readVersion = currentVersion(root), txnId = txnId, pdrops = Seq(key))
 
   /** The table properties at `version` (key → value). Metadata-only. */
   def tableProperties(root: String,
@@ -1382,7 +1378,7 @@ object TxnLog {
         m.stats.get(phys).exists(_.nulls == 0L) }
       if (!statsProve) {
         val live = applyDeletionVectors(
-          openFiles(s, st.schemaJson, st.files.map(_._1)), st.files)
+          openFiles(s, st.physSchema, st.files.map(_._1)), st.files)
         val bad = live.filter(org.apache.spark.sql.functions.col(phys).isNull)
           .limit(1).count()
         require(bad == 0L,
@@ -1392,7 +1388,7 @@ object TxnLog {
     val evolved = StructType(raw.fields.updated(idx,
       raw.fields(idx).copy(nullable = nullable)))
     commit(root, "schema-evolve", Nil, Nil, readVersion = readV, txnId = txnId,
-      schemaId = schemaFingerprint(evolved), schemaJson = encodeSchema(evolved))
+      schemaId = schemaFingerprint(evolved), physSchema = Some(evolved))
   }
 
   /** OPTIMIZE ZORDER BY (x, y) as ONE transaction: rewrite the
@@ -1432,7 +1428,7 @@ object TxnLog {
     val phys = cols.map(physicalName(st0.renames, _))
     val base =
       if (st0.files.isEmpty) s.emptyDataFrame
-      else readForRewrite(s, st0.schemaJson, st0.files)
+      else readForRewrite(s, st0.physSchema, st0.files)
     // hilbert 2-dim keeps the canonical xy2d trace (its SQL oracle
     // replays that exact fold); d != 2 runs Skilling's d-dim
     // transpose (graft_hilbert_n) — same jump-free locality, native
@@ -1521,7 +1517,7 @@ object TxnLog {
     val victimSet = candidatesIn(state, minDeletedFraction).toSet
     if (victimSet.isEmpty) return None
     val victims = state.filter(f => victimSet(f._1))
-    val clean = readForRewrite(s, resolveState(root, readV).schemaJson, victims)
+    val clean = readForRewrite(s, rawTableSchema(root, readV), victims)
     val (cols, buckets) =
       splitStatKeys(victims.flatMap(_._2.stats.keys).distinct)
     val (files, multi) =
@@ -1544,27 +1540,18 @@ object TxnLog {
     * (pre-rewrite versions still travel through the untouched
     * originals, so no era is ever violated).
     */
-  private def readForRewrite(s: SparkSession, schemaJsonB64: String,
+  private def readForRewrite(s: SparkSession, declared: Option[StructType],
                              victims: Seq[(String, FileMeta)]): DataFrame = {
     // X-A96: every rewrite path carries STABLE ROW IDS through — the
     // victim's materialized id column where present, else its
     // allocated base + raw row index — so layout maintenance and COW
     // survivors never re-identify a row
     val files = victims.map(_._1)
-    val base =
-      if (schemaJsonB64.isEmpty) {
-        val b = s.read.option("mergeSchema", "true").parquet(files: _*)
-        b
-      } else {
-        val declared = org.apache.spark.sql.types.DataType.fromJson(
-          new String(b64dec(schemaJsonB64), java.nio.charset.StandardCharsets.UTF_8))
-          .asInstanceOf[StructType]
-        val sch =
-          if (declared.fieldNames.contains(RowIdPhysCol)) declared
-          else declared.add(org.apache.spark.sql.types.StructField(
-            RowIdPhysCol, org.apache.spark.sql.types.LongType, nullable = true))
-        s.read.schema(sch).parquet(files: _*)
-      }
+    val withRowId = declared.map(sch =>
+      if (sch.fieldNames.contains(RowIdPhysCol)) sch
+      else sch.add(org.apache.spark.sql.types.StructField(
+        RowIdPhysCol, org.apache.spark.sql.types.LongType, nullable = true)))
+    val base = openFiles(s, withRowId, files)
     applyDeletionVectors(withCarriedRowIds(base, victims), victims)
   }
 
@@ -1607,7 +1594,7 @@ object TxnLog {
       val m = state.getOrElse(f, FileMeta())
       (f, m.copy(dv = Some(hexOr(m.dv, hex))))
     }
-    val clean = readForRewrite(s, declaredSchemaJson(root, readV), victims)
+    val clean = readForRewrite(s, rawTableSchema(root, readV), victims)
     // INSERT-grade stats on the carried rows, decided over the TABLE's
     // declared physical schema (not the write's — a DELETE's
     // LogicalWriteInfo schema is the operation's)
@@ -1621,20 +1608,12 @@ object TxnLog {
     * which `mergeSchema` cannot (it refuses to merge INT with
     * BIGINT). Schema-less raw-API tables fall back to mergeSchema.
     */
-  private[sources] def openFiles(s: SparkSession, schemaJsonB64: String,
+  private[sources] def openFiles(s: SparkSession, declared: Option[StructType],
                                  files: Seq[String]): DataFrame =
-    if (schemaJsonB64.isEmpty)
-      s.read.option("mergeSchema", "true").parquet(files: _*)
-    else s.read.schema(org.apache.spark.sql.types.DataType.fromJson(
-        new String(b64dec(schemaJsonB64), java.nio.charset.StandardCharsets.UTF_8))
-        .asInstanceOf[StructType])
-      .parquet(files: _*)
-
-  /** The declared physical-schema payload at `version` ("" = none) —
-    * what cross-era readers hand to [[openFiles]]. */
-  private[sources] def declaredSchemaJson(root: String,
-                                          version: Long = Long.MaxValue): String =
-    resolveState(root, version).schemaJson
+    declared match {
+      case Some(sch) => s.read.schema(sch).parquet(files: _*)
+      case None      => s.read.option("mergeSchema", "true").parquet(files: _*)
+    }
 
   /** Fold the live snapshot's SMALL files (recorded size under
     * `smallBytes`) into ~`targetBytes` outputs as ONE transaction —
@@ -1719,13 +1698,12 @@ object TxnLog {
     val totalBytes = victims.map { case (f, m) =>
       if (m.size >= 0L) m.size else Files.size(Paths.get(f)) }.sum
     val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val clean = readForRewrite(s, st0.schemaJson, victims)
+    val clean = readForRewrite(s, st0.physSchema, victims)
     // the fold re-clusters by the declared partitioning — identity
     // columns range-cluster, a bucket transform hash-routes rows to
     // their bucket — so compaction never widens per-file
     // partition/bucket ranges
-    val pfields = (if (st0.partitionBy.isEmpty) Nil
-                   else st0.partitionBy.split(",").toSeq.map(parsePartitionToken))
+    val pfields = st0.partitionBy.map(parsePartitionToken)
       .filter(f => clean.columns.contains(f.col))
     val folded =
       if (pfields.nonEmpty) clusterByPartitioning(clean, pfields, nOut)
@@ -1777,26 +1755,15 @@ object TxnLog {
       st.renames)
   }
 
-  /** Base64 of a schema's JSON, the form the log keeps. What
-    * schema-bearing writers pass as [[commit]]'s `schemaJson`, making
-    * the TABLE'S SCHEMA a log fact: planning ([[table]]) needs no
-    * footer reads.
-    */
-  def encodeSchema(schema: StructType): String =
-    java.util.Base64.getEncoder.encodeToString(
-      schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
   /** The logged schema in PHYSICAL (storage) names — what scans and
-    * stat keys use.
+    * stat keys use, and what cross-era readers hand to [[openFiles]].
+    * Schema-bearing writers pass it as [[commit]]'s `physSchema`,
+    * making the TABLE'S SCHEMA a log fact: planning ([[table]]) needs
+    * no footer reads.
     */
   private[sources] def rawTableSchema(root: String,
-                                      version: Long = Long.MaxValue): Option[StructType] = {
-    val b64 = resolveState(root, version).schemaJson
-    if (b64.isEmpty) None
-    else Some(org.apache.spark.sql.types.DataType.fromJson(
-      new String(java.util.Base64.getDecoder.decode(b64),
-        java.nio.charset.StandardCharsets.UTF_8)).asInstanceOf[StructType])
-  }
+                                      version: Long = Long.MaxValue): Option[StructType] =
+    resolveState(root, version).physSchema
 
   /** The table's current schema as recorded in the log, if any
     * schema-bearing commit has landed — LOGICAL names (column
@@ -2087,7 +2054,7 @@ object TxnLog {
     val st0 = resolveState(root, readV)
     require(st0.files.nonEmpty, s"nothing to analyze at $root")
     val files = st0.files.map(_._1)
-    val df = openFiles(s, st0.schemaJson, files)
+    val df = openFiles(s, st0.physSchema, files)
     val cols =
       if (cols0.nonEmpty) cols0.map(c => physicalName(st0.renames, c))
       else GraftTable.statPaths(df.schema)
@@ -2096,7 +2063,9 @@ object TxnLog {
     // TABLE-level equi-height histograms (opt-in): ride the LAST
     // chunk commit so a crash mid-analyze never publishes a histogram
     // ahead of its sketches
-    val hists = if (histBins > 0) equiHeightHistograms(df, cols, histBins) else Nil
+    val hists =
+      if (histBins > 0) equiHeightHistograms(df, cols, histBins)
+      else Map.empty[String, ColHistogram]
     val ordered = files.filter(byFile.contains)
     // CHUNKED overlay commits: per-file sketches are ~KB each, so a
     // million-file analyze in one record would be a GB-scale log
@@ -2109,7 +2078,7 @@ object TxnLog {
       commit(root, "analyze", Nil, Nil, readVersion = readV,
         txnId = if (chunks.size == 1) txnId else s"$txnId-c$i",
         restatFiles = chunk, restats = chunk.map(byFile),
-        hists = if (i == chunks.size - 1) hists else Nil)
+        hists = if (i == chunks.size - 1) hists else Map.empty[String, ColHistogram])
     }
     commits.last
   }
@@ -2119,12 +2088,11 @@ object TxnLog {
     * boundaries from ONE `approx_percentile` pass, per-bin NDV from
     * ONE conditional-aggregation pass (`approx_count_distinct` per
     * bin — Spark's own ANALYZE ... FOR COLUMNS histogram recipe).
-    * Payload: `height;lo,hi,ndv;...` — what range-predicate
-    * selectivity estimation consumes through the V2 column-stats
-    * surface ([[GraftScan.estimateStatistics]]).
+    * What range-predicate selectivity estimation consumes through the
+    * V2 column-stats surface ([[GraftScan.estimateStatistics]]).
     */
   private def equiHeightHistograms(df: DataFrame, cols: Seq[String],
-                                   k: Int): Seq[(String, String)] = {
+                                   k: Int): Map[String, ColHistogram] = {
     import org.apache.spark.sql.functions.{approx_count_distinct, col, count, lit, unix_date, unix_micros, when}
     import org.apache.spark.sql.types._
     require(k >= 1 && k <= 254, s"histogram bins must be in [1, 254]: $k")
@@ -2137,7 +2105,7 @@ object TxnLog {
         case _             => None
       }
     }
-    if (numeric.isEmpty) return Nil
+    if (numeric.isEmpty) return Map.empty
     val pcts = (0 to k).map(_.toDouble / k)
     val pctAggs = numeric.map { case (c, e) =>
       org.apache.spark.sql.functions.percentile_approx(
@@ -2150,13 +2118,11 @@ object TxnLog {
       else Some((c, e, pctRow.getSeq[Double](idx)))
     }.filter { case (_, _, b) =>
       // A column containing ±Infinity (or NaN) yields non-finite
-      // percentile boundaries commit()'s payload guard rejects — skip
-      // the column (like strings), rather than letting that guard
-      // abort the LAST chunk after earlier restat chunks already
-      // landed.
+      // percentile boundaries, which no selectivity estimate can use
+      // — skip the column (like strings).
       b.size == k + 1 && b.forall(java.lang.Double.isFinite)
     }
-    if (bounded.isEmpty) return Nil
+    if (bounded.isEmpty) return Map.empty
     // per-bin counts + NDV: one GROUPED pass per column (k groups) —
     // the bin id is computed ONCE per row and the aggregation is a
     // plain hash-agg over k keys; a single conditional pass with
@@ -2174,28 +2140,16 @@ object TxnLog {
       val counts = (0 until k).map(i => byBin.get(i).map(_._1).getOrElse(0L))
       val ndvs = (0 until k).map(i => byBin.get(i).map(_._2).getOrElse(0L))
       val height = counts.sum.toDouble / k
-      val bins = (0 until k).map(i => s"${b(i)},${b(i + 1)},${ndvs(i)}")
-      c -> s"$height;${bins.mkString(";")}"
-    }
+      c -> ColHistogram(height, (0 until k).map(i => HistBin(b(i), b(i + 1), ndvs(i))))
+    }.toMap
   }
 
-  /** A parsed table-level histogram: (rows per bin, bins as
-    * (lo, hi, ndv)). Keys are PHYSICAL column names.
+  /** The table-level histograms at `version`, keyed by PHYSICAL
+    * column name. Metadata-only.
     */
-  case class ColHistogram(height: Double, bins: Seq[(Double, Double, Long)])
-
   def tableHistograms(root: String,
                       version: Long = Long.MaxValue): Map[String, ColHistogram] =
-    resolveState(root, version).hists.flatMap { case (c, payload) =>
-      try {
-        val parts = payload.split(";")
-        val bins = parts.tail.toSeq.map { t =>
-          val Array(lo, hi, ndv) = t.split(",")
-          (lo.toDouble, hi.toDouble, ndv.toLong)
-        }
-        Some(c -> ColHistogram(parts.head.toDouble, bins))
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
+    resolveState(root, version).hists
 
   /** Files per ANALYZE overlay commit — bounds a single record (and
     * the driver string building it) to ~chunk × cols × sketch-KB.
@@ -2419,37 +2373,34 @@ object TxnLog {
              dvFiles: Seq[String] = Nil,
              dvs: Seq[String] = Nil,
              multiStats: Seq[Map[String, FileStat]] = Nil,
-             constraint: String = "",
-             schemaJson: String = "",
+             physSchema: Option[StructType] = None,
              failOnConcurrentAppend: Boolean = false,
-             rename: String = "",
+             rename: Option[(String, String)] = None,
              cadds: Seq[(String, String)] = Nil,
-             partitionBy: Seq[String] = Nil,
+             cdrops: Seq[String] = Nil,
+             partitionBy: Option[Seq[String]] = None,
              restatFiles: Seq[String] = Nil,
              restats: Seq[Map[String, FileStat]] = Nil,
-             hists: Seq[(String, String)] = Nil,
+             hists: Map[String, ColHistogram] = Map.empty,
              requireHead: Long = -1L,
              ingests: Seq[String] = Nil,
              radds: Seq[String] = Nil,
              rowBases: Seq[Long] = Nil,
              rowHwmFloor: Long = -1L,
              padds: Seq[(String, String)] = Nil,
+             pdrops: Seq[String] = Nil,
              propReset: Boolean = false,
              conReset: Boolean = false): Commit = {
+    validateTxnId(txnId)
     validatePaths(added ++ removed ++ dvFiles ++ restatFiles)
     require(radds.forall(added.contains),
       s"txn $txnId: radds must be a subset of added")
     require(rowBases.isEmpty || rowBases.size == added.size,
       s"txn $txnId: rowBases (${rowBases.size}) must align with added (${added.size})")
-    validateToken("txnId", txnId)
-    if (bloomCol.nonEmpty) validateToken("bloomCol", bloomCol)
-    require(!constraint.exists(c => c == '\n' || c == '\r' || c == '"'),
-      s"txn $txnId: constraint text may not contain newlines or quotes")
     require(multiStats.isEmpty || multiStats.size == added.size,
       s"txn $txnId: multiStats (${multiStats.size}) must align with added (${added.size})")
-    require(multiStats.flatMap(_.keys).forall(c =>
-        c.nonEmpty && !c.exists(":|, \"".contains(_))),
-      s"txn $txnId: multi-stat column names must be non-empty and separator-free")
+    require(multiStats.forall(_.keys.forall(_.nonEmpty)),
+      s"txn $txnId: multi-stat column names must be non-empty")
     require(blooms.isEmpty || blooms.size == added.size,
       s"txn $txnId: blooms (${blooms.size}) must align with added (${added.size})")
     require(blooms.forall(b => b.isEmpty || b.matches("\\d+n?:[0-9a-f]+")),
@@ -2459,34 +2410,21 @@ object TxnLog {
     require(dvs.forall(v => v.matches("[0-9a-f]+") || v.startsWith("@")),
       s"txn $txnId: malformed deletion-vector encoding")
     validatePaths(dvs.collect { case v if v.startsWith("@") => v.drop(1) })
-    require(rename.isEmpty || rename.matches("\\S+ \\S+"),
-      s"txn $txnId: rename payload must be '<old> <new>': $rename")
-    // constraints riding the commit: same validation as setConstraint
-    cadds.foreach { case (n, e) =>
-      require(n.nonEmpty && !n.contains(' ') && !n.contains('"'),
-        s"txn $txnId: bad constraint name: $n")
-      require(e.nonEmpty && !e.contains('"'),
-        s"txn $txnId: constraint expressions may not contain double quotes")
-    }
-    // properties riding the commit: same validation as setTableProperty
+    require(rename.forall { case (o, n) => o.nonEmpty && n.nonEmpty },
+      s"txn $txnId: rename needs non-empty old and new names: $rename")
+    require(cadds.forall { case (n, e) => n.nonEmpty && e.nonEmpty },
+      s"txn $txnId: constraint names and expressions must be non-empty")
     padds.foreach { case (k, v) => validateProperty(k, v) }
-    partitionBy.foreach { c =>
-      validateToken("partition column", c)
-      require(!c.exists(":|,".contains(_)),
-        s"txn $txnId: partition column names may not contain separators: $c")
-    }
+    require((cdrops ++ pdrops).forall(_.nonEmpty),
+      s"txn $txnId: dropped constraint and property names must be non-empty")
+    require(partitionBy.forall(_.forall(_.nonEmpty)),
+      s"txn $txnId: partition columns must be non-empty")
     require(restatFiles.size == restats.size,
       s"txn $txnId: restatFiles (${restatFiles.size}) must align with restats (${restats.size})")
-    require(restats.flatMap(_.keys).forall(c =>
-        c.nonEmpty && !c.exists(":|, \"".contains(_))),
-      s"txn $txnId: restat column names must be non-empty and separator-free")
-    // table-level histograms: (col, payload) — the payload is the
-    // `height;lo,hi,ndv;…` text [[tableHistograms]] parses
-    hists.foreach { case (c, p) =>
-      validateToken("histogram column", c)
-      require(p.nonEmpty && p.matches("[-0-9.,;Ee]+"),
-        s"txn $txnId: malformed histogram payload for $c")
-    }
+    require(restats.forall(_.keys.forall(_.nonEmpty)),
+      s"txn $txnId: restat column names must be non-empty")
+    require(hists.keys.forall(_.nonEmpty),
+      s"txn $txnId: histogram column names must be non-empty")
     // COPY INTO source markers: md5(path):size, the one shape the
     // ingest ledger compares
     require(ingests.forall(_.matches("[0-9a-f]{32}:\\d+")),
@@ -2658,10 +2596,9 @@ object TxnLog {
       val newHwm = if (hwmTop > hwm0) hwmTop else -1L
       val rec = Commit(head + 1, action, txnId, readVersion, added, removed,
         schemaId, blooms, bloomCol, dvFiles, dvPayloads,
-        commitTs, multiStats, constraint, schemaJson,
-        rename, sizes, cadds, partitionBy.mkString(","),
-        restatFiles, restats, hists, ingests, radds,
-        rbases, newHwm, padds, propReset, conReset)
+        commitTs, multiStats, physSchema, rename, sizes, cadds, cdrops,
+        partitionBy, restatFiles, restats, hists, ingests, radds,
+        rbases, newHwm, padds, pdrops, propReset, conReset)
       val tmp = logDir(root).resolve(s".tmp-$txnId-${rec.version}")
       Files.writeString(tmp, codec.writeValueAsString(rec))
       try {
@@ -2836,16 +2773,8 @@ object TxnLog {
     * special (a partition column is just a stat column — X-A38).
     */
   def partitionColumns(root: String,
-                       version: Long = Long.MaxValue): Seq[String] = {
-    val p = resolveState(root, version).partitionBy
-    // "-" is the CLEARED sentinel (setPartitioning(Nil)): the state
-    // fold only replaces partitionBy on non-empty commit fields, so
-    // clearing needs a value that is not ""
-    if (p.isEmpty || p == ClearedPartitioning) Nil else p.split(",").toSeq
-  }
-
-  /** Sentinel partitionBy value meaning "explicitly unpartitioned". */
-  private[sources] val ClearedPartitioning = "-"
+                       version: Long = Long.MaxValue): Seq[String] =
+    resolveState(root, version).partitionBy
 
   /** The live MAX (or MIN) of an integral column at `version`,
     * metadata-only where possible: every file carrying a typed long
@@ -2894,7 +2823,9 @@ object TxnLog {
     *
     * `tokens` are log tokens over PHYSICAL column names (`c`,
     * `bucket(n;c)`, `days(c)`, …) — [[GraftProcedures]]' spelling
-    * maps logical names first. Empty = clear the partitioning.
+    * maps logical names first. The commit carries them as
+    * `partitionBy = Some(tokens)`, so empty tokens clear the
+    * partitioning (a commit without the field leaves it unchanged).
     * RESTORE across a set-partitioning boundary keeps refusing with
     * its explicit message (the restore contract names partitioning
     * drift; evolve back first).
@@ -2922,7 +2853,7 @@ object TxnLog {
     }
     commit(root, "set-partitioning", added = Nil, removed = Nil,
       readVersion = head, txnId = txnId,
-      partitionBy = if (tokens.isEmpty) Seq(ClearedPartitioning) else tokens)
+      partitionBy = Some(tokens))
   }
 
   /** A declared partition transform, parsed from its log token:
@@ -3191,37 +3122,23 @@ object TxnLog {
     * administrative DDL path, never planning.
     */
   private[sources] def historicalPhysicalNames(root: String): Set[String] =
-    commits(root).iterator.filter(_.schemaJson.nonEmpty).flatMap { c =>
-      try org.apache.spark.sql.types.DataType.fromJson(
-          new String(java.util.Base64.getDecoder.decode(c.schemaJson),
-            java.nio.charset.StandardCharsets.UTF_8))
-          .asInstanceOf[StructType].fieldNames
-      catch { case scala.util.control.NonFatal(_) => Nil }
-    }.toSet
+    commits(root).iterator.flatMap(_.physSchema).flatMap(_.fieldNames).toSet
 
   /** Every leaf name the struct column `physTop` has EVER declared —
     * the nested sibling of [[historicalPhysicalNames]]. Parquet binds
     * nested fields BY NAME (struct leaves get no fresh physical
     * identity), so re-adding a dropped leaf would resurrect pre-drop
     * bytes from old files; nested ADD refuses those names outright.
-    * O(history) schema decodes — a DDL-time cost.
+    * O(history) record opens — a DDL-time cost.
     */
   private[sources] def historicalNestedNames(root: String,
                                              physTop: String): Set[String] =
-    commits(root).iterator.filter(_.schemaJson.nonEmpty).flatMap { c =>
-      val leaves =
-        try {
-          org.apache.spark.sql.types.DataType.fromJson(
-            new String(java.util.Base64.getDecoder.decode(c.schemaJson),
-              java.nio.charset.StandardCharsets.UTF_8))
-            .asInstanceOf[StructType].fields
-            .find(_.name == physTop).map(_.dataType)
-        } catch { case scala.util.control.NonFatal(_) => None }
-      leaves match {
-        case Some(st: StructType) => st.fieldNames.toSeq
-        case _                    => Nil
-      }
-    }.toSet
+    commits(root).iterator.flatMap(_.physSchema)
+      .flatMap(_.fields.find(_.name == physTop).map(_.dataType))
+      .flatMap {
+        case st: StructType => st.fieldNames.toSeq
+        case _              => Nil
+      }.toSet
 
   /** A raw stored path as a Hadoop [[org.apache.hadoop.fs.Path]] with
     * the URI built COMPONENT-WISE, so reserved characters ('#', '%',
@@ -3250,10 +3167,6 @@ object TxnLog {
     */
   def renameColumn(root: String, oldName: String, newName: String,
                    txnId: String): Commit = {
-    validateToken("column", oldName)
-    validateToken("column", newName)
-    require(!newName.exists(":|,".contains(_)),
-      s"column names may not contain stat separators: $newName")
     tableSchema(root).foreach { sch =>
       require(sch.fieldNames.contains(oldName),
         s"rename: no column $oldName in ${sch.fieldNames.mkString(",")}")
@@ -3262,7 +3175,7 @@ object TxnLog {
     }
     commit(root, "rename-column", Nil, Nil,
       readVersion = currentVersion(root), txnId = txnId,
-      rename = s"$oldName $newName")
+      rename = Some(oldName -> newName))
   }
 
   /** Physical (storage) name of a logical column under `renames`. */
@@ -3492,12 +3405,10 @@ object TxnLog {
     if (toVersion == head) return head // already there: no-op, no commit
     val stThen = resolveState(root, toVersion)
     val stNow = resolveState(root, head)
-    // normalize the cleared sentinel: "" and "-" are both
-    // "unpartitioned" — only a REAL spec change refuses
-    def pNorm(p: String) = if (p == ClearedPartitioning) "" else p
-    require(pNorm(stNow.partitionBy) == pNorm(stThen.partitionBy),
+    require(stNow.partitionBy == stThen.partitionBy,
       s"restore: partitioning changed since v$toVersion " +
-        s"('${stThen.partitionBy}' -> '${stNow.partitionBy}'); evolve it " +
+        s"(${stThen.partitionBy.mkString("[", ", ", "]")} -> " +
+        s"${stNow.partitionBy.mkString("[", ", ", "]")}); evolve it " +
         "back with set_partitioning first")
     require(stNow.renames == stThen.renames,
       s"restore: column renames moved since v$toVersion; rename back " +
@@ -3524,13 +3435,10 @@ object TxnLog {
       // silently re-identify every non-materialized row
       rowBases = files.map(_._2.rowBase.getOrElse(-1L)),
       dvFiles = dvd.map(_._1), dvs = dvd.map(_._2),
-      schemaId = if (stThen.schemaJson.isEmpty) "" else schemaFingerprint(
-        org.apache.spark.sql.types.DataType.fromJson(
-          new String(b64dec(stThen.schemaJson),
-            java.nio.charset.StandardCharsets.UTF_8)).asInstanceOf[StructType]),
-      schemaJson = stThen.schemaJson,
+      schemaId = stThen.physSchema.map(schemaFingerprint).getOrElse(""),
+      physSchema = stThen.physSchema,
       cadds = stThen.constraints.toSeq,
-      hists = stThen.hists.toSeq,
+      hists = stThen.hists,
       requireHead = head).version
   }
 
@@ -3581,23 +3489,19 @@ object TxnLog {
         rowBases = files.map(_._2.rowBase.getOrElse(-1L)),
         rowHwmFloor = st.rowHwm,
         dvFiles = dvd.map(_._1), dvs = dvd.map(_._2),
-        schemaId = if (st.schemaJson.isEmpty) "" else schemaFingerprint(
-          org.apache.spark.sql.types.DataType.fromJson(
-            new String(b64dec(st.schemaJson),
-              java.nio.charset.StandardCharsets.UTF_8)).asInstanceOf[StructType]),
-        schemaJson = st.schemaJson,
+        schemaId = st.physSchema.map(schemaFingerprint).getOrElse(""),
+        physSchema = st.physSchema,
         cadds = st.constraints.toSeq,
-        hists = st.hists.toSeq,
+        hists = st.hists,
         // table properties travel WITH the clone (r20, Delta CLONE
         // semantics: a clone copies source table configuration) —
         // atomically, in the same record as the snapshot
         padds = st.props.toSeq,
-        partitionBy = if (st.partitionBy.isEmpty) Nil
-                      else st.partitionBy.split(",").toSeq)
+        partitionBy = Some(st.partitionBy))
       st.renames.foreach { case (logical, physical) =>
         if (logical != physical)
           commit(dstRoot, "clone-rename", Nil, Nil, readVersion = 0L,
-            txnId = s"$txnId-rn-$physical", rename = s"$physical $logical")
+            txnId = s"$txnId-rn-$physical", rename = Some(physical -> logical))
       }
       currentVersion(dstRoot)
     } catch { case e: Throwable =>
@@ -3661,22 +3565,18 @@ object TxnLog {
       rowBases = files.map(_._2.rowBase.getOrElse(-1L)),
       rowHwmFloor = st.rowHwm,
       dvFiles = dvd.map(_._1), dvs = dvd.map(_._2),
-      schemaId = if (st.schemaJson.isEmpty) "" else schemaFingerprint(
-        org.apache.spark.sql.types.DataType.fromJson(
-          new String(b64dec(st.schemaJson), java.nio.charset.StandardCharsets.UTF_8))
-          .asInstanceOf[StructType]),
-      schemaJson = st.schemaJson,
+      schemaId = st.physSchema.map(schemaFingerprint).getOrElse(""),
+      physSchema = st.physSchema,
       cadds = st.constraints.toSeq,
       // a branch starts under main's operational policy (r20): props
       // fork with the data, then evolve independently per side
       padds = st.props.toSeq,
-      partitionBy = if (st.partitionBy.isEmpty) Nil
-                    else st.partitionBy.split(",").toSeq)
+      partitionBy = Some(st.partitionBy))
     // column mapping carries as the same rename records main holds
     st.renames.foreach { case (logical, physical) =>
       if (logical != physical)
         commit(broot, "fork-rename", Nil, Nil, readVersion = 0L,
-          txnId = s"$txnId-rn-$physical", rename = s"$physical $logical")
+          txnId = s"$txnId-rn-$physical", rename = Some(physical -> logical))
     }
     broot
   }
@@ -3698,7 +3598,7 @@ object TxnLog {
     val forkV = branchForkVersion(root, name)
     val main = resolveState(root, forkV)
     val br = resolveState(broot, currentVersion(broot))
-    require(br.schemaJson == main.schemaJson && br.renames == main.renames,
+    require(br.physSchema == main.physSchema && br.renames == main.renames,
       s"graft: branch $name changed the schema; publish is data-only — " +
         "land DDL on the main table and re-fork")
     val mainFiles = main.files.toMap
@@ -3728,10 +3628,7 @@ object TxnLog {
       rowBases = added.map(_._2.rowBase.getOrElse(-1L)),
       rowHwmFloor = br.rowHwm,
       dvFiles = dvDelta.map(_._1), dvs = dvDelta.map(_._2),
-      schemaId = if (main.schemaJson.isEmpty) "" else schemaFingerprint(
-        org.apache.spark.sql.types.DataType.fromJson(
-          new String(b64dec(main.schemaJson), java.nio.charset.StandardCharsets.UTF_8))
-          .asInstanceOf[StructType]),
+      schemaId = main.physSchema.map(schemaFingerprint).getOrElse(""),
       requireHead = forkV)
   }
 
@@ -3931,7 +3828,7 @@ object TxnLog {
         // appends have an empty read set: readVersion 0 never conflicts
         val rec = commit(root, "stream-append", files, Nil, readVersion = 0L,
           txnId = txnId, schemaId = schemaFingerprint(phys.schema),
-          schemaJson = encodeSchema(phys.schema))
+          physSchema = Some(phys.schema))
         if (rec.version % CheckpointInterval == 0) checkpoint(root)
         rec
       }
@@ -4053,7 +3950,7 @@ object TxnLog {
         val rec = commit(root, "copy-into", added = files, removed = Nil,
           readVersion = readV, txnId = txnId, multiStats = multi,
           schemaId = schemaFingerprint(phys.schema),
-          schemaJson = GraftTable.declareJson(root, phys.schema),
+          physSchema = GraftTable.declareSchema(root, phys.schema),
           // the ledger read above IS this commit's read set: any
           // commit landing since may be a concurrent copy-into whose
           // markers overlap ours — requireHead forces the re-read

@@ -108,7 +108,7 @@ private[sources] object TxnLogStreamTable {
     val base = TxnLog.tableSchema(root).getOrElse {
       val files = TxnLog.snapshotFiles(root)
       require(files.nonEmpty,
-        s"cannot infer a stream schema for empty table $root; commit a schemaJson or pass a schema")
+        s"cannot infer a stream schema for empty table $root; commit a physSchema or pass a schema")
       s.read.option("mergeSchema", "true").parquet(files: _*).schema
     }
     StructType(base.fields :+ StructField(TxnStream.CommitVersionCol, LongType, nullable = false))

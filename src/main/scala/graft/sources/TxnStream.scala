@@ -77,7 +77,7 @@ object TxnStream {
       // and add-column generations (mergeSchema cannot widen INT to
       // BIGINT across a mid-range ALTER COLUMN TYPE)
       val out = TxnLog.openFiles(s,
-          TxnLog.declaredSchemaJson(root, toInclusive), fileToVersion.map(_._1))
+          TxnLog.rawTableSchema(root, toInclusive), fileToVersion.map(_._1))
         .withColumn("_path", // URI -> raw path, same decode as the DV join
           org.apache.spark.sql.functions.url_decode(
             regexp_replace(input_file_name(), "^file:(//)?", "")))
@@ -118,7 +118,7 @@ object TxnStream {
     else {
       val dim = s.createDataFrame(dels).toDF("_dvp", "_w", "_bits", CommitVersionCol)
       val out = TxnLog.openFiles(s,
-          TxnLog.declaredSchemaJson(root, toInclusive), dels.map(_._1).distinct)
+          TxnLog.rawTableSchema(root, toInclusive), dels.map(_._1).distinct)
         .withColumn("_path", TxnLog.metaFilePath)
         .withColumn("_ri", col("_metadata.row_index"))
         .join(broadcast(dim),
@@ -160,7 +160,7 @@ object TxnStream {
         val dim = s.createDataFrame(fileVT)
           .toDF("_path", CommitVersionCol, ChangeTypeCol)
         val out = TxnLog.openFiles(s,
-            TxnLog.declaredSchemaJson(root, toInclusive), fileVT.map(_._1))
+            TxnLog.rawTableSchema(root, toInclusive), fileVT.map(_._1))
           .withColumn("_path", TxnLog.metaFilePath)
           .join(broadcast(dim), "_path")
           .drop("_path")
@@ -177,7 +177,7 @@ object TxnStream {
         val dim = s.createDataFrame(dels)
           .toDF("_dvp", "_w", "_bits", CommitVersionCol, ChangeTypeCol)
         val out = TxnLog.openFiles(s,
-            TxnLog.declaredSchemaJson(root, toInclusive), dels.map(_._1).distinct)
+            TxnLog.rawTableSchema(root, toInclusive), dels.map(_._1).distinct)
           .withColumn("_path", TxnLog.metaFilePath)
           .withColumn("_ri", col("_metadata.row_index"))
           .join(broadcast(dim),
@@ -246,7 +246,7 @@ object TxnStream {
             else {
               val physKey = TxnLog.columnMapping(sourceRoot, v)
                 .getOrElse(keyCol, keyCol)
-              TxnLog.openFiles(s, TxnLog.declaredSchemaJson(sourceRoot, v),
+              TxnLog.openFiles(s, TxnLog.rawTableSchema(sourceRoot, v),
                   rewrites.flatMap(_.removed).distinct)
                 .select(col(physKey).as(keyCol))
             }
@@ -353,7 +353,7 @@ object TxnStream {
           if (rewrites.nonEmpty) {
             val physKey = TxnLog.columnMapping(sourceRoot, v)
               .getOrElse(keyCol, keyCol)
-            val pre = TxnLog.openFiles(s, TxnLog.declaredSchemaJson(sourceRoot, v),
+            val pre = TxnLog.openFiles(s, TxnLog.rawTableSchema(sourceRoot, v),
                 rewrites.flatMap(_.removed).distinct)
               .select(col(physKey).as(keyCol))
             val gone = pre.except(adds.select(col(keyCol)))
@@ -405,7 +405,7 @@ object TxnStream {
           TxnLog.commit(targetRoot, "mv-delta", files, Nil,
             readVersion = 0L, txnId = txnId,
             schemaId = TxnLog.schemaFingerprint(delta.schema),
-            schemaJson = TxnLog.encodeSchema(delta.schema))
+            physSchema = Some(delta.schema))
           Some(v)
         }
       }

@@ -1038,11 +1038,11 @@ class GraftCatalogSpec extends SparkTestBase {
     // timestamps histogram over epoch MICROS, dates over epoch DAYS
     val ts = hists("ts")
     assert(ts.bins.size === 8 && ts.height > 0 &&
-      ts.bins.forall { case (lo, hi, ndv) => lo <= hi && ndv >= 0 } &&
-      ts.bins.head._1 >= 1.699e15 && ts.bins.last._2 <= 1.71e15, s"ts: $ts")
+      ts.bins.forall(b => b.lo <= b.hi && b.ndv >= 0) &&
+      ts.bins.head.lo >= 1.699e15 && ts.bins.last.hi <= 1.71e15, s"ts: $ts")
     val d = hists("d")
     assert(d.bins.size === 8 &&
-      d.bins.head._1 >= 19700 && d.bins.last._2 <= 20100, s"d: $d")
+      d.bins.head.lo >= 19700 && d.bins.last.hi <= 20100, s"d: $d")
     assert(hists.contains("k"))
     assert(!hists.contains("s"), "strings have no double embedding: no histogram")
     // a range predicate on the timestamp estimates through the
@@ -1142,11 +1142,11 @@ class GraftCatalogSpec extends SparkTestBase {
     assert(TxnLog.tableProperties(root("atp"), version = 1L) ===
       Map("graft.autoCompact.minFiles" -> "4", "owner.team" -> "ingest"),
       "properties must be visible at the create version itself")
-    // (2) a property that fails validation fails the WHOLE create —
-    // no orphaned, partially-configured table left behind
+    // (2) a property that fails validation (an empty value) fails the
+    // WHOLE create — no orphaned, partially-configured table left behind
     intercept[Exception] {
       spark.sql("CREATE TABLE gcat.db.atp_bad (k BIGINT) TBLPROPERTIES " +
-        "('bad key with spaces' = 'v')")
+        "('owner.team' = '')")
     }
     assert(!Files.isDirectory(Paths.get(root("atp_bad"), "_log")),
       "a failed CREATE must leave no table")
@@ -1177,11 +1177,12 @@ class GraftCatalogSpec extends SparkTestBase {
     intercept[Exception] {
       spark.sql("INSERT INTO gcat.db.rtc VALUES (500)") // new CHECK bites
     }
-    // (4) a malformed property fails RTAS BEFORE anything stages: the
-    // old table stays fully intact, data and properties both
+    // (4) a malformed property (an empty value) fails RTAS BEFORE
+    // anything stages: the old table stays fully intact, data and
+    // properties both
     intercept[Exception] {
       spark.sql("REPLACE TABLE gcat.db.atp TBLPROPERTIES " +
-        "('bad key 2' = 'v') AS SELECT id AS z FROM range(0, 1)")
+        "('owner.team' = '') AS SELECT id AS z FROM range(0, 1)")
     }
     assert(TxnLog.tableProperties(root("atp")) ===
       Map("graft.autoCompact.minFiles" -> "4", "owner.team" -> "ingest"),

@@ -374,13 +374,32 @@ class TxnLogSpec extends SparkTestBase {
 
   test("commit paths with log-reserved characters are rejected at commit time, not corrupted") {
     val root = freshRoot()
-    for (bad <- Seq("/tmp/a\"b.parquet", "/tmp/a,b.parquet", "/tmp/a]b.parquet", "/tmp/a b.parquet")) {
+    // `[`, `]` and `\` are Hadoop glob syntax: a read would expand them
+    for (bad <- Seq("/tmp/a[b.parquet", "/tmp/a]b.parquet", "/tmp/a\\b.parquet")) {
       intercept[RuntimeException] {
         TxnLog.commit(root, "append", Seq(bad), Nil, readVersion = 0L,
           txnId = s"bad-${bad.hashCode}")
       }
     }
     assert(TxnLog.currentVersion(root) === 0L, "no corrupt record may land")
+    // quotes, commas and spaces are ordinary path bytes to the codec
+    val odd = Seq("/tmp/a\"b.parquet", "/tmp/a,b.parquet", "/tmp/a b.parquet")
+    TxnLog.commit(root, "append", odd, Nil, readVersion = 0L, txnId = "odd")
+    assert(TxnLog.snapshotFiles(root) === odd)
+  }
+
+  test("a txnId that is not one file-name component is rejected before anything lands") {
+    val root = freshRoot()
+    for (bad <- Seq("a/b", "a\\b", "a\u0000b", "", ".", "..")) {
+      val e = intercept[IllegalArgumentException] {
+        TxnLog.commit(root, "append", Seq("/fake/f.parquet"), Nil, readVersion = 0L,
+          txnId = bad)
+      }
+      assert(e.getMessage.contains(s"'$bad'"), s"the message must name the txnId: ${e.getMessage}")
+    }
+    val logEntries = Files.list(java.nio.file.Paths.get(root, "_log"))
+    try assert(logEntries.count() === 0L, "no record or temp file may be written")
+    finally logEntries.close()
   }
 
   test("txnId dedup and replay answer from the checkpoint ledger, not a full log scan") {
@@ -708,7 +727,7 @@ class TxnLogSpec extends SparkTestBase {
     val blooms = TxnLog.bloomsForStaged(spark, root, "t1", "tag", files)
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
       multiStats = multi, blooms = blooms, bloomCol = "tag",
-      schemaJson = TxnLog.encodeSchema(df.schema))
+      physSchema = Some(df.schema))
 
     // merge confined to keys 20..29: rewrites <= 3 of the 8 range files
     val src = (20L to 29L)
@@ -784,11 +803,11 @@ class TxnLogSpec extends SparkTestBase {
     val (files, multi) = TxnLog.stageWithStatsFor(
       data.toDF("k", "tag").repartitionByRange(8, $"k"), root, "t1", Seq("k"))
     val blooms = TxnLog.bloomsForStaged(spark, root, "t1", "tag", files)
-    // schemaJson makes planning fully metadata-only: table() must not
+    // physSchema makes planning fully metadata-only: table() must not
     // read any footer, which the corruption below also PROVES
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
       blooms = blooms, bloomCol = "tag", multiStats = multi,
-      schemaJson = TxnLog.encodeSchema(data.toDF("k", "tag").schema))
+      physSchema = Some(data.toDF("k", "tag").schema))
     val byRange = files.zip(TxnLog.snapshotState(root).map(_._2))
 
     // white-box: corrupt every file whose k-range is outside [100, 149]
@@ -862,12 +881,13 @@ class TxnLogSpec extends SparkTestBase {
 
   test("r12 review regressions: token validation, insert-insert merge conflict, staging vacuum") {
     val root = freshRoot()
-    // a txnId with a space is rejected at the API boundary
+    // a txnId that is not one file-name component is rejected at the
+    // API boundary, and so is an empty constraint expression
     intercept[IllegalArgumentException] {
-      TxnLog.commit(root, "append", Nil, Nil, readVersion = 0L, txnId = "my stream-b0")
+      TxnLog.commit(root, "append", Nil, Nil, readVersion = 0L, txnId = "my stream/b0")
     }
     intercept[IllegalArgumentException] {
-      TxnLog.setConstraint(root, "c1", "v > 0 --\ncomment", "cx")
+      TxnLog.setConstraint(root, "c1", "", "cx")
     }
     // empty-table point lookup: empty result, no unresolved-column crash
     assert(TxnLog.readPoint(spark, root, "k", 1L).count() === 0L)
@@ -1048,10 +1068,9 @@ class TxnLogSpec extends SparkTestBase {
     // staging stat keys were not decoded, so every lookup missed and
     // the commit silently carried no stats — disabling all skipping
     val dir = Files.createTempDirectory("graft-enc")
-    // note: no spaces — the log's record format reserves those and
-    // rejects them at commit time; '%' and '#' are legal path bytes
-    // that URI-encode, the exact hazard class
-    val root = dir.resolve("100%odd#table").toString
+    // '%', '#' and a space are legal path bytes that URI-encode, the
+    // exact hazard class
+    val root = dir.resolve("100%odd #table").toString
     TxnLog.init(root)
     val data = (1L to 64L).map(k => (k, k * 2654435761L % 1000000007L))
     val (files, stats) = TxnLog.stageWithStatsFor(
@@ -1104,7 +1123,7 @@ class TxnLogSpec extends SparkTestBase {
     val files = TxnLog.stage(df, root, "t1")
     val multi = TxnLog.statsForStaged(spark, root, "t1", Seq("k"), files)
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-      multiStats = multi, schemaJson = TxnLog.encodeSchema(df.schema))
+      multiStats = multi, physSchema = Some(df.schema))
     assert(TxnLog.snapshotState(root).forall(_._2.size >= 0L),
       "every committed file must carry its recorded size")
     // hide the data: schema, index construction and file listing must
@@ -1185,7 +1204,7 @@ class TxnLogSpec extends SparkTestBase {
     val (files, stats) = TxnLog.stageWithStatsFor(base, root, "t1", Seq("k"))
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
       multiStats = stats,
-      schemaJson = TxnLog.encodeSchema(base.schema))              // v1
+      physSchema = Some(base.schema))              // v1
 
     TxnLog.renameColumn(root, "v", "amount", "r1")                // v2
     assert(TxnLog.snapshotFiles(root) === files,
@@ -1303,7 +1322,7 @@ class TxnLogSpec extends SparkTestBase {
       Seq("name", "ts", "d", "x", "opt"), files)
       .zip(handK).map { case (m, k) => m + ("k" -> k) }
     TxnLog.commit(root, "append", files, Nil, readVersion = 0L, txnId = "t1",
-      multiStats = multi, schemaJson = TxnLog.encodeSchema(df.schema))
+      multiStats = multi, physSchema = Some(df.schema))
 
     // the stats are TYPED, with null counts
     val metas = TxnLog.snapshotState(root).map(_._2)
@@ -1354,7 +1373,7 @@ class TxnLogSpec extends SparkTestBase {
     val f2 = TxnLog.stage(df2.repartitionByRange(4, $"k"), root2, "t1")
     val m2 = TxnLog.statsForStaged(spark, root2, "t1", Seq("k"), f2)
     TxnLog.commit(root2, "append", f2, Nil, readVersion = 0L, txnId = "t1",
-      multiStats = m2, schemaJson = TxnLog.encodeSchema(df2.schema))
+      multiStats = m2, physSchema = Some(df2.schema))
     assert(TxnLog.table(spark, root2).filter($"s" === "v050").count() === 1L)
   }
 

@@ -27,7 +27,7 @@ class TxnStreamSourceSpec extends SparkTestBase {
     val files = TxnLog.stage(df, root, txnId)
     TxnLog.commit(root, "append", files, Nil,
       readVersion = TxnLog.currentVersion(root), txnId = txnId,
-      schemaJson = TxnLog.encodeSchema(df.schema))
+      physSchema = Some(df.schema))
   }
 
   private def stream(root: String, maxVersions: Long): DataFrame =
