@@ -141,8 +141,12 @@ object Bench {
       s""","load_warning":"box already contended at bench start: ambient load1 ${r3(l)} > 3.0 before session startup — treat timings as suspect""""
     ).getOrElse("") +
       prepareError.map(e => s""","prepare_error":${Verify.jsonString(e)}""").getOrElse("")
+    // the machine the run measured: `cpus` is the local[N] the session
+    // ran on, `nproc` the cores the JVM saw — a local[32] run on a
+    // 4-core box is a different protocol point than one on 32 cores
+    val machine = s""""nproc":${Runtime.getRuntime.availableProcessors},"cpus":${Verify.jsonString(cpus)}"""
     val loadMeta =
-      s""""passes":$passes,"loadavg_ambient":${jarr(loadAmbient)},"loadavg_start":${jarr(loadStart)},"loadavg_end":${jarr(loadEnd)}$flags"""
+      s""""passes":$passes,$machine,"loadavg_ambient":${jarr(loadAmbient)},"loadavg_start":${jarr(loadStart)},"loadavg_end":${jarr(loadEnd)}$flags"""
     val full =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec",$loadMeta,"queries":$fullQs,"detail":$detail,"sf":"$sfDir"}"""
     // Non-canonical runs must not clobber the canonical full-run
@@ -184,7 +188,7 @@ object Bench {
     val top = results.sortBy(-_._2).take(topN).sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","nq":${results.size},"passes":$passes,"load":${jarr(loadStart.take(1) ++ loadEnd.take(1))}$flags,"queries":$top,"batteries":$batteries,"full":"$artifact","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","nq":${results.size},"passes":$passes,$machine,"load":${jarr(loadStart.take(1) ++ loadEnd.take(1))}$flags,"queries":$top,"batteries":$batteries,"full":"$artifact","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 /** Materialize a k× scaled replica of a testdata directory — the sf1
   * (10×) SCALE RECEIPT's input: every per-round number so far was
   * measured at sf0.1, and the 100 TB claims deserve at least one
-  * order-of-magnitude check on the real bench batteries, not just the
-  * in-memory replication ladders.
+  * order-of-magnitude check on the real bench batteries.
   *
   *   sbt 'runMain graft.GenScale [srcDir] [outDir] [k]'
   *
@@ -19,10 +18,11 @@ import org.apache.spark.sql.functions._
   *    keys shift by the SAME per-entity base, so replica i's orders
   *    reference replica i's customers: join fan-outs stay realistic
   *    (k× rows, k× distinct keys, same per-key cardinality);
-  *  - `documents` get the ScaleProbe salt (every token suffixed with
-  *    the copy index) so copies don't near-dup each other — dedup cost
-  *    scales with corpus size, not with an artificial k² dup blowup
-  *    (the adversarial dup-heavy shape has its own standing ladders);
+  *  - `documents` are salted (every token suffixed with the copy
+  *    index) so copies don't near-dup each other — dedup cost scales
+  *    with corpus size, not with an artificial k² dup blowup (the
+  *    adversarial dup-heavy shape's last numbers are in BASELINE.md
+  *    §"sf1 dup-ladder for the star spelling");
   *  - `embeddings` get a small deterministic per-replica perturbation
   *    (±0.05/dim, keyed on (vec_id, dim, replica)) — a real 10×
   *    corpus has 10× DISTINCT vectors, not 10 copies of each;

@@ -487,10 +487,11 @@ object DedupOps {
     *
     * Production detail: the join key is the 56-bit md5 prefix of the
     * shingle, not the string — every downstream sort/shuffle then
-    * moves fixed-width longs instead of ~25-byte strings (ScaleProbe
-    * measured the string sort dominating at 16× replication). The
-    * hash is portable (`CAST('0x' || substr(md5(s),1,14) AS BIGINT)`
-    * in the oracle), so results stay bit-checked; a 56-bit collision
+    * moves fixed-width longs instead of ~25-byte strings (the string
+    * sort dominated at 16× replication: BASELINE.md §"r3: capped
+    * variants under adversarial load"). The hash is portable
+    * (`CAST('0x' || substr(md5(s),1,14) AS BIGINT)` in the oracle),
+    * so results stay bit-checked; a 56-bit collision
     * (≈2⁻⁴⁰ at 10M distinct shingles) would add one spurious shared
     * shingle to one pair — the textbook-exact uncapped query remains
     * the semantic baseline.

@@ -117,10 +117,12 @@ object GraphOps {
     }
   }
 
-  /** Probe instrumentation: rounds the LAST [[connectedComponents]]
-    * call took on the distributed label-propagation path (0 = the
-    * driver-side union-find shortcut ran instead). Written, not read,
-    * by the operator — ScaleProbe records it next to wall time.
+  /** Rounds the LAST [[connectedComponents]] call took on the
+    * distributed label-propagation path (0 = the driver-side
+    * union-find shortcut ran instead). Written, not read, by the
+    * operator — `GraphOpsSpec` reads it to prove the distributed path
+    * ran; BASELINE.md §"r4: forced distributed connected-components
+    * probe" has rounds next to wall time.
     */
   @volatile var lastRunRounds: Int = -1
 

@@ -308,8 +308,8 @@ object VectorOps {
     * ingest: the batch bands itself (tiny), joins the index on
     * (table, bucket), and only the candidate ids fetch vectors for the
     * exact cosine — per-ingest cost is O(|batch| + candidate bucket
-    * populations), independent of corpus size (probed in ScaleProbe,
-    * same protocol as dd_incremental).
+    * populations), independent of corpus size (BASELINE.md §"r7:
+    * incremental ANN ingest vs corpus growth").
     */
   def incrementalAnnDedup(index: DataFrame, existing: DataFrame,
                           batch: DataFrame, idCol: String, vecCol: String,
@@ -1122,8 +1122,9 @@ object VectorOps {
   /** [[annCosinePairs]] with a per-(table, bucket) candidate cap — the
     * guard a dup-heavy corpus needs at 100 TB: a bucket holding k
     * identical (or near-identical) vectors generates k² candidate
-    * pairs, and the ScaleProbe replication run showed exactly that
-    * quadratic growth. Each bucket keeps only its `bucketCap`
+    * pairs, and the replicated-corpus runs in BASELINE.md §"r3: capped
+    * variants under adversarial load" showed exactly that quadratic
+    * growth. Each bucket keeps only its `bucketCap`
     * lowest-ranked members under a DETERMINISTIC order (portable md5
     * hash of the id, then id — reproducible in the SQL oracle, stable
     * across retries), so candidate work per bucket is bounded by

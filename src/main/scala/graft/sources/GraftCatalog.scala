@@ -314,6 +314,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // with a malformed property fails cleanly with no table created
     val policyProps = GraftTable.policyProps(properties).toSeq
     policyProps.foreach { case (k, v) => TxnLog.validateProperty(k, v) }
+    val userChecks = GraftTable.constraintProps(properties)
+    userChecks.foreach { case (n, e) => TxnLog.validateConstraint(n, e) }
     TxnLog.init(root)
     // generated columns enforce as CHECK constraints (null-safe
     // equality: never a NULL verdict), created atomically with the
@@ -330,7 +332,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       txnId = s"create-table-a$uuid12",
       schemaId = TxnLog.schemaFingerprint(schema),
       physSchema = Some(schema),
-      cadds = GraftTable.constraintProps(properties) ++ genChecks,
+      cadds = userChecks ++ genChecks,
       partitionBy = Some(pcols),
       // user TBLPROPERTIES ride the SAME record (r20, the padds fold):
       // declared policy (graft.autoCompact.*) is visible at the first
@@ -1540,9 +1542,10 @@ private class StagedGraftTable(root: String, stagedSchema: StructType,
   extends org.apache.spark.sql.connector.catalog.StagedTable with SupportsWrite {
 
   // validate at STAGE time (before any write work): a CTAS/RTAS with a
-  // malformed TBLPROPERTIES fails before it stages a byte, and the
-  // atomic commit below can never throw post-commit on a bad property
+  // malformed TBLPROPERTIES or CHECK fails before it stages a byte, and
+  // the atomic commit below can never throw post-commit on either
   policyProps.foreach { case (k, v) => TxnLog.validateProperty(k, v) }
+  constraints.foreach { case (n, e) => TxnLog.validateConstraint(n, e) }
 
   private def spark: SparkSession = SparkSession.active
   private val txnId = s"sql-ctas-a$uuid12"
@@ -1599,7 +1602,9 @@ private class StagedGraftTable(root: String, stagedSchema: StructType,
       // one schema-evolve commit: the live set swaps and the schema
       // may change, under the standard conflict matrix. propReset /
       // conReset drop EVERY inherited property and CHECK constraint
-      // first (r20): REPLACE resets table configuration wholesale —
+      // first (r20), and the declared PARTITIONED BY (none: an
+      // unpartitioned table) replaces the old partitioning: REPLACE
+      // resets table configuration wholesale —
       // stale policy (e.g. graft.autoCompact.*) never silently
       // survives onto the 'new' table, and a stale CHECK from the
       // replaced table never keeps rejecting the new table's writes;
@@ -1611,8 +1616,7 @@ private class StagedGraftTable(root: String, stagedSchema: StructType,
         readVersion = readV, txnId = txnId, multiStats = multi,
         schemaId = TxnLog.schemaFingerprint(sch),
         physSchema = Some(sch), cadds = constraints,
-        // no PARTITIONED BY keeps the replaced table's partitioning
-        partitionBy = Option.when(partitionBy.nonEmpty)(partitionBy),
+        partitionBy = Some(partitionBy),
         padds = policyProps, propReset = true, conReset = true)
     }
     ()

@@ -13,6 +13,7 @@ import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.parser.{CatalystSqlParser, ParseException}
 import org.apache.spark.sql.types.StructType
 
 /** Minimal lakehouse transaction log: optimistic concurrency +
@@ -1239,7 +1240,8 @@ object TxnLog {
     * O(table), before anything publishes: bad data never becomes
     * visible. The constraint itself rides the log (and checkpoints)
     * as a `cadds` pair, so every writer sees it. Name and expression
-    * must be non-empty.
+    * must be non-empty, and the expression must parse
+    * ([[validateConstraint]]).
     */
   def setConstraint(root: String, name: String, sqlExpr: String,
                     txnId: String): Commit =
@@ -1278,6 +1280,19 @@ object TxnLog {
     * CREATE either, and validation happens BEFORE any commit lands
     * (a failed CREATE TABLE leaves no table behind).
     */
+  /** A CHECK constraint is stored only if its expression parses: an
+    * unparseable one would fail every later write in
+    * [[checkConstraints]]. Name and expression must be non-empty.
+    */
+  def validateConstraint(name: String, sqlExpr: String): Unit = {
+    require(name.nonEmpty && sqlExpr.nonEmpty,
+      "constraint names and expressions must be non-empty")
+    try CatalystSqlParser.parseExpression(sqlExpr)
+    catch { case e: ParseException =>
+      throw new IllegalArgumentException(
+        s"constraint $name: CHECK expression does not parse: $sqlExpr", e) }
+  }
+
   def validateProperty(key: String, value: String): Unit = {
     require(key.nonEmpty, "property keys must be non-empty")
     require(value.nonEmpty, s"property values must be non-empty (key $key)")
@@ -2412,8 +2427,7 @@ object TxnLog {
     validatePaths(dvs.collect { case v if v.startsWith("@") => v.drop(1) })
     require(rename.forall { case (o, n) => o.nonEmpty && n.nonEmpty },
       s"txn $txnId: rename needs non-empty old and new names: $rename")
-    require(cadds.forall { case (n, e) => n.nonEmpty && e.nonEmpty },
-      s"txn $txnId: constraint names and expressions must be non-empty")
+    cadds.foreach { case (n, e) => validateConstraint(n, e) }
     padds.foreach { case (k, v) => validateProperty(k, v) }
     require((cdrops ++ pdrops).forall(_.nonEmpty),
       s"txn $txnId: dropped constraint and property names must be non-empty")

@@ -179,6 +179,13 @@ class CorpusOpsSpec extends SparkTestBase {
       .select("doc_id").as[Long].collect().toSet
     assert(bloomed === plain,
       "the bloom pre-filter must be invisible in the result")
+    // ...also when the eval set is too big to broadcast: both paths
+    // take the shuffled joins
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
+      assert(decontaminateBloom(docs, contam, "doc_id", "text")
+        .select("doc_id").as[Long].collect().toSet === plain)
+    }
     // degenerate contamination set: empty sample -> bloom of zero
     // keys -> nothing pruned, nothing dropped
     val none = docs.filter(lit(false))

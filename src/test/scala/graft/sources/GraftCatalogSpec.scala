@@ -143,6 +143,16 @@ class GraftCatalogSpec extends SparkTestBase {
   test("CHECK constraints as table properties: a violating INSERT publishes nothing") {
     warehouse
     spark.sql("CREATE TABLE gcat.db.ck (k BIGINT)")
+    // a CHECK that does not parse is refused before it is stored, so
+    // it can never fail the later writes
+    val v0 = TxnLog.currentVersion(root("ck"))
+    val bad = intercept[Exception] {
+      spark.sql("ALTER TABLE gcat.db.ck SET TBLPROPERTIES ('graft.constraint.bad' = 'k >')")
+    }
+    assert(bad.getMessage.contains("constraint bad"), s"the error must name the constraint: $bad")
+    intercept[IllegalArgumentException](
+      TxnLog.setConstraint(root("ck"), "bad2", "k > (", txnId = "ck-bad2"))
+    assert(TxnLog.currentVersion(root("ck")) === v0, "nothing may commit")
     spark.sql("ALTER TABLE gcat.db.ck SET TBLPROPERTIES ('graft.constraint.pos' = 'k >= 0')")
     spark.sql("INSERT INTO gcat.db.ck VALUES (1), (2)")
     val v = TxnLog.currentVersion(root("ck"))
@@ -224,6 +234,11 @@ class GraftCatalogSpec extends SparkTestBase {
     // the rewrite is one commit, and the pre-update snapshot travels
     assert(spark.sql(s"SELECT sum(v) FROM gcat.db.up VERSION AS OF 5")
       .head.getLong(0) === (0L until 400L).sum)
+    // a predicate no file's stats can prune (a match in every
+    // original file): the answer stays exact
+    spark.sql("UPDATE gcat.db.up SET v = v + 1 WHERE k % 100 = 7")
+    assert(spark.sql("SELECT count(*), sum(v) FROM gcat.db.up").head.toSeq ===
+      Seq(400L, (0L until 400L).sum + 11L * 1000000L + 4L))
   }
 
   test("SQL UPDATE compacts prior deletion vectors into the rewrite") {
@@ -462,6 +477,19 @@ class GraftCatalogSpec extends SparkTestBase {
     // CREATE OR REPLACE on an absent table creates
     spark.sql("CREATE OR REPLACE TABLE gcat.db.ct2 AS SELECT id AS k FROM range(0, 3)")
     assert(spark.sql("SELECT count(*) FROM gcat.db.ct2").head.getLong(0) === 3L)
+    // REPLACE replaces the partitioning too: none declared leaves the
+    // table unpartitioned (the old partition column is not even in
+    // the new schema), a declared one replaces the old
+    spark.sql("CREATE TABLE gcat.db.rpp (k BIGINT, p BIGINT) PARTITIONED BY (p)")
+    spark.sql("INSERT INTO gcat.db.rpp SELECT id, id % 4 FROM range(0, 40)")
+    spark.sql("REPLACE TABLE gcat.db.rpp AS SELECT id AS j FROM range(0, 3)")
+    assert(TxnLog.partitionColumns(root("rpp")) === Nil,
+      "REPLACE without PARTITIONED BY must not keep the replaced table's partitioning")
+    spark.sql("INSERT INTO gcat.db.rpp VALUES (10)")
+    assert(spark.sql("SELECT sum(j) FROM gcat.db.rpp").head.getLong(0) === 13L)
+    spark.sql("REPLACE TABLE gcat.db.rpp PARTITIONED BY (q) " +
+      "AS SELECT id AS j, id % 2 AS q FROM range(0, 4)")
+    assert(TxnLog.partitionColumns(root("rpp")) === Seq("q"))
   }
 
   test("ALTER TABLE ADD/DROP COLUMN: one metadata commit each, zero files touched") {
@@ -1150,6 +1178,20 @@ class GraftCatalogSpec extends SparkTestBase {
     }
     assert(!Files.isDirectory(Paths.get(root("atp_bad"), "_log")),
       "a failed CREATE must leave no table")
+    // ...and so does a CHECK constraint that does not parse, on CREATE
+    // and on CTAS alike
+    intercept[Exception] {
+      spark.sql("CREATE TABLE gcat.db.atc_bad (v BIGINT) TBLPROPERTIES " +
+        "('graft.constraint.bad' = 'v >')")
+    }
+    assert(!Files.isDirectory(Paths.get(root("atc_bad"), "_log")),
+      "a CREATE with an unparseable CHECK must leave no table")
+    intercept[Exception] {
+      spark.sql("CREATE TABLE gcat.db.atc_bad2 TBLPROPERTIES " +
+        "('graft.constraint.bad' = 'v >') AS SELECT id AS v FROM range(0, 3)")
+    }
+    assert(!Files.isDirectory(Paths.get(root("atc_bad2"), "_log")),
+      "a CTAS with an unparseable CHECK must leave no table")
     // (3) REPLACE resets configuration wholesale: stale policy from
     // the replaced table never survives onto the new one
     spark.sql("CREATE TABLE gcat.db.rtp TBLPROPERTIES " +

@@ -1108,7 +1108,8 @@ class TxnLogSpec extends SparkTestBase {
     assert(TxnLog.deleteWhereKeys(spark, root,
       Seq(9999L).toDF("k"), "k", "d2").isEmpty)
     // a key frame too large to broadcast still works (shuffled semi-join)
-    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val big = spark.range(1, 200).toDF("k")
       val c2 = TxnLog.deleteWhereKeys(spark, root, big, "k", "d3").get
       assert(c2.dvFiles.nonEmpty)
@@ -1294,6 +1295,9 @@ class TxnLogSpec extends SparkTestBase {
     assert(state.collect { case (f, m) if c.added.contains(f) => m }
       .forall(m => m.dv.isEmpty && m.stats.get("k").exists(_.rows >= 0)),
       "rewritten files carry no vector and fresh stats (metadata-agg eligible again)")
+    // the metadata aggregate answers the live count again
+    assert(TxnLog.statsAggregate(spark, root, "k").head().getLong(0) ===
+      expectLive.size.toLong)
     // time travel: pre-compaction versions still apply their vectors
     assert(rows(root, preV) === expectLive)
     assert(rows(root, 1L) === (1L to 1024L).map(k => (k, k)).toSet)
