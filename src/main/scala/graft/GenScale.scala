@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 /** Materialize a k× scaled replica of a testdata directory — the sf1
   * (10×) SCALE RECEIPT's input: every per-round number so far was
@@ -37,7 +38,14 @@ object GenScale {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.configure(SparkSession.builder(), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    run(spark, src, out, k)
+    println(s"""{"genscale":"done","out":"$out","k":$k}""")
+    spark.stop()
+  }
 
+  /** Write the k× replica of every table under `src` to `out`, each
+    * with its source's schema. */
+  def run(spark: SparkSession, src: String, out: String, k: Int): Unit = {
     def base(df: DataFrame, c: String): Long =
       df.agg(max(col(c).cast("long"))).head.getLong(0) + 1L
 
@@ -100,6 +108,10 @@ object GenScale {
       }
     }
     write("documents", replicate(docs, Map("doc_id" -> dB), saltDoc), 8)
+    // Spark's `/` returns a double, so the perturbed element is cast
+    // back to the source's element type (FLOAT in the testdata):
+    // widened replicas would turn the whole column into array<double>
+    val elemType = vecs.schema("embedding").dataType.asInstanceOf[ArrayType].elementType
     val perturbVec: (DataFrame, Int) => DataFrame = { (d, i) =>
       if (i == 0) d
       else {
@@ -107,12 +119,9 @@ object GenScale {
           j => (pmod(col("vec_id") * 131 + j * 17 + lit(i * 7919), lit(1000))
             - lit(500)).cast("float") / lit(10000.0f))
         d.withColumn("embedding",
-          zip_with(col("embedding"), noise, (x, n) => x + n))
+          zip_with(col("embedding"), noise, (x, n) => (x + n).cast(elemType)))
       }
     }
     write("embeddings", replicate(vecs, Map("vec_id" -> vB), perturbVec), 8)
-
-    println(s"""{"genscale":"done","out":"$out","k":$k}""")
-    spark.stop()
   }
 }

@@ -544,22 +544,6 @@ object CorpusOps {
                    topK: Int = 3,
                    stopwords: Seq[String] = Seq("the", "a", "and", "of",
                      "to", "in", "is", "it")): DataFrame = {
-    val (out, ph) = rakeKeywordsLazy(docs, idCol, textCol, topK, stopwords)
-    val checked = out.localCheckpoint()
-    ph.unpersist()
-    checked
-  }
-
-  /** Lazy internals of [[rakeKeywords]]: the un-materialized result
-    * plan plus the persisted phrase subtree, which the CALLER owns —
-    * unpersist it after consuming the result. For pipelines that
-    * stream per-doc keywords straight into a sink, this skips the
-    * wrapper's extra result materialization; it is also what the plan
-    * tests inspect (the wrapper's checkpoint hides the executed shape).
-    */
-  private[graft] def rakeKeywordsLazy(docs: DataFrame, idCol: String,
-                   textCol: String, topK: Int,
-                   stopwords: Seq[String]): (DataFrame, DataFrame) = {
     val byDoc = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("__pos"))
     val byPhrase = org.apache.spark.sql.expressions.Window
@@ -583,8 +567,11 @@ object CorpusOps {
         sum(col("__ws")).as("score_micro"))
       .select(col(idCol), col("phrase"), col("score_micro"))
       .distinct() // a phrase repeated within a doc is ONE candidate
-    (RelationalOps.topKPerGroup(phrases, Seq(idCol),
-      Seq(col("score_micro").desc, col("phrase").asc), topK, "rnk"), ph)
+    val checked = RelationalOps.topKPerGroup(phrases, Seq(idCol),
+      Seq(col("score_micro").desc, col("phrase").asc), topK, "rnk")
+      .localCheckpoint()
+    ph.unpersist()
+    checked
   }
 
   /** DSIR-style importance scoring (Xie et al., "Data Selection for

@@ -498,21 +498,6 @@ object DedupOps {
     */
   def ngramJaccardPairsCapped(docs: DataFrame, idCol: String, textCol: String,
                               minJaccard: Double, dfCap: Int, n: Int = 3): DataFrame = {
-    val (out, ex) = ngramJaccardPairsCappedLazy(docs, idCol, textCol, minJaccard, dfCap, n)
-    val checked = out.localCheckpoint()
-    ex.unpersist()
-    checked
-  }
-
-  /** Lazy internals of [[ngramJaccardPairsCapped]]: un-materialized
-    * result plus the persisted posting frame, which the CALLER owns
-    * (unpersist after consumption). Exposed for plan tests and
-    * zero-copy pipelines — see
-    * [[graft.operators.CorpusOps.rakeKeywordsLazy]].
-    */
-  private[graft] def ngramJaccardPairsCappedLazy(
-      docs: DataFrame, idCol: String, textCol: String,
-      minJaccard: Double, dfCap: Int, n: Int): (DataFrame, DataFrame) = {
     val sh = spread(docs).select(col(idCol).as("__id"),
       array_distinct(shingles(col(textCol), n)).as("__sh"))
     val ex = sh.select(col("__id"), size(col("__sh")).as("__n"),
@@ -524,7 +509,7 @@ object DedupOps {
       .filter(col("__df") >= 2 && col("__df") <= dfCap)
       .select(col("__s"))
     val exk = ex.join(dfKeys, Seq("__s"))
-    (exk.alias("a").hint("merge")
+    val checked = exk.alias("a").hint("merge")
       .join(exk.alias("b"), col("a.__s") === col("b.__s") && col("a.__id") < col("b.__id") &&
         // length filter: J ≤ min/max, so J ≥ t needs sizes within 1/t
         col("a.__n").cast("double") >= col("b.__n") * minJaccard &&
@@ -534,8 +519,10 @@ object DedupOps {
       .select(col("d1"), col("d2"),
         round(col("__c").cast("double") /
           (col("__n1") + col("__n2") - col("__c")), 6).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard),
-      ex)
+      .filter(col("jaccard") >= minJaccard)
+      .localCheckpoint()
+    ex.unpersist()
+    checked
   }
 
   /** Substring-level (token-window) duplicate-span profile — the

@@ -209,19 +209,6 @@ object GraphOps {
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 3, dampingPct: Int = 85): DataFrame = {
-    val (ranks, invariants) = pageRankLazy(edges, srcCol, dstCol, iters, dampingPct)
-    val out = ranks.localCheckpoint()
-    invariants.foreach(_.unpersist())
-    out
-  }
-
-  /** Lazy internals of [[pageRank]]: un-materialized final ranks plus
-    * the persisted iteration invariants (node set, degree-annotated
-    * edges), which the CALLER owns — unpersist after consumption.
-    * Exposed for plan tests and zero-copy pipelines.
-    */
-  private[graft] def pageRankLazy(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int, dampingPct: Int): (DataFrame, Seq[DataFrame]) = {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
     val checkpointEvery = 4
     val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
@@ -257,7 +244,10 @@ object GraphOps {
           (base + expr(s"$dampingPct * __in div 100")).as("rank_micro"))
       if (i % checkpointEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
     }
-    (ranks, Seq(nodes, withDeg))
+    val out = ranks.localCheckpoint()
+    nodes.unpersist()
+    withDeg.unpersist()
+    out
   }
 
   /** Per-node triangle counts by DEGREE-ORIENTED enumeration (the
@@ -281,28 +271,14 @@ object GraphOps {
     *        dropped here, direction is ignored
     * @return (node, n_triangles) — nodes in no triangle are absent
     */
-  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    triangleCountsImpl(edges, srcCol, dstCol, eager = true)
-
-  /** Lazy twin of [[triangleCounts]] — identical plan minus the two
-    * lineage-truncating localCheckpoints, so [[graft.Explain]] can
-    * print the FULL physical plan (the declared spelling explains as
-    * bare checkpoint scans). Explain-only: the eager pins are the
-    * execution contract (the canonical frame feeds three consumers).
-    */
-  private[graft] def triangleCountsLazy(edges: DataFrame, srcCol: String,
-                                        dstCol: String): DataFrame =
-    triangleCountsImpl(edges, srcCol, dstCol, eager = false)
-
-  private def triangleCountsImpl(edges: DataFrame, srcCol: String,
-                                 dstCol: String, eager: Boolean): DataFrame = {
-    def pin(df: DataFrame): DataFrame = if (eager) df.localCheckpoint() else df
+  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     // canonical undirected form (lo, hi), self-loops out, exact dedup
-    val e = pin(edges.select(
+    val e = edges.select(
         least(col(srcCol), col(dstCol)).as("lo"),
         greatest(col(srcCol), col(dstCol)).as("hi"))
       .filter(col("lo") =!= col("hi"))
-      .distinct()) // feeds degree count, orientation AND closure
+      .distinct()
+      .localCheckpoint() // feeds degree count, orientation AND closure
     // degree per node (both endpoints), then the total order
     // (degree, id) orients each edge small → large
     val deg = e.select(col("lo").as("v")).unionAll(e.select(col("hi").as("v")))
@@ -316,7 +292,7 @@ object GraphOps {
           struct(col("lo").as("f"), col("hi").as("t")))
           .otherwise(struct(col("hi").as("f"), col("lo").as("t"))).as("e"))
       .select(col("e.f").as("f"), col("e.t").as("t"))
-    val oriented0 = pin(oriented) // tiny vs the wedge join; feeds it twice
+    val oriented0 = oriented.localCheckpoint() // tiny vs the wedge join; feeds it twice
     // wedges at the lowest-ranked corner: (f → b, f → c) with b ≠ c
     // enumerated once via b < c in EDGE (id) order.
     // The wedge join's exchange is pinned at defaultParallelism

@@ -648,20 +648,6 @@ object RelationalOps {
     */
   def basketRules(memberships: DataFrame, basketCol: String, itemCol: String,
                   minSupport: Long = 5L): DataFrame = {
-    val (out, counts) = basketRulesLazy(memberships, basketCol, itemCol, minSupport)
-    val checked = out.localCheckpoint()
-    counts.unpersist()
-    checked
-  }
-
-  /** Lazy internals of [[basketRules]]: un-materialized result plus the
-    * persisted vocabulary²-bounded count frame, which the CALLER owns
-    * (unpersist after consumption). Exposed for plan tests and
-    * zero-copy pipelines — see
-    * [[graft.operators.CorpusOps.rakeKeywordsLazy]].
-    */
-  private[graft] def basketRulesLazy(memberships: DataFrame, basketCol: String,
-                  itemCol: String, minSupport: Long): (DataFrame, DataFrame) = {
     // ONE shuffle on the basket key (r20): collect_set dedupes within
     // the basket AND materializes it as a row, so the former
     // distinct-(oid, item) exchange and the pair SELF-JOIN's second
@@ -723,7 +709,7 @@ object RelationalOps {
       .filter(col("item_a").isNotNull && col("item_b").isNotNull &&
         col("__n") >= minSupport)
       .select(col("item_a"), col("item_b"), col("__n").as("n_ab"))
-    (pairs
+    val checked = pairs
       .join(broadcast(cnt.select(col("__item").as("item_a"),
         col("__ni").as("__na"))), Seq("item_a"))
       .join(broadcast(cnt.select(col("__item").as("item_b"),
@@ -731,8 +717,10 @@ object RelationalOps {
       .crossJoin(broadcast(baskets))
       .select(col("item_a"), col("item_b"), col("n_ab"),
         expr("n_ab * 1000000 div __na").as("conf_micro"),
-        expr("n_ab * __nb * 1000000 div (__na * __nbi)").as("lift_micro")),
-      counts)
+        expr("n_ab * __nb * 1000000 div (__na * __nbi)").as("lift_micro"))
+      .localCheckpoint()
+    counts.unpersist()
+    checked
   }
 
   /** Zero-extra-scan data-quality metrics via `Dataset.observe`

@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,45 +18,6 @@ import graft.SparkEntry.{ensureFileTopic, ensureBucketedTables}
   */
 object CoreQueries {
   private val propsSchema = new StructType().add("k", IntegerType)
-
-  /** g20_basket_rules' input: (order, item group) memberships. Shared
-    * with its lazy variant in [[graft.Explain]]. */
-  private[graft] def basketMemberships(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir).select(col("l_orderkey").as("oid"),
-      pmod(col("l_partkey"), lit(100)).as("item"))
-
-  /** gr_triangles' graph: item groups co-occurring in >= 3 orders.
-    * Shared with its lazy variant in [[graft.Explain]].
-    *
-    * r21: the edge build is the g19/g20 one-exchange shape — ONE
-    * shuffle on the order key collects each order's distinct item
-    * groups (collect_set dedupes in the aggregate, subsuming the
-    * former DISTINCT's exchange), a < b pairs are enumerated
-    * LOCALLY by positional array HOFs, and the (x, y) aggregate is
-    * map-side combined — replacing the former distinct + pair
-    * self-join (three exchanges + two sort passes; profiled at
-    * 0.6 s of the query's 1.2 s stage wall at sf0.1). Fan-out
-    * stays bounded by items-per-order², never by row volume. The
-    * exchange is pinned at defaultParallelism (the basketRules
-    * rationale: the stage above it is the CPU-dense set-build +
-    * generator body, and AQE byte-size coalescing is blind to CPU
-    * density — it folded this ~6 MB exchange to a handful of
-    * tasks). Null keys dropped explicitly: the former self-join
-    * (and the oracle's equi-join) never matched them.
-    */
-  private[graft] def triangleEdges(s: SparkSession, dir: String): DataFrame = {
-    val p = s.sparkContext.defaultParallelism
-    Tables.lineitem(s, dir)
-      .filter(col("l_orderkey").isNotNull && col("l_partkey").isNotNull)
-      .select(col("l_orderkey").as("oid"), pmod(col("l_partkey"), lit(200)).as("item"))
-      .repartition(p, col("oid"))
-      .groupBy(col("oid"))
-      .agg(sort_array(collect_set(col("item"))).as("__items"))
-      .select(explode(graft.operators.RelationalOps
-        .orderedPairs(col("__items"), "x", "y")).as("__p"))
-      .groupBy(col("__p.x").as("x"), col("__p.y").as("y"))
-      .agg(count(lit(1)).as("__n")).filter(col("__n") >= 3)
-  }
 
   val specs: Seq[QuerySpec] = Seq(
     // ---- Flagship: TPC-H-style pricing summary (G-1 batch shape at scale) ----
@@ -1009,8 +970,35 @@ object CoreQueries {
          SELECT node, count(*) AS n_triangles
          FROM (SELECT unnest([a, b, c]) AS node FROM t)
          GROUP BY node""",
-      (s, dir) =>
-        graft.operators.GraphOps.triangleCounts(triangleEdges(s, dir), "x", "y")),
+      (s, dir) => {
+        // r21: the edge build is the g19/g20 one-exchange shape — ONE
+        // shuffle on the order key collects each order's distinct item
+        // groups (collect_set dedupes in the aggregate, subsuming the
+        // former DISTINCT's exchange), a < b pairs are enumerated
+        // LOCALLY by positional array HOFs, and the (x, y) aggregate is
+        // map-side combined — replacing the former distinct + pair
+        // self-join (three exchanges + two sort passes; profiled at
+        // 0.6 s of the query's 1.2 s stage wall at sf0.1). Fan-out
+        // stays bounded by items-per-order², never by row volume. The
+        // exchange is pinned at defaultParallelism (the basketRules
+        // rationale: the stage above it is the CPU-dense set-build +
+        // generator body, and AQE byte-size coalescing is blind to CPU
+        // density — it folded this ~6 MB exchange to a handful of
+        // tasks). Null keys dropped explicitly: the former self-join
+        // (and the oracle's equi-join) never matched them.
+        val p = s.sparkContext.defaultParallelism
+        val edges = Tables.lineitem(s, dir)
+          .filter(col("l_orderkey").isNotNull && col("l_partkey").isNotNull)
+          .select(col("l_orderkey").as("oid"), pmod(col("l_partkey"), lit(200)).as("item"))
+          .repartition(p, col("oid"))
+          .groupBy(col("oid"))
+          .agg(sort_array(collect_set(col("item"))).as("__items"))
+          .select(explode(graft.operators.RelationalOps
+            .orderedPairs(col("__items"), "x", "y")).as("__p"))
+          .groupBy(col("__p.x").as("x"), col("__p.y").as("y"))
+          .agg(count(lit(1)).as("__n")).filter(col("__n") >= 3)
+        graft.operators.GraphOps.triangleCounts(edges, "x", "y")
+      }),
 
     // ---- X-G52: CUSUM changepoint per event-type daily series — the
     //      position maximizing |n·prefix_k − k·total| (the scaled
@@ -1188,7 +1176,9 @@ object CoreQueries {
          FROM p JOIN ci ca ON p.item_a = ca.item
                 JOIN ci cb ON p.item_b = cb.item, nb""",
       (s, dir) =>
-        graft.operators.RelationalOps.basketRules(basketMemberships(s, dir),
+        graft.operators.RelationalOps.basketRules(
+          Tables.lineitem(s, dir).select(col("l_orderkey").as("oid"),
+            pmod(col("l_partkey"), lit(100)).as("item")),
           "oid", "item")),
 
     // ---- X-G48: Space-Saving heavy hitters, driver-checkable via the

@@ -1,7 +1,6 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.RelationalOps._
@@ -12,11 +11,6 @@ import graft.SparkEntry.{duckShingleCtes, duckBpeCtes}
   */
 object CorpusQueries {
   import graft.operators.CorpusOps._
-
-  /** txt_rake's input, shared with its lazy variant in
-    * [[graft.Explain]]. */
-  private[graft] def rakeDocs(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
 
   val specs: Seq[QuerySpec] = Seq(
     // feature-hashed linear scorer: tokenize -> bucket -> weighted
@@ -447,7 +441,7 @@ object CorpusQueries {
                                      ORDER BY score_micro DESC, phrase ASC) AS rnk
            FROM dd) WHERE rnk <= 3""",
       (s, dir) =>
-        rakeKeywords(rakeDocs(s, dir), "doc_id", "text")),
+        rakeKeywords(Tables.documents(s, dir), "doc_id", "text")),
     // DSIR importance scoring: target domain = English docs; score =
     // sum over tokens of micro-quantized ln(p_target/p_source) over
     // 1024 hashed-unigram buckets (add-1 smoothed); keep = score > 0

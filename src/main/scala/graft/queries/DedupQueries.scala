@@ -1,7 +1,6 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.RelationalOps._
@@ -14,22 +13,6 @@ import graft.SparkEntry.{ensureDocIndex, duckShingleCtes}
   */
 object DedupQueries {
   import graft.operators.DedupOps._
-
-  /** gr_pagerank's graph: customer → order → supplier edges, node ids
-    * prefix-spaced by role (×3 + 0/1/2). Shared with its lazy variant
-    * in [[graft.Explain]]. */
-  private[graft] def pageRankEdges(s: SparkSession, dir: String): DataFrame =
-    Tables.orders(s, dir)
-      .select((col("o_custkey") * 3).as("src"),
-        (col("o_orderkey") * 3 + 1).as("dst"))
-      .unionByName(Tables.lineitem(s, dir)
-        .select((col("l_orderkey") * 3 + 1).as("src"),
-          (col("l_suppkey") * 3 + 2).as("dst")))
-
-  /** dd_ngram_capped's input, shared with its lazy variant in
-    * [[graft.Explain]]. */
-  private[graft] def ngramCappedDocs(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
 
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("dd_exact",
@@ -190,7 +173,7 @@ object DedupQueries {
          JOIN cnt n2 ON d2 = n2.doc_id
          WHERE round(CAST(c AS DOUBLE) / (n1.n + n2.n - c), 6) >= 0.5""",
       (s, dir) =>
-        ngramJaccardPairsCapped(ngramCappedDocs(s, dir), "doc_id", "text",
+        ngramJaccardPairsCapped(Tables.documents(s, dir), "doc_id", "text",
           minJaccard = 0.5, dfCap = 25)),
     // Incremental corpus-delta dedup: docs with doc_id % 10 = 0 play
     // the incoming ingest batch, the rest the existing corpus; each
@@ -449,8 +432,17 @@ object DedupQueries {
                   FROM e JOIN i2 ON e.src = i2.id JOIN d ON e.src = d.src
                   GROUP BY e.dst) c ON n.id = c.id)
          SELECT id, r AS rank_micro FROM i3""",
+      // customer → order → supplier edges, node ids prefix-spaced by
+      // role (×3 + 0/1/2)
       (s, dir) =>
-        graft.operators.GraphOps.pageRank(pageRankEdges(s, dir), "src", "dst")),
+        graft.operators.GraphOps.pageRank(
+          Tables.orders(s, dir)
+            .select((col("o_custkey") * 3).as("src"),
+              (col("o_orderkey") * 3 + 1).as("dst"))
+            .unionByName(Tables.lineitem(s, dir)
+              .select((col("l_orderkey") * 3 + 1).as("src"),
+                (col("l_suppkey") * 3 + 2).as("dst"))),
+          "src", "dst")),
     // End-to-end curation composition: quality-score -> language +
     // quality filter -> exact-dedup keep-first -> deterministic
     // hash-mod sample. One declarative plan; Catalyst fuses the

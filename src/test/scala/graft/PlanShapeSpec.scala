@@ -22,6 +22,25 @@ class PlanShapeSpec extends SparkTestBase {
     df.queryExecution.executedPlan.toString
   }
 
+  /** Final plans of the `localCheckpoint` executions that the
+    * registered query `name` starts while it builds and runs: an eager
+    * operator materializes its result inside the call, so that is
+    * where its real plan executes (the returned frame is a bare
+    * `Scan ExistingRDD`). */
+  private def checkpointPlans(name: String): Seq[String] = {
+    val (_, executions) = Explain.record(spark)(SparkEntry.queries(name)(spark, sfDir).collect())
+    val plans = executions.filter(_.name == "localCheckpoint").map(_.plan)
+    assert(plans.nonEmpty, s"$name started no localCheckpoint execution")
+    plans
+  }
+
+  /** Cache READS in a plan string (the plan string also shows parquet
+    * scans inside an InMemoryRelation's embedded child dump — count
+    * what executes, not the embedded text). */
+  private def cacheReads(plan: String): Int =
+    plan.split("InMemoryTableScan").length - 1 +
+      plan.split("TableCacheQueryStage").length - 1
+
   test("dimension joins broadcast the small side (j1, q5)") {
     assert(initialPlan("j1_enrichment_join").contains("BroadcastHashJoin"))
     val q5 = initialPlan("q5_local_supplier")
@@ -41,18 +60,11 @@ class PlanShapeSpec extends SparkTestBase {
     // dd_ngram_capped (r9): the posting frame is now PERSISTED and
     // serves the df aggregate plus both self-join sides (the window-df
     // formulation buffered hot-shingle partitions; see the operator
-    // scaladoc), and the public operator checkpoints eagerly — pin the
-    // cache reads on the Lazy internals instead of ReusedExchange.
-    val (out, ex) = graft.operators.DedupOps.ngramJaccardPairsCappedLazy(
-      Tables.documents(spark, sfDir), "doc_id", "text", 0.5, 25, 3)
-    try {
-      out.collect()
-      val plan = out.queryExecution.executedPlan.toString
-      val cacheReads = plan.split("InMemoryTableScan").length - 1 +
-        plan.split("TableCacheQueryStage").length - 1
-      assert(cacheReads >= 2,
-        s"dd_ngram_capped must serve df + join sides from the persisted postings, got $cacheReads:\n$plan")
-    } finally ex.unpersist()
+    // scaladoc), and the operator checkpoints eagerly — pin the cache
+    // reads in its localCheckpoint execution instead of ReusedExchange.
+    val reads = checkpointPlans("dd_ngram_capped").map(cacheReads).max
+    assert(reads >= 2,
+      s"dd_ngram_capped must serve df + join sides from the persisted postings, got $reads")
   }
 
   test("txt_tfidf tokenizes once: the tf exchange is shared by the df branch") {
@@ -124,24 +136,13 @@ class PlanShapeSpec extends SparkTestBase {
     // r7's audit found the scan + doc_id shuffle + windows duplicated.
     // The persisted subtree must appear as InMemory scans and leave
     // exactly one parquet scan in the whole plan.
-    // (the plan STRING still shows parquet scans inside the
-    // InMemoryRelation's embedded child dump — count cache READS, which
-    // is what executes, not the embedded text)
     //
-    // r9: the public operator eagerly checkpoints + releases the pin
-    // (cache-lifecycle contract), which hides the executed shape behind
-    // an RDD scan — inspect the Lazy internals the wrapper consumes.
-    val (out, ph) = graft.operators.CorpusOps.rakeKeywordsLazy(
-      Tables.documents(spark, sfDir), "doc_id", "text", 3,
-      Seq("the", "a", "and", "of", "to", "in", "is", "it"))
-    try {
-      out.collect() // AQE finalizes the adaptive plan in place
-      val plan = out.queryExecution.executedPlan.toString
-      val cacheReads = plan.split("InMemoryTableScan").length - 1 +
-        plan.split("TableCacheQueryStage").length - 1
-      assert(cacheReads >= 2,
-        s"both rake branches must read the persisted ph subtree, got $cacheReads:\n$plan")
-    } finally ph.unpersist()
+    // r9: the operator eagerly checkpoints + releases the pin
+    // (cache-lifecycle contract), so the executed shape is the plan of
+    // its localCheckpoint execution.
+    val plan = checkpointPlans("txt_rake").maxBy(cacheReads)
+    assert(cacheReads(plan) >= 2,
+      s"both rake branches must read the persisted ph subtree, got ${cacheReads(plan)}:\n$plan")
   }
 
   test("dd_incremental: one (band, key) join, existing side never re-hashed per band") {
@@ -176,14 +177,10 @@ class PlanShapeSpec extends SparkTestBase {
       assert(plan.contains("WindowGroupLimit"),
         s"$q should push its rank filter into a WindowGroupLimit:\n$plan")
     }
-    // txt_rake's public operator checkpoints eagerly (lifecycle
-    // contract) — pin its internal plan instead
-    val (out, ph) = graft.operators.CorpusOps.rakeKeywordsLazy(
-      Tables.documents(spark, sfDir), "doc_id", "text", 3,
-      Seq("the", "a", "and", "of", "to", "in", "is", "it"))
-    try assert(out.queryExecution.executedPlan.toString.contains("WindowGroupLimit"),
+    // txt_rake's operator checkpoints eagerly (lifecycle contract) —
+    // pin the plan its localCheckpoint execution ran
+    assert(checkpointPlans("txt_rake").exists(_.contains("WindowGroupLimit")),
       "txt_rake should push its rank filter into a WindowGroupLimit")
-    finally ph.unpersist()
   }
 
   test("unpartitioned windows appear only where bounded by design") {
@@ -282,45 +279,26 @@ class PlanShapeSpec extends SparkTestBase {
     // READS in the executed plan — the persist regressing silently
     // would put the source re-scans back.
     //
-    // r9: the public operators checkpoint eagerly + release their pins
-    // (cache-lifecycle contract), so inspect the Lazy internals the
-    // wrappers consume — same plans, pin still observable.
-    def cacheReads(out: org.apache.spark.sql.DataFrame): Int = {
-      out.collect()
-      val plan = out.queryExecution.executedPlan.toString
-      plan.split("InMemoryTableScan").length - 1 +
-        plan.split("TableCacheQueryStage").length - 1
-    }
-    val edges = Tables.orders(spark, sfDir)
-      .select((org.apache.spark.sql.functions.col("o_custkey") * 3).as("src"),
-        (org.apache.spark.sql.functions.col("o_orderkey") * 3 + 1).as("dst"))
-    val (pr, prInv) = graft.operators.GraphOps.pageRankLazy(edges, "src", "dst", 3, 85)
-    try {
-      val reads = cacheReads(pr)
-      assert(reads >= 4,
-        s"gr_pagerank should serve its rounds from the persisted invariants, got $reads")
-    } finally prInv.foreach(_.unpersist())
-    val memberships = Tables.lineitem(spark, sfDir)
-      .select(org.apache.spark.sql.functions.col("l_orderkey").as("oid"),
-        org.apache.spark.sql.functions.pmod(
-          org.apache.spark.sql.functions.col("l_partkey"),
-          org.apache.spark.sql.functions.lit(100)).as("item"))
+    // r9: the operators checkpoint eagerly + release their pins
+    // (cache-lifecycle contract), so the cache reads show in the plans
+    // of their localCheckpoint executions.
+    val prReads = checkpointPlans("gr_pagerank").map(cacheReads).max
+    assert(prReads >= 4,
+      s"gr_pagerank should serve its rounds from the persisted invariants, got $prReads")
     // r21: basketRules scans the basket-array aggregate ONCE (the
     // single combined generator) and persists only the vocabulary²-
     // bounded count frame, which all four consumers (pairs, two
     // per-item broadcast sides, basket total) must read from cache.
-    val (br, counts) = graft.operators.RelationalOps.basketRulesLazy(
-      memberships, "oid", "item", 5L)
-    try {
-      val reads = cacheReads(br)
-      assert(reads >= 3,
-        s"g20_basket_rules should serve its branches from the persisted counts, got $reads")
-      // the persisted frame must be the vocabulary²-bounded counts,
-      // never the per-basket array frame (which is scanned once,
-      // unpersisted, by the combined generator)
-      assert(counts.columns.toSeq == Seq("item_a", "item_b", "__n"),
-        s"basketRules should persist the counts frame, got ${counts.columns.mkString(",")}")
-    } finally counts.unpersist()
+    val br = checkpointPlans("g20_basket_rules").maxBy(cacheReads)
+    assert(cacheReads(br) >= 3,
+      s"g20_basket_rules should serve its branches from the persisted counts, got ${cacheReads(br)}")
+    // the persisted frame must be the vocabulary²-bounded counts,
+    // never the per-basket array frame (which is scanned once,
+    // unpersisted, by the combined generator)
+    val cached = """InMemoryRelation \[([^\]]*)\]""".r.findAllMatchIn(br)
+      .map(_.group(1).split(", ").map(_.replaceAll("#\\d+L?$", "")).toSeq).toSeq
+    assert(cached.nonEmpty && cached.forall(_ == Seq("item_a", "item_b", "__n")),
+      s"basketRules should persist the counts frame, got ${cached.map(_.mkString(",")).distinct}:\n$br")
   }
 
   test("io_partition_prune: the partition predicate prunes at planning time") {
@@ -560,16 +538,15 @@ class PlanShapeSpec extends SparkTestBase {
       s"exact-match election must not join or emit pairs:\n$plan")
   }
 
-  test("Explain's lazy variants return the same rows as their registered queries") {
-    // pins each variant's explicit arguments (PageRank's (3, 85), the
-    // n-gram cap's (0.5, 25, 3), RAKE's top-3 and stopwords) against
-    // the eager operators' defaults the queries rely on
-    Explain.lazyVariants.toSeq.sortBy(_._1).foreach { case (name, variant) =>
-      val want = SparkEntry.queries(name)(spark, sfDir).collect().map(_.toString).sorted
-      val got = variant(spark, sfDir).collect().map(_.toString).sorted
-      spark.catalog.clearCache()
-      assert(want.nonEmpty, s"$name returned no rows at $sfDir")
-      assert(got.toSeq === want.toSeq, s"$name: lazy variant rows differ")
-    }
+  test("Explain sees through the eager operators' checkpoints: each plan reads parquet") {
+    // each of these operators localCheckpoints inside the call, so the
+    // frame it returns explains as a bare Scan ExistingRDD; the
+    // recorder must still show the plan that read the tables
+    Seq("gr_pagerank", "g20_basket_rules", "gr_triangles", "dd_ngram_capped", "txt_rake")
+      .foreach { q =>
+        val plans = checkpointPlans(q)
+        assert(plans.exists(_.contains("FileScan parquet")),
+          s"$q: no recorded localCheckpoint plan reads parquet:\n${plans.mkString("\n\n")}")
+      }
   }
 }
