@@ -3,7 +3,7 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.GraftListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
@@ -41,6 +41,18 @@ object Explain {
                              failure: Option[Exception], wallMs: Long,
                              stages: Seq[StageRun]) {
     def plan: String = qe.executedPlan.toString
+  }
+
+  /** A stage's name: its call site, or, for a stage that adaptive
+    * execution submitted from a future (whose call site is that
+    * future's, the same for every such stage), the plan nodes that
+    * built its RDDs. */
+  private def stageName(si: StageInfo): String = {
+    val site = si.name.takeWhile(_ != '\n')
+    val name =
+      if (site.contains("withThreadLocalCaptured")) GraftListenerBus.scopeNames(si).mkString(" -> ")
+      else site
+    name.take(90)
   }
 
   /** Run `body` and return, ordered by start, every SQL execution of
@@ -86,7 +98,7 @@ object Explain {
         val wall = (for (a <- si.completionTime; b <- si.submissionTime) yield a - b).getOrElse(-1L)
         lock.synchronized {
           jobOfStage.get(si.stageId).foreach { case (job, exec) =>
-            stages += exec -> StageRun(job, si.stageId, si.name.takeWhile(_ != '\n').take(90),
+            stages += exec -> StageRun(job, si.stageId, stageName(si),
               wall, m.executorRunTime, si.numTasks,
               m.inputMetrics.bytesRead, m.inputMetrics.recordsRead,
               m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,

@@ -1,6 +1,11 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -11,14 +16,57 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * voter–location turnout rollup, and small dims (`region`, `nation`)
   * play the broadcast static side of the enrichment join
   * (reference `voting.py:41–45`).
+  *
+  * A table's schema is inferred once and then passed to the reader,
+  * so a repeated read lists the files but starts no schema-inference
+  * job. The cache key is the table path plus the session's
+  * `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` settings,
+  * which decide the inferred types (`nanosAsLong` turns a
+  * TIMESTAMP(NANOS) column into a long). Each entry also keeps the
+  * path's listing: the sorted (name, length, mtime) of every file
+  * under it. When a read finds a different listing, the schema is
+  * inferred again and replaces the entry, so the map holds at most
+  * one entry per key and no session.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private final case class Inferred(listing: Seq[(String, Long, Long)], schema: StructType)
+  private val schemas = new ConcurrentHashMap[(String, Map[String, String]), Inferred]()
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    listing(spark, path) match {
+      case None => spark.read.parquet(path) // Spark's own [PATH_NOT_FOUND]
+      case Some(files) =>
+        val key = (path, spark.conf.getAll.filter { case (k, _) =>
+          k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") })
+        val schema = Option(schemas.get(key)).filter(_.listing == files).fold {
+          val inferred = spark.read.parquet(path).schema
+          schemas.put(key, Inferred(files, inferred))
+          inferred
+        }(_.schema)
+        spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** Every file under `path` (or `path` itself when it is a file), as
+    * sorted (name, length, mtime); None when the path does not exist. */
+  private def listing(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    try {
+      val it = fs.listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(files.result().sorted)
+    } catch { case _: FileNotFoundException => None }
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")

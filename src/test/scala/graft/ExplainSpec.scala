@@ -32,4 +32,12 @@ class ExplainSpec extends SparkTestBase {
     assert(executions.head.failure.isDefined)
     assert(ListenerCounts(spark) == before, "a recording block left a listener attached")
   }
+
+  test("adaptive stages are named by their plan nodes, not the future that submitted them") {
+    val (_, executions) = Explain.record(spark)(
+      SparkEntry.queries("g1_votes_per_type")(spark, sfDir).collect())
+    val names = executions.flatMap(_.stages.map(_.name))
+    assert(names.nonEmpty)
+    assert(names.forall(n => n.nonEmpty && !n.contains("withThreadLocalCaptured")), names)
+  }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +23,22 @@ trait SparkTestBase extends AnyFunSuite {
     * scoping it around the whole scenario is sufficient). */
   def withStateStoreProvider[T](providerClass: String)(body: => T): T =
     withSQLConf("spark.sql.streaming.stateStore.providerClass" -> providerClass)(body)
+
+  /** Run `body` and count the Spark jobs it started. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    GraftListenerBus.drain(sc) // jobs of earlier work must not be counted
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      GraftListenerBus.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** Run `body` with the given SQL confs set, restoring previous
     * values after (the shared session outlives each suite). */
