@@ -15,15 +15,27 @@ object Sessions {
   /** Apply graft's required SQL configs to a session builder:
     *  - UTC session time zone (reference produces UTC wall-clock
     *    strings, `voting.py:72` — parsing shifts otherwise);
-    *  - shuffle partitions = cores (local harness; a real cluster
-    *    tunes this to data volume / relies on AQE coalescing);
+    *  - `spark.sql.shuffle.partitions` = 1 and AQE's
+    *    `coalescePartitions.initialPartitionNum` = cores. A plan run
+    *    with AQE on starts its exchanges from cores partitions and
+    *    coalesces them; one run with AQE off, as every micro-batch
+    *    plan is (a `foreachBatch` body's own queries run with AQE on),
+    *    gets 1, so each stateful streaming operator holds one state
+    *    store (a store costs a commit per trigger; the vote aggs hold a
+    *    handful of keys). Writes size their clustering exchange by
+    *    [[graft.sources.TxnLog.writePartitions]] and keep cores. A
+    *    checkpoint keeps the state-store count of its first batch, so
+    *    a stateful query with a large key space (e.g.
+    *    [[graft.streaming.VotePipeline.dedupVotes]] at scale) must be
+    *    started with a larger `spark.sql.shuffle.partitions`;
     *  - nanosAsLong so the TIMESTAMP(NANOS) `events.ts` column reads
     *    as a long (see [[Tables.events]]).
     */
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
     b.master(s"local[$cpus]")
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", "1")
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")

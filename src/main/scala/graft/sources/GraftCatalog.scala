@@ -1030,8 +1030,7 @@ private[sources] object GraftTable {
     // identity columns range-cluster; a bucket transform hash-routes
     // each row to its own bucket's partition, so each staged file
     // holds one bucket and its derived stat collapses to a point
-    val phys = TxnLog.clusterByPartitioning(phys0, pfields,
-      s.sessionState.conf.numShufflePartitions)
+    val phys = TxnLog.clusterByPartitioning(phys0, pfields, TxnLog.writePartitions(s))
     val txnId = s"sql-write-a$uuid12"
     val (files, multi) = stageFiles(phys, root, txnId, pfields)
     // guarded appends (identity allocation): the commit must observe
@@ -1101,8 +1100,7 @@ private[sources] object GraftTable {
     val phys0 = TxnLog.toPhysical(data, renames)
     val pfields = TxnLog.partitionFields(root, readV)
       .filter(f => phys0.columns.contains(f.col))
-    val phys = TxnLog.clusterByPartitioning(phys0, pfields,
-      s.sessionState.conf.numShufflePartitions)
+    val phys = TxnLog.clusterByPartitioning(phys0, pfields, TxnLog.writePartitions(s))
     val txnId = s"sql-replace-a$uuid12"
     val (files, multi) = stageFiles(phys, root, txnId, pfields)
     if (files.isEmpty && dead.isEmpty && dvFiles.isEmpty) return // no-op
@@ -1578,7 +1576,7 @@ private class StagedGraftTable(root: String, stagedSchema: StructType,
               val pfields = partitionBy.map(TxnLog.parsePartitionToken)
                 .filter(f => phys0.columns.contains(f.col))
               val phys = TxnLog.clusterByPartitioning(phys0, pfields,
-                data.sparkSession.sessionState.conf.numShufflePartitions)
+                TxnLog.writePartitions(data.sparkSession))
               val (files, multi) = GraftTable.stageFiles(phys, root, txnId, pfields)
               staged = Some((files, multi, phys.schema))
             }
@@ -1705,7 +1703,7 @@ private class GraftWriteBuilder(root: String, info: LogicalWriteInfo)
 
     override def requiredNumPartitions(): Int =
       if (pcols.isEmpty) 0
-      else SparkSession.active.sessionState.conf.numShufflePartitions
+      else TxnLog.writePartitions(SparkSession.active)
 
     override def toInsertableRelation(): InsertableRelation =
       new InsertableRelation {

@@ -2986,6 +2986,19 @@ object TxnLog {
       Pmod(Murmur3Hash(Seq(l), 42), Literal(n)).eval(null).asInstanceOf[Int])
   }
 
+  /** Output partitions of a write's clustering exchange: AQE's initial
+    * partition number when the session sets one, else its shuffle
+    * partitions. Unlike `SQLConf.numShufflePartitions` it does not
+    * depend on AQE being on, so a write planned with AQE off (a
+    * micro-batch, see [[graft.Sessions.configure]]) is spread like a
+    * batch write.
+    */
+  def writePartitions(s: SparkSession): Int = {
+    val conf = s.sessionState.conf
+    conf.getConf(org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_INITIAL_PARTITION_NUM)
+      .getOrElse(conf.numShufflePartitions)
+  }
+
   /** Cluster a write by the declared partitioning. A SINGLE bucket
     * transform hash-routes each row to its own bucket's partition
     * (`repartition(n, canonical)` — exact, no range-sampler merging
@@ -3955,8 +3968,7 @@ object TxnLog {
       val phys0 = toPhysical(raw, columnMapping(root))
       val pfields = partitionFields(root, readV)
         .filter(f => phys0.columns.contains(f.col))
-      val phys = clusterByPartitioning(phys0, pfields,
-        s.sessionState.conf.numShufflePartitions)
+      val phys = clusterByPartitioning(phys0, pfields, writePartitions(s))
       val txnId = s"copy-$uuid12"
       val (files, multi) = GraftTable.stageFiles(phys, root, txnId, pfields)
       val rows = multi.map(_.values.map(_.rows).maxOption.getOrElse(0L)).sum

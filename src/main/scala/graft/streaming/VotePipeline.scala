@@ -27,7 +27,10 @@ import org.apache.spark.sql.Row
   *  - the watermark on the unwindowed aggs is inert (declared for
   *    parity with `spark_stream.py:55`) — it does NOT evict agg state;
   *    windowed eviction variants belong to [[graft.SparkEntry]]'s
-  *    `s1_hourly_agg` shape.
+  *    `s1_hourly_agg` shape;
+  *  - each stateful query runs one state store on a
+  *    [[graft.Sessions]] session; see `Sessions.configure` for when
+  *    to start one with more.
   */
 object VotePipeline {
 

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
@@ -39,6 +40,12 @@ trait SparkTestBase extends AnyFunSuite {
       (out, jobs.get)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** State-store instances of each stateful operator in the query's
+    * last micro-batch that read input. */
+  def stateStoreInstances(q: StreamingQuery): Seq[Long] =
+    q.recentProgress.filter(_.numInputRows > 0).last
+      .stateOperators.map(_.numStateStoreInstances).toSeq
 
   /** Run `body` with the given SQL confs set, restoring previous
     * values after (the shared session outlives each suite). */

@@ -15,7 +15,12 @@ import org.apache.spark.sql.functions._
 class CheckpointRecoverySpec extends SparkTestBase {
   import spark.implicits._
 
-  private def recoveryScenario(tag: String): Unit = {
+  /** Run the query twice on one checkpoint, the first run under
+    * `firstConf` and the restart under `restartConf`, and check the
+    * resumed totals. Returns each run's state-store instance count. */
+  private def recoveryScenario(tag: String,
+                               firstConf: Seq[(String, String)] = Nil,
+                               restartConf: Seq[(String, String)] = Nil): (Long, Long) = {
     val root = Files.createTempDirectory(s"graft-recovery-$tag").toString
     val (srcDir, chkDir, outDir) = (s"$root/src", s"$root/chk", s"$root/out")
     Files.createDirectories(Paths.get(srcDir))
@@ -25,7 +30,7 @@ class CheckpointRecoverySpec extends SparkTestBase {
     def writeFile(name: String, lines: Seq[String]): Unit =
       Files.write(Paths.get(srcDir, name), String.join("\n", lines: _*).getBytes)
 
-    def runOnce(): Unit = {
+    def runOnce(conf: Seq[(String, String)]): Long = withSQLConf(conf: _*) {
       val parsed = VotePipeline.parse(spark.readStream.text(srcDir))
       val q = VotePipeline.votesPerCandidate(parsed)
         .writeStream.outputMode("update")
@@ -36,12 +41,13 @@ class CheckpointRecoverySpec extends SparkTestBase {
         }
         .start()
       q.processAllAvailable(); q.stop()
+      stateStoreInstances(q).head
     }
 
     writeFile("a.json", eventsA)
-    runOnce()
+    val first = runOnce(firstConf)
     writeFile("b.json", eventsB)
-    runOnce() // fresh query object, same checkpoint -> must RESUME
+    val restart = runOnce(restartConf) // fresh query object, same checkpoint -> must RESUME
 
     // latest update per candidate == batch aggregate over ALL events
     val updates = spark.read.parquet(outDir)
@@ -59,6 +65,7 @@ class CheckpointRecoverySpec extends SparkTestBase {
     assert(mismatches === 0,
       "restarted query must carry prior state (no zero-restart, no double count)")
     assert(latest.agg(sum("total_votes")).head.getLong(0) === 100L)
+    (first, restart)
   }
 
   test("update-mode aggregation resumes from checkpoint across a restart") {
@@ -74,5 +81,15 @@ class CheckpointRecoverySpec extends SparkTestBase {
       assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
         == RocksDbProvider)
     }
+  }
+
+  test("a checkpoint started with 4 shuffle partitions keeps 4 state stores after a restart") {
+    val counts = recoveryScenario("keep4", firstConf = Seq("spark.sql.shuffle.partitions" -> "4"))
+    assert(counts === (4L, 4L))
+  }
+
+  test("a checkpoint started with the session default keeps 1 state store after a restart") {
+    val counts = recoveryScenario("keep1", restartConf = Seq("spark.sql.shuffle.partitions" -> "4"))
+    assert(counts === (1L, 1L))
   }
 }
