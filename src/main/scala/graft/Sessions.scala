@@ -29,7 +29,14 @@ object Sessions {
     *    [[graft.streaming.VotePipeline.dedupVotes]] at scale) must be
     *    started with a larger `spark.sql.shuffle.partitions`;
     *  - nanosAsLong so the TIMESTAMP(NANOS) `events.ts` column reads
-    *    as a long (see [[Tables.events]]).
+    *    as a long (see [[Tables.events]]);
+    *  - `fs.file.impl` (`FileSystem`: parquet, listings) and
+    *    `fs.AbstractFileSystem.file.impl` (`FileContext`: checkpoints,
+    *    state stores) name [[NioLocalFileSystem]] and [[NioLocalFs]],
+    *    so local file status and permissions fork no shell command;
+    *  - a status store of the last 50 SQL executions, jobs and stages:
+    *    with the UI off nothing reads it, and at Spark's 1000 each
+    *    micro-batch kept about 33 KB of heap.
     */
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
     b.master(s"local[$cpus]")
@@ -39,6 +46,8 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
       // storage-partitioned joins over co-bucketed graft tables: the
       // scan reports KeyGroupedPartitioning only for tables declared
       // PARTITIONED BY (bucket(n, c)) with point bucket stats, so
@@ -70,6 +79,9 @@ object Sessions {
       // Production: size to the distinct-plan working set, same rule.
       .config("spark.sql.codegen.cache.maxEntries", "8192")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.ui.retainedExecutions", "50")
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "50")
 
   /** Silence WindowExec's `No Partition Defined` warning in the bench
     * and verify mains: every unpartitioned window in the query surface

@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 /** The shuffle partition split [[Sessions.configure]] sets up: a
   * streaming query's exchanges and state stores get one partition,
   * while a batch plan starts from `cpus` partitions (4 on the test
-  * session) that AQE coalesces.
+  * session) that AQE coalesces. Also the status store's bound.
   */
 class SessionsSpec extends SparkTestBase {
   import spark.implicits._
@@ -61,5 +61,18 @@ class SessionsSpec extends SparkTestBase {
       }.start()
     try q.processAllAvailable() finally q.stop()
     assert(!counts.isEmpty && counts.asScala.forall(_ == Seq(4)))
+  }
+
+  test("the status store keeps at most 50 finished SQL executions and jobs") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    sc.setJobGroup("retention", "status store bound")
+    try (1 to 60).foreach(_ => spark.range(1).count())
+    finally sc.clearJobGroup()
+    eventually(timeout(10.seconds), interval(100.millis)) {
+      assert(spark.sharedState.statusStore.executionsCount() <= 50)
+      assert(sc.statusTracker.getJobIdsForGroup("retention").length <= 50)
+    }
   }
 }
